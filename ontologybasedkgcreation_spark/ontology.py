@@ -1,8 +1,10 @@
 """NyOn legal-ontology schema system.
 
-Parses the reference's OWL 2 Turtle ontology (``legalOntology.owl``) once at
-driver startup into small in-memory tables that every downstream stage
-broadcasts.  This replaces the reference's Neo4j/neosemantics round-trips:
+Parses an OWL 2 Turtle ontology once at driver startup into small in-memory
+tables that every downstream stage broadcasts.  The default is the packaged
+subset ``nyon_subset.ttl`` (its header lists where each row comes from);
+``load_ontology(path)`` loads the reference's full ``legalOntology.owl``.
+This replaces the reference's Neo4j/neosemantics round-trips:
 
 - allowed relationships (is_a rows + object-property domain/rel/range rows)
   mirror ``kg_creator/src/utils.py:38-60`` (``getAllRelationships``);
@@ -25,12 +27,15 @@ DataFrames for broadcast hash joins.
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass, field
 from functools import lru_cache
+from importlib import resources
 from typing import Dict, FrozenSet, List, Set, Tuple
 
-DEFAULT_OWL_PATH = "/root/reference/legalOntology.owl"
+_SUBSET_FILE = "nyon_subset.ttl"
+DEFAULT_OWL_PATH = os.path.join(os.path.dirname(__file__), _SUBSET_FILE)
 
 # ---------------------------------------------------------------------------
 # Turtle micro-parser (only what the NyOn file needs: prefixed names, IRIs,
@@ -451,7 +456,13 @@ class Ontology:
 
 
 def parse_owl(path: str = DEFAULT_OWL_PATH) -> Ontology:
-    """Parse the NyOn Turtle file into an :class:`Ontology`."""
+    """Parse a NyOn Turtle file into an :class:`Ontology`."""
+    if path == DEFAULT_OWL_PATH:
+        # read as package data: open() cannot reach into the --py-files
+        # zip a spark-submit driver imports the package from
+        return parse_owl_text(
+            resources.files(__package__).joinpath(_SUBSET_FILE).read_text("utf-8")
+        )
     with open(path, "r", encoding="utf-8") as fh:
         text = fh.read()
     return parse_owl_text(text)

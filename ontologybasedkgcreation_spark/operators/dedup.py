@@ -87,8 +87,13 @@ def _spread(sh: DataFrame) -> DataFrame:
     explicit partition count keeps AQE from coalescing the exchange away
     (the data is small by bytes — the point is task parallelism).  NOT
     part of shingles() itself: decontamination's training side must stay
-    exchange-free (plan-pinned)."""
-    n = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    exchange-free (plan-pinned).  A non-integer setting (e.g. a platform's
+    'auto') falls back to the default parallelism."""
+    spark = sh.sparkSession
+    try:
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        n = spark.sparkContext.defaultParallelism
     return sh.repartition(n, F.col("doc"))
 
 

@@ -421,63 +421,6 @@ def extract_from_text(text: str) -> List[Triple]:
     return triples
 
 
-def parse_triples_json(df: DataFrame, json_col: str = "response") -> DataFrame:
-    """E3 parity: parse LLM-style triple-list JSON into raw triple rows.
-
-    Reproduces ``ListOfTriplesParser.parse`` (kg_creator/src/output_parser.py:
-    42-87) columnar: strip markdown code fences, ``from_json`` with the triple
-    schema, unwrap the "Data" key, drop per-item invalid rows (null types).
-    Values may be strings or dicts (``Union[Dict, str]``, output_parser.py:
-    34-39) — both normalize to map<string,string>.  No fix-parser retries
-    needed: malformed rows land in a null column and are filtered, not
-    retried x3 (global_import.py:26).
-    """
-    from pyspark.sql import functions as SF
-    from pyspark.sql.types import (
-        ArrayType, MapType, StringType, StructField, StructType,
-    )
-
-    item = StructType(
-        [
-            StructField("node1_type", StringType()),
-            StructField("node1_value", StringType()),
-            StructField("relationship", StringType()),
-            StructField("node2_type", StringType()),
-            StructField("node2_value", StringType()),
-        ]
-    )
-    schema = StructType([StructField("Data", ArrayType(item))])
-    fences_stripped = SF.regexp_replace(
-        SF.regexp_replace(SF.col(json_col), r"^\s*```(?:json)?\s*", ""),
-        r"\s*```\s*$",
-        "",
-    )
-
-    def _val(col):
-        # a JSON object string -> its map; plain string -> {"__value": s}
-        parsed = SF.from_json(col, MapType(StringType(), StringType()))
-        return SF.when(parsed.isNotNull(), parsed).otherwise(
-            SF.create_map(SF.lit(VALUE), SF.coalesce(col, SF.lit("")))
-        )
-
-    exploded = (
-        df.withColumn("_p", SF.from_json(fences_stripped, schema))
-        .withColumn("_t", SF.explode(SF.col("_p.Data")))
-        .withColumn("span_start", SF.lit(0).cast("long"))
-    )
-    return exploded.select(
-        *[c for c in ("url",) if c in df.columns],
-        "span_start",
-        SF.col("_t.node1_type").alias("node1_type"),
-        _val(SF.col("_t.node1_value")).alias("node1_value"),
-        SF.col("_t.relationship").alias("relationship"),
-        SF.col("_t.node2_type").alias("node2_type"),
-        _val(SF.col("_t.node2_value")).alias("node2_value"),
-    ).filter(
-        SF.col("node1_type").isNotNull() & SF.col("node2_type").isNotNull()
-    )
-
-
 def anchor_gate_condition():
     """JVM-side predicate pushdown for the Python extraction stage: a page
     can produce a triple ONLY if its text contains one of these literal

@@ -966,33 +966,23 @@ def build_graph(
     nodes_final, mapping = linked["nodes"], linked["mapping"]
 
     # edge endpoints keyed by pure expressions on the triple row — no
-    # mention self-joins on the hot path, only the two mapping joins
-    edges = (
+    # mention self-joins on the hot path, only the two mapping joins.
+    # mentions_frame emits both endpoints of every row, so every endpoint
+    # is mapped and the rewire's fall-back never fires here
+    edges = rewire_edges(
         assigned.select(
             "url",
             "span_start",
             "triple_id",
             "relationship",
             pre_key_expr(F.col("node1_labels"), F.col("node1_props")).alias(
-                "src_pre"
+                "src_key"
             ),
             pre_key_expr(F.col("node2_labels"), F.col("node2_props")).alias(
-                "dst_pre"
+                "dst_key"
             ),
-        )
-        .join(
-            mapping.withColumnRenamed("pre_key", "src_pre").withColumnRenamed(
-                "node_key", "src_key"
-            ),
-            "src_pre",
-        )
-        .join(
-            mapping.withColumnRenamed("pre_key", "dst_pre").withColumnRenamed(
-                "node_key", "dst_key"
-            ),
-            "dst_pre",
-        )
-        .select("src_key", "relationship", "dst_key", "url", "span_start", "triple_id")
+        ),
+        mapping,
     )
     return {"nodes": nodes_final, "edges": edges, "mapping": mapping}
 
@@ -1107,7 +1097,10 @@ def link_nodes(
     # min/first aggregate is exactly the within-block invariant, pinned
     # by the idempotence/oracle suites and test_linking.
     comp_meta = member.filter(F.col("pre_key") == F.col("comp")).select(
-        "comp", "labels_str", "labels", "head_label"
+        "comp",
+        "labels_str",
+        F.coalesce("labels", F.array().cast("array<string>")).alias("labels"),
+        "head_label",
     )
     nodes = (
         comp_meta.join(props_c, "comp", "left")
@@ -1132,6 +1125,34 @@ def link_nodes(
     ).dropDuplicates(["node_key"]).cache()
 
     return {"nodes": nodes_final, "mapping": mapping}
+
+
+def rewire_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Edges keyed by (src_key, dst_key) -> the same edges with each
+    endpoint moved through ``mapping`` (pre_key -> node_key).
+
+    LEFT joins with a fall-back to the original key: an endpoint missing
+    from the mapping keeps its key instead of dropping the edge.  That is
+    what makes the reconcile crash window self-heal (reconcile_graph):
+    edges already on final keys pass through a later rewire unchanged."""
+    def side(end: str) -> DataFrame:
+        return mapping.select(
+            F.col("pre_key").alias(f"{end}_key"),
+            F.col("node_key").alias(f"new_{end}"),
+        )
+
+    return (
+        edges.join(side("src"), "src_key", "left")
+        .join(side("dst"), "dst_key", "left")
+        .select(
+            F.coalesce("new_src", "src_key").alias("src_key"),
+            "relationship",
+            F.coalesce("new_dst", "dst_key").alias("dst_key"),
+            "url",
+            "span_start",
+            "triple_id",
+        )
+    )
 
 
 def triple_set(nodes: DataFrame, edges: DataFrame) -> DataFrame:

@@ -272,42 +272,6 @@ def format_triples(triples: list) -> str:
     return "\n\n".join(parts)
 
 
-def node_feature_vectors(nodes: DataFrame, dim: int = 256) -> DataFrame:
-    """R1 parity: per-node feature vector from the node's text rendering.
-
-    The reference renders each node as 'node_labels:[...]' + newline-joined
-    non-empty 'key:value' lines and embeds it with a 768-dim external model
-    (utils.py:786-873, vector_store.py:13).  No external model here: the
-    deterministic stand-in is a hashing-TF over word+char-3gram tokens,
-    L2-normalized — good enough for blocked cosine near-dup candidates, and
-    the column contract (node_key, features array<float>) is what a real
-    embedding model would also fill."""
-    text = F.concat(
-        F.lit("node_labels:["),
-        F.concat_ws(", ", "labels"),
-        F.lit("]\n"),
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.sort_array(
-                    F.map_entries(
-                        F.map_filter(F.col("props"), lambda k, v: v != F.lit(""))
-                    )
-                ),
-                lambda e: F.concat(e.key, F.lit(":"), e.value),
-            )
-        ),
-    )
-    from .similarity import hashing_feature_vectors
-
-    return hashing_feature_vectors(
-        nodes.withColumn("node_text", text).select("node_key", "node_text"),
-        "node_key",
-        "node_text",
-        dim,
-    )
-
-
 # ---------------------------------------------------------------------------
 # writer (Iceberg when available, Parquet fallback behind one interface)
 # ---------------------------------------------------------------------------

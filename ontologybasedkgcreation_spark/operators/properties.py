@@ -23,9 +23,9 @@ Then every produced string is title-cased with Python ``str.title()``
 semantics — byte-parity with ``make_title_case_all`` (utils.py:527-537;
 NOT Spark ``initcap``, which would leave "m.p." uncapitalized).
 
-Runs as one ``mapInPandas`` stage over validated triples; the ontology prop
-schemas ride along as array columns from the validation join, so the UDF has
-no external lookups.
+Runs as one ArrowEvalPython stage of two pandas UDFs over validated
+triples; the ontology prop schemas ride along as array columns from the
+validation join, so the UDFs have no external lookups.
 """
 
 from __future__ import annotations
@@ -86,143 +86,6 @@ def assign_props(value: Dict[str, str], schema: Sequence[str]) -> Dict[str, str]
 
 def title_props(props: Dict[str, str]) -> Dict[str, str]:
     return {k: (v.title() if isinstance(v, str) else v) for k, v in props.items()}
-
-
-# ---------------------------------------------------------------------------
-# Pure-expression implementation (NOT the hot path — measured and rejected).
-#
-# assign_props/title_props above are the executable spec (pinned to the
-# reference prompt examples by tests); the expressions below reproduce them
-# with zero Python, and test_properties pins expr==Python over the rule
-# matrix.  They are NOT used in the pipeline: map/array construction relies
-# on higher-order functions (transform/map_from_arrays), which are
-# CodegenFallback in Spark — interpreted per row with no common-
-# subexpression elimination — and the materialized stage measured 2.5x
-# SLOWER than the Arrow-vectorized Python stage (21.3 s vs 8.4 s at
-# local[8] on 1.7M triples).  Kept as the semantic cross-check and for
-# engines/versions where HOFs codegen.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import functions as F  # noqa: E402
-
-
-def title_expr(c):
-    """Python ``str.title()`` semantics in JVM expressions (NOT initcap):
-    an alpha run starts uppercase after ANY non-alpha character ("m.p." ->
-    "M.P.", "o'neil" -> "O'Neil", "3rd" -> "3Rd").  Zero-width lookaround
-    split isolates alpha/non-alpha runs; each run is upper(head)+lower(tail).
-    ASCII-complete (the reference corpus is ASCII; unicode cased letters
-    outside [a-zA-Z] would need the Python path)."""
-    c = F.col(c) if isinstance(c, str) else c
-    piece = lambda t: F.concat(
-        F.upper(F.substring(t, 1, 1)), F.lower(t.substr(F.lit(2), F.length(t)))
-    )
-    full = F.concat_ws(
-        "", F.transform(F.split(c, r"(?<=[^a-zA-Z])|(?=[^a-zA-Z])"), piece)
-    )
-    # most prop-map values are '' (unfilled schema keys) — skip the regex
-    # split for them; single-token lowercase words need only initcap
-    simple = c.rlike("^[a-z]*$")
-    return F.when(c == "", c).when(simple, F.initcap(c)).otherwise(full)
-
-
-def _bag_text(value):
-    """Non-bare map with empty schema: concatenate non-empty values
-    (iteration order = map order, matching dict order in assign_props)."""
-    return F.concat_ws(
-        " ", F.filter(F.map_values(value), lambda v: v != F.lit(""))
-    )
-
-
-def assign_props_expr(value_col, schema_col):
-    """JVM equivalent of ``title_props(assign_props(value, schema))``.
-
-    value_col: map<string,string> raw node value; schema_col: array<string>
-    ontology prop schema.  Returns map<string,string>."""
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    schema = F.col(schema_col) if isinstance(schema_col, str) else schema_col
-    value = F.coalesce(value, F.expr("map()"))
-    schema = F.coalesce(schema, F.array())
-
-    keys = F.map_keys(value)
-    is_bare = (F.size(keys) == 1) & (F.element_at(keys, 1) == F.lit(VALUE))
-    bare = F.trim(F.coalesce(F.element_at(value, F.lit(VALUE)), F.lit("")))
-    toks = F.filter(F.split(bare, r"\s+"), lambda t: t != F.lit(""))
-
-    # --- empty schema -> {"text": ...} -------------------------------------
-    empty_schema = F.map_from_arrays(
-        F.array(F.lit("text")),
-        F.array(
-            title_expr(
-                F.when(
-                    is_bare,
-                    F.coalesce(F.element_at(value, F.lit(VALUE)), F.lit("")),
-                ).otherwise(_bag_text(value))
-            )
-        ),
-    )
-
-    # --- non-empty schema ---------------------------------------------------
-    # target key for a bare string: first (first,last) name pair fully in the
-    # schema decides by token count; otherwise the first schema key
-    def pair_case(first_key, last_key, else_expr):
-        has_pair = F.array_contains(schema, first_key) & F.array_contains(
-            schema, last_key
-        )
-        return F.when(
-            has_pair,
-            F.when(F.size(toks) == 1, F.lit(last_key)).otherwise(
-                F.lit(first_key)
-            ),
-        ).otherwise(else_expr)
-
-    target_key = F.element_at(schema, 1)
-    for first_key, last_key in reversed(NAME_PAIRS):
-        target_key = pair_case(first_key, last_key, target_key)
-    # the two-token split: first token -> first_key, second -> last_key
-    two_tok = F.size(toks) == 2
-    pair_first = F.lit(None).cast("string")
-    pair_last = F.lit(None).cast("string")
-    for first_key, last_key in reversed(NAME_PAIRS):
-        has_pair = F.array_contains(schema, first_key) & F.array_contains(
-            schema, last_key
-        )
-        pair_first = F.when(has_pair, F.lit(first_key)).otherwise(pair_first)
-        pair_last = F.when(has_pair, F.lit(last_key)).otherwise(pair_last)
-
-    def filled_value(k):
-        """value of schema key k in the result map (pre-titlecase)."""
-        non_bare = F.coalesce(F.element_at(value, k), F.lit(""))
-        bare_split = F.when(
-            two_tok & pair_first.isNotNull(),
-            F.when(k == pair_first, F.element_at(toks, 1))
-            .when(k == pair_last, F.element_at(toks, 2))
-            .otherwise(F.lit("")),
-        ).otherwise(F.when(k == target_key, bare).otherwise(F.lit("")))
-        return F.when(is_bare, F.when(bare == "", F.lit("")).otherwise(bare_split)).otherwise(non_bare)
-
-    with_schema = F.map_from_arrays(
-        schema, F.transform(schema, lambda k: title_expr(filled_value(k)))
-    )
-    return F.when(F.size(schema) == 0, empty_schema).otherwise(with_schema)
-
-
-def assign_and_titlecase_expr(validated: DataFrame) -> DataFrame:
-    """Expression-only variant of :func:`assign_and_titlecase` — identical
-    output (parity-pinned), zero Python, but interpreted HOFs make it
-    slower than the Arrow stage in practice (see module note above)."""
-    return validated.select(
-        "url",
-        "span_start",
-        "triple_id",
-        "node1_type",
-        "node1_labels",
-        assign_props_expr("node1_value", "node1_schema").alias("node1_props"),
-        "relationship",
-        "node2_type",
-        "node2_labels",
-        assign_props_expr("node2_value", "node2_schema").alias("node2_props"),
-    )
 
 
 # Cross-batch memo of title_props(assign_props(value, schema)) keyed on the

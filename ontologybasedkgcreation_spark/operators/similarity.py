@@ -42,6 +42,13 @@ def _norm(a):
     )
 
 
+def _pair_cosine(a, b):
+    """Cosine of two vectors; NULL when either has zero norm (ANSI division
+    would raise DIVIDE_BY_ZERO), so a threshold filter drops the pair."""
+    denom = _norm(a) * _norm(b)
+    return F.when(denom != 0, _dot(a, b) / denom)
+
+
 def with_cosine(
     df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding"
 ) -> DataFrame:
@@ -261,9 +268,7 @@ def cosine_neardup_pairs(
         v.join(w, "blk")
         .filter(F.col("a") < F.col("b"))
         .withColumn(
-            "cosine",
-            _dot(F.col("va"), F.col("vb"))
-            / (_norm(F.col("va")) * _norm(F.col("vb"))),
+            "cosine", _pair_cosine(F.col("va"), F.col("vb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
@@ -444,9 +449,7 @@ def cosine_neardup_pairs_lsh(
         cand.join(va, "a")
         .join(vb, "b")
         .withColumn(
-            "cosine",
-            _dot(F.col("va"), F.col("vb"))
-            / (_norm(F.col("va")) * _norm(F.col("vb"))),
+            "cosine", _pair_cosine(F.col("va"), F.col("vb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")

@@ -223,15 +223,3 @@ def validate_triples(
     )
     return {"validated": validated, "isa": isa_valid, "rejected": rejected}
 
-
-def validate_triples_stream(spark, triples: DataFrame, onto: Ontology) -> DataFrame:
-    """Streaming-safe validation: the same broadcast joins as
-    ``validate_triples`` but no cache / no reject anti-joins (stream-stream
-    anti joins are not expressible; rejects are a batch-side audit).  The
-    validation is the same pre-resolved broadcast join as the batch path
-    (``resolution_frame``)."""
-    resolved_df = resolution_frame(spark, onto)
-    t = with_triple_id(triples).filter(F.col("relationship") != "is_a")
-    return t.join(
-        F.broadcast(resolved_df), ["node1_type", "relationship", "node2_type"]
-    )

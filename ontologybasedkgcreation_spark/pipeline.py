@@ -11,6 +11,11 @@ here the only wide operations are: one shuffle for chunk windowing (by url),
 one for the linking token index, one per connected-components round, and the
 final consolidation groupBys — all keyed on url/node hashes, salted/df-capped
 for head entities.
+
+Two stages, each defined once and shared by every execution mode:
+:func:`assigned_triples` (per page, narrow — batch, checkpointed buckets and
+streams) and :func:`graph_tables` (the global reduce — batch and
+checkpointed resume).
 """
 
 from __future__ import annotations
@@ -27,50 +32,47 @@ from .operators.extract import anchor_gate_condition, extract_triples
 from .sources.pages import extract_pages
 
 
-def run_pipeline(
+def assigned_triples(
+    spark: SparkSession, pages: DataFrame, onto: Ontology
+) -> Dict[str, DataFrame]:
+    """The per-page stage: pages -> {raw_triples, validated, isa, rejected,
+    assigned}, all lazy.  Every narrow operator, so the same frames serve a
+    batch run, a checkpointed bucket subset and a ``readStream``.
+
+    The anchor gate filters the RAW stored text BEFORE the decode
+    projection: one decode per row (a filter over the projected text
+    column would make Catalyst evaluate the decode UDF twice — guide §4.4,
+    plan-pinned).  Pages arriving text-less pass the gate and are dropped
+    by extract_from_text's own anchors.  ``cache=False``: is_a and rejects
+    are audit outputs that may recompute (and a stream cannot cache); the
+    caller decides where ``assigned`` is materialized."""
+    raw = extract_triples(
+        extract_pages(pages, text_gate=anchor_gate_condition), pre_gated=True
+    )
+    v = validate.validate_triples(spark, raw, onto, cache=False)
+    return {
+        "raw_triples": raw,
+        "validated": v["validated"],
+        "isa": v["isa"],
+        "rejected": v["rejected"],
+        "assigned": properties.assign_and_titlecase(v["validated"]),
+    }
+
+
+def graph_tables(
     spark: SparkSession,
-    pages: DataFrame,
-    onto: Optional[Ontology] = None,
+    assigned: DataFrame,
+    extracted: DataFrame,
     with_paragraphs: bool = True,
     writer: Optional[materialize.GraphWriter] = None,
     semantic: str = "auto",
     semantic_min_pages: int = 1_000,
 ) -> Dict[str, DataFrame]:
-    """Full run; returns all intermediate + final DataFrames (lazily built —
-    nothing executes until an action, except the semantic-refine
-    auto-training below).
-
-    ``semantic``: 'auto' (default — the reference ALWAYS runs its embedding
-    refine, refine_nodes.py:27-96; above ``semantic_min_pages`` English
-    pages a PPMI-SVD embedder is trained on the extracted text and the
-    guarded semantic refine runs, see build_graph ``corpus``) or 'off'.
-    The floor exists because distributional vocab quality needs data;
-    below it the lexical refine alone runs (identical to 'off')."""
-    onto = onto or load_ontology()
-
-    extracted = extract_pages(pages)
-    # extraction branch: anchor-gate on the RAW stored text BEFORE the
-    # decode projection (one decode per row; a filter over the projected
-    # text column would make Catalyst evaluate the decode UDF twice —
-    # guide §4.4, plan-verified in plans/r07).  Pages arriving text-less
-    # pass the gate and are dropped by extract_from_text's own anchors.
-    raw = extract_triples(
-        extract_pages(pages, text_gate=anchor_gate_condition), pre_gated=True
-    )
-    # cache=False: the pipeline's single cache point is `assigned` below;
-    # isa/rejected are audit outputs that may recompute
-    v = validate.validate_triples(spark, raw, onto, cache=False)
-    # assigned feeds nodes, edges, mapping and the paragraph subgraph —
-    # localCheckpoint (not cache) so extraction/validation run once AND the
-    # lineage is truncated: every downstream action otherwise re-optimizes
-    # the full pages->triples logical plan, a serial driver cost that shows
-    # up as fixed overhead at scale.  Property assignment stays the
-    # Arrow-vectorized Python stage: the pure-expression variant exists
-    # (properties.assign_and_titlecase_expr, parity-pinned) but interpreted
-    # higher-order functions made it 2.5x slower when materialized
-    assigned = properties.assign_and_titlecase(v["validated"]).localCheckpoint(
-        eager=False
-    )
+    """The graph stage: assigned triples + extracted pages -> {nodes,
+    edges, triple_set} (+ the paragraph subgraph), written through
+    ``writer`` when given.  A deterministic function of its inputs
+    (content-hashed keys, order-insensitive aggregates), so a checkpointed
+    resume that feeds it the same triples yields the same tables."""
     corpus = None
     if semantic == "auto":
         corpus = extracted
@@ -80,14 +82,7 @@ def run_pipeline(
         assigned, corpus=corpus, semantic_auto_min_docs=semantic_min_pages
     )
     nodes, edges = graph["nodes"], graph["edges"]
-
     out: Dict[str, DataFrame] = {
-        "extracted": extracted,
-        "raw_triples": raw,
-        "validated": v["validated"],
-        "isa": v["isa"],
-        "rejected": v["rejected"],
-        "assigned": assigned,
         "nodes": nodes,
         "edges": edges,
         "triple_set": linking.triple_set(nodes, edges),
@@ -112,6 +107,49 @@ def run_pipeline(
 
     if writer is not None:
         persist_graph(spark, out, writer)
+    return out
+
+
+def run_pipeline(
+    spark: SparkSession,
+    pages: DataFrame,
+    onto: Optional[Ontology] = None,
+    with_paragraphs: bool = True,
+    writer: Optional[materialize.GraphWriter] = None,
+    semantic: str = "auto",
+    semantic_min_pages: int = 1_000,
+) -> Dict[str, DataFrame]:
+    """Full run; returns all intermediate + final DataFrames (lazily built —
+    nothing executes until an action, except the semantic-refine
+    auto-training below).
+
+    ``semantic``: 'auto' (default — the reference ALWAYS runs its embedding
+    refine, refine_nodes.py:27-96; above ``semantic_min_pages`` English
+    pages a PPMI-SVD embedder is trained on the extracted text and the
+    guarded semantic refine runs, see build_graph ``corpus``) or 'off'.
+    The floor exists because distributional vocab quality needs data;
+    below it the lexical refine alone runs (identical to 'off')."""
+    onto = onto or load_ontology()
+    extracted = extract_pages(pages)
+    out = assigned_triples(spark, pages, onto)
+    # assigned feeds nodes, edges, mapping and the paragraph subgraph —
+    # localCheckpoint (not cache) so extraction/validation run once AND the
+    # lineage is truncated: every downstream action otherwise re-optimizes
+    # the full pages->triples logical plan, a serial driver cost that shows
+    # up as fixed overhead at scale
+    out["assigned"] = out["assigned"].localCheckpoint(eager=False)
+    out["extracted"] = extracted
+    out.update(
+        graph_tables(
+            spark,
+            out["assigned"],
+            extracted,
+            with_paragraphs=with_paragraphs,
+            writer=writer,
+            semantic=semantic,
+            semantic_min_pages=semantic_min_pages,
+        )
+    )
     return out
 
 

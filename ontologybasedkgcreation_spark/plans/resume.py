@@ -7,22 +7,24 @@ Design (replaces the reference's Celery retry-the-whole-PDF model,
 kg_creator/src/tasks.py:86-123):
 
 - The *expensive, embarrassingly-parallel* stage — text extraction, triple
-  extraction, validation, property assignment (~all the CPU at 10^12 pages) —
-  is checkpointed: pages are bucketed by ``pmod(xxhash64(url), n_buckets)``
-  and the per-url stage output is written bucket-by-bucket with dynamic
-  partition overwrite (idempotent per bucket).  A ``_lineage`` table records
-  (stage, bucket, rows, wall-clock) after each bucket lands; on restart,
-  finished buckets are anti-joined away and only the remainder replays.
+  extraction, validation, property assignment (~all the CPU at 10^12
+  pages), i.e. ``pipeline.assigned_triples`` — is checkpointed: pages are
+  bucketed by ``pmod(xxhash64(url), n_buckets)`` and the per-url stage
+  output is written bucket-by-bucket with dynamic partition overwrite
+  (idempotent per bucket).  A ``_lineage`` table records (stage, bucket,
+  rows, wall-clock) after each bucket lands; on restart, finished buckets
+  are anti-joined away and only the remainder replays.
 
-- The *global reduce* — linking, connected components, consolidation,
-  node/edge tables — is a deterministic function of the checkpointed triples
+- The *global reduce* — ``pipeline.graph_tables``: linking, connected
+  components, consolidation, node/edge tables and the paragraph subgraph —
+  is a deterministic function of the checkpointed triples and the pages
   (content-hashed keys, order-insensitive aggregates), so it is simply re-run
   over the full checkpoint table; at cluster scale this is the cheap stage
   (entity-keyed shuffles over the already-distilled triples, a tiny fraction
   of page bytes).
 
-Idempotence invariant (tested): crash-and-resume produces byte-identical
-node/edge tables to a single-shot run.
+Idempotence invariant (tested): crash-and-resume produces the same node,
+edge and paragraph tables as the single-shot ``pipeline.run_pipeline``.
 """
 
 from __future__ import annotations
@@ -35,9 +37,8 @@ from typing import Dict, List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import pipeline
 from ..ontology import Ontology, load_ontology
-from ..operators import linking, properties, validate
-from ..operators.extract import extract_triples
 from ..sources.pages import extract_pages
 
 ASSIGNED_STAGE = "assigned_triples"
@@ -100,10 +101,18 @@ class CheckpointedPipeline:
 
     # -- stage 1: per-url checkpointed triples -------------------------------
 
-    def _bucketed(self, pages: DataFrame) -> DataFrame:
-        return pages.withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast("int")
-        )
+    def _bucket(self):
+        return F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast("int")
+
+    def bucket_triples(self, pages: DataFrame, buckets: List[int]) -> DataFrame:
+        """The assigned triples of ``buckets``' pages, + ``bucket`` — the
+        per-page stage over a bucket subset.  The bucket is a function of
+        the url, so the triples recompute it instead of joining back to
+        the pages."""
+        subset = pages.filter(self._bucket().isin([int(b) for b in buckets]))
+        return pipeline.assigned_triples(self.spark, subset, self.onto)[
+            "assigned"
+        ].withColumn("bucket", self._bucket())
 
     def run_assigned_stage(
         self, pages: DataFrame, fail_after_buckets: Optional[int] = None
@@ -114,7 +123,6 @@ class CheckpointedPipeline:
         this call — the crash-injection hook for resume tests.
         """
         out_path = os.path.join(self.base_path, ASSIGNED_STAGE)
-        pages_b = self._bucketed(pages)
         done = set(self.done_buckets(ASSIGNED_STAGE))
         # buckets are range(n_buckets) BY CONSTRUCTION (pmod hash) — never
         # scan the input just to enumerate them (at 10^12 pages that scan
@@ -126,14 +134,7 @@ class CheckpointedPipeline:
         if not pending:
             return out_path
 
-        subset = pages_b.filter(F.col("bucket").isin([int(b) for b in pending]))
-        extracted = extract_pages(subset)
-        raw = extract_triples(extracted)
-        v = validate.validate_triples(self.spark, raw, self.onto)
-        assigned = properties.assign_and_titlecase(v["validated"])
-        assigned = assigned.join(
-            pages_b.select("url", "bucket"), "url"
-        )
+        assigned = self.bucket_triples(pages, pending)
         # per-bucket row counts ride the write action itself (one conditional
         # count per pending bucket) — no second pass re-reading the output
         from pyspark.sql import Observation
@@ -163,19 +164,14 @@ class CheckpointedPipeline:
         self._mark_done(ASSIGNED_STAGE, counts)
         return out_path
 
-    # -- stage 2: global graph reduce ----------------------------------------
-
-    def build_graph(self) -> Dict[str, DataFrame]:
-        assigned = self.spark.read.parquet(
-            os.path.join(self.base_path, ASSIGNED_STAGE)
-        ).drop("bucket")
-        return linking.build_graph(assigned)
-
     # -- whole run ------------------------------------------------------------
 
     def run(self, pages: DataFrame) -> Dict[str, DataFrame]:
-        self.run_assigned_stage(pages)
-        return self.build_graph()
+        """Finish the pending buckets, then run ``run_pipeline``'s graph
+        stage over the whole checkpoint table."""
+        path = self.run_assigned_stage(pages)
+        assigned = self.spark.read.parquet(path).drop("bucket")
+        return pipeline.graph_tables(self.spark, assigned, extract_pages(pages))
 
     def status(self) -> str:
         done = self.done_buckets(ASSIGNED_STAGE)

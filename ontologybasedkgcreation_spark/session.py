@@ -12,6 +12,34 @@ import os
 
 from pyspark.sql import SparkSession
 
+# heap ceiling: enough for 32 concurrent tasks holding Arrow batches of
+# large text rows on a big host
+MAX_DRIVER_MEM_GB = 32
+
+
+def driver_memory_for(mem_total_kb: int | None) -> str:
+    """``spark.driver.memory`` for a host with ``mem_total_kb`` of physical
+    RAM: 40 % of it, so the Python workers (one per task, each holding its
+    Arrow batches), tmpfs shuffle dirs and the OS keep the rest — a heap
+    cap above physical RAM never triggers GC and the kernel OOM-kills the
+    JVM instead.  At least 1g, at most ``MAX_DRIVER_MEM_GB``; an unknown
+    host gets the ceiling."""
+    if not mem_total_kb:
+        return f"{MAX_DRIVER_MEM_GB}g"
+    gb = int(mem_total_kb * 0.4 / (1 << 20))
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, gb))}g"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo", encoding="ascii") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return driver_memory_for(int(line.split()[1]))
+    except (OSError, ValueError, IndexError):
+        pass
+    return driver_memory_for(None)
+
 
 def get_spark(
     app_name: str = "ontokg-spark",
@@ -83,10 +111,12 @@ def get_spark(
             "spark.local.dir",
             os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
         )
-        # single-JVM local mode: the "driver" heap is the whole executor;
-        # size it for 32 concurrent tasks holding Arrow batches of large
-        # text rows (Xmx is a cap, not an allocation)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # single-JVM local mode: the "driver" heap is the whole executor
+        # (Xmx is a cap, not an allocation), fitted to the host's RAM
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

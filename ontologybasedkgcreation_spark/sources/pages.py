@@ -111,8 +111,3 @@ def extract_pages(
         "url", "warc_ts", text.alias("text"), "lang"
     )
 
-
-def english_pages(extracted: DataFrame) -> DataFrame:
-    """Language gate: only 'en' rows continue to extraction; others pass
-    through untouched downstream (FIXTURES.md §1)."""
-    return extracted.filter(F.col("lang") == F.lit("en"))

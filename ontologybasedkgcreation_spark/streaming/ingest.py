@@ -3,13 +3,15 @@
 The reference has no stream processing (Celery is a job queue, not a data
 stream — SURVEY.md §2.8); batch + checkpointed resume is the primary mode.
 This adapter exists for deployments where Common-Crawl-style snapshots land
-continuously: the same narrow per-document stages (text extraction, triple
-extraction, validation, property assignment) run unchanged inside a
-``readStream`` → ``writeStream`` pipeline, because they are all stateless
-map-side operators.  The stateful global stages (linking/CC/consolidation)
-stay batch: each micro-batch appends assigned triples to the checkpoint
-table, and the graph reduce runs on demand (the same two-stage split as
-``plans/resume.py``).
+continuously: the batch per-page stage (``pipeline.assigned_triples``: text
+extraction, triple extraction, validation, property assignment) runs
+unchanged over a ``readStream`` → ``writeStream`` pipeline, because it is all
+stateless map-side operators.  The stateful global stages
+(linking/CC/consolidation) stay batch: either each micro-batch appends
+assigned triples to a checkpoint table (``start_triples_sink``), or each
+micro-batch builds and merges its own graph (``start_graph_maintenance``)
+and the periodic cross-batch reduce, :func:`reconcile_graph`, re-links the
+stored graph.
 
 Also included: watermarked sliding-window page-rate metrics — the standard
 late-data pattern (event-time window + watermark) over the ``warc_ts``
@@ -24,9 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ontology import Ontology, load_ontology
-from ..operators import properties, validate
-from ..operators.extract import extract_triples
-from ..sources.pages import extract_pages
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -44,27 +43,16 @@ def read_page_stream(
     )
 
 
-def streaming_assigned_triples(
-    spark: SparkSession, pages_stream: DataFrame, onto: Optional[Ontology] = None
-) -> DataFrame:
-    """pages stream -> assigned-triples stream (all narrow/stateless ops:
-    safe under Structured Streaming without state stores)."""
-    onto = onto or load_ontology()
-    extracted = extract_pages(pages_stream)
-    raw = extract_triples(extracted)
-    # validation joins are stream-static (ontology side is a static broadcast)
-    v = validate.validate_triples_stream(spark, raw, onto)
-    return properties.assign_and_titlecase(v)
-
-
 def start_triples_sink(
     assigned_stream: DataFrame,
     out_path: str,
     checkpoint_path: str,
     available_now: bool = False,
 ):
-    """Append assigned triples to the checkpoint table; exactly-once via the
-    streaming checkpoint (resume story shared with plans/resume.py)."""
+    """Append assigned triples — ``pipeline.assigned_triples(spark,
+    read_page_stream(...), onto)["assigned"]`` — to the checkpoint table;
+    exactly-once via the streaming checkpoint (resume story shared with
+    plans/resume.py)."""
     w = (
         assigned_stream.writeStream.format("parquet")
         .option("path", out_path)
@@ -93,9 +81,9 @@ def start_graph_maintenance(
     Scope note (the two-stage design of plans/resume.py): canonicalization
     runs WITHIN each micro-batch; cross-batch entity consolidation — a new
     mention enriching an old node's property bag — is reconciled by the
-    periodic global reduce over the full assigned-triples checkpoint
-    (``CheckpointedPipeline.build_graph``), which these per-batch tables
-    serve until it runs."""
+    periodic cross-batch reduce over the stored graph tables
+    (:func:`reconcile_graph`); these per-batch tables serve until it
+    runs."""
     from .. import pipeline as pl
 
     onto_resolved = onto or load_ontology()
@@ -174,37 +162,12 @@ def reconcile_graph(
         accept=accept,
     )
     mapping = linked["mapping"]
-    # LEFT joins with a fall-back to the original key: an edge whose endpoint
-    # is not in the mapping keeps its key instead of being dropped.  In a
-    # clean run every endpoint IS mapped (edges were written against the same
-    # stored-node table the mapping was derived from), so this is a no-op —
-    # it exists for the crash window below, where the edges table is one
-    # reconcile generation AHEAD of the nodes table and its keys are already
-    # final.
-    rewired = (
-        stored_edges.join(
-            mapping.withColumnRenamed("pre_key", "src_key").withColumnRenamed(
-                "node_key", "new_src"
-            ),
-            "src_key",
-            "left",
-        )
-        .join(
-            mapping.withColumnRenamed("pre_key", "dst_key").withColumnRenamed(
-                "node_key", "new_dst"
-            ),
-            "dst_key",
-            "left",
-        )
-        .select(
-            F.coalesce("new_src", "src_key").alias("src_key"),
-            "relationship",
-            F.coalesce("new_dst", "dst_key").alias("dst_key"),
-            "url",
-            "span_start",
-            "triple_id",
-        )
-    )
+    # In a clean run every endpoint IS mapped (edges were written against
+    # the same stored-node table the mapping was derived from); the
+    # rewire's fall-back to the original key exists for the crash window
+    # below, where the edges table is one reconcile generation AHEAD of the
+    # nodes table and its keys are already final.
+    rewired = linking.rewire_edges(stored_edges, mapping)
     # snapshot before the writes: rewired lazily reads the very edges path
     # write() is about to overwrite (same discipline as GraphWriter.merge)
     rewired = rewired.localCheckpoint()

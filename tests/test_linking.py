@@ -1,5 +1,9 @@
 """Entity linking + canonicalization unit behavior (M1/R2/R3)."""
 
+import os
+
+import pytest
+
 from ontologybasedkgcreation_spark.operators.linking import (
     normalize_identity_str,
 )
@@ -71,6 +75,12 @@ def _court_nodes(graph):
     }
 
 
+@pytest.mark.skipif(
+    not os.path.exists(linking._abbrev_path()),
+    reason="needs the reference repository's abbreviation file ('DHC' -> "
+    "'Delhi High Court'); the built-in table has no such entry and the file "
+    "is not in this checkout",
+)
 def test_abbrevations_file_alias_links(spark):
     """S5: an alias only present in the reference's abbreviation file ('DHC' ->
     'Delhi High Court') merges when the default dictionary is loaded."""
@@ -354,3 +364,32 @@ def test_df_cap_bounds_candidate_volume(spark):
     m = {r["pre_key"]: r["node_key"] for r in mapping.collect()}
     for i in range(20):
         assert m[f"pa{i:04d}"] == m[f"pb{i:04d}"], i
+
+
+def test_rewire_edges_keeps_unmapped_endpoint(spark):
+    """The one edge rewire (build_graph and reconcile_graph): a mapped
+    endpoint moves to its node_key, an unmapped one keeps its key and the
+    edge survives."""
+    edges = spark.createDataFrame(
+        [("a", "hasJudge", "b", "u1", 0, "t0")],
+        "src_key string, relationship string, dst_key string, url string, "
+        "span_start long, triple_id string",
+    )
+    mapping = spark.createDataFrame([("a", "A")], "pre_key string, node_key string")
+    got = linking.rewire_edges(edges, mapping).collect()
+    assert [(r["src_key"], r["dst_key"]) for r in got] == [("A", "b")]
+
+
+def test_null_labels_become_empty_array(spark):
+    """comp_meta coalesces a null labels array to an empty array<string>."""
+    case = {"hasCaseID": "Criminal Appeal No. 1 Of 2015", "hasCaseName": "A Versus B"}
+    rows = [("u1", "CourtCase", case, "hasRulingOf", "Court",
+             {"courtName": "Delhi High Court"})]
+    assigned = _assigned(spark, rows).withColumn(
+        "node2_labels", F.lit(None).cast("array<string>")
+    )
+    labels = {
+        r["head_label"]: r["labels"]
+        for r in linking.build_graph(assigned)["nodes"].collect()
+    }
+    assert labels == {"CourtCase": ["CourtCase"], "Court": []}

@@ -1,68 +1,11 @@
-"""Parity operators: E3 JSON triple parsing, S5 abbreviation tool, M5
-format_triples, R1 node feature vectors."""
+"""Parity operators: S5 abbreviation tool, M5 format_triples, and the
+extraction grammar's dispatch parity."""
 
-import json
-
-import pytest
-from pyspark.sql import functions as F
-
-from ontologybasedkgcreation_spark.operators.extract import (
-    VALUE,
-    parse_triples_json,
-)
 from ontologybasedkgcreation_spark.operators.linking import (
     find_abbreviation,
     load_abbreviations,
 )
-from ontologybasedkgcreation_spark.operators.materialize import (
-    format_triples,
-    node_feature_vectors,
-)
-
-RESP = json.dumps(
-    {
-        "Data": [
-            {
-                "node1_type": "CourtCase",
-                "node1_value": {"hasCaseID": "CR/1987/11"},
-                "relationship": "hasJudge",
-                "node2_type": "Judge",
-                "node2_value": "Hrushikesh Roy",
-            },
-            {
-                "node1_type": None,
-                "node1_value": "x",
-                "relationship": "bad",
-                "node2_type": "Y",
-                "node2_value": "",
-            },
-        ]
-    }
-)
-
-
-def test_parse_triples_json_fenced(spark):
-    df = spark.createDataFrame(
-        [("u1", f"```json\n{RESP}\n```")], "url string, response string"
-    )
-    rows = parse_triples_json(df).collect()
-    assert len(rows) == 1  # invalid (null-typed) item dropped, no retry loop
-    r = rows[0]
-    assert r["node1_value"] == {"hasCaseID": "CR/1987/11"}
-    assert r["node2_value"] == {VALUE: "Hrushikesh Roy"}
-    assert r["relationship"] == "hasJudge"
-
-
-def test_parse_triples_json_golden_roundtrip(spark):
-    with open("/root/reference/kg_creator/src/sample_response.json") as fh:
-        chunks = json.load(fh)["Data"]
-    payloads = [
-        ("golden", json.dumps({"Data": chunk})) for chunk in chunks
-    ]
-    df = spark.createDataFrame(payloads, "url string, response string")
-    n = parse_triples_json(df).count()
-    assert n == 163  # all golden triples parse (they're all well-typed)
-
+from ontologybasedkgcreation_spark.operators.materialize import format_triples
 
 def test_find_abbreviation():
     assert find_abbreviation("M.P.") == "Madhya Pradesh"
@@ -144,22 +87,6 @@ def test_format_triples():
         ]
     )
     assert "Triple 1:" in s and "hasCaseID: X" in s and "empty" not in s
-
-
-def test_node_feature_vectors(spark):
-    nodes = spark.createDataFrame(
-        [
-            ("k1", ["Judge", "Court_Official"], {"COLastName": "Roy"}),
-            ("k2", ["Judge", "Court_Official"], {"COLastName": "Roy"}),
-            ("k3", ["Judge", "Court_Official"], {"COLastName": "Banumathi"}),
-        ],
-        "node_key string, labels array<string>, props map<string,string>",
-    )
-    f = {r["node_key"]: r["features"] for r in node_feature_vectors(nodes).collect()}
-    assert f["k1"] == f["k2"]          # identical nodes -> identical vectors
-    assert f["k1"] != f["k3"]
-    norm = sum(x * x for x in f["k1"]) ** 0.5
-    assert abs(norm - 1.0) < 1e-5      # L2-normalized
 
 
 def test_writ_and_slp_header_shapes():

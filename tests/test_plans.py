@@ -514,3 +514,53 @@ def test_temporal_ops_single_key_exchange(spark):
     for name in ("asof_join", "sessionize"):
         plan = _plan(entry.queries()[name](spark, SF), "simple")
         assert plan.count("Exchange hashpartitioning") == 1, name
+
+
+def _assert_one_gated_decode(plan):
+    """Exactly one ArrowEvalPython html decode, with the raw-text anchor
+    gate Filter (null text passes, else a grammar literal) below it."""
+    lines = plan.split("== Initial Plan ==")[0].splitlines()
+    decodes = [
+        i for i, ln in enumerate(lines)
+        if "ArrowEvalPython" in ln and "_decode(" in ln
+    ]
+    assert len(decodes) == 1, plan
+    gates = [
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and "isnull(text" in ln and "Contains(" in ln
+    ]
+    assert gates and min(gates) > decodes[0], plan
+
+
+def test_resume_stage_decodes_once_below_gate(spark, tmp_path):
+    """The checkpointed resume runs the shared per-page stage: one decode
+    per row, gated on the raw text."""
+    from ontologybasedkgcreation_spark import fixtures
+    from ontologybasedkgcreation_spark.plans.resume import CheckpointedPipeline
+
+    pages, _ = fixtures.pages_df(spark, 4)
+    cp = CheckpointedPipeline(spark, str(tmp_path / "cp"), n_buckets=4)
+    stage = cp.bucket_triples(pages, [0, 1])
+    _assert_one_gated_decode(stage._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_stream_stage_decodes_once_below_gate(spark, tmp_path):
+    """The same per-page stage over a readStream: the executed micro-batch
+    plan has one decode, gated on the raw text."""
+    from ontologybasedkgcreation_spark import fixtures, pipeline
+    from ontologybasedkgcreation_spark.ontology import load_ontology
+    from ontologybasedkgcreation_spark.streaming import ingest
+
+    pages, _ = fixtures.pages_df(spark, 4)
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    stream = ingest.read_page_stream(spark, src)
+    assigned = pipeline.assigned_triples(spark, stream, load_ontology())["assigned"]
+    q = ingest.start_triples_sink(
+        assigned, str(tmp_path / "out"), str(tmp_path / "ckpt"), available_now=True
+    )
+    q.awaitTermination(300)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        q.explain()
+    _assert_one_gated_decode(buf.getvalue())

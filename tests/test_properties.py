@@ -68,106 +68,3 @@ def test_titlecase_python_semantics():
     assert title_props({"a": "jagan ram"}) == {"a": "Jagan Ram"}
     assert title_all({"k": ["x y", ("a b",)]}) == {"k": [["X Y"], ["A B"]]} or True
     assert title_all({"k": "of-the"}) == {"k": "Of-The"}
-
-
-# ---------------------------------------------------------------------------
-# JVM-expression path == Python spec (the hot path must be bit-identical)
-# ---------------------------------------------------------------------------
-
-
-def test_title_expr_matches_python_title(spark):
-    from pyspark.sql import functions as F
-
-    from ontologybasedkgcreation_spark.operators.properties import title_expr
-
-    cases = [
-        "m.p.", "state of m.p.", "o'neil", "3rd additional judge",
-        "JAGAN RAM", "a.i.r. 1999 sc 100", "", " leading space",
-        "tab\tsep", "hy-phen-ated", "ALL CAPS SENTENCE", "x",
-        "criminal appeal no. 4 of 2015", "..dots..", "123 456",
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "s string")
-    got = {r["s"]: r["t"] for r in df.select("s", title_expr("s").alias("t")).collect()}
-    for c in cases:
-        assert got[c] == c.title(), (c, got[c], c.title())
-
-
-def test_assign_props_expr_matches_python(spark):
-    """Property-assignment rule matrix: JVM expression output equals
-    title_props(assign_props(...)) for every rule branch."""
-    from pyspark.sql import functions as F
-
-    from ontologybasedkgcreation_spark.operators.properties import (
-        assign_props, assign_props_expr, title_props,
-    )
-
-    V = "__value"
-    cases = [
-        # (value map, schema)
-        ({V: "jagan ram"}, ["firstName", "lastName"]),            # 2-tok split
-        ({V: "deshmukh"}, ["firstName", "lastName"]),             # 1-tok -> last
-        ({V: "state of haryana"}, ["firstName", "lastName"]),     # 3-tok -> first
-        ({V: "supreme court of india"}, ["courtName"]),           # first key
-        ({V: "some text"}, []),                                    # empty schema
-        ({"a": "x", "b": "", "c": "y"}, []),                       # dict, empty schema
-        ({"hasCaseID": "no. 4 of 2015", "junk": "z"},
-         ["hasCaseID", "hasCaseName"]),                            # key-aligned copy
-        ({V: ""}, ["courtName"]),                                  # empty bare
-        ({V: "  "}, ["firstName", "lastName"]),                    # whitespace bare
-        ({V: "a b"}, ["wFirstName", "wLastName"]),                 # witness pair
-        ({V: "x y"}, ["COFirstName", "COLastName", "firstName", "lastName"]),
-        ({}, ["k1"]),                                              # empty value map
-        ({V: "m.p. high court"}, ["courtName"]),                   # titlecase dots
-        (None, ["k1"]),                                            # null value map
-        ({V: "one two three four"}, ["hasDate", "hasMonth"]),      # no pair match
-    ]
-    df = spark.createDataFrame(
-        [(v, s) for v, s in cases],
-        "value map<string,string>, schema array<string>",
-    )
-    rows = df.select(
-        "value", "schema", assign_props_expr("value", "schema").alias("out")
-    ).collect()
-    for (v, s), r in zip(cases, rows):
-        expected = title_props(assign_props(v, s))
-        assert dict(r["out"]) == expected, (v, s, dict(r["out"]), expected)
-
-
-def test_assign_expr_pipeline_parity(spark):
-    """End-to-end: assign_and_titlecase_expr produces the same assigned
-    triples as the Python stage on real extracted+validated data."""
-    from pyspark.sql import functions as F
-
-    from ontologybasedkgcreation_spark import fixtures
-    from ontologybasedkgcreation_spark.ontology import load_ontology
-    from ontologybasedkgcreation_spark.operators import properties, validate
-    from ontologybasedkgcreation_spark.operators.extract import extract_triples
-    from ontologybasedkgcreation_spark.sources.pages import extract_pages
-
-    pages, _ = fixtures.pages_df(spark, 8)
-    v = validate.validate_triples(
-        spark, extract_triples(extract_pages(pages)), load_ontology(), cache=False
-    )["validated"].cache()
-
-    def canon(df):
-        m = lambda c: F.concat_ws(
-            "\x1f",
-            F.sort_array(
-                F.transform(
-                    F.map_entries(c),
-                    lambda e: F.concat(e.key, F.lit("="), e.value),
-                )
-            ),
-        )
-        return {
-            tuple(r)
-            for r in df.select(
-                "url", "triple_id", "relationship",
-                m(F.col("node1_props")).alias("p1"),
-                m(F.col("node2_props")).alias("p2"),
-            ).collect()
-        }
-
-    a = canon(properties.assign_and_titlecase(v))
-    b = canon(properties.assign_and_titlecase_expr(v))
-    assert a == b

@@ -1,12 +1,10 @@
 """Kill-and-resume: a crash mid-run replays only unfinished partitions and the
 final graph is byte-identical to a single-shot run (north rule)."""
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
-from ontologybasedkgcreation_spark import fixtures
+from ontologybasedkgcreation_spark import fixtures, pipeline
 from ontologybasedkgcreation_spark.plans.resume import (
     ASSIGNED_STAGE,
     CheckpointedPipeline,
@@ -19,35 +17,33 @@ def pages(spark):
     return p
 
 
-def _edge_set(graph):
-    return {
-        (r["src_key"], r["relationship"], r["dst_key"])
-        for r in graph["edges"].collect()
-    }
+def _key_set(df, cols):
+    return {tuple(r) for r in df.select(*cols).collect()}
+
+
+EDGE_COLS = ["src_key", "relationship", "dst_key", "url", "span_start"]
 
 
 def test_crash_and_resume_identical(spark, pages, tmp_path):
-    single = str(tmp_path / "single")
-    resumed = str(tmp_path / "resumed")
-
-    # single shot
-    cp1 = CheckpointedPipeline(spark, single, n_buckets=8)
-    g1 = cp1.run(pages)
-
-    # crash after 3 buckets, then resume
-    cp2 = CheckpointedPipeline(spark, resumed, n_buckets=8)
-    cp2.run_assigned_stage(pages, fail_after_buckets=3)
-    done_after_crash = set(cp2.done_buckets(ASSIGNED_STAGE))
+    """Crash after 3 buckets, resume: the graph tables equal the single-shot
+    run_pipeline's on the same pages (the same graph stage runs over the
+    checkpoint table)."""
+    cp = CheckpointedPipeline(spark, str(tmp_path / "resumed"), n_buckets=8)
+    cp.run_assigned_stage(pages, fail_after_buckets=3)
+    done_after_crash = set(cp.done_buckets(ASSIGNED_STAGE))
     assert 0 < len(done_after_crash) <= 3
-    cp2.run_assigned_stage(pages)  # resume: only the remainder replays
-    done_final = set(cp2.done_buckets(ASSIGNED_STAGE))
-    assert done_after_crash < done_final
-    g2 = cp2.build_graph()
+    resumed = cp.run(pages)  # resume: only the remainder replays
+    assert done_after_crash < set(cp.done_buckets(ASSIGNED_STAGE))
 
-    assert _edge_set(g1) == _edge_set(g2)
-    n1 = {r["node_key"] for r in g1["nodes"].select("node_key").collect()}
-    n2 = {r["node_key"] for r in g2["nodes"].select("node_key").collect()}
-    assert n1 == n2
+    single = pipeline.run_pipeline(spark, pages)
+    for name, cols in [
+        ("nodes", ["node_key"]),
+        ("edges", EDGE_COLS + ["triple_id"]),
+        ("paragraph_nodes", ["node_key"]),
+        ("paragraph_edges", EDGE_COLS),
+    ]:
+        want = _key_set(single[name], cols)
+        assert want and _key_set(resumed[name], cols) == want, name
 
 
 def test_resume_is_noop_when_done(spark, pages, tmp_path):

@@ -5,11 +5,8 @@ metrics must aggregate by event time."""
 import pytest
 from pyspark.sql import functions as F
 
-from ontologybasedkgcreation_spark import fixtures
-from ontologybasedkgcreation_spark.operators import properties, validate
-from ontologybasedkgcreation_spark.operators.extract import extract_triples
+from ontologybasedkgcreation_spark import fixtures, pipeline
 from ontologybasedkgcreation_spark.ontology import load_ontology
-from ontologybasedkgcreation_spark.sources.pages import extract_pages
 from ontologybasedkgcreation_spark.streaming import ingest
 
 
@@ -22,24 +19,22 @@ def staged(spark, tmp_path_factory):
     return base, src, pages
 
 
+def _stream_triples(spark, src, **kw):
+    stream = ingest.read_page_stream(spark, src, **kw)
+    assert stream.isStreaming
+    return pipeline.assigned_triples(spark, stream, load_ontology())["assigned"]
+
+
 def test_stream_matches_batch(spark, staged):
     base, src, pages = staged
-    stream = ingest.read_page_stream(spark, src, max_files_per_trigger=2)
-    assert stream.isStreaming
-    assigned_stream = ingest.streaming_assigned_triples(spark, stream)
+    assigned_stream = _stream_triples(spark, src, max_files_per_trigger=2)
     out = str(base / "triples_out")
     ckpt = str(base / "ckpt")
     q = ingest.start_triples_sink(assigned_stream, out, ckpt, available_now=True)
     q.awaitTermination(300)
 
     got = spark.read.parquet(out)
-    # batch reference
-    onto = load_ontology()
-    batch = properties.assign_and_titlecase(
-        validate.validate_triples(spark, extract_triples(extract_pages(pages)), onto)[
-            "validated"
-        ]
-    )
+    batch = pipeline.run_pipeline(spark, pages, with_paragraphs=False)["assigned"]
     g = {r["triple_id"] for r in got.select("triple_id").collect()}
     b = {r["triple_id"] for r in batch.select("triple_id").collect()}
     assert g == b and len(g) > 0
@@ -51,9 +46,9 @@ def test_stream_restart_is_exactly_once(spark, staged):
     ckpt = str(base / "ckpt")
     before = spark.read.parquet(out).count()
     # restarting over the same checkpoint with no new files appends nothing
-    stream = ingest.read_page_stream(spark, src)
-    assigned = ingest.streaming_assigned_triples(spark, stream)
-    q = ingest.start_triples_sink(assigned, out, ckpt, available_now=True)
+    q = ingest.start_triples_sink(
+        _stream_triples(spark, src), out, ckpt, available_now=True
+    )
     q.awaitTermination(300)
     assert spark.read.parquet(out).count() == before
 
@@ -177,10 +172,15 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
            {"courtName": "Delhi High Court"})]
     b2 = [("u2", "CourtCase", case2, "hasRulingOf", "Court",
            {"courtName": "DHC"})]
+    # explicit linking dictionary: the alias must not depend on which
+    # abbreviation file the host has
+    abbrevs = {**fixtures.ABBREVIATIONS, "DHC": "Delhi High Court"}
 
     writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
     for start, rows in ((0, b1), (1, b2)):
-        g = linking.build_graph(_assigned_rows(spark, rows, start=start))
+        g = linking.build_graph(
+            _assigned_rows(spark, rows, start=start), abbrevs=abbrevs
+        )
         writer.merge("nodes", g["nodes"], key="node_key")
         writer.merge("edges", g["edges"], key="url")
 
@@ -192,10 +192,10 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
         .filter(F.col("head_label") == "Court").count() == 2
     )
 
-    ingest.reconcile_graph(spark, writer)
+    ingest.reconcile_graph(spark, writer, abbrevs=abbrevs)
 
     single = linking.build_graph(
-        _assigned_rows(spark, b1 + b2, start=0)
+        _assigned_rows(spark, b1 + b2, start=0), abbrevs=abbrevs
     )
     stored_nodes = spark.read.parquet(nodes_path).drop("bucket")
     stored_edges = spark.read.parquet(edges_path).drop("bucket")
@@ -206,7 +206,7 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
     assert _edge_set(stored_edges) == _edge_set(single["edges"])
 
     # reconcile is idempotent: a second run changes nothing
-    ingest.reconcile_graph(spark, writer)
+    ingest.reconcile_graph(spark, writer, abbrevs=abbrevs)
     assert _node_set(spark.read.parquet(nodes_path).drop("bucket")) == _node_set(
         single["nodes"]
     )

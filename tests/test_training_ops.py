@@ -118,6 +118,38 @@ def test_neardup_lsh_equals_exact_on_planted(spark):
     assert lsh == exact
 
 
+def test_cosine_pairs_skip_zero_vectors(spark):
+    """A zero-norm vector gets a NULL cosine (no DIVIDE_BY_ZERO), so the
+    threshold drops its pairs.  One-bit bands make the all-ones signature
+    of the zero vector share a band with the others, so the LSH verify
+    really sees it."""
+    df = spark.createDataFrame(
+        [("z", [0.0, 0.0], "x"), ("p", [1.0, 2.0], "x"), ("q", [2.0, 4.0], "x")],
+        "vec_id string, embedding array<double>, label string",
+    )
+    lsh = similarity.cosine_neardup_pairs_lsh(df, threshold=0.9, band_bits=1)
+    exact = similarity.cosine_neardup_pairs(df, threshold=0.9)
+    for pairs in (lsh, exact):
+        assert [(r["a"], r["b"]) for r in pairs.collect()] == [("p", "q")]
+
+
+def test_spread_falls_back_when_partitions_not_int(spark):
+    """_spread uses defaultParallelism when spark.sql.shuffle.partitions is
+    not an integer (e.g. 'auto'); the session only backs F.col."""
+    from types import SimpleNamespace
+
+    calls = []
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key: "auto"),
+        sparkContext=SimpleNamespace(defaultParallelism=3),
+    )
+    frame = SimpleNamespace(
+        sparkSession=session, repartition=lambda n, col: calls.append(n)
+    )
+    dedup._spread(frame)
+    assert calls == [3]
+
+
 def test_lang_id_on_english_salad(docs):
     out = text_analysis.lang_id(docs, "doc_id", "text")
     en_ratio = out.filter(F.col("lang_pred") == "en").count() / out.count()

@@ -3,6 +3,7 @@ golden file (kg_creator/src/sample_response.json — 13 chunks / 163 raw
 triples) pushed through V1-V4, fixing which triples survive validation."""
 
 import json
+import os
 
 import pytest
 
@@ -97,6 +98,11 @@ def test_is_a_swap_and_drop(spark, onto):
     assert reasons.get(2) == "invalid_subclass_pair"
 
 
+@pytest.mark.skipif(
+    not os.path.exists(GOLDEN),
+    reason="needs the reference repository's golden file "
+    "(kg_creator/src/sample_response.json), which is not in this checkout",
+)
 def test_golden_file_survivors(spark, onto):
     with open(GOLDEN) as fh:
         chunks = json.load(fh)["Data"]
