@@ -176,7 +176,7 @@ def vocab_counts_fast(
         acc: Counter = Counter()
         for pdf in batches:
             for text in pdf[text_col]:
-                acc.update(ws_re.split((text or "").lower()))
+                acc.update(ws_re.split(text or ""))
         acc.pop("", None)
         if acc:
             yield pd.DataFrame(
@@ -186,9 +186,11 @@ def vocab_counts_fast(
                 }
             )
 
-    partials = docs.select(F.col(text_col).alias(text_col)).mapInPandas(
-        _vcount, schema="token string, n long"
-    )
+    # lowercase in the JVM, exactly as the spec op does: Python's
+    # str.lower and the JVM's lower need not agree outside ASCII
+    partials = docs.select(
+        F.lower(F.col(text_col)).alias(text_col)
+    ).mapInPandas(_vcount, schema="token string, n long")
     return (
         partials.groupBy("token")
         .agg(F.sum("n").alias("n"))
@@ -261,7 +263,7 @@ def cooccurrence_counts_fast(
         counts = np.zeros((n_vocab, n_vocab), dtype=np.int64)
         for pdf in batches:
             for text, d in zip(pdf["text"], pdf["d"]):
-                toks = ws_re.split((text or "").lower())
+                toks = ws_re.split(text or "")
                 ids = np.fromiter(
                     (tok2id.get(t, -1) for t in toks if t != ""),
                     dtype=np.int64,
@@ -282,7 +284,9 @@ def cooccurrence_counts_fast(
             {"wi": wi, "ci": ci, "n": counts[wi, ci]}
         )
 
-    partials = grouped.mapInPandas(
+    # group on the raw text (the spec's document key), then lowercase in
+    # the JVM like the spec's tokenizer
+    partials = grouped.select(F.lower("text").alias("text"), "d").mapInPandas(
         _count, schema="wi int, ci int, n long"
     )
     return (

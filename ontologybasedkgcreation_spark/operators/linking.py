@@ -26,7 +26,7 @@ Spark-first design:
    "BM25 top-1 score > 1 ⇒ adopt" (utils.py:363-365) and of the kNN-0.6 gate.
    Nodes whose only property is free ``text`` never fuzzy-link (the human gate
    would reject merging prose nodes).
-4. Skew/scale controls: tokens with document frequency above ``max_token_df``
+4. Skew/scale controls: tokens with document frequency above ``MAX_TOKEN_DF``
    are dropped from the index (head tokens like "state" would otherwise build
    quadratic candidate blocks — this is the salting discipline for the
    head-entity hot keys), and pair generation is bounded per token.
@@ -46,12 +46,32 @@ import re
 from typing import Dict, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..fixtures import ABBREVIATIONS
 
 STOP_TOKENS = ("of", "the", "")
+
+# The linking policy: one set of values, read at call time rather than
+# bound as parameter defaults, so a test or a stress script sets them on
+# this module instead of threading a knob through every entry point.
+#
+# Skew guard: tokens whose document frequency within a label block exceeds
+# MAX_TOKEN_DF leave the containment index, and char-3grams above it leave
+# the refine index.
+MAX_TOKEN_DF = 1_000
+# Lexical refine: probe each node's REFINE_PROBES rarest grams among those
+# with df <= PROBE_DF_CAP; accept at hashing-TF (REFINE_DIM) cosine >=
+# REFINE_THRESHOLD.
+REFINE_THRESHOLD = 0.75
+REFINE_PROBES = 3
+PROBE_DF_CAP = 64
+REFINE_DIM = 256
+# Semantic refine: the reference's 0.6 gate, over an embedder trained on a
+# hash-sample of at most SEMANTIC_MAX_DOCS corpus documents.
+SEMANTIC_THRESHOLD = 0.6
+SEMANTIC_MAX_DOCS = 20_000
 
 # The reference ships a 616-row legal-abbreviation file
 # (/root/reference/Abbrevations; surfaced through the stub tool at
@@ -126,10 +146,6 @@ def normalize_identity(
     return out.str.replace(r"\s+", " ", regex=True).str.strip()
 
 
-def normalize_identity_str(s: str, table: Optional[Dict[str, str]] = None) -> str:
-    return normalize_identity(pd.Series([s]), table).iloc[0]
-
-
 def normalize_identity_expr(col, abbrevs: Dict[str, str] | None = None):
     """JVM-side (whole-stage-codegen) equivalent of :func:`normalize_identity`
     — a chain of ``regexp_replace`` per abbreviation entry.  Right for SMALL
@@ -166,14 +182,6 @@ def normalize_identity_col(col, table: Optional[Dict[str, str]] = None):
         return normalize_identity(s, table)
 
     return _norm(F.col(col) if isinstance(col, str) else col)
-
-
-def find_abbreviation(abb: str, table: Dict[str, str] | None = None) -> str:
-    """S5 parity: lookup mirroring the reference's stub tool
-    (kg_creator/src/tools.py:1-7) against the default dictionary (505
-    entries parsed from the reference file + built-ins when present)."""
-    table = table if table is not None else default_abbreviations()
-    return table.get(abb, table.get(abb.upper(), abb))
 
 
 def _keylike_token(t: str) -> bool:
@@ -310,15 +318,10 @@ def mentions_frame(assigned: DataFrame) -> DataFrame:
     return m
 
 
-def connected_components(
-    pairs: DataFrame,
-    node_keys: Optional[DataFrame] = None,
-    max_iter: int = 16,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
     """(a, b) accepted pairs -> (pre_key, comp) with comp = min pre_key of
-    the component, over the universe of pair endpoints (or ``node_keys``
-    if given).  Driver-side loop over DataFrames; data never leaves the
-    cluster.
+    the component, over the universe of pair endpoints.  Driver-side loop
+    over DataFrames; data never leaves the cluster.
 
     Convergence shape (the fixed-overhead lever at scale): min-label
     propagation WITH pointer doubling — each round also shortcuts
@@ -333,11 +336,7 @@ def connected_components(
     ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     # lazy: the first round's convergence aggregate materializes it
     sym = sym.localCheckpoint(eager=False)
-    universe = (
-        node_keys
-        if node_keys is not None
-        else sym.select(F.col("src").alias("pre_key")).distinct()
-    )
+    universe = sym.select(F.col("src").alias("pre_key")).distinct()
     comp = universe.select(F.col("pre_key"), F.col("pre_key").alias("comp"))
     for _ in range(max_iter):
         msgs = sym.join(comp, sym["src"] == comp["pre_key"]).select(
@@ -388,9 +387,13 @@ def bm25_adopt_pairs(
     FIXME at utils.py:321-323 — tiny-N Robertson IDF goes ≤0, which this
     deterministic formula reproduces exactly, minus the library's RNG).
 
+    Not the linker's accept rule (that is containment, :func:`link_nodes`):
+    this is the reference's rule as an oracle-checked operator, so the
+    divergence between the two stays measurable.
+
     Input ``tok``: the df-capped token index (labels_str, pre_key, token,
-    df) already built by :func:`build_graph` — candidates come from the
-    same rarest-token probe, so the plan is O(#nodes), never corpus×query.
+    df) of :func:`token_index` — candidates come from the same
+    rarest-token probe, so the plan is O(#nodes), never corpus×query.
     Score over shared tokens (set semantics ⇒ tf=1):
 
         Σ idf(t) · (k1+1) / (1 + k1·(1-b+b·|d|/avgdl)),
@@ -490,18 +493,13 @@ def bm25_adopt_pairs(
     )
 
 
-def gram_candidates(
-    base: DataFrame,
-    max_gram_df: int = 1_000,
-    n_probe: int = 3,
-    probe_df_cap: int = 64,
-) -> DataFrame:
+def gram_candidates(base: DataFrame) -> DataFrame:
     """(a, b) refine candidates: char-3gram inverted index (df band
-    [2, max_gram_df]) probed with each node's ``n_probe`` rarest grams.
+    [2, MAX_TOKEN_DF]) probed with each node's REFINE_PROBES rarest grams.
 
-    ``probe_df_cap`` bounds the volume HARD: only grams with df <=
-    probe_df_cap may serve as probes, so candidates <= n_probe x
-    probe_df_cap per node no matter how pathological the corpus.  A node
+    PROBE_DF_CAP bounds the volume HARD: only grams with df <=
+    PROBE_DF_CAP may serve as probes, so candidates <= REFINE_PROBES x
+    PROBE_DF_CAP per node no matter how pathological the corpus.  A node
     with no gram under the cap has no DISTINCTIVE substring at all — a
     typo/reorder alias of a distinctive identity always shares the rare
     grams of its distinctive region, which is what this pass exists for;
@@ -521,16 +519,16 @@ def gram_candidates(
     g = base.select("labels_str", "pre_key", F.explode(grams_arr).alias("gram"))
     gdf = g.groupBy("labels_str", "gram").agg(F.count("*").alias("df"))
     # df=1 grams can only ever match their own node — they are useless both
-    # as probes AND as index entries, so the band is [2, max_gram_df]
+    # as probes AND as index entries, so the band is [2, MAX_TOKEN_DF]
     g = g.join(
-        gdf.filter((F.col("df") >= 2) & (F.col("df") <= max_gram_df)),
+        gdf.filter((F.col("df") >= 2) & (F.col("df") <= MAX_TOKEN_DF)),
         ["labels_str", "gram"],
     )
-    # top-n_probe by (df, gram) == sorted collect_list slice: grams are
+    # top-REFINE_PROBES by (df, gram) == sorted collect_list slice: grams are
     # per-node distinct and few (identity strings are short), so the agg
     # buffer is tiny and partial-aggregates map-side — no full-sort window
     probe = (
-        g.filter(F.col("df") <= probe_df_cap)
+        g.filter(F.col("df") <= PROBE_DF_CAP)
         .groupBy("pre_key")
         .agg(
             F.slice(
@@ -538,7 +536,7 @@ def gram_candidates(
                     F.collect_list(F.struct("df", "gram", "labels_str"))
                 ),
                 1,
-                n_probe,
+                REFINE_PROBES,
             ).alias("top")
         )
         .select(F.col("pre_key").alias("p"), F.explode("top").alias("m"))
@@ -559,13 +557,7 @@ def gram_candidates(
     )
 
 
-def refine_pairs(
-    linkable: DataFrame,
-    threshold: float = 0.75,
-    max_gram_df: int = 1_000,
-    n_probe: int = 3,
-    dim: int = 256,
-) -> DataFrame:
+def refine_pairs(linkable: DataFrame) -> DataFrame:
     """R2 parity: the similarity-driven refine pass of the reference
     (``refine_nodes.py:27-96``: per-node ANN kNN with cosine >= 0.6, then an
     LLM + human gate; ``merge_by_id`` merges only when the two label sets
@@ -574,11 +566,11 @@ def refine_pairs(
     - vectors: hashing-TF over the NORMALIZED identity (word + char-3gram),
       so token reorders and small typos score high;
     - candidates: a df-capped char-3gram inverted index probed with each
-      node's ``n_probe`` rarest grams — the approximate-recall analog of the
-      reference's ANN index (both are recall-approximate by design), volume
-      O(#nodes · n_probe), never all-pairs;
+      node's REFINE_PROBES rarest grams — the approximate-recall analog of
+      the reference's ANN index (both are recall-approximate by design),
+      volume O(#nodes · REFINE_PROBES), never all-pairs;
     - label-equality guard: the index is blocked by ``labels_str``;
-    - accept at cosine >= ``threshold``.  0.75 here plays the role of the
+    - accept at cosine >= REFINE_THRESHOLD.  0.75 here plays the role of the
       reference's 0.6-on-a-semantic-model + human gate: calibrated so true
       aliases (token reorders ~0.84, typos ~0.94) merge while sibling
       entities ("Madras"/"Bombay High Court" ~0.67) never do;
@@ -597,7 +589,7 @@ def refine_pairs(
             F.filter(F.col("tokens"), lambda t: t.rlike("[0-9]"))
         ).alias("num_toks"),
     )
-    cand = gram_candidates(base, max_gram_df=max_gram_df, n_probe=n_probe)
+    cand = gram_candidates(base)
     # feature vectors only for nodes that actually appear in a candidate
     # pair (Python work bounded by candidate volume, not corpus size)
     keys = (
@@ -609,7 +601,7 @@ def refine_pairs(
     # lazy checkpoint: fa and fb below are two branches over this frame —
     # without it the Arrow hashing-TF stage runs once per branch
     feats = hashing_feature_vectors(
-        side, "pre_key", "norm_identity", dim
+        side, "pre_key", "norm_identity", REFINE_DIM
     ).join(side.select("pre_key", "num_toks"), "pre_key").localCheckpoint(
         eager=False
     )
@@ -635,7 +627,7 @@ def refine_pairs(
                 F.col("fb").cast("array<double>"),
             ),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= REFINE_THRESHOLD)
         .select("a", "b")
     )
 
@@ -687,7 +679,7 @@ def refine_pairs_semantic(
     cosine ~0.7-0.8 survives 4-bit bands with p > 0.997 but 8-bit bands
     only ~0.5-0.75 — candidate recall, the exact verify is unchanged.
 
-    The DEFAULT-ON path (build_graph auto-training) adds two deterministic
+    The linker's semantic refine (:func:`link_nodes`) adds two deterministic
     stand-ins for the reference's LLM + human merge gate, justified by
     measurement (BENCH/BASELINE.md semantic-refine section):
 
@@ -774,7 +766,7 @@ def containment_candidates(tok: DataFrame) -> DataFrame:
     entity's shared tokens exceed the df cap and leave the index entirely,
     so hot blocks can never go quadratic; the worst remaining case is a
     node whose RAREST token is still mid-frequency (bag with no
-    distinguishing token), bounded by ``max_token_df`` candidates/node.
+    distinguishing token), bounded by MAX_TOKEN_DF candidates/node.
 
     Rarest token per node is a rank-1-only window == struct MIN — orders by
     (df, token) exactly like the window's orderBy but aggregates with
@@ -845,19 +837,24 @@ def tokenized_node_frame(
     )
 
 
+def token_index(nodes: DataFrame) -> DataFrame:
+    """(labels_str, pre_key, token, df) over a tokenized node frame, df
+    counted per label block.  Tokens whose df exceeds MAX_TOKEN_DF leave
+    the index entirely — frequent tokens ("criminal", "appeal", court
+    names) would otherwise build quadratic candidate blocks."""
+    tok = nodes.select(
+        "labels_str", "pre_key", F.explode("tokens").alias("token")
+    )
+    tok_df = tok.groupBy("labels_str", "token").agg(F.count("*").alias("df"))
+    return tok.join(
+        tok_df.filter(F.col("df") <= MAX_TOKEN_DF), ["labels_str", "token"]
+    )
+
+
 def build_graph(
     assigned: DataFrame,
-    max_token_df: int = 1_000,
-    abbrevs: Optional[Dict[str, str]] = None,
-    refine_threshold: Optional[float] = 0.75,
-    accept: str = "containment",
-    semantic_embedder=None,
-    semantic_threshold: float = 0.75,
     corpus: Optional[DataFrame] = None,
-    corpus_text_col: str = "text",
     semantic_auto_min_docs: int = 1_000,
-    semantic_auto_max_docs: int = 20_000,
-    semantic_auto_threshold: float = 0.6,
 ) -> Dict[str, DataFrame]:
     """assigned triples -> {nodes, edges, mapping}.
 
@@ -865,45 +862,29 @@ def build_graph(
     edges  : src_key, relationship, dst_key, url, span_start, triple_id
     mapping: pre_key -> node_key
 
-    ``abbrevs``: linking dictionary (default: the reference's abbreviation
-    file when present, else the built-in 5 entries).
-    ``accept``: fuzzy-link acceptance rule — 'containment' (default: token
-    subset, recall-exact under the df cap) or 'bm25' (the reference's
-    literal "top-1 score > 1 ⇒ adopt" rule, utils.py:363-365, via
-    :func:`bm25_adopt_pairs`).
-    ``semantic_embedder``: opt-in REAL-MODEL refine pass (the reference's
-    refine_nodes.py:27-96 behavior class): an embedder hook
-    ``df(pre_key, norm_identity) -> df(pre_key, embedding)`` — e.g.
-    :func:`embedding.train_corpus_embedder` (PPMI-SVD trained on the
-    corpus) or any vendored model behind :func:`embedding.dict_embedder`.
-    When set, :func:`refine_pairs_semantic` pairs (SRP-LSH candidates,
-    exact-cosine >= ``semantic_threshold``, CourtCase/numeral gates) are
-    unioned into the accepted pairs — this is what merges LEXICALLY
-    DISJOINT aliases ("Apex Court" == "Supreme Court of India").
+    Linking policy (module constants): containment over the df-capped
+    token index, then the lexical refine.  The linking dictionary is
+    :func:`default_abbreviations` (``ONTOKG_ABBREV_PATH`` widens it).
 
-    ``corpus``: DEFAULT-ON semantic refine (the reference ALWAYS runs its
-    embedding refine, refine_nodes.py:27-96).  When no explicit
-    ``semantic_embedder`` is given and a corpus (a frame with
-    ``corpus_text_col``) of at least ``semantic_auto_min_docs`` documents
-    is provided, a PPMI-SVD embedder is auto-trained on a deterministic
-    hash-sample of at most ``semantic_auto_max_docs`` documents and the
-    semantic refine runs at the reference's 0.6 gate
-    (``semantic_auto_threshold``) WITH the two deterministic gate
-    stand-ins of :func:`refine_pairs_semantic` (person-prop exclusion +
-    co-mention attestation) — the reference backs its 0.6 gate with an
-    LLM + human check; unattested distributional cosine alone conflates
-    role-twins and sibling entities at cosine 1.000 (measured,
-    BENCH/BASELINE.md).  The floor exists because vocab quality needs
-    data; the cap bounds training cost at web scale (the model converges
-    on a sample — training on every document of a 100 TB corpus buys
-    nothing).  The explicit ``semantic_embedder`` hook keeps the guardless
-    behavior: there the caller owns the model and the threshold.
+    ``corpus``: the semantic refine (the reference ALWAYS runs its
+    embedding refine, refine_nodes.py:27-96).  When a corpus (a frame with
+    a ``text`` column) of at least ``semantic_auto_min_docs`` documents is
+    given, a PPMI-SVD embedder is trained on a deterministic hash-sample of
+    at most SEMANTIC_MAX_DOCS documents and :func:`refine_pairs_semantic`
+    runs at the reference's 0.6 gate (SEMANTIC_THRESHOLD) WITH its two
+    deterministic gate stand-ins (person-prop exclusion + co-mention
+    attestation) — the reference backs its 0.6 gate with an LLM + human
+    check; unattested distributional cosine alone conflates role-twins and
+    sibling entities at cosine 1.000 (measured, BENCH/BASELINE.md).  The
+    floor exists because vocab quality needs data; the cap bounds training
+    cost at web scale (the model converges on a sample — training on every
+    document of a 100 TB corpus buys nothing).  This is what merges
+    LEXICALLY DISJOINT aliases ("Apex Court" == "Supreme Court of India").
     """
     mentions = mentions_frame(assigned)
 
-    semantic_attest = None
-    semantic_exclude_persons = False
-    if semantic_embedder is None and corpus is not None:
+    semantic_embedder = semantic_attest = None
+    if corpus is not None:
         n_docs = corpus.count()
         if n_docs >= semantic_auto_min_docs:
             from .embedding import train_corpus_embedder
@@ -914,18 +895,16 @@ def build_graph(
             # projection, so only the <=20k sampled documents ever pay
             # the html->text decode — hashing the text would force a
             # full-corpus extraction pass just to pick the sample.
-            sample_key = "url" if "url" in corpus.columns else corpus_text_col
+            sample_key = "url" if "url" in corpus.columns else "text"
             sampled = corpus
-            if n_docs > semantic_auto_max_docs:
-                k = -(-n_docs // semantic_auto_max_docs)  # ceil
+            if n_docs > SEMANTIC_MAX_DOCS:
+                k = -(-n_docs // SEMANTIC_MAX_DOCS)  # ceil
                 sampled = sampled.filter(
                     F.pmod(F.xxhash64(sample_key), F.lit(k)) == 0
                 )
-            sample = sampled.select(F.col(corpus_text_col).alias("text"))
             semantic_embedder = train_corpus_embedder(
-                sample.localCheckpoint()
+                sampled.select("text").localCheckpoint()
             )
-            semantic_threshold = semantic_auto_threshold
             # attest scan pre-filter: a mention's pre_key can match a
             # semantic candidate only if the candidate survived the
             # CourtCase + person-prop gates, and pre_key is a hash OF
@@ -942,27 +921,16 @@ def build_graph(
                     F.array(*[F.lit(k) for k in PERSON_PROP_KEYS]),
                 )
             ).select("url", "pre_key")
-            semantic_exclude_persons = True
 
     nodes0 = tokenized_node_frame(
         mentions.groupBy("labels_str", "head_label", "pre_key").agg(
             F.first("canon", ignorenulls=True).alias("props"),
             F.first("identity", ignorenulls=True).alias("identity"),
             F.first("labels", ignorenulls=True).alias("labels"),
-        ),
-        abbrevs,
+        )
     )
 
-    linked = link_nodes(
-        nodes0,
-        max_token_df=max_token_df,
-        refine_threshold=refine_threshold,
-        accept=accept,
-        semantic_embedder=semantic_embedder,
-        semantic_threshold=semantic_threshold,
-        semantic_exclude_persons=semantic_exclude_persons,
-        semantic_attest=semantic_attest,
-    )
+    linked = link_nodes(nodes0, semantic_embedder, semantic_attest)
     nodes_final, mapping = linked["nodes"], linked["mapping"]
 
     # edge endpoints keyed by pure expressions on the triple row — no
@@ -989,16 +957,15 @@ def build_graph(
 
 def link_nodes(
     nodes0: DataFrame,
-    max_token_df: int = 1_000,
-    refine_threshold: Optional[float] = 0.75,
-    accept: str = "containment",
     semantic_embedder=None,
-    semantic_threshold: float = 0.75,
-    semantic_exclude_persons: bool = False,
     semantic_attest: Optional[DataFrame] = None,
 ) -> Dict[str, DataFrame]:
     """The linking + consolidation core over a tokenized node frame
     (:func:`tokenized_node_frame`) -> {nodes, mapping}.
+
+    ``semantic_embedder`` and ``semantic_attest``: the trained model and
+    the (url, pre_key) mention table of :func:`build_graph`'s semantic
+    refine; without an embedder only the lexical passes run.
 
     Shared by :func:`build_graph` (mention-level frame) and the periodic
     cross-batch reconcile (stored node tables re-linked — node_key and
@@ -1013,49 +980,32 @@ def link_nodes(
         & (F.size("tokens") > 0)
     )
 
-    tok = linkable.select(
-        "labels_str", "pre_key", F.explode("tokens").alias("token")
-    )
     # skew/scale discipline for the head-entity hot keys, two layers:
-    # 1. df cap: tokens whose document frequency over DISTINCT nodes exceeds
-    #    max_token_df leave the index entirely — frequent tokens ("criminal",
-    #    "appeal", court names) would otherwise build quadratic blocks;
+    # 1. df cap (token_index);
     # 2. asymmetric prefix filter: candidates are generated by probing the
     #    index with each node's SINGLE RAREST surviving token.  Containment
     #    A ⊆ B implies A's rarest token is in B's set, so recall over
     #    df-capped token sets is exact while candidate volume drops from
     #    Σ df² (symmetric self-join) to Σ df(rarest) ≈ O(#nodes).
-    tok_df = tok.groupBy("labels_str", "token").agg(F.count("*").alias("df"))
-    tok = tok.join(
-        tok_df.filter(F.col("df") <= max_token_df),
-        ["labels_str", "token"],
-    ).localCheckpoint()  # eager: probe/cand/shared/sizes all reuse it
-    if accept == "bm25":
-        pairs = bm25_adopt_pairs(tok).select("a", "b")
-    else:
-        pairs = containment_pairs(tok)
+    # eager checkpoint: probe/cand/shared/sizes all reuse the index
+    tok = token_index(linkable).localCheckpoint()
 
     # R2: similarity-driven refine pass (reference refine_nodes.py:27-96) —
     # catches non-containment aliases (token reorders, typos).  Duplicate
     # (a, b) rows vs the containment pairs are harmless to min-label CC,
     # so no distinct shuffle here.
-    if refine_threshold is not None:
-        pairs = pairs.unionByName(
-            refine_pairs(
-                linkable, threshold=refine_threshold, max_gram_df=max_token_df
-            )
-        )
+    pairs = containment_pairs(tok).unionByName(refine_pairs(linkable))
 
-    # opt-in real-model semantic refine (see build_graph docstring): the
-    # same dataflow as refine_pairs but over MODEL embeddings, so
-    # lexically-disjoint aliases with shared contexts also pair
+    # semantic refine (see build_graph ``corpus``): the same dataflow as
+    # refine_pairs but over MODEL embeddings, so lexically-disjoint
+    # aliases with shared contexts also pair
     if semantic_embedder is not None:
         pairs = pairs.unionByName(
             refine_pairs_semantic(
                 linkable,
                 semantic_embedder,
-                threshold=semantic_threshold,
-                exclude_person_props=semantic_exclude_persons,
+                threshold=SEMANTIC_THRESHOLD,
+                exclude_person_props=True,
                 attest=semantic_attest,
             )
         )
@@ -1087,7 +1037,7 @@ def link_nodes(
         ).alias("props")
     )
     # component metadata WITHOUT an exchange: every pair generator
-    # (containment, refine, bm25, semantic) blocks on labels_str, so a CC
+    # (containment, refine, semantic) blocks on labels_str, so a CC
     # component never crosses label sets — labels_str/labels/head_label
     # are constant within a component and the representative row
     # (pre_key == comp; comp is the min member's pre_key, so it always

@@ -48,19 +48,6 @@ MEDIA_SCHEMA_DDL = (
 FEATURES_SCHEMA = "media_id long, kind string, n_bytes long, features array<float>"
 
 
-def media_metadata(df: DataFrame) -> DataFrame:
-    """Typed metadata without touching payload bytes beyond length —
-    column-pruned scan reads only what it needs."""
-    return df.select(
-        "media_id",
-        "kind",
-        F.length(F.col("payload")).alias("n_bytes"),
-        F.col("meta.mime").alias("mime"),
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-    )
-
-
 def decode_stub(payload: bytes, kind: str) -> np.ndarray:
     """Integration point for formats needing external codecs
     (codec-compressed video: H.264/VP9/AV1 inter-frame entropy coders are
@@ -414,20 +401,4 @@ def frame_sample_features(df: DataFrame, every_ms: int = 1000) -> DataFrame:
             _sample,
             schema="media_id long, frame_ts_ms long, features array<float>",
         )
-    )
-
-
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one row per frame to decode (media_id,
-    frame_ts_ms) derived from metadata only — the decode itself happens in
-    ``extract_features`` per-frame.  Planning stays JVM-side."""
-    return df.filter(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
     )

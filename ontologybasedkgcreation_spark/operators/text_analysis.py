@@ -1,8 +1,8 @@
-"""Text-analysis operators: language-ID, quality scoring, token stats,
-document fingerprinting.  All pure ``pyspark.sql.functions`` — whole-stage
-codegen, zero Python.  These run ahead of KG extraction in a web-scale
-ingest (the language gate of FIXTURES.md §1 uses lang_id when the source
-table lacks a lang column)."""
+"""Text-analysis operators: language-ID, token stats, PII redaction,
+boilerplate and repetition signals, URL and sampling plans.  All pure
+``pyspark.sql.functions`` — whole-stage codegen, zero Python.  These run
+ahead of KG extraction in a web-scale ingest (the language gate of
+FIXTURES.md §1 uses lang_id when the source table lacks a lang column)."""
 
 from __future__ import annotations
 
@@ -44,38 +44,6 @@ def lang_id(
     )
 
 
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Length / punctuation / word-shape quality features + a composite
-    keep/drop score (the Gopher-style rule family, computed columnar)."""
-    toks = _tokens(text_col)
-    n_chars = F.length(F.col(text_col))
-    n_tokens = F.size(toks)
-    mean_word_len = n_chars / F.greatest(n_tokens, F.lit(1))
-    n_punct = n_chars - F.length(
-        F.regexp_replace(F.col(text_col), r"[^\w\s]", "")
-    )
-    punct_ratio = n_punct / F.greatest(n_chars, F.lit(1))
-    sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    stop_ratio = F.size(F.filter(toks, lambda t: F.array_contains(sw, t))) / F.greatest(
-        n_tokens, F.lit(1)
-    )
-    keep = (
-        (n_tokens >= 10)
-        & (mean_word_len >= 2)
-        & (mean_word_len <= 12)
-        & (punct_ratio <= 0.3)
-    )
-    return df.select(
-        F.col(id_col),
-        n_chars.alias("n_chars"),
-        n_tokens.alias("n_tokens"),
-        F.round(mean_word_len, 6).alias("mean_word_len"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        keep.cast("int").alias("keep"),
-    )
-
-
 def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Whitespace + BPE-ish token counts per document.  The BPE-ish count is
     the standard chars/4 upper bound refined by a word/punct regex — a
@@ -92,18 +60,6 @@ def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         F.size(toks).alias("n_ws_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
         bpe_ish.alias("n_bpeish_tokens"),
-    )
-
-
-def doc_fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Order-insensitive content fingerprint: md5 over the sorted distinct
-    token set — cheap bag-of-words identity for cross-snapshot dedup."""
-    toks = _tokens(text_col)
-    return df.select(
-        F.col(id_col),
-        F.md5(
-            F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))
-        ).alias("fingerprint"),
     )
 
 

@@ -65,7 +65,6 @@ def graph_tables(
     extracted: DataFrame,
     with_paragraphs: bool = True,
     writer: Optional[materialize.GraphWriter] = None,
-    semantic: str = "auto",
     semantic_min_pages: int = 1_000,
 ) -> Dict[str, DataFrame]:
     """The graph stage: assigned triples + extracted pages -> {nodes,
@@ -73,11 +72,9 @@ def graph_tables(
     ``writer`` when given.  A deterministic function of its inputs
     (content-hashed keys, order-insensitive aggregates), so a checkpointed
     resume that feeds it the same triples yields the same tables."""
-    corpus = None
-    if semantic == "auto":
-        corpus = extracted
-        if "lang" in extracted.columns:
-            corpus = corpus.filter(F.col("lang") == "en")
+    corpus = extracted
+    if "lang" in extracted.columns:
+        corpus = corpus.filter(F.col("lang") == "en")
     graph = linking.build_graph(
         assigned, corpus=corpus, semantic_auto_min_docs=semantic_min_pages
     )
@@ -116,19 +113,18 @@ def run_pipeline(
     onto: Optional[Ontology] = None,
     with_paragraphs: bool = True,
     writer: Optional[materialize.GraphWriter] = None,
-    semantic: str = "auto",
     semantic_min_pages: int = 1_000,
 ) -> Dict[str, DataFrame]:
     """Full run; returns all intermediate + final DataFrames (lazily built —
     nothing executes until an action, except the semantic-refine
     auto-training below).
 
-    ``semantic``: 'auto' (default — the reference ALWAYS runs its embedding
-    refine, refine_nodes.py:27-96; above ``semantic_min_pages`` English
-    pages a PPMI-SVD embedder is trained on the extracted text and the
-    guarded semantic refine runs, see build_graph ``corpus``) or 'off'.
-    The floor exists because distributional vocab quality needs data;
-    below it the lexical refine alone runs (identical to 'off')."""
+    The reference ALWAYS runs its embedding refine (refine_nodes.py:27-96):
+    from ``semantic_min_pages`` English pages up, a PPMI-SVD embedder is
+    trained on the extracted text and the guarded semantic refine runs
+    (see build_graph ``corpus``).  The floor exists because distributional
+    vocab quality needs data; below it the lexical refine alone runs, and
+    a floor above the corpus size turns the semantic refine off."""
     onto = onto or load_ontology()
     extracted = extract_pages(pages)
     out = assigned_triples(spark, pages, onto)
@@ -146,7 +142,6 @@ def run_pipeline(
             extracted,
             with_paragraphs=with_paragraphs,
             writer=writer,
-            semantic=semantic,
             semantic_min_pages=semantic_min_pages,
         )
     )

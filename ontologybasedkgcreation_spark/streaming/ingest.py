@@ -107,14 +107,7 @@ def start_graph_maintenance(
     return w.start()
 
 
-def reconcile_graph(
-    spark: SparkSession,
-    writer,
-    abbrevs=None,
-    max_token_df: int = 1_000,
-    refine_threshold: float = 0.75,
-    accept: str = "containment",
-) -> dict:
+def reconcile_graph(spark: SparkSession, writer) -> dict:
     """The periodic CROSS-BATCH entity consolidation for streaming graph
     maintenance.
 
@@ -125,10 +118,12 @@ def reconcile_graph(
     ``pre_key`` (sha256 of labels + canonical bag), the stored node table
     re-enters the linker directly as its own mention frame: re-link, CC,
     re-consolidate, then rewire every stored edge through the old-key →
-    new-key mapping.  Consolidation (per-prop longest value) and the
-    containment/refine pair rules are content-based, so reconciling batches
-    1..N equals the single-shot build over the union for alias merges —
-    pinned by test_streaming.
+    new-key mapping.  The linking policy is ``build_graph``'s: the
+    constants of ``operators.linking`` and its default dictionary.
+    Consolidation (per-prop longest value) and the containment/refine pair
+    rules are content-based, so reconciling batches 1..N equals the
+    single-shot build over the union for alias merges — pinned by
+    test_streaming.
 
     At scale this is the periodic global reduce of the two-stage design
     (plans/resume.py): per-batch work stays narrow/incremental; the reduce
@@ -152,15 +147,9 @@ def reconcile_graph(
             F.col("node_key").alias("pre_key"),
             "props",
             "labels",
-        ).withColumn("identity", identity_text_col("head_label", "props")),
-        abbrevs,
+        ).withColumn("identity", identity_text_col("head_label", "props"))
     )
-    linked = linking.link_nodes(
-        nodes0,
-        max_token_df=max_token_df,
-        refine_threshold=refine_threshold,
-        accept=accept,
-    )
+    linked = linking.link_nodes(nodes0)
     mapping = linked["mapping"]
     # In a clean run every endpoint IS mapped (edges were written against
     # the same stored-node table the mapping was derived from); the

@@ -63,8 +63,10 @@ def main() -> int:
     pages.count()
 
     t0 = time.time()
+    # 'off': a trainer floor above the corpus size
+    min_pages = n_pages + 1 if semantic == "off" else 1_000
     out = pipeline.run_pipeline(
-        spark, pages, with_paragraphs=True, semantic=semantic
+        spark, pages, with_paragraphs=True, semantic_min_pages=min_pages
     )
     out["edges"].count()
     out["nodes"].count()

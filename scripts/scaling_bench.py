@@ -35,6 +35,8 @@ from ontologybasedkgcreation_spark import fixtures, pipeline
 
 master = sys.argv[1]; n_pages = int(sys.argv[2])
 semantic = sys.argv[4] if len(sys.argv) > 4 else "auto"
+# 'off': a trainer floor above the corpus size
+min_pages = n_pages + 1 if semantic == "off" else 1_000
 # partitioning is FIXED across legs: the only variable is task slots
 # (the in-sandbox analog of executor count); per-stage scheduling cost
 # then stays constant and the measurement isolates compute scaling
@@ -68,7 +70,7 @@ pages = fixtures.pages_df_distributed(spark, n_pages, partitions=32,
 pages = pages.cache(); n = pages.count()
 t0 = time.time()
 out = pipeline.run_pipeline(spark, pages, with_paragraphs=True,
-                            semantic=semantic)
+                            semantic_min_pages=min_pages)
 # run_pipeline returns lazily EXCEPT the eager semantic auto-train
 # (corpus count + sample checkpoint + co-occurrence collect + eigh);
 # build_sec isolates that eager prefix from the job time

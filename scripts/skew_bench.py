@@ -18,7 +18,7 @@ partition skew (max/mean rows), and planted-pair recall.  An uncapped
 control (--uncapped) at smaller n shows the quadratic blow-up the cap
 prevents.
 
-Usage: python scripts/skew_bench.py [n_nodes] [--uncapped] [--no-refine]
+Usage: python scripts/skew_bench.py [n_nodes] [--uncapped]
 Appends one JSON line per run to BENCH/skew_runs.md (and prints it).
 """
 
@@ -89,9 +89,10 @@ def main() -> int:
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 200_000
     uncapped = "--uncapped" in sys.argv
-    refine = None if "--no-refine" in sys.argv else 0.75
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    max_token_df = 10**9 if uncapped else 1_000
+    if uncapped:
+        linking.MAX_TOKEN_DF = 10**9
+    max_token_df = linking.MAX_TOKEN_DF
 
     spark = get_spark(
         "skew-bench", master=f"local[{cpus}]", shuffle_partitions=cpus
@@ -110,11 +111,7 @@ def main() -> int:
     hottest = df_all.orderBy(F.desc("df")).first()
     capped = df_all.filter(F.col("df") <= max_token_df)
     max_surviving = capped.orderBy(F.desc("df")).first()
-    tok = tok_all.join(
-        tok_all.groupBy("labels_str", "token").agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= max_token_df),
-        ["labels_str", "token"],
-    ).localCheckpoint()
+    tok = linking.token_index(nodes0).localCheckpoint()
     cand = linking.containment_candidates(tok).localCheckpoint()
     n_cand = cand.count()
     part_rows = (
@@ -130,9 +127,7 @@ def main() -> int:
 
     # --- the timed run: full linking + CC + consolidation ------------------
     t0 = time.time()
-    linked = linking.link_nodes(
-        nodes0, max_token_df=max_token_df, refine_threshold=refine
-    )
+    linked = linking.link_nodes(nodes0)
     n_final = linked["nodes"].count()
     wall = round(time.time() - t0, 2)
 
@@ -162,7 +157,6 @@ def main() -> int:
         "n_nodes": n,
         "capped": not uncapped,
         "max_token_df": max_token_df if not uncapped else None,
-        "refine": refine is not None,
         "wall_sec": wall,
         "final_nodes": n_final,
         "candidates": n_cand,

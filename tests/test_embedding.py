@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 TEMPLATES = [
     "the {a} delivered the judgment in the appeal today",
@@ -112,7 +111,9 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
       the Python stage; ``str.split()`` would and is therefore banned);
     - out-of-vocabulary tokens interleaved between kept ones (positions
       are global over ALL tokens, not vocab-filtered ones);
-    - a one-token document and an empty-ish document (no pairs).
+    - a one-token document and an empty-ish document (no pairs);
+    - non-ASCII upper case (É, final sigma, dotted İ), lowercased by the
+      JVM on both legs.
     """
     from ontologybasedkgcreation_spark.operators.embedding import (
         token_cooccurrence,
@@ -132,6 +133,8 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
         (i + 1, "xzqv court plmk apex wqrt court"),  # OOV interleave
         (i + 2, "court"),
         (i + 3, "   "),
+        # non-ASCII case mapping: both legs must lowercase in the JVM
+        (i + 4, "ÉCOLE court École apex ΟΔΟΣ court οδος İNDIA apex İndia"),
     ]
     docs = spark.createDataFrame(rows, "id long, text string")
     slow_rows, slow_vocab = token_cooccurrence(
@@ -189,21 +192,6 @@ def test_embedder_hook_contract(spark, trained):
     assert np.allclose(got["k3"], 0.0)  # all-OOV -> zero vector
 
 
-def _assigned(spark, rows):
-    data = [
-        (url, 0, f"t{i}", t1, [t1], p1, rel, t2, [t2], p2)
-        for i, (url, t1, p1, rel, t2, p2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data,
-        "url string, span_start long, triple_id string, "
-        "node1_type string, node1_labels array<string>, "
-        "node1_props map<string,string>, relationship string, "
-        "node2_type string, node2_labels array<string>, "
-        "node2_props map<string,string>",
-    )
-
-
 ALIAS_DOCS = [
     "the apex court held that the supreme court of india alone may entertain such a petition",
     "this court being the apex court the supreme court of india must weigh the evidence afresh",
@@ -238,7 +226,9 @@ def test_semantic_default_auto_trains_with_gate_standins(spark):
     - sibling entities (Madras/Bombay High Court, measured cosine 1.000,
       never co-mentioned) do NOT merge;
     - person-name nodes (two bench judges, measured cosine 1.000, even
-      co-mentioned on u6) do NOT merge.
+      co-mentioned on u6) do NOT merge;
+    - CourtCase nodes never fuzzy-merge, and the Court edges rewire onto
+      the merged node.
     """
     from pyspark.sql import functions as SF
 
@@ -286,6 +276,18 @@ def test_semantic_default_auto_trains_with_gate_standins(spark):
     assert courts == ["Bombay High Court", "Madras High Court",
                       "Supreme Court Of India"]
     assert auto["nodes"].filter(SF.col("head_label") == "Judge").count() == 2
+    cases = auto["nodes"].filter(SF.col("head_label") == "CourtCase")
+    assert cases.count() == 6
+    # every hasRulingOf/cited edge of u1-u3 lands on the one merged Court
+    merged = auto["nodes"].filter(
+        SF.col("props")["courtName"] == "Supreme Court Of India"
+    ).first()["node_key"]
+    dsts = {
+        r["dst_key"]
+        for r in auto["edges"].filter(SF.col("url").isin("u1", "u2", "u3"))
+        .collect()
+    }
+    assert dsts == {merged}
     # below the floor: identical to the lexical-only graph
     floor = linking.build_graph(assigned, corpus=docs,
                                 semantic_auto_min_docs=10_000)
@@ -326,56 +328,9 @@ def test_pipeline_semantic_auto_keeps_pr(spark):
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
 
 
-def test_semantic_refine_merges_lexically_disjoint_alias(spark, trained):
-    """THE closing gate for the round-3 'real encoder' item: with the
-    corpus-trained embedder passed to the DEFAULT build_graph path, 'Apex
-    Court' and 'Supreme Court of India' (zero containment, below the
-    lexical refine threshold) consolidate into ONE Court node at the
-    reference's 0.6 gate — and stay two nodes without the embedder."""
-    from ontologybasedkgcreation_spark.operators import linking
-    from ontologybasedkgcreation_spark.operators.embedding import dict_embedder
-
-    _, _, _, vectors = trained
-    embedder = dict_embedder(vectors, dim=32)
-
-    case1 = {"hasCaseID": "Criminal Appeal No. 1 Of 2015",
-             "hasCaseName": "A Versus B"}
-    case2 = {"hasCaseID": "Criminal Appeal No. 2 Of 2016",
-             "hasCaseName": "C Versus D"}
-    rows = [
-        ("u1", "CourtCase", case1, "hasRulingOf", "Court",
-         {"courtName": "Supreme Court of India"}),
-        ("u2", "CourtCase", case2, "hasRulingOf", "Court",
-         {"courtName": "Apex Court"}),
-    ]
-    assigned = _assigned(spark, rows)
-
-    base = linking.build_graph(assigned)
-    assert (
-        base["nodes"].filter(F.col("head_label") == "Court").count() == 2
-    )
-
-    merged = linking.build_graph(
-        assigned, semantic_embedder=embedder, semantic_threshold=0.6
-    )
-    courts = merged["nodes"].filter(F.col("head_label") == "Court").collect()
-    assert len(courts) == 1
-    # consolidation keeps the longest courtName value (raw synthetic props
-    # here — titlecasing happens upstream in the real pipeline)
-    assert courts[0]["props"]["courtName"] == "Supreme Court of India"
-    # the CourtCase nodes must NOT merge (distinct cases, CourtCase never
-    # fuzzy-merges)
-    assert (
-        merged["nodes"].filter(F.col("head_label") == "CourtCase").count()
-        == 2
-    )
-    # edges rewired onto the single Court node
-    court_key = courts[0]["node_key"]
-    dsts = {r["dst_key"] for r in merged["edges"].collect()}
-    assert dsts == {court_key}
-
-
-def test_semantic_auto_sample_cap_trains_on_url_keyed_sample(spark):
+def test_semantic_auto_sample_cap_trains_on_url_keyed_sample(
+    spark, monkeypatch
+):
     """The >max_docs branch: the trainer sees only the url-hash sample
     (the filter pushes below extraction — plan-pinned in test_plans).
     With the cap forcing k=2 sampling on the tripled alias corpus, the
@@ -408,11 +363,10 @@ def test_semantic_auto_sample_cap_trains_on_url_keyed_sample(spark):
          {"COFirstName": "V.", "COLastName": "Raghavan"}),
     ]
     assigned = _assigned_generic(spark, rows)
-    n = docs.count()
+    # forces the k=2 url-hash sample
+    monkeypatch.setattr(linking, "SEMANTIC_MAX_DOCS", docs.count() // 2)
     capped = linking.build_graph(
-        assigned, corpus=docs,
-        semantic_auto_min_docs=10,
-        semantic_auto_max_docs=n // 2,  # forces the k=2 url-hash sample
+        assigned, corpus=docs, semantic_auto_min_docs=10
     )
     courts = sorted(
         r["props"]["courtName"]

@@ -2,38 +2,39 @@
 
 import os
 
+import pandas as pd
 import pytest
 
-from ontologybasedkgcreation_spark.operators.linking import (
-    normalize_identity_str,
-)
+from ontologybasedkgcreation_spark.operators.linking import normalize_identity
+
+
+def _norm(*vals):
+    return list(normalize_identity(pd.Series(list(vals))))
 
 
 def test_abbrev_expansion():
     # the stubbed tool's intent (kg_creator/src/tools.py:1-7)
-    assert normalize_identity_str("State of M.P.") == "state of madhya pradesh"
-    assert normalize_identity_str("State of Madhya Pradesh") == (
-        "state of madhya pradesh"
-    )
+    assert _norm("State of M.P.", "State of Madhya Pradesh") == [
+        "state of madhya pradesh",
+        "state of madhya pradesh",
+    ]
 
 
 def test_no_partial_token_hits():
     # 'IPC' must not fire inside other words
-    assert normalize_identity_str("PRINCIPAL") == "principal"
+    assert _norm("PRINCIPAL") == ["principal"]
 
 
 def test_comma_and_whitespace():
-    assert (
-        normalize_identity_str("Additional  Sessions Judge, Raigarh")
-        == "additional sessions judge raigarh"
-    )
+    assert _norm("Additional  Sessions Judge, Raigarh") == [
+        "additional sessions judge raigarh"
+    ]
 
 
 def test_small_corpus_determinism():
     # the reference's flaky regime: corpora of size 1-3 (utils.py:321-323)
     # must still normalize/link deterministically
-    vals = ["A. Deshmukh", "Deshmukh", "A. Deshmukh"]
-    norm = [normalize_identity_str(v) for v in vals]
+    norm = _norm("A. Deshmukh", "Deshmukh", "A. Deshmukh")
     assert norm == ["a. deshmukh", "deshmukh", "a. deshmukh"]
 
 
@@ -107,9 +108,9 @@ def test_refine_pass_merges_non_containment_alias(spark):
     ]
     g = linking.build_graph(_assigned(spark, rows))
     assert len(_court_nodes(g)) == 1
-    # refine off -> the typo stays a separate node (containment alone misses it)
-    g2 = linking.build_graph(_assigned(spark, rows), refine_threshold=None)
-    assert len(_court_nodes(g2)) == 2
+    # containment alone misses it: no pair on the same token index
+    nodes = _tokenized_courts(spark, [r[5]["courtName"] for r in rows])
+    assert linking.containment_pairs(linking.token_index(nodes)).count() == 0
 
 
 def test_refine_pass_rejects_sibling_entities(spark):
@@ -183,27 +184,6 @@ def test_bm25_tiny_corpus_no_adopt(spark):
     score <= 1 and nothing adopts — reproduced deterministically."""
     docs = {"q1": ["supreme", "court"], "d1": ["supreme", "court"]}
     assert linking.bm25_adopt_pairs(_tok_index(spark, docs)).count() == 0
-
-
-def test_build_graph_bm25_mode(spark):
-    """accept='bm25' links the same clear alias the containment rule does."""
-    case = {"hasCaseID": "Criminal Appeal No. 1 Of 2015", "hasCaseName": "A Versus B"}
-    rows = [
-        ("u1", "CourtCase", case, "hasRulingOf", "Court",
-         {"courtName": "High Court Of Judicature At Allahabad Lucknow Bench"}),
-        ("u2", "CourtCase", case, "hasRulingOf", "Court",
-         {"courtName": "High Court Of Judicature At Allahabad Lucknow"}),
-        ("u1", "CourtCase", case, "hasJudge", "Judge", {"firstName": "A", "lastName": "B"}),
-        ("u2", "CourtCase", case, "hasJudge", "Judge", {"firstName": "C", "lastName": "D"}),
-        ("u1", "CourtCase", case, "hasWitness", "Witness",
-         {"wFirstName": "Ram", "wLastName": "Kumar"}),
-        ("u2", "CourtCase", case, "hasWitness", "Witness",
-         {"wFirstName": "Shyam", "wLastName": "Singh"}),
-    ]
-    g = linking.build_graph(
-        _assigned(spark, rows), accept="bm25", refine_threshold=None
-    )
-    assert len(_court_nodes(g)) == 1  # alias adopted via BM25 score > 1
 
 
 def _tokenized_courts(spark, names):
@@ -319,7 +299,7 @@ def _hot_node_frame(spark, n_hot=300, n_pairs=20):
     return tokenized_node_frame(df, abbrevs={})
 
 
-def test_df_cap_bounds_candidate_volume(spark):
+def test_df_cap_bounds_candidate_volume(spark, monkeypatch):
     """The skew discipline of SURVEY §4, pinned: with the df cap, a
     300-node hot block whose bags have no rare token contributes ZERO
     candidates (its tokens leave the index), so candidate volume is bounded
@@ -358,9 +338,8 @@ def test_df_cap_bounds_candidate_volume(spark):
     assert cands(10**9).count() > 300 * 40
 
     # recall canary: the cap must not cost the planted merges
-    mapping = link_nodes(nodes0, max_token_df=50, refine_threshold=None)[
-        "mapping"
-    ]
+    monkeypatch.setattr(linking, "MAX_TOKEN_DF", 50)
+    mapping = link_nodes(nodes0)["mapping"]
     m = {r["pre_key"]: r["node_key"] for r in mapping.collect()}
     for i in range(20):
         assert m[f"pa{i:04d}"] == m[f"pb{i:04d}"], i

@@ -1,15 +1,8 @@
-"""Parity operators: S5 abbreviation tool, M5 format_triples, and the
-extraction grammar's dispatch parity."""
+"""Parity operators: the S5 abbreviation-file parser, M5 format_triples,
+and the extraction grammar's dispatch parity."""
 
-from ontologybasedkgcreation_spark.operators.linking import (
-    find_abbreviation,
-    load_abbreviations,
-)
+from ontologybasedkgcreation_spark.operators.linking import load_abbreviations
 from ontologybasedkgcreation_spark.operators.materialize import format_triples
-
-def test_find_abbreviation():
-    assert find_abbreviation("M.P.") == "Madhya Pradesh"
-    assert find_abbreviation("NOPE") == "NOPE"
 
 
 def test_load_abbreviations(tmp_path):
@@ -17,7 +10,6 @@ def test_load_abbreviations(tmp_path):
     p.write_text("SC\tSupreme Court\nHC = High Court\n")
     t = load_abbreviations(str(p))
     assert t == {"SC": "Supreme Court", "HC": "High Court"}
-    assert find_abbreviation("SC", t) == "Supreme Court"
 
 
 def test_load_abbreviations_space_separated(tmp_path):
@@ -302,8 +294,7 @@ def test_extract_and_assign_empty_batches(spark):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    out = pipeline.run_pipeline(deg.sparkSession, deg, with_paragraphs=True,
-                                semantic="off")
+    out = pipeline.run_pipeline(deg.sparkSession, deg, with_paragraphs=True)
     assert out["nodes"].count() == 0
     assert out["edges"].count() == 0
 

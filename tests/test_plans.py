@@ -384,10 +384,12 @@ def test_linking_pair_plan_has_no_sort_windows(spark):
         ),
         abbrevs={},
     )
-    for accept in ("containment", "bm25"):
-        linked = linking.link_nodes(nodes, accept=accept)
-        plan = _plan(linked["mapping"], "simple")
-        assert "Window" not in plan, accept
+    tok = linking.token_index(nodes)
+    for name, frame in (
+        ("link_nodes", linking.link_nodes(nodes)["mapping"]),
+        ("bm25_adopt_pairs", linking.bm25_adopt_pairs(tok)),
+    ):
+        assert "Window" not in _plan(frame, "simple"), name
 
 
 def test_graph_match_label_filter_pushed_to_scan(spark, tmp_path):

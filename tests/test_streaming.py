@@ -156,7 +156,7 @@ def _edge_set(df):
     }
 
 
-def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
+def test_reconcile_merges_cross_batch_alias(spark, tmp_path, monkeypatch):
     """Cross-batch entity consolidation: batch 2 mentions batch 1's Court by
     an abbreviation alias; per-batch maintenance stores TWO Court nodes, the
     periodic reconcile merges them and rewires edges — byte-identical to the
@@ -172,15 +172,15 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
            {"courtName": "Delhi High Court"})]
     b2 = [("u2", "CourtCase", case2, "hasRulingOf", "Court",
            {"courtName": "DHC"})]
-    # explicit linking dictionary: the alias must not depend on which
-    # abbreviation file the host has
-    abbrevs = {**fixtures.ABBREVIATIONS, "DHC": "Delhi High Court"}
+    # the linking dictionary comes from the deployment setting, so the
+    # alias does not depend on which abbreviation file the host has
+    abbrev_file = tmp_path / "abbreviations"
+    abbrev_file.write_text("DHC - Delhi High Court\n")
+    monkeypatch.setenv("ONTOKG_ABBREV_PATH", str(abbrev_file))
 
     writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
     for start, rows in ((0, b1), (1, b2)):
-        g = linking.build_graph(
-            _assigned_rows(spark, rows, start=start), abbrevs=abbrevs
-        )
+        g = linking.build_graph(_assigned_rows(spark, rows, start=start))
         writer.merge("nodes", g["nodes"], key="node_key")
         writer.merge("edges", g["edges"], key="url")
 
@@ -192,11 +192,9 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
         .filter(F.col("head_label") == "Court").count() == 2
     )
 
-    ingest.reconcile_graph(spark, writer, abbrevs=abbrevs)
+    ingest.reconcile_graph(spark, writer)
 
-    single = linking.build_graph(
-        _assigned_rows(spark, b1 + b2, start=0), abbrevs=abbrevs
-    )
+    single = linking.build_graph(_assigned_rows(spark, b1 + b2, start=0))
     stored_nodes = spark.read.parquet(nodes_path).drop("bucket")
     stored_edges = spark.read.parquet(edges_path).drop("bucket")
     assert (
@@ -206,7 +204,7 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path):
     assert _edge_set(stored_edges) == _edge_set(single["edges"])
 
     # reconcile is idempotent: a second run changes nothing
-    ingest.reconcile_graph(spark, writer, abbrevs=abbrevs)
+    ingest.reconcile_graph(spark, writer)
     assert _node_set(spark.read.parquet(nodes_path).drop("bucket")) == _node_set(
         single["nodes"]
     )

@@ -160,22 +160,9 @@ def test_lang_id_on_english_salad(docs):
 
 
 def test_quality_and_token_stats_shapes(docs):
-    q = text_analysis.quality_score(docs, "doc_id", "text")
-    assert q.filter(F.col("n_tokens") <= 0).count() == 0
     t = text_analysis.token_stats(docs, "doc_id", "text")
     bad = t.filter(F.col("n_distinct_tokens") > F.col("n_ws_tokens")).count()
     assert bad == 0
-
-
-def test_fingerprint_equal_for_exact_dups(docs):
-    fp = text_analysis.doc_fingerprint(docs, "doc_id", "text")
-    j = (
-        docs.select("doc_id", F.sha2("text", 256).alias("h"))
-        .join(fp, "doc_id")
-        .groupBy("h")
-        .agg(F.countDistinct("fingerprint").alias("nfp"))
-    )
-    assert j.filter(F.col("nfp") > 1).count() == 0
 
 
 # ---------------------------------------------------------------------------
@@ -191,13 +178,6 @@ def _media_df(spark):
         (4, "image", b"", ("image/png", 0, 0, None)),
     ]
     return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA_DDL)
-
-
-def test_media_metadata_prunes_payload(spark):
-    m = multimodal.media_metadata(_media_df(spark))
-    r = {x["media_id"]: x for x in m.collect()}
-    assert r[1]["n_bytes"] == len(b"\x89PNG...fakebytes")
-    assert r[2]["mime"] == "audio/wav"
 
 
 def test_fake_decoder_batch_shape(spark):
@@ -329,13 +309,6 @@ def test_real_decoder_end_to_end(spark):
     )
     with pytest.raises(Exception, match="NotImplementedError|codec"):
         multimodal.extract_features(mp4, decoder="real").collect()
-
-
-def test_frame_sample_plan(spark):
-    plan = multimodal.frame_sample_plan(_media_df(spark), every_ms=1000)
-    rows = plan.collect()
-    assert {r["media_id"] for r in rows} == {3}
-    assert [r["frame_ts_ms"] for r in rows] == [0, 1000, 2000, 3000]
 
 
 def test_kmeans_fit_and_assign(spark):
