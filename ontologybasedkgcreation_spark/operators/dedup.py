@@ -114,7 +114,6 @@ def ngram_jaccard_pairs(
     # .distinct() paid the same exchange implicitly; per-doc distinctness
     # itself is the row-local array_distinct in shingles().
     sh = _spread(shingles(df, id_col, text_col, n)).cache()
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("nsh"))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     idx = sh.join(
         F.broadcast(freq.filter(F.col("df") <= max_df).select("shingle")),
@@ -129,6 +128,15 @@ def ngram_jaccard_pairs(
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
     )
+    return _jaccard_at_least(shared, sh, threshold)
+
+
+def _jaccard_at_least(
+    shared: DataFrame, sh: DataFrame, threshold: float
+) -> DataFrame:
+    """(a, b, shared) shared-shingle counts over the (doc, shingle) table
+    ``sh`` -> (a, b, jaccard) pairs with jaccard >= threshold."""
+    sizes = sh.groupBy("doc").agg(F.count("*").alias("nsh"))
     return (
         shared.join(sizes.select(F.col("doc").alias("a"), F.col("nsh").alias("na")), "a")
         .join(sizes.select(F.col("doc").alias("b"), F.col("nsh").alias("nb")), "b")
@@ -152,7 +160,6 @@ def jaccard_verify(
 
     candidates: (a, b); sh: (doc, shingle) distinct.  Returns (a, b, jaccard)
     with jaccard >= threshold."""
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("nsh"))
     a_sh = candidates.join(
         sh.select(F.col("doc").alias("a"), "shingle"), "a"
     )
@@ -163,20 +170,7 @@ def jaccard_verify(
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
     )
-    return (
-        shared.join(
-            sizes.select(F.col("doc").alias("a"), F.col("nsh").alias("na")), "a"
-        )
-        .join(
-            sizes.select(F.col("doc").alias("b"), F.col("nsh").alias("nb")), "b"
-        )
-        .withColumn(
-            "jaccard",
-            F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
-    )
+    return _jaccard_at_least(shared, sh, threshold)
 
 
 def lsh_jaccard_pairs(

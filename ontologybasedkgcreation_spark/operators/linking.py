@@ -253,14 +253,19 @@ def canon_str_col(canon_col):
     )
 
 
+def content_key(labels_str, canon):
+    """THE content key: sha256 of ``labels_str || sorted canonical bag``.
+
+    A mention's ``pre_key``, an edge endpoint's key and a consolidated
+    node's ``node_key`` are all this one expression, so a stored node table
+    re-enters the linker as its own mentions (reconcile_graph)."""
+    return F.sha2(F.concat_ws("||", labels_str, canon_str_col(canon)), 256)
+
+
 def pre_key_expr(labels_col, props_col):
     """Content key of one mention endpoint, computable as a pure expression
     on the assigned-triples row (no self-join needed to key edges)."""
-    labels_str = F.concat_ws(",", labels_col)
-    return F.sha2(
-        F.concat_ws("||", labels_str, canon_str_col(canon_props_col(props_col))),
-        256,
-    )
+    return content_key(F.concat_ws(",", labels_col), canon_props_col(props_col))
 
 
 def identity_text_col(head_col: str, canon_col: str):
@@ -308,14 +313,17 @@ def mentions_frame(assigned: DataFrame) -> DataFrame:
             )
         ).alias("_m"),
     ).select("url", "triple_id", "_m.side", "_m.head_label", "_m.labels", "_m.props")
-    m = m.withColumn("canon", canon_props_col("props"))
+    return keyed_nodes(m)
+
+
+def keyed_nodes(rows: DataFrame) -> DataFrame:
+    """+ canon, labels_str, pre_key (:func:`content_key`), identity over
+    rows carrying (head_label, labels, props): the linker's view of a
+    mention, or of a stored node (reconcile_graph)."""
+    m = rows.withColumn("canon", canon_props_col("props"))
     m = m.withColumn("labels_str", F.concat_ws(",", "labels"))
-    m = m.withColumn(
-        "pre_key",
-        F.sha2(F.concat_ws("||", F.col("labels_str"), canon_str_col("canon")), 256),
-    )
-    m = m.withColumn("identity", identity_text_col("head_label", "canon"))
-    return m
+    m = m.withColumn("pre_key", content_key("labels_str", "canon"))
+    return m.withColumn("identity", identity_text_col("head_label", "canon"))
 
 
 def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
@@ -425,23 +433,10 @@ def bm25_adopt_pairs(
             ),
         )
     )
-    # rank-1 window == struct MIN (map-side combinable, no full sort —
-    # same rewrite as the containment probe)
-    probe = (
-        tok.groupBy("pre_key")
-        .agg(F.min(F.struct("df", "token", "labels_str")).alias("m"))
-        .select(
-            F.col("m.labels_str").alias("labels_str"),
-            F.col("m.token").alias("token"),
-            F.col("pre_key").alias("q"),
-        )
-    )
+    # candidates: the containment probe, kept directed (the score is the
+    # query's)
     cand = (
-        probe.join(
-            tok.select("labels_str", "token", F.col("pre_key").alias("d")),
-            ["labels_str", "token"],
-        )
-        .filter(F.col("q") != F.col("d"))
+        rarest_token_pairs(tok, "q", "d")
         .select("labels_str", "q", "d")
         .distinct()
     )
@@ -557,6 +552,75 @@ def gram_candidates(base: DataFrame) -> DataFrame:
     )
 
 
+# property keys that mark a node as a PERSON name.  The default-on semantic
+# refine excludes these labels: distributional similarity over person names
+# conflates role-mates — measured on the fixture corpus, two DIFFERENT
+# judges ("A. Deshmukh" / "V. Raghavan") embed at cosine 1.000 because
+# their surnames occupy byte-identical contexts, and the same holds for
+# witnesses and investigators.  Person aliasing in this engine is lexical
+# (abbreviation table + containment: "Deshmukh, J." ⊂ "A. Deshmukh").
+PERSON_PROP_KEYS = (
+    "firstName", "lastName",
+    "COFirstName", "COLastName",
+    "wFirstName", "wLastName",
+    "hasPolicePersonnelName",
+)
+
+
+def fuzzy_eligible(props: str, exclude_person_props: bool = False):
+    """Which nodes a fuzzy pass may merge — deterministic stand-ins for the
+    reference's human gate.  A CourtCase identifies by its
+    uniqueness-constrained key (hasCaseID, utils.py:176-199) and never
+    fuzzy-merges; with ``exclude_person_props`` neither does a node whose
+    ``props`` map carries a :data:`PERSON_PROP_KEYS` key."""
+    ok = F.col("head_label") != "CourtCase"
+    if exclude_person_props:
+        ok = ok & ~F.arrays_overlap(
+            F.map_keys(F.col(props)),
+            F.array(*[F.lit(k) for k in PERSON_PROP_KEYS]),
+        )
+    return ok
+
+
+def fuzzy_nodes(
+    linkable: DataFrame, exclude_person_props: bool = False
+) -> DataFrame:
+    """(labels_str, pre_key, norm_identity, num_toks) of the
+    :func:`fuzzy_eligible` nodes; ``num_toks`` (sorted numeral tokens)
+    feeds :func:`numeral_guard`."""
+    return linkable.filter(
+        fuzzy_eligible("props", exclude_person_props)
+    ).select(
+        "labels_str",
+        "pre_key",
+        "norm_identity",
+        F.sort_array(
+            F.filter(F.col("tokens"), lambda t: t.rlike("[0-9]"))
+        ).alias("num_toks"),
+    )
+
+
+def numeral_guard(
+    pairs: DataFrame, nodes: DataFrame, *carry: str
+) -> DataFrame:
+    """(a, b) pairs whose two endpoints carry equal numeral tokens in
+    ``nodes`` (pre_key, num_toks, ...) — Section 302 != Section 304, even at
+    cosine 0.89.  Each endpoint's ``carry`` columns come along, suffixed
+    ``_a`` / ``_b``."""
+    def side(end: str) -> DataFrame:
+        return nodes.select(
+            F.col("pre_key").alias(end),
+            F.col("num_toks").alias(f"num_toks_{end}"),
+            *[F.col(c).alias(f"{c}_{end}") for c in carry],
+        )
+
+    return (
+        pairs.join(side("a"), "a")
+        .join(side("b"), "b")
+        .filter(F.col("num_toks_a") == F.col("num_toks_b"))
+    )
+
+
 def refine_pairs(linkable: DataFrame) -> DataFrame:
     """R2 parity: the similarity-driven refine pass of the reference
     (``refine_nodes.py:27-96``: per-node ANN kNN with cosine >= 0.6, then an
@@ -574,21 +638,12 @@ def refine_pairs(linkable: DataFrame) -> DataFrame:
       reference's 0.6-on-a-semantic-model + human gate: calibrated so true
       aliases (token reorders ~0.84, typos ~0.94) merge while sibling
       entities ("Madras"/"Bombay High Court" ~0.67) never do;
-    - two deterministic stand-ins for the human gate: nodes identified by a
-      uniqueness-constrained key (CourtCase.hasCaseID — utils.py:176-199)
-      never fuzzy-merge, and nodes whose numeral tokens differ never merge
-      (Section 302 != Section 304, even at cosine 0.89).
+    - deterministic stand-ins for the human gate: :func:`fuzzy_eligible`
+      (CourtCase never fuzzy-merges) and :func:`numeral_guard`.
     """
     from .similarity import _dot, hashing_feature_vectors
 
-    base = linkable.filter(F.col("head_label") != "CourtCase").select(
-        "labels_str",
-        "pre_key",
-        "norm_identity",
-        F.sort_array(
-            F.filter(F.col("tokens"), lambda t: t.rlike("[0-9]"))
-        ).alias("num_toks"),
-    )
+    base = fuzzy_nodes(linkable)
     cand = gram_candidates(base)
     # feature vectors only for nodes that actually appear in a candidate
     # pair (Python work bounded by candidate volume, not corpus size)
@@ -598,53 +653,26 @@ def refine_pairs(linkable: DataFrame) -> DataFrame:
         .distinct()
     )
     side = base.join(keys, "pre_key", "left_semi")
-    # lazy checkpoint: fa and fb below are two branches over this frame —
-    # without it the Arrow hashing-TF stage runs once per branch
+    # lazy checkpoint: the guard's two endpoint joins are two branches over
+    # this frame — without it the Arrow hashing-TF stage runs once per branch
     feats = hashing_feature_vectors(
         side, "pre_key", "norm_identity", REFINE_DIM
     ).join(side.select("pre_key", "num_toks"), "pre_key").localCheckpoint(
         eager=False
     )
-    fa = feats.select(
-        F.col("pre_key").alias("a"),
-        F.col("features").alias("fa"),
-        F.col("num_toks").alias("na_toks"),
-    )
-    fb = feats.select(
-        F.col("pre_key").alias("b"),
-        F.col("features").alias("fb"),
-        F.col("num_toks").alias("nb_toks"),
-    )
     return (
-        cand.join(fa, "a")
-        .join(fb, "b")
-        .filter(F.col("na_toks") == F.col("nb_toks"))
+        numeral_guard(cand, feats, "features")
         # vectors are L2-normalized, so the dot product IS the cosine
         .withColumn(
             "cosine",
             _dot(
-                F.col("fa").cast("array<double>"),
-                F.col("fb").cast("array<double>"),
+                F.col("features_a").cast("array<double>"),
+                F.col("features_b").cast("array<double>"),
             ),
         )
         .filter(F.col("cosine") >= REFINE_THRESHOLD)
         .select("a", "b")
     )
-
-
-# property keys that mark a node as a PERSON name.  The default-on semantic
-# refine excludes these labels: distributional similarity over person names
-# conflates role-mates — measured on the fixture corpus, two DIFFERENT
-# judges ("A. Deshmukh" / "V. Raghavan") embed at cosine 1.000 because
-# their surnames occupy byte-identical contexts, and the same holds for
-# witnesses and investigators.  Person aliasing in this engine is lexical
-# (abbreviation table + containment: "Deshmukh, J." ⊂ "A. Deshmukh").
-PERSON_PROP_KEYS = (
-    "firstName", "lastName",
-    "COFirstName", "COLastName",
-    "wFirstName", "wLastName",
-    "hasPolicePersonnelName",
-)
 
 
 def refine_pairs_semantic(
@@ -661,9 +689,8 @@ def refine_pairs_semantic(
     node's normalized identity, generate candidates with the SRP-LSH band
     join (the engine's ANN primitive — blocked by label set, exactly the
     reference's labels-equal merge guard, utils.py:681-688), accept at
-    exact cosine >= ``threshold``, with the same two deterministic gate
-    stand-ins as :func:`refine_pairs` (CourtCase never fuzzy-merges;
-    differing numeral tokens never merge).
+    exact cosine >= ``threshold``, behind the same gate stand-ins as
+    :func:`refine_pairs` (:func:`fuzzy_nodes`, :func:`numeral_guard`).
 
     ``embedder``: ``df(pre_key, norm_identity) -> df(pre_key, embedding
     array<float/double>)`` — :func:`embedding.train_corpus_embedder`
@@ -683,9 +710,9 @@ def refine_pairs_semantic(
     stand-ins for the reference's LLM + human merge gate, justified by
     measurement (BENCH/BASELINE.md semantic-refine section):
 
-    - ``exclude_person_props``: drop nodes whose props carry a
-      :data:`PERSON_PROP_KEYS` key — distinct judges/witnesses embed at
-      cosine 1.000 on templated corpora (role-twin conflation);
+    - ``exclude_person_props`` (:func:`fuzzy_eligible`): distinct
+      judges/witnesses embed at cosine 1.000 on templated corpora
+      (role-twin conflation);
     - ``attest``: a (url, pre_key) mention table; a pair is accepted only
       if some document mentions BOTH identities (aliases are used
       interchangeably WITHIN documents — "the Apex Court ... the Supreme
@@ -696,22 +723,7 @@ def refine_pairs_semantic(
       window join, never corpus-quadratic."""
     from .similarity import cosine_neardup_pairs_lsh
 
-    base = linkable.filter(F.col("head_label") != "CourtCase")
-    if exclude_person_props:
-        base = base.filter(
-            ~F.arrays_overlap(
-                F.map_keys(F.col("props")),
-                F.array(*[F.lit(k) for k in PERSON_PROP_KEYS]),
-            )
-        )
-    base = base.select(
-        "labels_str",
-        "pre_key",
-        "norm_identity",
-        F.sort_array(
-            F.filter(F.col("tokens"), lambda t: t.rlike("[0-9]"))
-        ).alias("num_toks"),
-    )
+    base = fuzzy_nodes(linkable, exclude_person_props)
     emb = embedder(base.select("pre_key", "norm_identity"))
     joined = base.select("labels_str", "pre_key").join(emb, "pre_key")
     pairs = cosine_neardup_pairs_lsh(
@@ -723,14 +735,7 @@ def refine_pairs_semantic(
         bits=bits,
         band_bits=band_bits,
     )
-    na = base.select(F.col("pre_key").alias("a"), F.col("num_toks").alias("na"))
-    nb = base.select(F.col("pre_key").alias("b"), F.col("num_toks").alias("nb"))
-    accepted = (
-        pairs.join(na, "a")
-        .join(nb, "b")
-        .filter(F.col("na") == F.col("nb"))
-        .select("a", "b")
-    )
+    accepted = numeral_guard(pairs, base).select("a", "b")
     if attest is not None:
         # co-mention attestation: restrict the mention table to candidate
         # endpoints first (few — LSH-banded + cosine-accepted), then build
@@ -757,37 +762,46 @@ def refine_pairs_semantic(
     return accepted
 
 
-def containment_candidates(tok: DataFrame) -> DataFrame:
-    """(a, b) candidate pairs from the asymmetric rarest-token probe over a
-    df-capped token index (labels_str, pre_key, token, df).
+def rarest_token_pairs(
+    tok: DataFrame, src: str = "p", dst: str = "q"
+) -> DataFrame:
+    """Directed (labels_str, src, dst) pairs of the rarest-token probe over
+    a df-capped token index (labels_str, pre_key, token, df): each node
+    ``src`` probes the index with its single rarest surviving token and
+    meets every other node ``dst`` of its label block holding it.
 
-    Candidate volume is Σ over nodes of df(rarest surviving token) — the
-    skew bound the stress bench measures (scripts/skew_bench.py): a head
-    entity's shared tokens exceed the df cap and leave the index entirely,
-    so hot blocks can never go quadratic; the worst remaining case is a
-    node whose RAREST token is still mid-frequency (bag with no
-    distinguishing token), bounded by MAX_TOKEN_DF candidates/node.
-
-    Rarest token per node is a rank-1-only window == struct MIN — orders by
-    (df, token) exactly like the window's orderBy but aggregates with
-    map-side combine (shuffle volume |nodes| per mapper, no full sort of
-    the token table).  Tokens are per-node distinct (array_except is a set
-    op), so no ties beyond the token ordering itself."""
+    Rarest token per node is a rank-1-only window == struct MIN over
+    (df, token, labels_str) — it orders like the window's orderBy but
+    aggregates with map-side combine (shuffle volume |nodes| per mapper,
+    no full sort of the token table).  Tokens are per-node distinct
+    (array_except is a set op), so no ties beyond the token ordering."""
     probe = (
         tok.groupBy("pre_key")
         .agg(F.min(F.struct("df", "token", "labels_str")).alias("m"))
         .select(
             F.col("m.labels_str").alias("labels_str"),
             F.col("m.token").alias("token"),
-            F.col("pre_key").alias("p"),
+            F.col("pre_key").alias(src),
         )
     )
+    return probe.join(
+        tok.select("labels_str", "token", F.col("pre_key").alias(dst)),
+        ["labels_str", "token"],
+    ).filter(F.col(src) != F.col(dst))
+
+
+def containment_candidates(tok: DataFrame) -> DataFrame:
+    """(a, b) candidate pairs: the :func:`rarest_token_pairs` probe,
+    unordered.
+
+    Candidate volume is Σ over nodes of df(rarest surviving token) — the
+    skew bound the stress bench measures (scripts/skew_bench.py): a head
+    entity's shared tokens exceed the df cap and leave the index entirely,
+    so hot blocks can never go quadratic; the worst remaining case is a
+    node whose RAREST token is still mid-frequency (bag with no
+    distinguishing token), bounded by MAX_TOKEN_DF candidates/node."""
     return (
-        probe.join(
-            tok.select("labels_str", "token", F.col("pre_key").alias("q")),
-            ["labels_str", "token"],
-        )
-        .filter(F.col("p") != F.col("q"))
+        rarest_token_pairs(tok)
         .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
         .distinct()
     )
@@ -906,20 +920,14 @@ def build_graph(
                 sampled.select("text").localCheckpoint()
             )
             # attest scan pre-filter: a mention's pre_key can match a
-            # semantic candidate only if the candidate survived the
-            # CourtCase + person-prop gates, and pre_key is a hash OF
-            # (labels, canon props), so the same predicates evaluated on
-            # the MENTION's own columns keep exactly the matchable rows —
-            # this drops the majority of the 2-per-triple mention stream
-            # BEFORE the sha2/canon work and the distinct exchange
-            # (semantics pinned: the downstream join is a left_semi
-            # against those candidates)
+            # semantic candidate only if its node passed the candidate
+            # gate, and a node's props ARE its mentions' canon, so the
+            # gate's own predicate over the mention keeps exactly the
+            # matchable rows — dropping most of the 2-per-triple mention
+            # stream before the distinct exchange (the downstream join is
+            # a left_semi against those candidates)
             semantic_attest = mentions.filter(
-                (F.col("head_label") != "CourtCase")
-                & ~F.arrays_overlap(
-                    F.map_keys(F.col("canon")),
-                    F.array(*[F.lit(k) for k in PERSON_PROP_KEYS]),
-                )
+                fuzzy_eligible("canon", exclude_person_props=True)
             ).select("url", "pre_key")
 
     nodes0 = tokenized_node_frame(
@@ -969,7 +977,7 @@ def link_nodes(
 
     Shared by :func:`build_graph` (mention-level frame) and the periodic
     cross-batch reconcile (stored node tables re-linked — node_key and
-    pre_key use the SAME content formula, so stored nodes re-enter the
+    pre_key are both :func:`content_key`, so stored nodes re-enter the
     linker as their own mentions; streaming/ingest.reconcile_graph)."""
     # fuzzy linking only for entity-like nodes (not free-text nodes)
     linkable = nodes0.filter(
@@ -1058,13 +1066,7 @@ def link_nodes(
             "props",
             F.coalesce(F.col("props"), F.expr("map()")),
         )
-        .withColumn(
-            "node_key",
-            F.sha2(
-                F.concat_ws("||", F.col("labels_str"), canon_str_col("props")),
-                256,
-            ),
-        )
+        .withColumn("node_key", content_key("labels_str", "props"))
     )
     mapping = member.select("pre_key", "comp").join(
         nodes.select("comp", "node_key"), "comp"

@@ -74,81 +74,74 @@ def paragraph_edges(
     return out.withColumn("triple_id", F.sha2(F.concat_ws("|", "src_key", "relationship", "dst_key"), 256))
 
 
-def case_metadata_records(assigned: DataFrame) -> DataFrame:
-    """E4 parity: one CaseMetadata record per document — the
-    ``CaseMetadataParser`` fields (hasCaseID / hasCourtName / hasCaseName,
-    reference ``output_parser.py:22-31``), derived from the document's
-    primary header triple (CourtCase-hasRulingOf->Court).
+def elect_primary_case(assigned: DataFrame, **payload) -> DataFrame:
+    """(url, *payload) of each document's primary CourtCase triple — the
+    ONE election behind the hasParagraph subgraph
+    (``pipeline.primary_case_nodes``) and the CaseMetadata record
+    (:func:`case_metadata_records`), so both agree on which case is
+    primary.  ``payload``: name -> scalar column over the winning triple
+    row (a map cannot order inside the struct MIN).
 
-    Candidate tiers mirror :func:`pipeline.primary_case_nodes` (the record
-    and the hasParagraph subgraph must agree on which case is primary):
+    Candidate tiers per url (the reference hangs the subgraph on the
+    document's OWN case, agent_utils.py:210-235):
 
-    0. fully-named hasRulingOf — the parsed header (cited priors also emit
-       hasRulingOf but carry no hasCaseName);
-    1. hasParty with a CourtCase subject — emitted only for the document's
-       OWN header block, so a court-name parse miss (no header hasRulingOf)
-       still yields the document's own (hasCaseID, hasCaseName) with an
-       empty hasCourtName, instead of adopting a cited precedent's id;
+    0. fully-named hasRulingOf — the parsed header (cited prior cases
+       also emit hasRulingOf but carry no hasCaseName);
+    1. hasParty with a CourtCase subject — emitted only for the
+       document's OWN header block, so a court-name parse miss (no header
+       hasRulingOf) still elects the document's own case instead of a
+       cited precedent shared by many documents;
     2. unnamed hasRulingOf — body reliance citations, last resort: the
-       reference emits metadata per document unconditionally
-       (agent_utils.py:221-226), so no document may lose its bookkeeping
-       record to a grammar miss.
+       reference emits the subgraph and the metadata per document
+       unconditionally (agent_utils.py:221-226), so no document loses
+       them to a grammar miss.
 
-    Rank-1-per-url is a struct MIN (tier asc, span_start, triple_id), not a
+    Rank-1-per-url is a struct MIN (tier, span_start, triple_id), not a
     sort window — map-side combinable like the linking probes."""
+    ruling = F.col("relationship") == "hasRulingOf"
     named = F.coalesce(
         F.element_at("node1_props", F.lit("hasCaseName")), F.lit("")
     ) != ""
-    ruling = assigned.filter(
-        (F.col("relationship") == "hasRulingOf")
-        & (F.col("node1_type") == "CourtCase")
-    ).select(
-        "url",
-        F.when(named, 0).otherwise(2).alias("tier"),
-        "span_start",
-        "triple_id",
-        "node1_props",
-        F.coalesce(
-            F.element_at("node2_props", F.lit("courtName")), F.lit("")
-        ).alias("_court"),
-    )
-    party = assigned.filter(
-        (F.col("relationship") == "hasParty")
-        & (F.col("node1_type") == "CourtCase")
-    ).select(
-        "url",
-        F.lit(1).alias("tier"),
-        "span_start",
-        "triple_id",
-        "node1_props",
-        F.lit("").alias("_court"),
-    )
+    tier = F.when(ruling & named, 0).when(ruling, 2).otherwise(1)
     return (
-        ruling.unionByName(party)
-        .select(
-            "url",
-            F.struct(
-                F.col("tier").alias("tier"),
-                F.col("span_start").alias("span_start"),
-                F.col("triple_id").alias("triple_id"),
-                F.coalesce(
-                    F.element_at("node1_props", F.lit("hasCaseID")), F.lit("")
-                ).alias("hasCaseID"),
-                F.col("_court").alias("hasCourtName"),
-                F.coalesce(
-                    F.element_at("node1_props", F.lit("hasCaseName")),
-                    F.lit(""),
-                ).alias("hasCaseName"),
-            ).alias("cand"),
+        assigned.filter(
+            (ruling | (F.col("relationship") == "hasParty"))
+            & (F.col("node1_type") == "CourtCase")
         )
         .groupBy("url")
-        .agg(F.min("cand").alias("m"))
-        .select(
-            "url",
-            F.col("m.hasCaseID").alias("hasCaseID"),
-            F.col("m.hasCourtName").alias("hasCourtName"),
-            F.col("m.hasCaseName").alias("hasCaseName"),
+        .agg(
+            F.min(
+                F.struct(
+                    tier.alias("tier"),
+                    F.col("span_start").alias("span_start"),
+                    F.col("triple_id").alias("triple_id"),
+                    *[c.alias(k) for k, c in payload.items()],
+                )
+            ).alias("m")
         )
+        .select("url", *[F.col(f"m.{k}").alias(k) for k in payload])
+    )
+
+
+def case_metadata_records(assigned: DataFrame) -> DataFrame:
+    """E4 parity: one CaseMetadata record per document — the
+    ``CaseMetadataParser`` fields (hasCaseID / hasCourtName / hasCaseName,
+    reference ``output_parser.py:22-31``) of the document's primary case
+    (:func:`elect_primary_case`).  The court comes from the header's
+    hasRulingOf object, so a hasParty winner has an empty hasCourtName."""
+
+    def prop(side: str, key: str):
+        return F.coalesce(
+            F.element_at(f"node{side}_props", F.lit(key)), F.lit("")
+        )
+
+    return elect_primary_case(
+        assigned,
+        hasCaseID=prop("1", "hasCaseID"),
+        hasCourtName=F.when(
+            F.col("relationship") == "hasRulingOf", prop("2", "courtName")
+        ).otherwise(F.lit("")),
+        hasCaseName=prop("1", "hasCaseName"),
     )
 
 
@@ -216,7 +209,7 @@ def part_of_edges(edges: DataFrame, chunks: DataFrame) -> DataFrame:
 
     Earliest-chunk-per-(node, span, url) is a struct MIN, not a
     ``row_number`` sort window — the same rewrite as the linking probes and
-    ``primary_case_nodes``: the aggregation partial-combines map-side
+    :func:`elect_primary_case`: the aggregation partial-combines map-side
     (chunk_index is unique per url, so MIN reproduces the window's rank-1
     exactly), where the window needed a full sort shuffle of the
     mention×chunk join output."""

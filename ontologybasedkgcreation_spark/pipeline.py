@@ -149,70 +149,25 @@ def run_pipeline(
 
 
 def primary_case_nodes(assigned: DataFrame, mapping: DataFrame) -> DataFrame:
-    """(url, node_key) of each document's primary CourtCase — the subject of
-    the document's hasRulingOf triple (header), for hasParagraph edges.
-
-    Three candidate tiers per url (the reference attaches the subgraph to
-    the document's OWN case, agent_utils.py:210-235):
-
-    0. fully-named hasRulingOf triples — the parsed header (cited prior
-       cases also emit hasRulingOf but carry no hasCaseName);
-    1. hasParty triples whose subject is a CourtCase — emitted ONLY for the
-       document's own header case block, so when court-name parsing missed
-       (no header hasRulingOf at all) the document's own case still wins
-       over tier 2;
-    2. unnamed hasRulingOf triples — body reliance citations; the last
-       resort, so a grammar miss never costs a document its whole
-       hasParagraph / CaseMetadata subgraph (the reference emits both
-       unconditionally).  Without tier 1 this tier could elect a SHARED
-       cited-precedent node and pile many documents' paragraph subgraphs
-       onto it.
-
-    Rank-1-per-url is a struct MIN (tier asc, span_start, triple_id), not a
-    sort window — same rewrite as the linking probes (map-side combinable,
-    no full sort of the candidate subset)."""
-    unnamed = (
-        F.coalesce(
-            F.element_at("node1_props", F.lit("hasCaseName")), F.lit("")
+    """(url, node_key) of each document's primary CourtCase
+    (``materialize.elect_primary_case``), for hasParagraph edges."""
+    return (
+        materialize.elect_primary_case(
+            assigned,
+            pre_key=linking.pre_key_expr(
+                F.col("node1_labels"), F.col("node1_props")
+            ),
         )
-        == ""
-    ).cast("int")
-    ruling = assigned.filter(
-        (F.col("relationship") == "hasRulingOf")
-        & (F.col("node1_type") == "CourtCase")
-    ).select("url", (unnamed * 2).alias("tier"), "span_start", "triple_id",
-             "node1_labels", "node1_props")
-    party = assigned.filter(
-        (F.col("relationship") == "hasParty")
-        & (F.col("node1_type") == "CourtCase")
-    ).select("url", F.lit(1).alias("tier"), "span_start", "triple_id",
-             "node1_labels", "node1_props")
-    primary = (
-        ruling.unionByName(party)
-        .select(
-            "url",
-            F.struct(
-                F.col("tier").alias("tier"),
-                F.col("span_start").alias("span_start"),
-                F.col("triple_id").alias("triple_id"),
-                linking.pre_key_expr(
-                    F.col("node1_labels"), F.col("node1_props")
-                ).alias("pre_key"),
-            ).alias("cand"),
-        )
-        .groupBy("url")
-        .agg(F.min("cand").alias("m"))
-        .select("url", F.col("m.pre_key").alias("pre_key"))
         .join(mapping, "pre_key")
         .select("url", "node_key")
     )
-    return primary
 
 
 def persist_graph(
     spark: SparkSession, out: Dict[str, DataFrame], writer: materialize.GraphWriter
-) -> None:
-    """Write node/edge (+paragraph) tables with per-stage lineage counts.
+) -> Dict[str, int]:
+    """Write node/edge (+paragraph) tables with per-stage lineage counts;
+    returns those counts, ``{nodes, edges}``.
 
     Counts ride the WRITE action via ``df.observe`` — one job per table, no
     count()+write() double execution (edges carry two mapping joins; running
@@ -236,6 +191,7 @@ def persist_graph(
         all_aux = out["paragraph_edges"].unionByName(out["part_of_edges"])
         writer.write("paragraph_edges", all_aux, key="url")
     writer.append_lineage(spark, "persist_graph", metrics)
+    return metrics
 
 
 # ---------------------------------------------------------------------------

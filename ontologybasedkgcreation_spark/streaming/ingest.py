@@ -114,9 +114,9 @@ def reconcile_graph(spark: SparkSession, writer) -> dict:
     ``start_graph_maintenance`` canonicalizes within each micro-batch, so a
     new mention of an entity first seen in an earlier batch lands as a
     second node (the content-keyed bags differ) until this reconcile runs.
-    Because ``node_key`` uses the SAME content formula as a mention's
-    ``pre_key`` (sha256 of labels + canonical bag), the stored node table
-    re-enters the linker directly as its own mention frame: re-link, CC,
+    Because ``node_key`` and a mention's ``pre_key`` are the same
+    ``linking.content_key``, the stored node table re-enters the linker
+    through ``linking.keyed_nodes`` as its own mention frame: re-link, CC,
     re-consolidate, then rewire every stored edge through the old-key →
     new-key mapping.  The linking policy is ``build_graph``'s: the
     constants of ``operators.linking`` and its default dictionary.
@@ -133,21 +133,24 @@ def reconcile_graph(spark: SparkSession, writer) -> dict:
     import os
 
     from ..operators import linking
-    from ..operators.linking import identity_text_col
 
     nodes_path = os.path.join(writer.base_path, "nodes")
     edges_path = os.path.join(writer.base_path, "edges")
     stored_nodes = spark.read.parquet(nodes_path).drop("bucket")
     stored_edges = spark.read.parquet(edges_path).drop("bucket")
 
+    # pre_key stays the STORED key, which the stored edges reference: for
+    # a graph this engine wrote it equals the recomputed content key, and
+    # a graph keyed by other means still rewires through the mapping
     nodes0 = linking.tokenized_node_frame(
-        stored_nodes.select(
-            F.concat_ws(",", "labels").alias("labels_str"),
+        linking.keyed_nodes(stored_nodes).select(
+            "labels_str",
             "head_label",
             F.col("node_key").alias("pre_key"),
-            "props",
+            F.col("canon").alias("props"),
             "labels",
-        ).withColumn("identity", identity_text_col("head_label", "props"))
+            "identity",
+        )
     )
     linked = linking.link_nodes(nodes0)
     mapping = linked["mapping"]

@@ -19,21 +19,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-ASSIGNED_DDL = (
-    "url string, span_start long, triple_id string, "
-    "node1_type string, node1_labels array<string>, "
-    "node1_props map<string,string>, relationship string, "
-    "node2_type string, node2_labels array<string>, "
-    "node2_props map<string,string>"
-)
-
-
-def _assigned(spark, rows, start=0):
-    data = [
-        (url, span, f"t{start + i}", t1, [t1], p1, rel, t2, [t2], p2)
-        for i, (url, span, t1, p1, rel, t2, p2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(data, ASSIGNED_DDL)
+from conftest import assigned_frame
 
 
 # ---------------------------------------------------------------------------
@@ -80,7 +66,7 @@ def test_reconcile_crash_between_writes_heals(spark, tmp_path):
 
     def build_two_batch(writer):
         for start, rows in ((0, b1), (10, b2)):
-            g = linking.build_graph(_assigned(spark, rows, start=start))
+            g = linking.build_graph(assigned_frame(spark, rows, start=start))
             writer.merge("nodes", g["nodes"], key="node_key")
             writer.merge("edges", g["edges"], key="url")
 
@@ -162,7 +148,7 @@ def test_primary_case_prefers_own_header_over_cited(spark):
 
     # two documents citing the SAME precedent: without the hasParty tier
     # both would attach their subgraphs to the shared prior-case node
-    assigned = _assigned(
+    assigned = assigned_frame(
         spark, _court_missed_rows("u1") + _court_missed_rows("u2"), start=0
     )
     g = linking.build_graph(assigned)
@@ -183,7 +169,7 @@ def test_primary_case_prefers_own_header_over_cited(spark):
 def test_case_metadata_prefers_own_header_over_cited(spark):
     from ontologybasedkgcreation_spark.operators import materialize
 
-    assigned = _assigned(spark, _court_missed_rows("u1"), start=0)
+    assigned = assigned_frame(spark, _court_missed_rows("u1"), start=0)
     recs = materialize.case_metadata_records(assigned).collect()
     assert len(recs) == 1
     r = recs[0]
@@ -203,7 +189,7 @@ def test_case_metadata_named_header_still_wins(spark):
          {"courtName": "Y Court"}),
     ] + _court_missed_rows("u1")
     recs = materialize.case_metadata_records(
-        _assigned(spark, rows, start=0)
+        assigned_frame(spark, rows, start=0)
     ).collect()
     assert len(recs) == 1
     assert recs[0]["hasCourtName"] == "Y Court"

@@ -16,6 +16,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from conftest import assigned_frame
+
 TEMPLATES = [
     "the {a} delivered the judgment in the appeal today",
     "the {a} dismissed the petition with costs imposed",
@@ -262,7 +264,7 @@ def test_semantic_default_auto_trains_with_gate_standins(spark):
         ("u6", "CourtCase", c(6), "hasJudge", "Judge",
          {"COFirstName": "V.", "COLastName": "Raghavan"}),
     ]
-    assigned = _assigned_generic(spark, rows)
+    assigned = assigned_frame(spark, rows)
 
     base = linking.build_graph(assigned)
     assert base["nodes"].filter(SF.col("head_label") == "Court").count() == 4
@@ -292,21 +294,6 @@ def test_semantic_default_auto_trains_with_gate_standins(spark):
     floor = linking.build_graph(assigned, corpus=docs,
                                 semantic_auto_min_docs=10_000)
     assert floor["nodes"].filter(SF.col("head_label") == "Court").count() == 4
-
-
-def _assigned_generic(spark, rows):
-    data = [
-        (url, 0, f"t{i}", t1, [t1], p1, rel, t2, [t2], p2)
-        for i, (url, t1, p1, rel, t2, p2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data,
-        "url string, span_start long, triple_id string, "
-        "node1_type string, node1_labels array<string>, "
-        "node1_props map<string,string>, relationship string, "
-        "node2_type string, node2_labels array<string>, "
-        "node2_props map<string,string>",
-    )
 
 
 def test_pipeline_semantic_auto_keeps_pr(spark):
@@ -362,7 +349,7 @@ def test_semantic_auto_sample_cap_trains_on_url_keyed_sample(
         ("u6", "CourtCase", c(6), "hasJudge", "Judge",
          {"COFirstName": "V.", "COLastName": "Raghavan"}),
     ]
-    assigned = _assigned_generic(spark, rows)
+    assigned = assigned_frame(spark, rows)
     # forces the k=2 url-hash sample
     monkeypatch.setattr(linking, "SEMANTIC_MAX_DOCS", docs.count() // 2)
     capped = linking.build_graph(

@@ -47,26 +47,7 @@ from pyspark.sql import functions as F
 
 from ontologybasedkgcreation_spark.operators import linking
 
-
-def _assigned(spark, rows):
-    """rows: (url, n1_type, n1_props, rel, n2_type, n2_props)."""
-    data = [
-        (
-            url, 0, f"t{i}",
-            t1, [t1], p1,
-            rel,
-            t2, [t2], p2,
-        )
-        for i, (url, t1, p1, rel, t2, p2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data,
-        "url string, span_start long, triple_id string, "
-        "node1_type string, node1_labels array<string>, "
-        "node1_props map<string,string>, relationship string, "
-        "node2_type string, node2_labels array<string>, "
-        "node2_props map<string,string>",
-    )
+from conftest import assigned_frame
 
 
 def _court_nodes(graph):
@@ -91,7 +72,7 @@ def test_abbrevations_file_alias_links(spark):
         ("u2", "CourtCase", case, "hasRulingOf", "Court",
          {"courtName": "Delhi High Court"}),
     ]
-    g = linking.build_graph(_assigned(spark, rows))
+    g = linking.build_graph(assigned_frame(spark, rows))
     courts = _court_nodes(g)
     assert len(courts) == 1, courts
 
@@ -106,7 +87,7 @@ def test_refine_pass_merges_non_containment_alias(spark):
         ("u2", "CourtCase", case, "hasRulingOf", "Court",
          {"courtName": "High Court Of Judicatura At Allahabad"}),  # typo alias
     ]
-    g = linking.build_graph(_assigned(spark, rows))
+    g = linking.build_graph(assigned_frame(spark, rows))
     assert len(_court_nodes(g)) == 1
     # containment alone misses it: no pair on the same token index
     nodes = _tokenized_courts(spark, [r[5]["courtName"] for r in rows])
@@ -127,7 +108,7 @@ def test_refine_pass_rejects_sibling_entities(spark):
         ("u2", "CourtCase", case, "hasProvision", "Provision",
          {"text": "Section 304 Of The Indian Penal Code"}),
     ]
-    g = linking.build_graph(_assigned(spark, rows))
+    g = linking.build_graph(assigned_frame(spark, rows))
     assert len(_court_nodes(g)) == 2
     # wait: Provision props are text-only -> excluded from fuzzy linking
     # entirely (free-text guard); both survive
@@ -144,7 +125,7 @@ def test_case_ids_never_fuzzy_merge(spark):
         ("u1", "CourtCase", c1, "hasRulingOf", "Court", {"courtName": "X Court"}),
         ("u2", "CourtCase", c2, "hasRulingOf", "Court", {"courtName": "X Court"}),
     ]
-    g = linking.build_graph(_assigned(spark, rows))
+    g = linking.build_graph(assigned_frame(spark, rows))
     cases = g["nodes"].filter(F.col("head_label") == "CourtCase").count()
     assert cases == 2
 
@@ -265,6 +246,33 @@ def test_semantic_refine_merges_model_known_alias(spark):
     assert pairs == {tuple(sorted(("k0", "k1")))}
 
 
+def test_pair_sources_never_cross_label_blocks(spark):
+    """link_nodes' comp_meta takes a component's labels from its
+    representative row, which is sound only because every pair source
+    blocks on labels_str.  Two nodes with one identity under different
+    label sets must pair under none of them and stay two nodes."""
+    from ontologybasedkgcreation_spark.operators.embedding import dict_embedder
+
+    name = "Madras High Court"
+    df = spark.createDataFrame(
+        [
+            (",".join(labels), "Court", f"k{i}", {"courtName": name}, name, labels)
+            for i, labels in enumerate([["Court"], ["Court", "Organization"]])
+        ],
+        "labels_str string, head_label string, pre_key string, "
+        "props map<string,string>, identity string, labels array<string>",
+    )
+    nodes = linking.tokenized_node_frame(df, abbrevs={})
+    embedder = dict_embedder(
+        {t: [1.0, 0.0, 0.0, 0.0] for t in ("madras", "high", "court")}
+    )
+
+    assert linking.containment_pairs(linking.token_index(nodes)).count() == 0
+    assert linking.refine_pairs(nodes).count() == 0
+    assert linking.refine_pairs_semantic(nodes, embedder).count() == 0
+    assert linking.link_nodes(nodes)["nodes"].count() == 2
+
+
 # ---------------------------------------------------------------------------
 # head-entity skew: candidate-volume bounds (round-3 VERDICT item 4)
 # ---------------------------------------------------------------------------
@@ -364,7 +372,7 @@ def test_null_labels_become_empty_array(spark):
     case = {"hasCaseID": "Criminal Appeal No. 1 Of 2015", "hasCaseName": "A Versus B"}
     rows = [("u1", "CourtCase", case, "hasRulingOf", "Court",
              {"courtName": "Delhi High Court"})]
-    assigned = _assigned(spark, rows).withColumn(
+    assigned = assigned_frame(spark, rows).withColumn(
         "node2_labels", F.lit(None).cast("array<string>")
     )
     labels = {

@@ -9,6 +9,8 @@ from ontologybasedkgcreation_spark import fixtures, pipeline
 from ontologybasedkgcreation_spark.ontology import load_ontology
 from ontologybasedkgcreation_spark.streaming import ingest
 
+from conftest import assigned_frame
+
 
 @pytest.fixture(scope="module")
 def staged(spark, tmp_path_factory):
@@ -118,24 +120,6 @@ def test_streaming_graph_maintenance_two_batches(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "graph/nodes")).count() == n_nodes
 
 
-def _assigned_rows(spark, rows, start=0):
-    """rows: (url, n1_type, n1_props, rel, n2_type, n2_props); triple ids are
-    globally numbered from ``start`` so per-batch and single-shot frames
-    carry identical ids."""
-    data = [
-        (url, 0, f"t{start + i}", t1, [t1], p1, rel, t2, [t2], p2)
-        for i, (url, t1, p1, rel, t2, p2) in enumerate(rows)
-    ]
-    return spark.createDataFrame(
-        data,
-        "url string, span_start long, triple_id string, "
-        "node1_type string, node1_labels array<string>, "
-        "node1_props map<string,string>, relationship string, "
-        "node2_type string, node2_labels array<string>, "
-        "node2_props map<string,string>",
-    )
-
-
 def _node_set(df):
     return {
         (
@@ -180,7 +164,7 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path, monkeypatch):
 
     writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
     for start, rows in ((0, b1), (1, b2)):
-        g = linking.build_graph(_assigned_rows(spark, rows, start=start))
+        g = linking.build_graph(assigned_frame(spark, rows, start=start))
         writer.merge("nodes", g["nodes"], key="node_key")
         writer.merge("edges", g["edges"], key="url")
 
@@ -194,7 +178,7 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path, monkeypatch):
 
     ingest.reconcile_graph(spark, writer)
 
-    single = linking.build_graph(_assigned_rows(spark, b1 + b2, start=0))
+    single = linking.build_graph(assigned_frame(spark, b1 + b2, start=0))
     stored_nodes = spark.read.parquet(nodes_path).drop("bucket")
     stored_edges = spark.read.parquet(edges_path).drop("bucket")
     assert (
