@@ -159,7 +159,7 @@ def q_validate_rels(spark, sf_dir):
         "i int, node1_type string, rel string, node2_type string",
     )
     obj = spark.createDataFrame(
-        [(d, r, g) for d, r, g, _ in onto.object_props],
+        list(onto.object_props),
         "domain string, orel string, range string",
     )
     return (
@@ -2157,7 +2157,7 @@ def _psl_domain_sql() -> dict:
 def _onto_values() -> str:
     onto = load_ontology()
     rows = ",\n    ".join(
-        f"('{d}', '{r}', '{g}')" for d, r, g, _ in onto.object_props
+        f"('{d}', '{r}', '{g}')" for d, r, g in onto.object_props
     )
     return f"(VALUES\n    {rows}\n  ) AS onto(domain, orel, range)"
 
@@ -3674,9 +3674,9 @@ FROM documents
 """,
         # simhash: the 64-bit bit-majority signature recomputed in SQL —
         # uint64 token hashes from md5 hex prefixes (byte-identical to the
-        # engine's hash_token), per-bit majority via generate_series(0,63),
-        # brute-force Hamming<=3 pairs (the banded Spark join is
-        # recall-exact for Hamming<=3, so the sets coincide)
+        # engine's hash_tokens_u64), per-bit majority via
+        # generate_series(0,63), brute-force Hamming<=3 pairs (the banded
+        # Spark join is recall-exact for Hamming<=3, so the sets coincide)
         "simhash": """
 WITH toks AS (
   SELECT DISTINCT doc_id AS doc, t

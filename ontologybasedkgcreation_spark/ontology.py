@@ -13,24 +13,27 @@ This replaces the reference's Neo4j/neosemantics round-trips:
 - the per-class full ancestor chain + inherited property schema mirrors the
   recursive walk in ``utils.py:507-524`` (``merged_node_with_label_and_prop``),
   precomputed here as a transitive closure (the reference recomputes it per
-  triple per chunk with one Cypher round-trip per level).
+  triple per chunk with one Cypher round-trip per level);
+- the two validation decisions — domain/range through the ancestor-chain
+  cross product (``some_func_v2``, utils.py:541-569) and is_a keep/swap/drop
+  (utils.py:260-290) — are resolved here once per instance into
+  ``Ontology.resolution_table`` and ``Ontology.isa_table``.
 
 Divergence note (documented deliberately): the reference's recursive walk can
 truncate the ancestor chain of interior classes depending on unspecified
 Cypher row order (``utils.py:516-520`` returns early when the visited class
 has children).  We always use the full ancestor chain — a stable superset.
 
-Everything is tiny (<200 rows per table) -> plain Python dicts, broadcast by
-Spark automatically when referenced from a pandas UDF, or exposed as
-DataFrames for broadcast hash joins.
+Everything is tiny (<200 rows per table) -> plain Python dicts; validation
+ships the two resolution tables as broadcast-join frames.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
-from functools import lru_cache
+from dataclasses import dataclass
+from functools import cached_property, lru_cache
 from importlib import resources
 from typing import Dict, FrozenSet, List, Set, Tuple
 
@@ -196,105 +199,87 @@ def _union_members(obj_group: str) -> List[str]:
     return [local_name(t) for t in m.group(1).split() if not t.startswith('"')]
 
 
-def _literal(objs: List[str]) -> str:
-    for o in objs:
-        if o.startswith('"'):
-            body = o[1:]
-            end = body.find('"')
-            return body[:end] if end >= 0 else body
-    return ""
-
-
 # ---------------------------------------------------------------------------
 # Ontology model
 # ---------------------------------------------------------------------------
 
 
+# One row of the resolution table: the first valid (label1, label2) of the
+# ancestor-chain walk, then each end's label chain and property-schema keys.
+Resolution = Tuple[str, str, Tuple[str, ...], Tuple[str, ...],
+                   Tuple[str, ...], Tuple[str, ...]]
+
+
 @dataclass(frozen=True)
 class Ontology:
-    """Immutable parsed ontology; cheap to pickle into executor UDF closures."""
+    """Immutable parsed ontology, and the one owner of ontology resolution:
+    :attr:`resolution_table` (domain/range through the ancestor chains) and
+    :attr:`isa_table` (is_a keep/swap) are built here once per instance;
+    validation only joins them."""
 
     classes: FrozenSet[str]
-    subclass_edges: Tuple[Tuple[str, str], ...]          # (child, parent), direct
-    object_props: Tuple[Tuple[str, str, str, str], ...]  # (domain, rel, range, comment)
-    datatype_props: Tuple[Tuple[str, str, str], ...]     # (domain, prop, dtype)
-    class_comments: Dict[str, str] = field(default_factory=dict)
+    subclass_edges: Tuple[Tuple[str, str], ...]      # (child, parent), direct
+    object_props: Tuple[Tuple[str, str, str], ...]   # (domain, rel, range)
+    datatype_props: Tuple[Tuple[str, str, str], ...]  # (domain, prop, dtype)
 
     # ---- derived lookups (computed once in __post_init__) -----------------
     def __post_init__(self):
         parents: Dict[str, List[str]] = {}
-        children: Dict[str, List[str]] = {}
         for c, p in self.subclass_edges:
             parents.setdefault(c, []).append(p)
-            children.setdefault(p, []).append(c)
-        object.__setattr__(self, "_parents", parents)
-        object.__setattr__(self, "_children", children)
-        object.__setattr__(
-            self, "_direct_edge_set", frozenset(self.subclass_edges)
-        )
-        object.__setattr__(
-            self,
-            "_valid_rel_set",
-            frozenset((d, r, g) for d, r, g, _ in self.object_props),
-        )
         props_by_domain: Dict[str, List[str]] = {}
         for d, p, _t in self.datatype_props:
             props_by_domain.setdefault(d, []).append(p)
-        object.__setattr__(self, "_props_by_domain", props_by_domain)
-        # memo caches (per-instance)
-        object.__setattr__(self, "_chain_cache", {})
-        object.__setattr__(self, "_schema_cache", {})
+        for name, value in (
+            ("_parents", parents),
+            ("_props_by_domain", props_by_domain),
+            ("_direct_edge_set", frozenset(self.subclass_edges)),
+            ("_valid_rel_set", frozenset(self.object_props)),
+            ("_ancestor_cache", {}),  # per-class memo of _ancestors
+        ):
+            object.__setattr__(self, name, value)
 
     # ---- reference-parity API ---------------------------------------------
-
-    def direct_parents(self, cls: str) -> List[str]:
-        return list(self._parents.get(cls, []))
-
-    def direct_children(self, cls: str) -> List[str]:
-        return list(self._children.get(cls, []))
 
     def is_direct_subclass(self, child: str, parent: str) -> bool:
         """Mirror of the per-pair check in ``refine_parent_child_relation``
         (utils.py:274-287): direct SCO edge only, no transitivity."""
         return (child, parent) in self._direct_edge_set
 
+    def _ancestors(self, cls: str) -> Tuple[Tuple[str, int], ...]:
+        """(class, depth) for cls and every ancestor: one BFS from cls over
+        the direct parent edges, self first at depth 0, each ancestor once at
+        its shortest depth.  The walk behind label_chain and
+        subclass_closure."""
+        cached = self._ancestor_cache.get(cls)
+        if cached is None:
+            out = [(cls, 0)]
+            seen = {cls}
+            for c, depth in out:  # grows while iterated: a FIFO queue
+                for p in self._parents.get(c, []):
+                    if p not in seen:
+                        seen.add(p)
+                        out.append((p, depth + 1))
+            cached = self._ancestor_cache[cls] = tuple(out)
+        return cached
+
     def label_chain(self, cls: str) -> List[str]:
         """[cls] + all ancestors, BFS order, deduped — the node label list
         (``merged_node_with_label_and_prop``, utils.py:507-524).
         Unknown class -> [cls] alone (reference behaves the same: no Cypher
         match -> just the node itself)."""
-        cached = self._chain_cache.get(cls)
-        if cached is not None:
-            return list(cached)
-        chain: List[str] = [cls]
-        seen: Set[str] = {cls}
-        frontier = [cls]
-        while frontier:
-            nxt: List[str] = []
-            for c in frontier:
-                for p in self._parents.get(c, []):
-                    if p not in seen:
-                        seen.add(p)
-                        chain.append(p)
-                        nxt.append(p)
-            frontier = nxt
-        self._chain_cache[cls] = tuple(chain)
-        return chain
+        return [c for c, _ in self._ancestors(cls)]
 
     def prop_schema(self, cls: str) -> Dict[str, str]:
         """Union of datatype-property names along the ancestor chain, each
         mapped to "" — the empty property bag the reference builds at
         utils.py:513-515 and feeds to property assignment."""
-        cached = self._schema_cache.get(cls)
-        if cached is not None:
-            return dict.fromkeys(cached, "")
-        keys: List[str] = []
+        schema: Dict[str, str] = {}
         for label in self.label_chain(cls):
-            for p in self._props_by_domain.get(label, []):
-                if p not in keys:
-                    keys.append(p)
-        self._schema_cache[cls] = tuple(keys)
-        return dict.fromkeys(keys, "")
+            schema.update(
+                dict.fromkeys(self._props_by_domain.get(label, []), "")
+            )
+        return schema
 
     def valid_relationship(self, label1: str, rel: str, label2: str) -> bool:
         """Exact (domain, rel, range) row check (utils.py:243-257)."""
@@ -310,43 +295,52 @@ class Ontology:
         chain2 = self.label_chain(type2)
         for l1 in self.label_chain(type1):
             for l2 in chain2:
-                if (l1, rel, l2) in self._valid_rel_set:
+                if self.valid_relationship(l1, rel, l2):
                     return (l1, l2)
         return None
 
-    def allowed_relationships(self) -> List[Tuple[str, str, str, str]]:
-        """is_a rows ∪ object-prop rows — ``getAllRelationships``
-        (utils.py:38-60)."""
-        rows = [
-            (c, "is_a", p, self.class_comments.get(c, ""))
-            for c, p in self.subclass_edges
-        ]
-        rows.extend(self.object_props)
-        return rows
+    @cached_property
+    def resolution_table(self) -> Dict[Tuple[str, str, str], Resolution]:
+        """(type1, rel, type2) -> :data:`Resolution` for every pair of
+        classes and every object-property name that resolves; a triple
+        with no entry has no valid domain/range.  Built once per instance
+        and shared by every caller: read it, never mutate it."""
+        rels = sorted({r for _, r, _ in self.object_props})
+        ends = {
+            c: (tuple(self.label_chain(c)), tuple(self.prop_schema(c)))
+            for c in sorted(self.classes)
+        }
+        table: Dict[Tuple[str, str, str], Resolution] = {}
+        for t1 in ends:
+            for t2 in ends:
+                for rel in rels:
+                    pair = self.resolve_relationship(t1, rel, t2)
+                    if pair is not None:
+                        table[(t1, rel, t2)] = pair + ends[t1] + ends[t2]
+        return table
+
+    @cached_property
+    def isa_table(self) -> Dict[Tuple[str, str], bool]:
+        """(node1_type, node2_type) -> swapped for every is_a triple that
+        survives (utils.py:274-287): a direct subclass edge is kept (False),
+        a reversed one is swapped (True).  On a 2-cycle the direct edge
+        wins; a pair with no entry is dropped.  Built once per instance
+        and shared, like :attr:`resolution_table`."""
+        table: Dict[Tuple[str, str], bool] = {}
+        for child, parent in self.subclass_edges:
+            table[(child, parent)] = False
+            if not self.is_direct_subclass(parent, child):
+                table[(parent, child)] = True
+        return table
 
     def subclass_closure(self) -> List[Tuple[str, str, int]]:
-        """(descendant, ancestor, depth) transitive closure rows."""
-        rows: List[Tuple[str, str, int]] = []
-        for cls in sorted(self.classes):
-            chain = self.label_chain(cls)
-            depth_of: Dict[str, int] = {cls: 0}
-            # recompute BFS depths
-            frontier = [cls]
-            d = 0
-            seen = {cls}
-            while frontier:
-                nxt = []
-                d += 1
-                for c in frontier:
-                    for p in self._parents.get(c, []):
-                        if p not in seen:
-                            seen.add(p)
-                            depth_of[p] = d
-                            nxt.append(p)
-                frontier = nxt
-            for anc in chain[1:]:
-                rows.append((cls, anc, depth_of[anc]))
-        return rows
+        """(descendant, ancestor, depth) transitive closure rows, depth =
+        shortest path."""
+        return [
+            (cls, anc, depth)
+            for cls in sorted(self.classes)
+            for anc, depth in self._ancestors(cls)[1:]
+        ]
 
     # ---- Spark integration -------------------------------------------------
 
@@ -395,65 +389,6 @@ class Ontology:
             frontier = nxt
         return closure
 
-    def to_dataframes(self, spark):
-        """Four small DataFrames for broadcast joins (SURVEY.md §1.4)."""
-        from pyspark.sql.types import (
-            IntegerType,
-            StringType,
-            StructField,
-            StructType,
-        )
-
-        s = StringType()
-        classes_df = spark.createDataFrame(
-            [(c,) for c in sorted(self.classes)],
-            StructType([StructField("class", s, False)]),
-        )
-        sub_df = spark.createDataFrame(
-            list(self.subclass_edges),
-            StructType(
-                [StructField("child", s, False), StructField("parent", s, False)]
-            ),
-        )
-        closure_df = spark.createDataFrame(
-            self.subclass_closure(),
-            StructType(
-                [
-                    StructField("descendant", s, False),
-                    StructField("ancestor", s, False),
-                    StructField("depth", IntegerType(), False),
-                ]
-            ),
-        )
-        obj_df = spark.createDataFrame(
-            list(self.object_props),
-            StructType(
-                [
-                    StructField("domain", s, False),
-                    StructField("rel", s, False),
-                    StructField("range", s, False),
-                    StructField("comment", s, True),
-                ]
-            ),
-        )
-        dt_df = spark.createDataFrame(
-            list(self.datatype_props),
-            StructType(
-                [
-                    StructField("domain", s, False),
-                    StructField("prop", s, False),
-                    StructField("dtype", s, False),
-                ]
-            ),
-        )
-        return {
-            "classes": classes_df,
-            "subclass": sub_df,
-            "subclass_closure": closure_df,
-            "object_props": obj_df,
-            "datatype_props": dt_df,
-        }
-
 
 def parse_owl(path: str = DEFAULT_OWL_PATH) -> Ontology:
     """Parse a NyOn Turtle file into an :class:`Ontology`."""
@@ -472,9 +407,8 @@ def parse_owl_text(text: str) -> Ontology:
     text = _strip_comments(text)
     classes: Set[str] = set()
     subclass_edges: List[Tuple[str, str]] = []
-    object_props: List[Tuple[str, str, str, str]] = []
+    object_props: List[Tuple[str, str, str]] = []
     datatype_props: List[Tuple[str, str, str]] = []
-    class_comments: Dict[str, str] = {}
 
     for stmt in _split_statements(text):
         tokens = _tokenize(stmt)
@@ -499,13 +433,10 @@ def parse_owl_text(text: str) -> Ontology:
                     for parent in _named_objects(objs):
                         if (name, parent) not in subclass_edges:
                             subclass_edges.append((name, parent))
-                elif pred == "rdfs:comment":
-                    class_comments.setdefault(name, _literal(objs))
 
         if "ObjectProperty" in types:
             domains: List[str] = []
             ranges: List[str] = []
-            comment = ""
             for pred, objs in po:
                 if pred == "rdfs:domain":
                     domains.extend(_named_objects(objs))
@@ -515,11 +446,9 @@ def parse_owl_text(text: str) -> Ontology:
                     ranges.extend(_named_objects(objs))
                     for o in objs:
                         ranges.extend(_union_members(o))
-                elif pred == "rdfs:comment":
-                    comment = _literal(objs)
             for d in domains:
                 for r in ranges:
-                    row = (d, name, r, comment)
+                    row = (d, name, r)
                     if row not in object_props:
                         object_props.append(row)
 
@@ -544,7 +473,6 @@ def parse_owl_text(text: str) -> Ontology:
         subclass_edges=tuple(subclass_edges),
         object_props=tuple(object_props),
         datatype_props=tuple(datatype_props),
-        class_comments=class_comments,
     )
 
 

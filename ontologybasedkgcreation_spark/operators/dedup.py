@@ -310,16 +310,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def hash_token(tok: str) -> int:
-    """Deterministic 64-bit token hash (md5 prefix) — no PYTHONHASHSEED
-    dependence."""
-    import hashlib
-
-    return int.from_bytes(
-        hashlib.md5(tok.encode("utf-8")).digest()[:8], "big"
-    )
-
-
 # Cross-batch token-hash cache: Spark reuses executor Python workers, and
 # natural-language token/3-gram vocabularies repeat heavily across Arrow
 # batches — after the first batches, md5 (the dominant residual Python
@@ -331,8 +321,9 @@ _TOKEN_HASH_CACHE_MAX = 1 << 19
 
 
 def hash_tokens_u64(tokens) -> "np.ndarray":
-    """Vectorized :func:`hash_token` over a sequence of (ideally unique)
-    tokens -> uint64 array, through the cross-batch cache."""
+    """Deterministic 64-bit token hashes (md5 prefix, big-endian — no
+    PYTHONHASHSEED dependence) of a sequence of (ideally unique) tokens ->
+    uint64 array, through the cross-batch cache."""
     import hashlib
 
     cache = _TOKEN_HASH_CACHE

@@ -499,6 +499,14 @@ def filter_urls(
     )
 
 
+def _hash60(col):
+    """The engine's portable 60-bit hash: the first 15 hex digits of the
+    md5 of ``col`` as a BIGINT — ``('0x' || substring(md5(x), 1, 15))``
+    in the oracles, so the sampling, shard and n-gram bucket rules that
+    read it agree with DuckDB bit for bit."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -525,19 +533,9 @@ def stratified_sample(
     float compare at 2^60 scale where doubles lose exactness).
 
     Scale shape: one projection, zero shuffles, zero Python."""
-    hash60 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(id_col).cast("string"), F.lit(":"), F.lit(salt)
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hash60 = _hash60(
+        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(salt))
+    )
     thr = None
     for k in sorted(rates):
         cond = F.col(strata_col) == F.lit(k)
@@ -574,12 +572,7 @@ def pack_shards(
     n_buckets=1 reproduces the strict single-stream layout."""
     from pyspark.sql import Window
 
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-        ).cast("long")
-        % n_buckets
-    )
+    bucket = _hash60(F.col(id_col).cast("string")) % n_buckets
     w = (
         Window.partitionBy("bucket")
         .orderBy(id_col)
@@ -621,10 +614,7 @@ def _hashed_grams(df: DataFrame, id_col: str, text_col: str,
     g = df.select(
         F.col(id_col), F.explode(F.concat(t, bigrams)).alias("g")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("g")), 1, 15), 16, 10).cast("long")
-        % num_buckets
-    )
+    bucket = _hash60(F.col("g")) % num_buckets
     return g.select(id_col, bucket.alias("bk"))
 
 
@@ -803,19 +793,9 @@ def weighted_sample(
     full sort); zero joins, zero Python."""
     from pyspark.sql import Window
 
-    hash60 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(id_col).cast("string"), F.lit(":"), F.lit(salt)
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hash60 = _hash60(
+        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(salt))
+    )
     u = (hash60.cast("double") + 1.0) / F.lit(float(1 << 60))
     es = F.round(F.log(u) / F.col(weight_col).cast("double"), 9)
     keyed = (

@@ -41,6 +41,16 @@ def _host_driver_memory() -> str:
     return driver_memory_for(None)
 
 
+def local_threads(master: str) -> int:
+    """Worker threads of a ``local[N]`` / ``local[*]`` master, also in the
+    ``local[N,F]`` / ``local[*,F]`` forms (F = task max failures); 0 for
+    any other master."""
+    if not (master.startswith("local[") and master.endswith("]")):
+        return 0
+    n = master[len("local["):-1].split(",", 1)[0].strip()
+    return (os.cpu_count() or 1) if n == "*" else int(n)
+
+
 def get_spark(
     app_name: str = "ontokg-spark",
     master: str | None = None,
@@ -55,12 +65,8 @@ def get_spark(
     # 2 cpus per task keeps the box at 1x subscription; on a real cluster the
     # equivalent is sizing executor cores to leave headroom for the Python
     # workers.
-    n_threads = 0
-    if master.startswith("local["):
-        inner = master[6:-1]
-        n_threads = os.cpu_count() if inner == "*" else int(inner)
     task_cpus = os.environ.get(
-        "SPARK_GRAFT_TASK_CPUS", "2" if n_threads >= 16 else "1"
+        "SPARK_GRAFT_TASK_CPUS", "2" if local_threads(master) >= 16 else "1"
     )
     builder = (
         SparkSession.builder.appName(app_name)

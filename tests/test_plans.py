@@ -49,7 +49,8 @@ def test_dimension_join_is_broadcast(spark):
 
 def test_validation_join_is_broadcast(spark):
     """Ontology validation must be a broadcast join — never a shuffle of
-    the triple table against a 100-row ontology frame."""
+    the triple table against a 100-row ontology frame — for the kept rows,
+    the is_a lineage and the rejects alike."""
     from ontologybasedkgcreation_spark import fixtures
     from ontologybasedkgcreation_spark.ontology import load_ontology
     from ontologybasedkgcreation_spark.operators import validate
@@ -63,9 +64,10 @@ def test_validation_join_is_broadcast(spark):
         load_ontology(),
         cache=False,
     )
-    plan = _plan(v["validated"], "simple")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    for name in ("validated", "isa", "rejected"):
+        plan = _plan(v[name], "simple")
+        assert "BroadcastHashJoin" in plan, name
+        assert "SortMergeJoin" not in plan, name
 
 
 def test_jvm_operators_have_no_python_nodes(spark):
