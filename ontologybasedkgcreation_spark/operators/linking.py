@@ -326,54 +326,93 @@ def keyed_nodes(rows: DataFrame) -> DataFrame:
     return m.withColumn("identity", identity_text_col("head_label", "canon"))
 
 
+def cc_edges(pairs: DataFrame):
+    """(sym, comp0) of :func:`connected_components`: the symmetric edge
+    table (src, dst), cached and materialized hash-partitioned on ``src``
+    into ``spark.sql.shuffle.partitions`` parts, and the round-0 comp
+    table (pre_key, comp): each node's min over itself and its neighbours,
+    an aggregate within that partitioning."""
+    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    sym = (
+        edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition(n, "src")
+        .cache()
+    )
+    # a cached table reports its partitioning once it is materialized: the
+    # pair plan runs here, and no round plan shuffles sym again
+    sym.write.format("noop").mode("overwrite").save()
+    comp0 = sym.groupBy("src").agg(
+        F.least(F.col("src"), F.min("dst")).alias("comp")
+    ).withColumnRenamed("src", "pre_key")
+    return sym, comp0
+
+
+def cc_messages(sym: DataFrame, comp: DataFrame) -> DataFrame:
+    """(pre_key, comp, old) messages of one round: each node's label to its
+    neighbours (``old`` null) plus its own label (``old`` = it).  ``comp``
+    comes hash-partitioned like ``sym`` (round 0 is an aggregate within
+    sym's partitioning, a doubled table is re-keyed into it), so the join
+    needs no Exchange of its own."""
+    return sym.join(comp.hint("shuffle_hash"), sym["src"] == comp["pre_key"]).select(
+        F.col("dst").alias("pre_key"), "comp", F.lit(None).cast("string").alias("old")
+    ).unionByName(comp.select("pre_key", "comp", F.col("comp").alias("old")))
+
+
 def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
     """(a, b) accepted pairs -> (pre_key, comp) with comp = min pre_key of
-    the component, over the universe of pair endpoints.  Driver-side loop
-    over DataFrames; data never leaves the cluster.
+    the component, over the universe of pair endpoints, as a local
+    checkpoint.  Driver-side loop over DataFrames; data never leaves the
+    cluster.
 
-    Convergence shape (the fixed-overhead lever at scale): min-label
-    propagation WITH pointer doubling — each round also shortcuts
-    ``comp(k) -> comp(comp(k))`` so rounds are O(log diameter), not
-    O(diameter) — and exactly ONE Spark action per round: the new comp
-    table is a lazy ``localCheckpoint`` materialized by the same aggregate
-    that returns the changed-row count (no separate checkpoint job + count
-    job per round).  Exiting via the iteration cap raises instead of
-    silently returning inconsistent component ids."""
-    sym = pairs.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    # lazy: the first round's convergence aggregate materializes it
-    sym = sym.localCheckpoint(eager=False)
-    universe = sym.select(F.col("src").alias("pre_key")).distinct()
-    comp = universe.select(F.col("pre_key"), F.col("pre_key").alias("comp"))
-    for _ in range(max_iter):
-        msgs = sym.join(comp, sym["src"] == comp["pre_key"]).select(
-            F.col("dst").alias("pre_key"), "comp"
-        )
-        agg = (
-            comp.unionByName(msgs)
-            .groupBy("pre_key")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # pointer doubling: comp values are themselves member pre_keys, so
-        # one self-join hops each pointer to its parent's component
-        parent = agg.select(
-            F.col("pre_key").alias("p_key"), F.col("comp").alias("p_comp")
-        )
-        short = agg.join(
-            parent, agg["comp"] == parent["p_key"], "left"
-        ).select("pre_key", F.coalesce("p_comp", "comp").alias("comp"))
-        flagged = short.join(
-            comp.withColumnRenamed("comp", "old"), "pre_key"
-        ).select(
-            "pre_key",
-            "comp",
-            (F.col("comp") != F.col("old")).cast("long").alias("ch"),
-        ).localCheckpoint(eager=False)
-        n_changed = flagged.agg(F.sum("ch")).first()[0] or 0
-        comp = flagged.select("pre_key", "comp")
-        if n_changed == 0:
-            return comp
+    Convergence shape: min-label propagation WITH pointer doubling — every
+    round after the first starts by shortcutting ``comp(k) ->
+    comp(comp(k))``, so rounds are O(log diameter), not O(diameter).
+    Round 0 is folded into the init step (:func:`cc_edges`).  A round whose
+    propagation changes no label has reached the fixed point: labels are
+    then constant on each component, and the component's min key always
+    keeps its own label.
+
+    Plan shape (the fixed-cost lever: under AQE every exchange is a Spark
+    job): ``sym`` is cached hash-partitioned on the node key, and each
+    round's comp table arrives hash-partitioned alike, so the message join
+    (:func:`cc_messages`) adds no Exchange.  A round is the min aggregate
+    and ONE action, a local checkpoint; the change flag rides the round's
+    rows (``old`` vs the new comp) and an Observation counts it — no flag
+    join, no count job.  Doubling costs the rounds that need it three
+    exchanges.  Alias components are mostly stars around their min key,
+    which round 0 already solves: one round of two jobs confirms it.
+    Exiting via the iteration cap raises instead of silently returning
+    inconsistent component ids."""
+    from pyspark.sql import Observation
+
+    n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym, comp = cc_edges(pairs)
+    try:
+        for _ in range(max_iter):
+            obs = Observation()
+            labels = (
+                cc_messages(sym, comp)
+                .groupBy("pre_key")
+                .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
+                .observe(obs, F.sum((F.col("comp") != F.col("old")).cast("long")).alias("n"))
+                .select("pre_key", "comp")
+                .localCheckpoint()
+            )
+            if not obs.get["n"]:
+                return labels
+            # pointer doubling: comp values are themselves member pre_keys,
+            # so one self-join hops each pointer to its parent's component
+            parent = labels.select(
+                F.col("pre_key").alias("p_key"), F.col("comp").alias("p_comp")
+            )
+            comp = (
+                labels.join(parent, labels["comp"] == parent["p_key"], "left")
+                .select("pre_key", F.coalesce("p_comp", "comp").alias("comp"))
+                .repartition(n, "pre_key")
+            )
+    finally:
+        sym.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} doubling "
         f"rounds (component diameter > 2^{max_iter}) — raise max_iter"
@@ -399,9 +438,10 @@ def bm25_adopt_pairs(
     this is the reference's rule as an oracle-checked operator, so the
     divergence between the two stays measurable.
 
-    Input ``tok``: the df-capped token index (labels_str, pre_key, token,
-    df) of :func:`token_index` — candidates come from the same
-    rarest-token probe, so the plan is O(#nodes), never corpus×query.
+    Input ``tok``: a df-capped token index (labels_str, pre_key, token,
+    df), the ``token`` rows of :func:`term_index` — candidates come from
+    the rarest-token probe (:func:`probe_order`), so the plan is
+    O(#nodes), never corpus×query.
     Score over shared tokens (set semantics ⇒ tf=1):
 
         Σ idf(t) · (k1+1) / (1 + k1·(1-b+b·|d|/avgdl)),
@@ -488,70 +528,6 @@ def bm25_adopt_pairs(
     )
 
 
-def gram_candidates(base: DataFrame) -> DataFrame:
-    """(a, b) refine candidates: char-3gram inverted index (df band
-    [2, MAX_TOKEN_DF]) probed with each node's REFINE_PROBES rarest grams.
-
-    PROBE_DF_CAP bounds the volume HARD: only grams with df <=
-    PROBE_DF_CAP may serve as probes, so candidates <= REFINE_PROBES x
-    PROBE_DF_CAP per node no matter how pathological the corpus.  A node
-    with no gram under the cap has no DISTINCTIVE substring at all — a
-    typo/reorder alias of a distinctive identity always shares the rare
-    grams of its distinctive region, which is what this pass exists for;
-    non-distinctive near-identical bags are containment's and the
-    semantic pass's job.  Measured on the 200k-node adversarial frame
-    (scripts/skew_bench.py): uncapped probes generated 155M candidates
-    (777/node, 394 s refine); the cap holds the same fixture recall with
-    candidates bounded at 192/node."""
-    grams_arr = F.array_distinct(
-        F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.length("norm_identity") - 2, F.lit(1))
-            ),
-            lambda i: F.col("norm_identity").substr(i, F.lit(3)),
-        )
-    )
-    g = base.select("labels_str", "pre_key", F.explode(grams_arr).alias("gram"))
-    gdf = g.groupBy("labels_str", "gram").agg(F.count("*").alias("df"))
-    # df=1 grams can only ever match their own node — they are useless both
-    # as probes AND as index entries, so the band is [2, MAX_TOKEN_DF]
-    g = g.join(
-        gdf.filter((F.col("df") >= 2) & (F.col("df") <= MAX_TOKEN_DF)),
-        ["labels_str", "gram"],
-    )
-    # top-REFINE_PROBES by (df, gram) == sorted collect_list slice: grams are
-    # per-node distinct and few (identity strings are short), so the agg
-    # buffer is tiny and partial-aggregates map-side — no full-sort window
-    probe = (
-        g.filter(F.col("df") <= PROBE_DF_CAP)
-        .groupBy("pre_key")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct("df", "gram", "labels_str"))
-                ),
-                1,
-                REFINE_PROBES,
-            ).alias("top")
-        )
-        .select(F.col("pre_key").alias("p"), F.explode("top").alias("m"))
-        .select(
-            F.col("m.labels_str").alias("labels_str"),
-            F.col("m.gram").alias("gram"),
-            "p",
-        )
-    )
-    return (
-        probe.join(
-            g.select("labels_str", "gram", F.col("pre_key").alias("q")),
-            ["labels_str", "gram"],
-        )
-        .filter(F.col("p") != F.col("q"))
-        .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
-        .distinct()
-    )
-
-
 # property keys that mark a node as a PERSON name.  The default-on semantic
 # refine excludes these labels: distributional similarity over person names
 # conflates role-mates — measured on the fixture corpus, two DIFFERENT
@@ -582,11 +558,16 @@ def fuzzy_eligible(props: str, exclude_person_props: bool = False):
     return ok
 
 
+def numeral_tokens(tokens):
+    """Sorted numeral tokens of a token array: the numeral guard's key."""
+    return F.sort_array(F.filter(tokens, lambda t: t.rlike("[0-9]")))
+
+
 def fuzzy_nodes(
     linkable: DataFrame, exclude_person_props: bool = False
 ) -> DataFrame:
     """(labels_str, pre_key, norm_identity, num_toks) of the
-    :func:`fuzzy_eligible` nodes; ``num_toks`` (sorted numeral tokens)
+    :func:`fuzzy_eligible` nodes; ``num_toks`` (:func:`numeral_tokens`)
     feeds :func:`numeral_guard`."""
     return linkable.filter(
         fuzzy_eligible("props", exclude_person_props)
@@ -594,85 +575,26 @@ def fuzzy_nodes(
         "labels_str",
         "pre_key",
         "norm_identity",
-        F.sort_array(
-            F.filter(F.col("tokens"), lambda t: t.rlike("[0-9]"))
-        ).alias("num_toks"),
+        numeral_tokens(F.col("tokens")).alias("num_toks"),
     )
 
 
-def numeral_guard(
-    pairs: DataFrame, nodes: DataFrame, *carry: str
-) -> DataFrame:
-    """(a, b) pairs whose two endpoints carry equal numeral tokens in
-    ``nodes`` (pre_key, num_toks, ...) — Section 302 != Section 304, even at
-    cosine 0.89.  Each endpoint's ``carry`` columns come along, suffixed
-    ``_a`` / ``_b``."""
+def numerals_match():
+    """The numeral guard over endpoint columns ``num_toks_a`` /
+    ``num_toks_b``: both endpoints carry equal numeral tokens — Section 302
+    != Section 304, even at cosine 0.89."""
+    return F.col("num_toks_a") == F.col("num_toks_b")
+
+
+def numeral_guard(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(a, b) pairs whose endpoints pass :func:`numerals_match` over
+    ``nodes`` (pre_key, num_toks, ...)."""
     def side(end: str) -> DataFrame:
         return nodes.select(
-            F.col("pre_key").alias(end),
-            F.col("num_toks").alias(f"num_toks_{end}"),
-            *[F.col(c).alias(f"{c}_{end}") for c in carry],
+            F.col("pre_key").alias(end), F.col("num_toks").alias(f"num_toks_{end}")
         )
 
-    return (
-        pairs.join(side("a"), "a")
-        .join(side("b"), "b")
-        .filter(F.col("num_toks_a") == F.col("num_toks_b"))
-    )
-
-
-def refine_pairs(linkable: DataFrame) -> DataFrame:
-    """R2 parity: the similarity-driven refine pass of the reference
-    (``refine_nodes.py:27-96``: per-node ANN kNN with cosine >= 0.6, then an
-    LLM + human gate; ``merge_by_id`` merges only when the two label sets
-    are equal, utils.py:681-688).  Deterministic Spark-first stand-in:
-
-    - vectors: hashing-TF over the NORMALIZED identity (word + char-3gram),
-      so token reorders and small typos score high;
-    - candidates: a df-capped char-3gram inverted index probed with each
-      node's REFINE_PROBES rarest grams — the approximate-recall analog of
-      the reference's ANN index (both are recall-approximate by design),
-      volume O(#nodes · REFINE_PROBES), never all-pairs;
-    - label-equality guard: the index is blocked by ``labels_str``;
-    - accept at cosine >= REFINE_THRESHOLD.  0.75 here plays the role of the
-      reference's 0.6-on-a-semantic-model + human gate: calibrated so true
-      aliases (token reorders ~0.84, typos ~0.94) merge while sibling
-      entities ("Madras"/"Bombay High Court" ~0.67) never do;
-    - deterministic stand-ins for the human gate: :func:`fuzzy_eligible`
-      (CourtCase never fuzzy-merges) and :func:`numeral_guard`.
-    """
-    from .similarity import _dot, hashing_feature_vectors
-
-    base = fuzzy_nodes(linkable)
-    cand = gram_candidates(base)
-    # feature vectors only for nodes that actually appear in a candidate
-    # pair (Python work bounded by candidate volume, not corpus size)
-    keys = (
-        cand.select(F.col("a").alias("pre_key"))
-        .unionByName(cand.select(F.col("b").alias("pre_key")))
-        .distinct()
-    )
-    side = base.join(keys, "pre_key", "left_semi")
-    # lazy checkpoint: the guard's two endpoint joins are two branches over
-    # this frame — without it the Arrow hashing-TF stage runs once per branch
-    feats = hashing_feature_vectors(
-        side, "pre_key", "norm_identity", REFINE_DIM
-    ).join(side.select("pre_key", "num_toks"), "pre_key").localCheckpoint(
-        eager=False
-    )
-    return (
-        numeral_guard(cand, feats, "features")
-        # vectors are L2-normalized, so the dot product IS the cosine
-        .withColumn(
-            "cosine",
-            _dot(
-                F.col("features_a").cast("array<double>"),
-                F.col("features_b").cast("array<double>"),
-            ),
-        )
-        .filter(F.col("cosine") >= REFINE_THRESHOLD)
-        .select("a", "b")
-    )
+    return pairs.join(side("a"), "a").join(side("b"), "b").filter(numerals_match())
 
 
 def refine_pairs_semantic(
@@ -690,7 +612,8 @@ def refine_pairs_semantic(
     join (the engine's ANN primitive — blocked by label set, exactly the
     reference's labels-equal merge guard, utils.py:681-688), accept at
     exact cosine >= ``threshold``, behind the same gate stand-ins as
-    :func:`refine_pairs` (:func:`fuzzy_nodes`, :func:`numeral_guard`).
+    the lexical refine of :func:`lexical_pairs` (:func:`fuzzy_nodes`,
+    :func:`numeral_guard`).
 
     ``embedder``: ``df(pre_key, norm_identity) -> df(pre_key, embedding
     array<float/double>)`` — :func:`embedding.train_corpus_embedder`
@@ -762,25 +685,31 @@ def refine_pairs_semantic(
     return accepted
 
 
+def probe_order(df, term, labels_str):
+    """The rarity order every probe ranks its terms by: (df, term,
+    labels_str).  A rank-1 (or top-k) selection under it is a struct MIN
+    (or a sorted slice) — map-side combinable, no full-sort window over
+    the token or gram table."""
+    return F.struct(df.alias("df"), term.alias("term"), labels_str.alias("labels_str"))
+
+
 def rarest_token_pairs(
     tok: DataFrame, src: str = "p", dst: str = "q"
 ) -> DataFrame:
     """Directed (labels_str, src, dst) pairs of the rarest-token probe over
     a df-capped token index (labels_str, pre_key, token, df): each node
-    ``src`` probes the index with its single rarest surviving token and
-    meets every other node ``dst`` of its label block holding it.
-
-    Rarest token per node is a rank-1-only window == struct MIN over
-    (df, token, labels_str) — it orders like the window's orderBy but
-    aggregates with map-side combine (shuffle volume |nodes| per mapper,
-    no full sort of the token table).  Tokens are per-node distinct
-    (array_except is a set op), so no ties beyond the token ordering."""
+    ``src`` probes the index with its single rarest surviving token
+    (:func:`probe_order`) and meets every other node ``dst`` of its label
+    block holding it.  Tokens are per-node distinct (array_except is a set
+    op), so no ties beyond the token ordering.  :func:`bm25_adopt_pairs`'
+    candidates; the linker's containment probe is the same selection,
+    taken in :func:`node_terms`."""
     probe = (
         tok.groupBy("pre_key")
-        .agg(F.min(F.struct("df", "token", "labels_str")).alias("m"))
+        .agg(F.min(probe_order(*map(F.col, ("df", "token", "labels_str")))).alias("m"))
         .select(
             F.col("m.labels_str").alias("labels_str"),
-            F.col("m.token").alias("token"),
+            F.col("m.term").alias("token"),
             F.col("pre_key").alias(src),
         )
     )
@@ -788,42 +717,6 @@ def rarest_token_pairs(
         tok.select("labels_str", "token", F.col("pre_key").alias(dst)),
         ["labels_str", "token"],
     ).filter(F.col(src) != F.col(dst))
-
-
-def containment_candidates(tok: DataFrame) -> DataFrame:
-    """(a, b) candidate pairs: the :func:`rarest_token_pairs` probe,
-    unordered.
-
-    Candidate volume is Σ over nodes of df(rarest surviving token) — the
-    skew bound the stress bench measures (scripts/skew_bench.py): a head
-    entity's shared tokens exceed the df cap and leave the index entirely,
-    so hot blocks can never go quadratic; the worst remaining case is a
-    node whose RAREST token is still mid-frequency (bag with no
-    distinguishing token), bounded by MAX_TOKEN_DF candidates/node."""
-    return (
-        rarest_token_pairs(tok)
-        .select(F.least("p", "q").alias("a"), F.greatest("p", "q").alias("b"))
-        .distinct()
-    )
-
-
-def containment_pairs(tok: DataFrame) -> DataFrame:
-    """Accepted containment pairs: candidates whose smaller token set is
-    fully contained in the larger (recall-exact under the df cap)."""
-    cand = containment_candidates(tok)
-    ta = tok.select(F.col("pre_key").alias("a"), "token")
-    tb = tok.select(F.col("pre_key").alias("b"), "token")
-    shared = (
-        cand.join(ta, "a").join(tb, ["b", "token"]).groupBy("a", "b")
-        .agg(F.count("*").alias("shared"))
-    )
-    sizes = tok.groupBy("pre_key").agg(F.count("*").alias("ntok"))
-    return (
-        shared.join(sizes.withColumnRenamed("pre_key", "a").withColumnRenamed("ntok", "na"), "a")
-        .join(sizes.withColumnRenamed("pre_key", "b").withColumnRenamed("ntok", "nb"), "b")
-        .filter(F.col("shared") == F.least(F.col("na"), F.col("nb")))
-        .select("a", "b")
-    )
 
 
 def tokenized_node_frame(
@@ -851,17 +744,218 @@ def tokenized_node_frame(
     )
 
 
-def token_index(nodes: DataFrame) -> DataFrame:
-    """(labels_str, pre_key, token, df) over a tokenized node frame, df
-    counted per label block.  Tokens whose df exceeds MAX_TOKEN_DF leave
-    the index entirely — frequent tokens ("criminal", "appeal", court
-    names) would otherwise build quadratic candidate blocks."""
-    tok = nodes.select(
-        "labels_str", "pre_key", F.explode("tokens").alias("token")
+def probe_numerals(kind, num_toks):
+    """The numeral part of a probe's join key: a gram (refine) probe only
+    meets nodes whose numeral tokens equal its own — the numeral guard,
+    applied before a candidate exists; token (containment) probes carry
+    none."""
+    return F.when(kind == "gram", num_toks).otherwise(F.array().cast("array<string>"))
+
+
+def term_index(linkable: DataFrame) -> DataFrame:
+    """(labels_str, pre_key, kind, term, num, df): the df-capped inverted
+    index of both lexical passes, df counted per label block and kind;
+    ``num`` is :func:`probe_numerals`.
+
+    - kind ``token``: every linkable node's tokens with df <= MAX_TOKEN_DF.
+      Frequent tokens ("criminal", "appeal", court names) leave the index
+      entirely — they would otherwise build quadratic candidate blocks.
+    - kind ``gram``: the distinct char-3grams of each :func:`fuzzy_eligible`
+      node's normalized identity, df band [2, MAX_TOKEN_DF]: a df=1 gram
+      can only ever match its own node, useless as probe and as entry.
+
+    One explode and one df aggregate serve both kinds."""
+    ident = F.col("norm_identity")
+    grams = F.array_distinct(
+        F.transform(
+            F.sequence(F.lit(1), F.greatest(F.length(ident) - 2, F.lit(1))),
+            lambda i: ident.substr(i, F.lit(3)),
+        )
     )
-    tok_df = tok.groupBy("labels_str", "token").agg(F.count("*").alias("df"))
-    return tok.join(
-        tok_df.filter(F.col("df") <= MAX_TOKEN_DF), ["labels_str", "token"]
+
+    def tagged(arr, kind: str):
+        return F.transform(
+            arr, lambda t: F.struct(F.lit(kind).alias("kind"), t.alias("term"))
+        )
+
+    fuzzy = fuzzy_eligible("props")
+    terms = linkable.select(
+        "labels_str",
+        "pre_key",
+        F.explode(
+            F.concat(
+                tagged(F.col("tokens"), "token"),
+                F.filter(tagged(grams, "gram"), lambda _: fuzzy),
+            )
+        ).alias("t"),
+        numeral_tokens(F.col("tokens")).alias("num_toks"),
+    ).select(
+        "labels_str", "pre_key", "t.kind", "t.term",
+        probe_numerals(F.col("t.kind"), F.col("num_toks")).alias("num"),
+    )
+    df = terms.groupBy("labels_str", "kind", "term").agg(F.count("*").alias("df"))
+    floor = F.when(F.col("kind") == "gram", 2).otherwise(1)
+    return terms.join(
+        df.filter((F.col("df") >= floor) & (F.col("df") <= MAX_TOKEN_DF)),
+        ["labels_str", "kind", "term"],
+    )
+
+
+def node_terms(linkable: DataFrame, index: DataFrame) -> DataFrame:
+    """The per-node side table of the lexical passes: (labels_str, pre_key,
+    toks, probes, norm_identity, num_toks), one aggregate over the
+    :func:`term_index` rows plus one row per node.
+
+    - ``toks``: the node's df-capped tokens (containment is decided on
+      these sets);
+    - ``probes``: (kind, term) — the containment probe, the node's single
+      rarest surviving token, then the refine probes, its REFINE_PROBES
+      rarest grams among those with df <= PROBE_DF_CAP (:func:`probe_order`).
+
+    Containment A ⊆ B implies A's rarest token is in B's set, so the token
+    probe is recall-exact over df-capped token sets while candidate volume
+    drops from Σ df² (symmetric self-join) to Σ df(rarest) ≈ O(#nodes).
+    PROBE_DF_CAP bounds the refine volume HARD: candidates <= REFINE_PROBES
+    x PROBE_DF_CAP per node no matter how pathological the corpus.  A node
+    with no gram under the cap has no DISTINCTIVE substring at all — a
+    typo/reorder alias of a distinctive identity always shares the rare
+    grams of its distinctive region, which is what the refine exists for;
+    non-distinctive near-identical bags are containment's and the semantic
+    pass's job.  Measured on the 200k-node adversarial frame
+    (scripts/skew_bench.py): uncapped probes generated 155M candidates
+    (777/node, 394 s refine); the cap holds the same fixture recall with
+    candidates bounded at 192/node.
+
+    Everything per node is derived from one collected term list, so every
+    consumer of this table prunes it to the same aggregate and shares its
+    exchange."""
+    none = F.lit(None)
+    rows = index.select(
+        "labels_str", "pre_key",
+        F.struct("kind", "df", "term").alias("t"),
+        none.cast("string").alias("norm_identity"),
+        none.cast("array<string>").alias("num_toks"),
+    ).unionByName(
+        linkable.select(
+            "labels_str", "pre_key",
+            none.cast("struct<kind:string,df:bigint,term:string>").alias("t"),
+            "norm_identity",
+            numeral_tokens(F.col("tokens")).alias("num_toks"),
+        )
+    )
+    side = rows.groupBy("labels_str", "pre_key").agg(
+        F.collect_list("t").alias("terms"),
+        F.max("norm_identity").alias("norm_identity"),
+        F.max("num_toks").alias("num_toks"),
+    )
+
+    def ranked(pred):
+        return F.transform(
+            F.filter("terms", pred),
+            lambda t: probe_order(t.df, t.term, F.col("labels_str")),
+        )
+
+    def probe(kind: str, term):
+        return F.struct(F.lit(kind).alias("kind"), term.alias("term"))
+
+    token = F.filter("terms", lambda t: t.kind == "token")
+    rarest = F.array_min(ranked(lambda t: t.kind == "token"))
+    grams = F.slice(
+        F.array_sort(ranked(lambda t: (t.kind == "gram") & (t.df <= PROBE_DF_CAP))),
+        1,
+        REFINE_PROBES,
+    )
+    return side.select(
+        "labels_str",
+        "pre_key",
+        F.transform(token, lambda t: t.term).alias("toks"),
+        F.concat(
+            F.filter(F.array(probe("token", rarest.term)), lambda p: p.term.isNotNull()),
+            F.transform(grams, lambda g: probe("gram", g.term)),
+        ).alias("probes"),
+        "norm_identity",
+        "num_toks",
+    )
+
+
+def candidate_pairs(side: DataFrame, index: DataFrame, *cols: str) -> DataFrame:
+    """Directed (labels_str, a, b, kind) candidates + the probing node's
+    ``cols``, suffixed ``_a``: each node ``a`` of :func:`node_terms` probes
+    :func:`term_index` with its probes and meets every other node ``b`` of
+    its label block holding the term — the label block is the reference's
+    labels-equal merge guard (``merge_by_id``, utils.py:681-688).  A
+    ``token`` candidate is verified by containment, a ``gram`` candidate
+    by the refine (:func:`lexical_pairs`)."""
+    probes = side.select(
+        "labels_str",
+        F.col("pre_key").alias("a"),
+        "num_toks",
+        *[F.col(c).alias(f"{c}_a") for c in cols],
+        F.explode("probes").alias("p"),
+    ).select(
+        "*", "p.kind", "p.term",
+        probe_numerals(F.col("p.kind"), F.col("num_toks")).alias("num"),
+    ).drop("p", "num_toks")
+    return (
+        probes.join(
+            index.select("labels_str", "kind", "term", "num", F.col("pre_key").alias("b")),
+            ["labels_str", "kind", "term", "num"],
+        )
+        .filter(F.col("a") != F.col("b"))
+        .drop("term", "num")
+    )
+
+
+def lexical_pairs(linkable: DataFrame) -> DataFrame:
+    """Accepted (a, b, kind) pairs (a < b) of the two lexical passes,
+    verified in ONE pass: the probing endpoint's side row rides its probes,
+    the other endpoint's is one join away.  Pairs may repeat; connected
+    components does not care.
+
+    - ``token`` (containment): the smaller df-capped token set is fully
+      contained in the larger — the deterministic analog of "BM25 top-1
+      score > 1 ⇒ adopt" (utils.py:363-365); recall-exact under the cap.
+    - ``gram`` (R2, the similarity-driven refine of refine_nodes.py:27-96:
+      per-node ANN kNN + LLM + human gate): hashing-TF cosine over the
+      NORMALIZED identity (word + char-3gram, so token reorders and small
+      typos score high) >= REFINE_THRESHOLD between nodes with equal
+      numeral tokens (:func:`probe_numerals`).
+      The gram index approximates the reference's ANN index (both are
+      recall-approximate by design); 0.75 plays the role of the reference's
+      0.6-on-a-semantic-model + human gate: true aliases (token reorders
+      ~0.84, typos ~0.94) merge while sibling entities ("Madras"/"Bombay
+      High Court" ~0.67) never do.  Only fuzzy-eligible nodes hold grams,
+      so a CourtCase never fuzzy-merges.  The vectors are computed in the
+      verify pass, for the candidates that pass every other test: Python
+      work is bounded by candidate volume, not corpus size."""
+    from .similarity import hashing_cosine
+
+    cols = ("toks", "norm_identity", "num_toks")
+    index = term_index(linkable)
+    side = node_terms(linkable, index)
+    b_side = side.select(
+        "labels_str",
+        F.col("pre_key").alias("b"),
+        *[F.col(c).alias(f"{c}_b") for c in cols],
+    )
+    pairs = candidate_pairs(side, index, *cols).join(b_side, ["labels_str", "b"])
+    token = F.col("kind") == "token"
+    contained = F.size(F.array_intersect("toks_a", "toks_b")) == F.least(
+        F.size("toks_a"), F.size("toks_b")
+    )
+    # numerals_match restates the gram probe's join key (probe_numerals);
+    # it also keeps every reader of the side table on the same columns,
+    # so they prune it to one aggregate and share its exchange
+    return (
+        pairs.filter((token & contained) | (~token & numerals_match()))
+        .filter(
+            token
+            | (
+                hashing_cosine(F.col("norm_identity_a"), F.col("norm_identity_b"), REFINE_DIM)
+                >= REFINE_THRESHOLD
+            )
+        )
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"), "kind")
     )
 
 
@@ -969,7 +1063,10 @@ def link_nodes(
     semantic_attest: Optional[DataFrame] = None,
 ) -> Dict[str, DataFrame]:
     """The linking + consolidation core over a tokenized node frame
-    (:func:`tokenized_node_frame`) -> {nodes, mapping}.
+    (:func:`tokenized_node_frame`) -> {nodes, mapping}, both narrow
+    projections of ONE materialized consolidated frame
+    (:func:`consolidate`): reading either, or rewiring edges through the
+    mapping, never re-runs linking or consolidation.
 
     ``semantic_embedder`` and ``semantic_attest``: the trained model and
     the (url, pre_key) mention table of :func:`build_graph`'s semantic
@@ -987,25 +1084,10 @@ def link_nodes(
         )
         & (F.size("tokens") > 0)
     )
+    pairs = lexical_pairs(linkable).select("a", "b")
 
-    # skew/scale discipline for the head-entity hot keys, two layers:
-    # 1. df cap (token_index);
-    # 2. asymmetric prefix filter: candidates are generated by probing the
-    #    index with each node's SINGLE RAREST surviving token.  Containment
-    #    A ⊆ B implies A's rarest token is in B's set, so recall over
-    #    df-capped token sets is exact while candidate volume drops from
-    #    Σ df² (symmetric self-join) to Σ df(rarest) ≈ O(#nodes).
-    # eager checkpoint: probe/cand/shared/sizes all reuse the index
-    tok = token_index(linkable).localCheckpoint()
-
-    # R2: similarity-driven refine pass (reference refine_nodes.py:27-96) —
-    # catches non-containment aliases (token reorders, typos).  Duplicate
-    # (a, b) rows vs the containment pairs are harmless to min-label CC,
-    # so no distinct shuffle here.
-    pairs = containment_pairs(tok).unionByName(refine_pairs(linkable))
-
-    # semantic refine (see build_graph ``corpus``): the same dataflow as
-    # refine_pairs but over MODEL embeddings, so lexically-disjoint
+    # semantic refine (see build_graph ``corpus``): the same gates as the
+    # lexical refine but over MODEL embeddings, so lexically-disjoint
     # aliases with shared contexts also pair
     if semantic_embedder is not None:
         pairs = pairs.unionByName(
@@ -1020,14 +1102,39 @@ def link_nodes(
 
     # CC runs only over nodes that appear in an accepted pair (a tiny
     # fraction of the corpus); every other node is its own component.  The
-    # pair universe is derived from CC's own checkpointed symmetric edge
-    # table, so the pair join chain computes exactly once with no extra
-    # eager checkpoint here.
-    comp_paired = connected_components(pairs)
-    member = nodes0.join(comp_paired, "pre_key", "left").withColumn(
-        "comp", F.coalesce(F.col("comp"), F.col("pre_key"))
-    )
+    # pair plan runs once, inside CC's cached symmetric edge table.
+    cons = consolidate(nodes0, connected_components(pairs))
+    return {
+        "nodes": cons.select("node_key", "head_label", "labels", "props"),
+        "mapping": cons.select(F.explode("members").alias("pre_key"), "node_key"),
+    }
 
+
+def consolidate(nodes0: DataFrame, comp: DataFrame) -> DataFrame:
+    """Nodes + their (pre_key, comp) components -> (node_key, head_label,
+    labels, props, members), one row per node_key, locally checkpointed.
+
+    Per component per property the longest non-empty value wins
+    (deterministic stand-in for "adopt the stored value", which in a batch
+    engine has no temporal order); ``node_key`` is content-derived from
+    the consolidated bag, so reruns and resumes are idempotent.
+
+    Labels come from the component's representative row, its min pre_key
+    (which is ``comp``): every pair source blocks on labels_str, so a
+    component never crosses label sets (test_linking::
+    test_pair_sources_never_cross_label_blocks).  Two components may still
+    consolidate to one node_key: nodes the linker never pairs (free-text
+    and token-less nodes) with equal bags under different stored keys.
+    They become one node whose ``members`` hold both components.
+
+    Plan shape: one exchange on ``comp`` serves the property aggregates,
+    the metadata aggregate and their join; one on ``node_key`` merges
+    duplicate keys."""
+    member = (
+        nodes0.join(comp, "pre_key", "left")
+        .withColumn("comp", F.coalesce(F.col("comp"), F.col("pre_key")))
+        .repartition("comp")
+    )
     entries = (
         member.select("comp", F.explode(F.map_entries("props")).alias("e"))
         .select("comp", F.col("e.key").alias("pkey"), F.col("e.value").alias("pval"))
@@ -1039,44 +1146,37 @@ def link_nodes(
             ).alias("pval")
         )
     )
-    props_c = entries.groupBy("comp").agg(
+    props = entries.groupBy("comp").agg(
         F.map_from_entries(
             F.sort_array(F.collect_list(F.struct("pkey", "pval")))
         ).alias("props")
     )
-    # component metadata WITHOUT an exchange: every pair generator
-    # (containment, refine, semantic) blocks on labels_str, so a CC
-    # component never crosses label sets — labels_str/labels/head_label
-    # are constant within a component and the representative row
-    # (pre_key == comp; comp is the min member's pre_key, so it always
-    # exists) carries them.  This replaces a full shuffle + SortAggregate
-    # (first() on array columns cannot hash-aggregate) of the widest node
-    # columns with a narrow filter; output equality with the old
-    # min/first aggregate is exactly the within-block invariant, pinned
-    # by the idempotence/oracle suites and test_linking.
-    comp_meta = member.filter(F.col("pre_key") == F.col("comp")).select(
-        "comp",
-        "labels_str",
-        F.coalesce("labels", F.array().cast("array<string>")).alias("labels"),
-        "head_label",
+    meta = member.groupBy("comp").agg(
+        F.min(F.struct("pre_key", "labels_str", "labels", "head_label")).alias("rep"),
+        F.collect_list("pre_key").alias("members"),
     )
     nodes = (
-        comp_meta.join(props_c, "comp", "left")
-        .withColumn(
-            "props",
-            F.coalesce(F.col("props"), F.expr("map()")),
+        meta.join(props, "comp", "left")
+        .select(
+            "members",
+            "rep.labels_str",
+            "rep.head_label",
+            F.coalesce("rep.labels", F.array().cast("array<string>")).alias("labels"),
+            F.coalesce(F.col("props"), F.expr("map()")).alias("props"),
         )
         .withColumn("node_key", content_key("labels_str", "props"))
     )
-    mapping = member.select("pre_key", "comp").join(
-        nodes.select("comp", "node_key"), "comp"
-    ).select("pre_key", "node_key").cache()
-
-    nodes_final = nodes.select(
-        "node_key", "head_label", "labels", "props"
-    ).dropDuplicates(["node_key"]).cache()
-
-    return {"nodes": nodes_final, "mapping": mapping}
+    # equal node_keys mean equal labels_str and bags: first(props) is exact
+    return (
+        nodes.groupBy("node_key")
+        .agg(
+            F.min(F.struct("head_label", "labels")).alias("m"),
+            F.first("props").alias("props"),
+            F.flatten(F.collect_list("members")).alias("members"),
+        )
+        .select("node_key", "m.head_label", "m.labels", "props", "members")
+        .localCheckpoint()
+    )
 
 
 def rewire_edges(edges: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -177,6 +178,48 @@ def kmeans_fit(
     return centroids
 
 
+def _hashing_tf(texts: pd.Series, dim: int):
+    """float32 (len(texts), dim): the L2-normalized hashing-TF rows over
+    word + char-3gram tokens of ``texts``.  A row depends on its own text
+    only, so batching never changes a vector."""
+    import numpy as np
+
+    from .dedup import hash_tokens_u64
+
+    n = len(texts)
+    s = texts.fillna("").str.lower()
+    # flat (row, token) stream WITH multiplicity (counts matter for
+    # hashing-TF): word tokens + char 3-grams, exploded batch-wide
+    toks_lists = s.str.split()
+    w_counts = toks_lists.str.len().to_numpy()
+    g_counts = (s.str.len() - 2).clip(lower=0).to_numpy()
+    rows = np.concatenate(
+        [
+            np.repeat(np.arange(n), w_counts),
+            np.repeat(np.arange(n), g_counts),
+        ]
+    )
+    flat = [t for toks in toks_lists for t in toks]
+    flat += [
+        st[i : i + 3]
+        for st in s
+        for i in range(max(len(st) - 2, 0))
+    ]
+    M = np.zeros((n, dim), dtype=np.float64)
+    if len(flat):
+        # each DISTINCT token of the batch is hashed ONCE through
+        # the cross-batch cache (md5 kept: the bucket assignment is
+        # pinned by merge-behavior tests)
+        uniq, inv = np.unique(
+            np.asarray(flat, dtype=object), return_inverse=True
+        )
+        bu = (hash_tokens_u64(uniq) % np.uint64(dim)).astype(np.int64)
+        np.add.at(M, (rows, bu[inv]), 1.0)
+    norms = np.linalg.norm(M, axis=1)
+    M = M / np.where(norms == 0, 1.0, norms)[:, None]
+    return M.astype(np.float32)
+
+
 def hashing_feature_vectors(
     df: DataFrame, id_col: str, text_col: str, dim: int = 256
 ) -> DataFrame:
@@ -185,58 +228,39 @@ def hashing_feature_vectors(
     model (the reference embeds node renderings with a 768-dim model,
     utils.py:786-873; the column contract is identical).  Arrow-batched,
     no per-row Python outside the tokenizer."""
-    import numpy as np
-    import pandas as pd
-
-    from .dedup import hash_tokens_u64
-
     def _feat(batches):
         for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            s = pdf[text_col].fillna("").str.lower()
-            # flat (row, token) stream WITH multiplicity (counts matter for
-            # hashing-TF): word tokens + char 3-grams, exploded batch-wide
-            toks_lists = s.str.split()
-            w_counts = toks_lists.str.len().to_numpy()
-            g_counts = (s.str.len() - 2).clip(lower=0).to_numpy()
-            rows = np.concatenate(
-                [
-                    np.repeat(np.arange(n), w_counts),
-                    np.repeat(np.arange(n), g_counts),
-                ]
-            )
-            flat = [t for toks in toks_lists for t in toks]
-            flat += [
-                st[i : i + 3]
-                for st in s
-                for i in range(max(len(st) - 2, 0))
-            ]
-            M = np.zeros((n, dim), dtype=np.float64)
-            if len(flat):
-                # each DISTINCT token of the batch is hashed ONCE through
-                # the cross-batch cache (md5 kept: the bucket assignment is
-                # pinned by merge-behavior tests)
-                uniq, inv = np.unique(
-                    np.asarray(flat, dtype=object), return_inverse=True
-                )
-                bu = (hash_tokens_u64(uniq) % np.uint64(dim)).astype(
-                    np.int64
-                )
-                np.add.at(M, (rows, bu[inv]), 1.0)
-            norms = np.linalg.norm(M, axis=1)
-            M = M / np.where(norms == 0, 1.0, norms)[:, None]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    "features": M.astype(np.float32).tolist(),
+                    "features": _hashing_tf(pdf[text_col], dim).tolist(),
                 }
             )
 
     return df.select(id_col, text_col).mapInPandas(
         _feat, schema=f"{id_col} string, features array<float>"
     )
+
+
+def hashing_cosine(a, b, dim: int = 256):
+    """Column: cosine of the :func:`hashing_feature_vectors` vectors of the
+    string columns ``a`` and ``b``, row by row in one Arrow pass.
+    Bit-identical to ``_dot`` over the two feature columns cast to double:
+    float32 components widened exactly, products summed left to right
+    (``cumsum`` is sequential; ``sum`` would add pairwise)."""
+    import numpy as np
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("double")
+    def _cosine(x: pd.Series, y: pd.Series) -> pd.Series:
+        prod = _hashing_tf(x, dim).astype(np.float64) * _hashing_tf(
+            y, dim
+        ).astype(np.float64)
+        return pd.Series(np.cumsum(prod, axis=1)[:, -1])
+
+    return _cosine(a, b)
 
 
 def cosine_neardup_pairs(

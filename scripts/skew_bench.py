@@ -111,8 +111,14 @@ def main() -> int:
     hottest = df_all.orderBy(F.desc("df")).first()
     capped = df_all.filter(F.col("df") <= max_token_df)
     max_surviving = capped.orderBy(F.desc("df")).first()
-    tok = linking.token_index(nodes0).localCheckpoint()
-    cand = linking.containment_candidates(tok).localCheckpoint()
+    index = linking.term_index(nodes0)
+    cand = (
+        linking.candidate_pairs(linking.node_terms(nodes0, index), index)
+        .filter(F.col("kind") == "token")
+        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .distinct()
+        .localCheckpoint()
+    )
     n_cand = cand.count()
     part_rows = (
         cand.groupBy(F.spark_partition_id().alias("p")).count()

@@ -43,6 +43,9 @@ ALLOWED = {
     "lang_id": "language-ID operator (ratio form; the lang_id driver "
     "query counts hits)",
     "format_triples": "reference-parity debug printer (utils.py:602-620)",
+    "hashing_feature_vectors": "the deterministic lexical embedder a "
+    "refine_pairs_semantic caller plugs in (the linker's own refine "
+    "computes the same vectors per pair, similarity.hashing_cosine)",
 }
 
 

@@ -89,9 +89,10 @@ def test_refine_pass_merges_non_containment_alias(spark):
     ]
     g = linking.build_graph(assigned_frame(spark, rows))
     assert len(_court_nodes(g)) == 1
-    # containment alone misses it: no pair on the same token index
+    # containment alone misses it: the pair is the refine's (kind gram)
     nodes = _tokenized_courts(spark, [r[5]["courtName"] for r in rows])
-    assert linking.containment_pairs(linking.token_index(nodes)).count() == 0
+    kinds = {r["kind"] for r in linking.lexical_pairs(nodes).collect()}
+    assert kinds == {"gram"}
 
 
 def test_refine_pass_rejects_sibling_entities(spark):
@@ -267,10 +268,71 @@ def test_pair_sources_never_cross_label_blocks(spark):
         {t: [1.0, 0.0, 0.0, 0.0] for t in ("madras", "high", "court")}
     )
 
-    assert linking.containment_pairs(linking.token_index(nodes)).count() == 0
-    assert linking.refine_pairs(nodes).count() == 0
+    assert linking.lexical_pairs(nodes).count() == 0  # containment + refine
     assert linking.refine_pairs_semantic(nodes, embedder).count() == 0
     assert linking.link_nodes(nodes)["nodes"].count() == 2
+
+
+def test_hashing_cosine_matches_feature_vector_dot(spark):
+    """The lexical refine scores a candidate with similarity.hashing_cosine,
+    computed per pair; it must equal, bit for bit, the dot product of the
+    two hashing_feature_vectors the refine used to join per node —
+    whitespace, Unicode, short and repeated-gram strings included."""
+    import itertools
+
+    from ontologybasedkgcreation_spark.operators.similarity import (
+        _dot,
+        hashing_cosine,
+        hashing_feature_vectors,
+    )
+
+    texts = [
+        "high court of judicature at allahabad",
+        "high court of judicatura at allahabad",
+        "madras high court", "bombay high court",
+        "section 302 of the indian penal code", "ab", "",
+        "  padded\tand\x1cseparated\u3000words  ",
+        "çağrı i̇stanbul σοφιας", "aaa aaa aaa", "x" * 300, "emoji 😀 😀😀",
+    ]
+    rows = [(f"k{i}", t) for i, t in enumerate(texts)]
+    feats = {
+        r["id"]: r["features"]
+        for r in hashing_feature_vectors(
+            spark.createDataFrame(rows, "id string, t string"), "id", "t"
+        ).collect()
+    }
+    pairs = spark.createDataFrame(
+        [(a, ta, feats[a], b, tb, feats[b])
+         for (a, ta), (b, tb) in itertools.product(rows, rows)],
+        "a string, ta string, fa array<float>, b string, tb string, "
+        "fb array<float>",
+    )
+    got = pairs.select(
+        _dot(F.col("fa").cast("array<double>"), F.col("fb").cast("array<double>"))
+        .alias("dot"),
+        hashing_cosine(F.col("ta"), F.col("tb")).alias("cosine"),
+    ).collect()
+    assert len(got) == len(texts) ** 2
+    assert all(r["dot"] == r["cosine"] for r in got)
+
+
+def test_equal_bags_under_two_keys_become_one_node(spark):
+    """Two components can consolidate to one node_key: nodes the linker
+    never pairs (free text) with equal bags under two keys — what a
+    reconcile over a graph keyed by other means re-links.  The node table
+    holds the key once; the mapping sends both keys to it."""
+    text = "Section 302 Of The Indian Penal Code"
+    df = spark.createDataFrame(
+        [("Provision", "Provision", k, {"text": text}, text, ["Provision"])
+         for k in ("k1", "k2")],
+        "labels_str string, head_label string, pre_key string, "
+        "props map<string,string>, identity string, labels array<string>",
+    )
+    linked = linking.link_nodes(linking.tokenized_node_frame(df, abbrevs={}))
+    nodes = linked["nodes"].collect()
+    assert len(nodes) == 1
+    mapping = {r["pre_key"]: r["node_key"] for r in linked["mapping"].collect()}
+    assert mapping == {"k1": nodes[0]["node_key"], "k2": nodes[0]["node_key"]}
 
 
 # ---------------------------------------------------------------------------
@@ -316,24 +378,20 @@ def test_df_cap_bounds_candidate_volume(spark, monkeypatch):
     200k-node wall-clock evidence; this is the correctness pin."""
     from pyspark.sql import functions as F
 
-    from ontologybasedkgcreation_spark.operators.linking import (
-        containment_candidates,
-        link_nodes,
-    )
+    from ontologybasedkgcreation_spark.operators.linking import link_nodes
 
     nodes0 = _hot_node_frame(spark)
-    tok_all = nodes0.select(
-        "labels_str", "pre_key", F.explode("tokens").alias("token")
-    )
-    tok_df = tok_all.groupBy("labels_str", "token").agg(
-        F.count("*").alias("df")
-    )
 
     def cands(cap):
-        tok = tok_all.join(
-            tok_df.filter(F.col("df") <= cap), ["labels_str", "token"]
+        # containment candidates (kind token), unordered and distinct
+        monkeypatch.setattr(linking, "MAX_TOKEN_DF", cap)
+        index = linking.term_index(nodes0)
+        return (
+            linking.candidate_pairs(linking.node_terms(nodes0, index), index)
+            .filter(F.col("kind") == "token")
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+            .distinct()
         )
-        return containment_candidates(tok)
 
     capped = cands(50)
     # hot-block nodes generate no candidates at all; only the planted pairs

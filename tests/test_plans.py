@@ -386,12 +386,85 @@ def test_linking_pair_plan_has_no_sort_windows(spark):
         ),
         abbrevs={},
     )
-    tok = linking.token_index(nodes)
+    tok = (
+        linking.term_index(nodes)
+        .filter(F.col("kind") == "token")
+        .withColumnRenamed("term", "token")
+    )
     for name, frame in (
-        ("link_nodes", linking.link_nodes(nodes)["mapping"]),
+        ("lexical_pairs", linking.lexical_pairs(nodes)),
         ("bm25_adopt_pairs", linking.bm25_adopt_pairs(tok)),
     ):
         assert "Window" not in _plan(frame, "simple"), name
+
+
+def _planned_exchanges(df):
+    """The exchanges the planner added to ``df``'s physical plan to meet a
+    distribution requirement (origin ENSURE_REQUIREMENTS), not counting
+    the plans inside cached relations or explicit repartitions."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    found, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange" and (
+            node.shuffleOrigin().toString() == "ENSURE_REQUIREMENTS"
+        ):
+            found.append(node.toString())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+def test_cc_message_join_plans_no_exchange(spark):
+    """connected_components' message join reads sym and the comp table
+    hash-partitioned alike on the node key: the planner adds no Exchange,
+    in the first round (comp0, derived from sym) and in later ones (a
+    doubled comp table, re-keyed the way a round re-keys it)."""
+    from ontologybasedkgcreation_spark.operators import linking
+
+    pairs = spark.createDataFrame(
+        [(f"k{i}", f"k{i + 1}") for i in range(6)], "a string, b string"
+    )
+    sym, comp0 = linking.cc_edges(pairs)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    try:
+        assert _planned_exchanges(linking.cc_messages(sym, comp0)) == []
+        later = comp0.localCheckpoint().repartition(n, "pre_key")
+        assert _planned_exchanges(linking.cc_messages(sym, later)) == []
+    finally:
+        sym.unpersist()
+
+
+def test_link_nodes_consolidates_once(spark):
+    """build_graph's mapping, nodes and rewired edges all read ONE
+    consolidated checkpoint that link_nodes materialized: none of their
+    plans aggregates, and materializing all three runs a pinned handful of
+    jobs (it ran about thirty when each re-ran the consolidation)."""
+    from conftest import assigned_frame
+
+    from ontologybasedkgcreation_spark.operators import linking
+
+    case = {"hasCaseID": "Criminal Appeal No. 1 Of 2015", "hasCaseName": "A Versus B"}
+    rows = [
+        ("u1", "CourtCase", case, "hasRulingOf", "Court",
+         {"courtName": "Madras High Court"}),
+        ("u2", "CourtCase", case, "hasRulingOf", "Court",
+         {"courtName": "Madras High Court Chennai"}),
+        ("u2", "CourtCase", case, "hasJudge", "Judge", {"name": "A. Deshmukh"}),
+    ]
+    g = linking.build_graph(assigned_frame(spark, rows))
+    for name in ("mapping", "nodes", "edges"):
+        assert "Aggregate" not in _plan(g[name], "simple"), name
+    sc = spark.sparkContext
+    sc.setJobGroup("materialize-linked", "materialize-linked")
+    try:
+        for name in ("mapping", "nodes", "edges"):
+            g[name].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("materialize-linked")) <= 6
 
 
 def test_graph_match_label_filter_pushed_to_scan(spark, tmp_path):
