@@ -7,7 +7,8 @@ Without --pages, generates the deterministic synthetic judgment pages at
 --n-pages scale (FIXTURES.md §1) — the sandbox stand-in for the Common-Crawl
 Iceberg table.  Writes nodes/edges/paragraph tables + _lineage under --out
 and prints a one-line JSON summary: pages, nodes and edges (counted by the
-table writes), elapsed_sec and out.
+table writes), elapsed_sec and out.  The session is ``session.get_spark``'s,
+on the master spark-submit was given.
 """
 
 from __future__ import annotations
@@ -17,10 +18,9 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
-
 from ontologybasedkgcreation_spark import fixtures, pipeline
 from ontologybasedkgcreation_spark.operators.materialize import GraphWriter
+from ontologybasedkgcreation_spark.session import get_spark
 
 
 def main(argv=None) -> int:
@@ -36,7 +36,7 @@ def main(argv=None) -> int:
     ap.add_argument("--edge-partition-col", default="relationship")
     args = ap.parse_args(argv)
 
-    spark = SparkSession.builder.appName("ontokg-build").getOrCreate()
+    spark = get_spark("ontokg-build")
     spark.sparkContext.setLogLevel("WARN")
 
     if args.pages:

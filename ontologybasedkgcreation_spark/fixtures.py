@@ -80,10 +80,10 @@ STATES: List[Tuple[str, str | None]] = [
     ("State of Tamil Nadu", "State of T.N."),
 ]
 
-# The reference ships a 616-row abbreviation file (505 parseable entries)
-# (/root/reference/Abbrevations, surfaced through the stub tool at
-# kg_creator/src/tools.py:1-7).  We keep our own small built-in dictionary for
-# hermetic tests; a full external dictionary can be loaded at runtime.
+# The reference ships a 616-row abbreviation file (505 parseable entries,
+# surfaced through the stub tool at kg_creator/src/tools.py:1-7).  This
+# small built-in dictionary is the linking default on every host;
+# ONTOKG_ABBREV_PATH names a file that widens it at runtime.
 ABBREVIATIONS: Dict[str, str] = {
     "M.P.": "Madhya Pradesh",
     "U.P.": "Uttar Pradesh",

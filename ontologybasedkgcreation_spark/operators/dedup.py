@@ -25,7 +25,7 @@ extend the engine to the web-scale ingestion ahead of KG construction.
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
 import numpy as np
 import pandas as pd

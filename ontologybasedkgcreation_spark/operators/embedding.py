@@ -17,8 +17,8 @@ Scale shape (100 TB):
   broadcast-join the capped vocabulary, one windowed self-join per document
   keyed on (doc, position), one groupBy.  Work is O(corpus tokens x window).
 - only the (vocab x vocab) PPMI factorization runs on the driver, and the
-  vocabulary is CAPPED (``max_vocab``, default 2000) — like ``kmeans_fit``,
-  the driver holds model-sized state, never corpus-sized state.  The PPMI
+  vocabulary is CAPPED (``EMBED_MAX_VOCAB`` tokens), so the driver holds
+  model-sized state, never corpus-sized state.  The PPMI
   matrix is symmetric, so the factorization is one ``numpy.linalg.eigh``
   (deterministic, no RNG).
 - the trained table (vocab x dim floats, <1 MB) broadcasts to an
@@ -40,12 +40,20 @@ from pyspark.sql import functions as F
 # the string (normalize_identity preserves them) but the embedder skips them
 EMBED_STOPWORDS = ("of", "the", "and", "a", "an", "in", "on", "for", "to")
 
+# The trainer's model: EMBED_DIM-dim vectors for the EMBED_MAX_VOCAB most
+# frequent tokens seen at least EMBED_MIN_COUNT times, from co-occurrence
+# within EMBED_WINDOW positions over the corpus's ``text`` column.
+EMBED_DIM = 64
+EMBED_WINDOW = 4
+EMBED_MIN_COUNT = 2
+EMBED_MAX_VOCAB = 2_000
+
 
 def vocab_frame(
     docs: DataFrame,
     text_col: str = "text",
-    min_count: int = 2,
-    max_vocab: int = 2_000,
+    min_count: int = EMBED_MIN_COUNT,
+    max_vocab: int = EMBED_MAX_VOCAB,
 ) -> DataFrame:
     """(token, n): the capped vocabulary — min corpus frequency, stopwords
     out, deterministically capped to the top ``max_vocab`` by (n desc,
@@ -73,11 +81,10 @@ def vocab_frame(
 def cooccurrence_frame(
     docs: DataFrame,
     text_col: str = "text",
-    window: int = 4,
-    min_count: int = 2,
-    max_vocab: int = 2_000,
+    window: int = EMBED_WINDOW,
+    min_count: int = EMBED_MIN_COUNT,
+    max_vocab: int = EMBED_MAX_VOCAB,
     id_col: Optional[str] = None,
-    vocab_df: Optional[DataFrame] = None,
 ) -> DataFrame:
     """(w, c, n) with w <= c: windowed co-occurrence counts over the capped
     vocabulary — the distributed half of embedder training, also exposed as
@@ -93,13 +100,8 @@ def cooccurrence_frame(
     documents collapse onto one key, and the self-join then pairs their
     token streams with each other (d copies contribute d² directed matches
     instead of d) — pass ``id_col`` when exact counts over a
-    duplicate-bearing corpus matter.
-
-    ``vocab_df``: pre-computed vocabulary frame — callers that already
-    materialized the vocabulary (token_cooccurrence collects it first)
-    pass it in so the corpus isn't re-scanned to rebuild it."""
-    if vocab_df is None:
-        vocab_df = vocab_frame(docs, text_col, min_count, max_vocab)
+    duplicate-bearing corpus matter."""
+    vocab_df = vocab_frame(docs, text_col, min_count, max_vocab)
     doc_key = (
         F.col(id_col) if id_col is not None else F.xxhash64(F.col(text_col))
     )
@@ -149,8 +151,8 @@ def cooccurrence_frame(
 def vocab_counts_fast(
     docs: DataFrame,
     text_col: str = "text",
-    min_count: int = 2,
-    max_vocab: int = 2_000,
+    min_count: int = EMBED_MIN_COUNT,
+    max_vocab: int = EMBED_MAX_VOCAB,
 ) -> DataFrame:
     """(token, n) capped vocabulary — the batch-vectorized twin of
     :func:`vocab_frame`, exact-count-identical (pinned by the trainer
@@ -207,7 +209,7 @@ def cooccurrence_counts_fast(
     docs: DataFrame,
     vocab_tokens: List[str],
     text_col: str = "text",
-    window: int = 4,
+    window: int = EMBED_WINDOW,
 ) -> DataFrame:
     """(w, c, n) with w <= c — the BATCH-VECTORIZED twin of
     :func:`cooccurrence_frame` for a pre-collected vocabulary, bit-identical
@@ -310,10 +312,9 @@ def cooccurrence_counts_fast(
 def token_cooccurrence(
     docs: DataFrame,
     text_col: str = "text",
-    window: int = 4,
-    min_count: int = 2,
-    max_vocab: int = 2_000,
-    fast: bool = True,
+    window: int = EMBED_WINDOW,
+    min_count: int = EMBED_MIN_COUNT,
+    max_vocab: int = EMBED_MAX_VOCAB,
 ) -> tuple[List[tuple], Dict[str, int]]:
     """Distributed co-occurrence counting.
 
@@ -322,33 +323,15 @@ def token_cooccurrence(
     corpus frequency for the capped vocabulary.  Both are vocabulary-sized
     (driver-safe); the corpus-sized work is all in the DataFrame job.
 
-    ``fast=True`` (default) routes the counting through
-    :func:`cooccurrence_counts_fast` (numpy partial matrices, parity-pinned
-    bit-identical) and the vocabulary through :func:`vocab_counts_fast`
-    (same parity discipline); ``fast=False`` keeps the spec ops — the
-    ``cooccur`` oracle path and the parity test's reference leg."""
-    vocab_df = (
-        vocab_counts_fast(docs, text_col, min_count, max_vocab)
-        if fast
-        else vocab_frame(docs, text_col, min_count, max_vocab)
-    )
-    vocab_rows = vocab_df.collect()
-    vocab_counts = {r["token"]: int(r["n"]) for r in vocab_rows}
-    spark = docs.sparkSession
-    if fast:
-        cooc = cooccurrence_counts_fast(
-            docs, sorted(vocab_counts), text_col, window
-        )
-    else:
-        cooc = cooccurrence_frame(
-            docs, text_col, window, min_count, max_vocab,
-            # re-create the collected vocabulary as a literal frame: the
-            # co-occurrence job then broadcasts it without re-running the
-            # vocab aggregation over the corpus
-            vocab_df=spark.createDataFrame(
-                [(t,) for t in vocab_counts], "token string"
-            ) if vocab_rows else vocab_df.select("token"),
-        )
+    The vocabulary comes from :func:`vocab_counts_fast` and the counts from
+    :func:`cooccurrence_counts_fast` (numpy partial matrices); both are
+    parity-pinned bit-identical to the spec ops :func:`vocab_frame` and
+    :func:`cooccurrence_frame`, which stay as the ``cooccur`` oracle."""
+    vocab_counts = {
+        r["token"]: int(r["n"])
+        for r in vocab_counts_fast(docs, text_col, min_count, max_vocab).collect()
+    }
+    cooc = cooccurrence_counts_fast(docs, sorted(vocab_counts), text_col, window)
     rows = [(r["w"], r["c"], int(r["n"])) for r in cooc.collect()]
     return rows, vocab_counts
 
@@ -356,7 +339,7 @@ def token_cooccurrence(
 def ppmi_vectors(
     rows: Iterable[tuple],
     vocab_counts: Dict[str, int],
-    dim: int = 64,
+    dim: int = EMBED_DIM,
 ) -> Dict[str, np.ndarray]:
     """(w, c, n) half-matrix + marginals -> token -> L2-normalized vector.
 
@@ -405,27 +388,18 @@ def ppmi_vectors(
     return out
 
 
-def train_corpus_embedder(
-    docs: DataFrame,
-    text_col: str = "text",
-    dim: int = 64,
-    window: int = 4,
-    min_count: int = 2,
-    max_vocab: int = 2_000,
-):
-    """Train on a corpus, return the embedder hook for
-    :func:`linking.refine_pairs_semantic`:
+def train_corpus_embedder(docs: DataFrame):
+    """Train on the ``text`` column of a corpus, return the embedder hook
+    for :func:`linking.refine_pairs_semantic`:
     ``df(pre_key, norm_identity) -> df(pre_key, embedding array<double>)``.
 
     The whole model is the token-vector table (< vocab x dim x 8 bytes);
     it broadcasts into one Arrow stage that mean-pools a node identity's
     token vectors (stopwords and out-of-vocabulary tokens skipped) and
     L2-normalizes, so downstream SRP-LSH cosine works unchanged."""
-    rows, vocab_counts = token_cooccurrence(
-        docs, text_col, window=window, min_count=min_count, max_vocab=max_vocab
-    )
-    vectors = ppmi_vectors(rows, vocab_counts, dim=dim)
-    return dict_embedder(vectors, dim=dim)
+    rows, vocab_counts = token_cooccurrence(docs)
+    vectors = ppmi_vectors(rows, vocab_counts, dim=EMBED_DIM)
+    return dict_embedder(vectors, dim=EMBED_DIM)
 
 
 def dict_embedder(
@@ -437,7 +411,7 @@ def dict_embedder(
     vendored external model's rows) -> the refine_pairs_semantic embedder
     hook.  Mean-pool + L2-normalize per identity string."""
     if dim is None:
-        dim = len(next(iter(vectors.values()))) if vectors else 64
+        dim = len(next(iter(vectors.values()))) if vectors else EMBED_DIM
     table = {t: np.asarray(v, dtype=np.float64) for t, v in vectors.items()}
     stop = set(stopwords)
 

@@ -31,7 +31,7 @@ be rebuilt with a range join against chunk offsets.
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterator, List, Optional, Tuple, Union
+from typing import Dict, Iterator, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame

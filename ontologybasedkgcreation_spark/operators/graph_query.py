@@ -30,7 +30,7 @@ non-goal); these are the deterministic primitives such a layer targets.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Dict, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

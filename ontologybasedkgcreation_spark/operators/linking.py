@@ -19,19 +19,24 @@ Spark-first design:
 2. *Identity text* per node: ``hasCaseID`` for CourtCase (the constrained
    key), the full canonical bag otherwise; normalized (lowercase, punctuation,
    abbreviation expansion — the reference's intended-but-stubbed tool,
-   tools.py:1-7 over /root/reference/Abbrevations).
+   tools.py:1-7, over the built-in table that ``ONTOKG_ABBREV_PATH`` widens).
 3. Candidate pairs via a token inverted index *within identical label sets*
    (the ``merge_by_id`` label-equality guard): two nodes pair when the smaller
    token set is fully contained in the larger — the deterministic analog of
    "BM25 top-1 score > 1 ⇒ adopt" (utils.py:363-365) and of the kNN-0.6 gate.
-   Nodes whose only property is free ``text`` never fuzzy-link (the human gate
-   would reject merging prose nodes).
-4. Skew/scale controls: tokens with document frequency above ``MAX_TOKEN_DF``
-   are dropped from the index (head tokens like "state" would otherwise build
-   quadratic candidate blocks — this is the salting discipline for the
-   head-entity hot keys), and pair generation is bounded per token.
-5. Connected components over accepted pairs — iterative min-key propagation on
-   DataFrames (alternating rounds with localCheckpoint), no GraphFrames
+   A char-3gram refine pass over the same index accepts typo aliases at
+   hashing-TF cosine >= ``REFINE_THRESHOLD``.  Nodes whose only property is
+   free ``text`` never fuzzy-link (the human gate would reject merging prose
+   nodes).
+4. Skew/scale controls: tokens and grams with document frequency above
+   ``MAX_TOKEN_DF`` are dropped from the index (head tokens like "state"
+   would otherwise build quadratic candidate blocks — this is the salting
+   discipline for the head-entity hot keys), and each node probes the index
+   with its rarest token and its ``REFINE_PROBES`` rarest grams of df <=
+   ``PROBE_DF_CAP``, so candidate volume is bounded per node.
+5. Connected components over accepted pairs — min-key propagation on
+   DataFrames co-partitioned by key, one local checkpoint per round with
+   pointer doubling after each round that changed a label, no GraphFrames
    dependency.  Component count per block is tiny; convergence is O(log n).
 6. Consolidation: per component per property, keep the longest non-empty value
    (deterministic stand-in for "adopt the stored value", which in a batch
@@ -69,38 +74,40 @@ REFINE_PROBES = 3
 PROBE_DF_CAP = 64
 REFINE_DIM = 256
 # Semantic refine: the reference's 0.6 gate, over an embedder trained on a
-# hash-sample of at most SEMANTIC_MAX_DOCS corpus documents.
+# hash-sample of at most SEMANTIC_MAX_DOCS corpus documents; candidates
+# come from an SRP-LSH band join of SEMANTIC_LSH_BITS signature bits in
+# bands of SEMANTIC_BAND_BITS (16 x 4, not the 8 x 8 of the high-threshold
+# near-dup query: a true pair at cosine ~0.7-0.8 survives 4-bit bands with
+# p > 0.997 but 8-bit bands only ~0.5-0.75).
 SEMANTIC_THRESHOLD = 0.6
 SEMANTIC_MAX_DOCS = 20_000
+SEMANTIC_LSH_BITS = 64
+SEMANTIC_BAND_BITS = 4
+# BM25 adopt (the reference's rule, utils.py:352-365): Okapi k1 and b, and
+# adopt the top-1 hit when its score exceeds BM25_ADOPT_THRESHOLD.
+BM25_K1 = 1.5
+BM25_B = 0.75
+BM25_ADOPT_THRESHOLD = 1.0
 
-# The reference ships a 616-row legal-abbreviation file
-# (/root/reference/Abbrevations; surfaced through the stub tool at
-# kg_creator/src/tools.py:1-7).  When the file is present it becomes the
-# DEFAULT linking dictionary; the 5-entry built-in remains the hermetic
-# fallback (and the unit-test dictionary).
-DEFAULT_ABBREV_PATH = "/root/reference/Abbrevations"
-
-_DEFAULT_ABBREV: Dict[str, Dict[str, str]] = {}
-
-
-def _abbrev_path() -> str:
-    # resolved at CALL time (not import time) so tests / deployments can
-    # repoint ONTOKG_ABBREV_PATH after the module is imported
-    return os.environ.get("ONTOKG_ABBREV_PATH", DEFAULT_ABBREV_PATH)
+# The linking dictionary is the built-in table (fixtures.ABBREVIATIONS) on
+# every host; ONTOKG_ABBREV_PATH names a file (the reference's 616-row
+# legal-abbreviation list, say) that widens it.
+_DEFAULT_ABBREV: Dict[Optional[str], Dict[str, str]] = {}
 
 
 def default_abbreviations() -> Dict[str, str]:
-    """Built-in dictionary widened by the reference's abbreviation file when
-    it exists (cached per resolved path — executors load it once from local
-    disk).  Logs which dictionary was loaded, since node merging differs
-    between hosts with and without the file."""
-    path = _abbrev_path()
+    """The built-in dictionary, widened by the file ``ONTOKG_ABBREV_PATH``
+    names when it exists.  The path is read at call time, so a deployment
+    can set it after import; each path's table is cached (executors load
+    the file once from local disk).  Logs which dictionary was loaded,
+    since node merging differs between dictionaries."""
+    path = os.environ.get("ONTOKG_ABBREV_PATH")
     if path not in _DEFAULT_ABBREV:
         import logging
 
         table = dict(ABBREVIATIONS)
         source = f"built-in ({len(table)} entries)"
-        if os.path.exists(path):
+        if path and os.path.exists(path):
             try:
                 loaded = load_abbreviations(path)
                 table.update(loaded)
@@ -135,8 +142,8 @@ def normalize_identity(
 ) -> pd.Series:
     """Vectorized: lowercase, expand abbreviations, strip commas, collapse
     whitespace.  One alternation regex covers the whole dictionary in a
-    single pass, so the 508-entry default costs the same as the 5-entry
-    test dictionary."""
+    single pass, so a 508-entry file-widened table costs the same as the
+    5-entry built-in."""
     lower = _lower_table(table if table is not None else default_abbreviations())
     out = s.fillna("").str.lower().str.replace(",", " ", regex=False)
     if lower:
@@ -420,11 +427,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
 
 
 def bm25_adopt_pairs(
-    tok: DataFrame,
-    k1: float = 1.5,
-    b: float = 0.75,
-    threshold: float = 1.0,
-    quantize: Optional[int] = None,
+    tok: DataFrame, quantize: Optional[int] = None
 ) -> DataFrame:
     """R5 parity: the reference's BM25 linking stage as a DataFrame plan.
 
@@ -442,12 +445,14 @@ def bm25_adopt_pairs(
     df), the ``token`` rows of :func:`term_index` — candidates come from
     the rarest-token probe (:func:`probe_order`), so the plan is
     O(#nodes), never corpus×query.
-    Score over shared tokens (set semantics ⇒ tf=1):
+    Score over shared tokens (set semantics ⇒ tf=1), with k1 =
+    :data:`BM25_K1` and b = :data:`BM25_B`:
 
         Σ idf(t) · (k1+1) / (1 + k1·(1-b+b·|d|/avgdl)),
         idf(t) = ln(1 + (N-df+0.5)/(df+0.5))
 
-    Returns the top-1 adopt pair per query node with score > ``threshold``:
+    Returns the top-1 adopt pair per query node with score >
+    :data:`BM25_ADOPT_THRESHOLD`:
     (a, b) ordered keys, symmetric-closed for CC consumption.  The adopt
     score is direction-dependent, so a pair reachable from both sides keeps
     its MAX score (deterministic).  ``quantize``: round scores to this many
@@ -497,10 +502,11 @@ def bm25_adopt_pairs(
         .withColumn(
             "term",
             F.col("idf")
-            * (k1 + 1.0)
+            * (BM25_K1 + 1.0)
             / (
                 1.0
-                + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
+                + BM25_K1
+                * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ),
         )
         .groupBy("labels_str", "q", "d")
@@ -517,7 +523,7 @@ def bm25_adopt_pairs(
         .select("q", F.col("m.d").alias("d"), (-F.col("m.ns")).alias("score"))
     )
     return (
-        top1.filter(F.col("score") > threshold)
+        top1.filter(F.col("score") > BM25_ADOPT_THRESHOLD)
         .select(
             F.least("q", "d").alias("a"),
             F.greatest("q", "d").alias("b"),
@@ -601,15 +607,14 @@ def refine_pairs_semantic(
     linkable: DataFrame,
     embedder,
     threshold: float = 0.75,
-    bits: int = 64,
-    band_bits: int = 4,
     exclude_person_props: bool = False,
     attest: Optional[DataFrame] = None,
 ) -> DataFrame:
     """The reference-SHAPED refine pass with a pluggable embedding model
     (``refine_nodes.py:27-96``: real-model ANN kNN + gate): embed each
     node's normalized identity, generate candidates with the SRP-LSH band
-    join (the engine's ANN primitive — blocked by label set, exactly the
+    join (the engine's ANN primitive, :data:`SEMANTIC_LSH_BITS` bits in
+    bands of :data:`SEMANTIC_BAND_BITS` — blocked by label set, exactly the
     reference's labels-equal merge guard, utils.py:681-688), accept at
     exact cosine >= ``threshold``, behind the same gate stand-ins as
     the lexical refine of :func:`lexical_pairs` (:func:`fuzzy_nodes`,
@@ -623,11 +628,6 @@ def refine_pairs_semantic(
     lexical instance (used by the parity test).  This is the operator that
     closes the semantic-alias gap ("Apex Court" == "Supreme Court of
     India") — exercised end-to-end by test_embedding.
-
-    Default bands are 16 x 4 bits (not the 8 x 8 of the high-threshold
-    near-dup query): at the reference's 0.6 similarity gate a true pair at
-    cosine ~0.7-0.8 survives 4-bit bands with p > 0.997 but 8-bit bands
-    only ~0.5-0.75 — candidate recall, the exact verify is unchanged.
 
     The linker's semantic refine (:func:`link_nodes`) adds two deterministic
     stand-ins for the reference's LLM + human merge gate, justified by
@@ -655,8 +655,8 @@ def refine_pairs_semantic(
         id_col="pre_key",
         vec_col=emb.columns[-1],
         block_col="labels_str",
-        bits=bits,
-        band_bits=band_bits,
+        bits=SEMANTIC_LSH_BITS,
+        band_bits=SEMANTIC_BAND_BITS,
     )
     accepted = numeral_guard(pairs, base).select("a", "b")
     if attest is not None:
@@ -728,7 +728,7 @@ def tokenized_node_frame(
     return (
         with_identity
         # identity normalization: JVM regexp chain for small dictionaries,
-        # single-pass Arrow UDF for the 508-entry default (see
+        # single-pass Arrow UDF for a large file-widened one (see
         # normalize_identity_col)
         .withColumn("norm_identity", normalize_identity_col("identity", abbrevs))
         .withColumn(

@@ -247,24 +247,6 @@ def part_of_edges(edges: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-def format_triples(triples: list) -> str:
-    """M5 parity: numbered human-readable triple blocks (mirrors
-    ``format_triples``, kg_creator/src/utils.py:602-620) — debug/REPL only;
-    the engine's real export is the ``triple_set`` DataFrame."""
-    parts = []
-    for i, t in enumerate(triples, start=1):
-        def props_to_str(props):
-            return "\n".join(f"  - {k}: {v}" for k, v in props.items() if v)
-
-        parts.append(
-            f"Triple {i}:\n"
-            f"{t['subj_label']}:\n{props_to_str(t['subj_props'])}\n\n"
-            f"Relationship: {t['pred']}\n\n"
-            f"{t['obj_label']}:\n{props_to_str(t['obj_props'])}\n---"
-        )
-    return "\n\n".join(parts)
-
-
 # ---------------------------------------------------------------------------
 # writer (Iceberg when available, Parquet fallback behind one interface)
 # ---------------------------------------------------------------------------

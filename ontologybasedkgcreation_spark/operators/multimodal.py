@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Images/audio/video ride through the engine as ``binary`` columns with a
-metadata struct; decode / feature-extraction / resize / frame-sampling are
+metadata struct; decode / feature-extraction / frame-sampling are
 ``mapInPandas`` stages whose Spark-side contract (schema, batch shape,
 partitioning) is real and tested here.
 
@@ -13,7 +13,7 @@ uncompressed 24-bit BMP layout, ``decode_wav`` uses the stdlib ``wave``
 reader, and ``jpeg.decode_jpeg`` implements ITU-T T.81 baseline
 sequential DCT (Huffman + dequant + IDCT, 4:4:4/4:2:2/4:2:0, restart
 markers) — so ``decoder='real'`` performs ACTUAL media decode
-end-to-end, plus ``resize_nearest`` for real downsampling.  Round 5 adds
+end-to-end.  Round 5 adds
 REAL video for the one codec-free container: MJPEG-in-AVI (``avi.py`` —
 RIFF chunk walking + per-frame T.81 JPEG), with
 ``frame_sample_features`` decoding ONLY the sampled frames.
@@ -241,15 +241,6 @@ def encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
         wf.setframerate(rate)
         wf.writeframes(s.tobytes())
     return buf.getvalue()
-
-
-def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (H, W, C) array — the real resize
-    stage (pure numpy index maps, no codec needed)."""
-    h, w = img.shape[:2]
-    ys = np.minimum((np.arange(out_h) * h) // out_h, h - 1)
-    xs = np.minimum((np.arange(out_w) * w) // out_w, w - 1)
-    return img[ys[:, None], xs[None, :]]
 
 
 def _image_features(img: np.ndarray) -> np.ndarray:

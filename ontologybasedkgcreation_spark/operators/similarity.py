@@ -132,52 +132,6 @@ def assign_clusters(
     return df.withColumn(label_col, (-best.getField("neg_id")).cast("int"))
 
 
-def kmeans_fit(
-    df: DataFrame,
-    k: int,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> List[List[float]]:
-    """Lloyd's k-means over an embedding column, Spark-distributed.
-
-    - init: the k lowest-id vectors (deterministic, no RNG);
-    - assign: :func:`assign_clusters` (narrow map);
-    - update: mean per (cluster, dimension) via ``posexplode`` + one
-      groupBy — the only driver traffic per iteration is k*d floats.
-    Empty clusters keep their previous centroid.  Returns the centroid
-    list (feed to :func:`assign_clusters` to label a table).
-
-    CALLERS SHOULD ``df.cache()`` (or localCheckpoint) THE INPUT: every
-    iteration runs a full assignment pass over ``df``, so an uncached
-    upstream plan is recomputed ``iters`` times."""
-    seeds = (
-        df.orderBy(id_col)
-        .limit(k)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
-        .collect()
-    )
-    centroids = [list(r["v"]) for r in seeds]
-    for _ in range(iters):
-        labeled = assign_clusters(df, centroids, id_col, vec_col, "_c")
-        means = (
-            labeled.select("_c", F.posexplode(F.col(vec_col).cast("array<double>")))
-            .groupBy("_c", "pos")
-            .agg(F.avg("col").alias("m"))
-            .collect()
-        )
-        new = [list(c) for c in centroids]
-        by_c: dict = {}
-        for r in means:
-            by_c.setdefault(r["_c"], {})[r["pos"]] = r["m"]
-        for c, dims in by_c.items():
-            new[c] = [dims[i] for i in range(len(dims))]
-        if new == centroids:
-            break
-        centroids = new
-    return centroids
-
-
 def _hashing_tf(texts: pd.Series, dim: int):
     """float32 (len(texts), dim): the L2-normalized hashing-TF rows over
     word + char-3gram tokens of ``texts``.  A row depends on its own text

@@ -1,8 +1,8 @@
-"""Text-analysis operators: language-ID, token stats, PII redaction,
+"""Text-analysis operators: token stats, PII redaction,
 boilerplate and repetition signals, URL and sampling plans.  All pure
 ``pyspark.sql.functions`` — whole-stage codegen, zero Python.  These run
-ahead of KG extraction in a web-scale ingest (the language gate of
-FIXTURES.md §1 uses lang_id when the source table lacks a lang column)."""
+ahead of KG extraction in a web-scale ingest (the ``lang_id`` driver
+query scores documents against ``EN_STOPWORDS``)."""
 
 from __future__ import annotations
 
@@ -20,27 +20,6 @@ EN_STOPWORDS = [
 def _tokens(text_col: str):
     return F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-
-
-def lang_id(
-    df: DataFrame, id_col: str, text_col: str, en_threshold: float = 0.05
-) -> DataFrame:
-    """n-gram/stopword heuristic language ID: fraction of tokens that are
-    English stopwords.  >= threshold -> 'en', else 'unk' (a real deployment
-    plugs a fastText-style model into the same column contract)."""
-    toks = _tokens(text_col)
-    sw = F.array(*[F.lit(s) for s in EN_STOPWORDS])
-    hits = F.size(
-        F.filter(toks, lambda t: F.array_contains(sw, t))
-    )
-    ratio = hits / F.greatest(F.size(toks), F.lit(1))
-    return df.select(
-        F.col(id_col),
-        F.round(ratio, 6).alias("stopword_ratio"),
-        F.when(ratio >= en_threshold, F.lit("en"))
-        .otherwise(F.lit("unk"))
-        .alias("lang_pred"),
     )
 
 

@@ -7,10 +7,12 @@ canonicalization -> node/edge tables (+ Paragraph subgraph, lineage).
 
 The reference runs this as a sequential per-chunk LLM loop with per-triple
 Neo4j transactions (kg_creator/src/tasks.py:21-44 DAG; ~6 round-trips/triple);
-here the only wide operations are: one shuffle for chunk windowing (by url),
-one for the linking token index, one per connected-components round, and the
-final consolidation groupBys — all keyed on url/node hashes, salted/df-capped
-for head entities.
+here the wide operations are the chunk windowing (by url) and, in linking,
+the mention dedup, the term index's df aggregate, the per-node term table
+and the candidate join, connected components (the edge table once, then one
+aggregate per round), the consolidation's aggregates on component and on
+node_key, and the edge rewire through the mapping — all keyed on url or
+node hashes, df-capped for head entities.
 
 Two stages, each defined once and shared by every execution mode:
 :func:`assigned_triples` (per page, narrow — batch, checkpointed buckets and

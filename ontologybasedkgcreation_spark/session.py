@@ -3,7 +3,8 @@
 Single place for the physics knobs so tests, bench.py and spark-submit jobs
 agree: AQE on (runtime re-plan + skew-join splitting for the head-entity
 hot keys), Arrow for pandas UDFs (all extraction stages are Arrow-batched),
-shuffle partitions sized for local[k] (32) but overridable for clusters.
+32 shuffle partitions by default (AQE coalesces small ones at runtime),
+overridable per job.  Under spark-submit the launcher's master is kept.
 """
 
 from __future__ import annotations
@@ -51,13 +52,33 @@ def local_threads(master: str) -> int:
     return (os.cpu_count() or 1) if n == "*" else int(n)
 
 
+def launcher_master() -> str | None:
+    """The master a launcher (spark-submit, the pyspark shell) started this
+    process's JVM with — its ``--master``, else its own default
+    ``local[*]`` — or None when this process starts its own JVM."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master", None)
+
+
 def get_spark(
     app_name: str = "ontokg-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    """The session with this module's conf.  Master: ``master``, else the
+    launcher's (:func:`launcher_master`), else ``SPARK_GRAFT_MASTER``,
+    else ``local[$SPARK_GRAFT_CPUS]`` (every core when unset)."""
+    master = (
+        master
+        or launcher_master()
+        or os.environ.get("SPARK_GRAFT_MASTER")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    )
     # A pandas-UDF task really occupies two CPUs: the JVM thread serializing
     # Arrow batches plus the Python worker process.  With local[>=16] and one
     # task per core, runnable threads reach 2x cores and Python stages

@@ -15,14 +15,16 @@ stress test AND a correctness check at scale:
     sum(per-vertex) = 3 * triangles
 
 Usage: python scripts/graph_skew_bench.py [n] [hub_deg]
+Threads: local[$SPARK_GRAFT_CPUS], default every core of the host.
 Run ALONE on the box (benchmark discipline, BENCH/BASELINE.md).
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -35,8 +37,9 @@ from ontologybasedkgcreation_spark.session import get_spark
 def main() -> int:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     hub_deg = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
     spark = get_spark(
-        "graph-skew-bench", master="local[16]", shuffle_partitions=32
+        "graph-skew-bench", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
     )
     spark.sparkContext.setLogLevel("ERROR")
     ids = spark.range(n)

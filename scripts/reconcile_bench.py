@@ -9,6 +9,7 @@ side: per-batch merge wall, the reconcile wall, and the single-shot
 control on the same corpus — the numbers cadence guidance comes from.
 
 Usage: python scripts/reconcile_bench.py [n_pages] [n_batches]
+Threads: local[$SPARK_GRAFT_CPUS], default every core of the host.
 Appends one JSON line to BENCH/reconcile_runs.md (and prints it).
 """
 
@@ -35,7 +36,7 @@ def main() -> int:
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
 
     spark = get_spark(
         "reconcile-bench", master=f"local[{cpus}]", shuffle_partitions=cpus

@@ -19,6 +19,7 @@ control (--uncapped) at smaller n shows the quadratic blow-up the cap
 prevents.
 
 Usage: python scripts/skew_bench.py [n_nodes] [--uncapped]
+Threads: local[$SPARK_GRAFT_CPUS], default every core of the host.
 Appends one JSON line per run to BENCH/skew_runs.md (and prints it).
 """
 
@@ -89,7 +90,7 @@ def main() -> int:
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 200_000
     uncapped = "--uncapped" in sys.argv
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
     if uncapped:
         linking.MAX_TOKEN_DF = 10**9
     max_token_df = linking.MAX_TOKEN_DF

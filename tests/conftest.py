@@ -1,4 +1,13 @@
+import os
+
 import pytest
+
+# The reference repository, checked out next to this one.  The tests that
+# read its abbreviation list or its full ontology skip without it.
+REFERENCE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+)
 
 
 def assigned_frame(spark, rows, start=0):

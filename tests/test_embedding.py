@@ -118,7 +118,9 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
       JVM on both legs.
     """
     from ontologybasedkgcreation_spark.operators.embedding import (
+        cooccurrence_frame,
         token_cooccurrence,
+        vocab_frame,
     )
 
     rows = []
@@ -139,11 +141,18 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
         (i + 4, "ÉCOLE court École apex ΟΔΟΣ court οδος İNDIA apex İndia"),
     ]
     docs = spark.createDataFrame(rows, "id long, text string")
-    slow_rows, slow_vocab = token_cooccurrence(
-        docs, "text", window=3, min_count=2, max_vocab=100, fast=False
-    )
+    slow_vocab = {
+        r["token"]: int(r["n"])
+        for r in vocab_frame(docs, "text", min_count=2, max_vocab=100).collect()
+    }
+    slow_rows = [
+        (r["w"], r["c"], int(r["n"]))
+        for r in cooccurrence_frame(
+            docs, "text", window=3, min_count=2, max_vocab=100
+        ).collect()
+    ]
     fast_rows, fast_vocab = token_cooccurrence(
-        docs, "text", window=3, min_count=2, max_vocab=100, fast=True
+        docs, "text", window=3, min_count=2, max_vocab=100
     )
     assert fast_vocab == slow_vocab
     assert sorted(fast_rows) == sorted(slow_rows)

@@ -37,12 +37,6 @@ ALLOWED = {
     "triple_precision_recall": "the fixture P/R gate's comparator",
     "extract_features": "media feature extraction entry point",
     "frame_sample_features": "video frame-sampling entry point",
-    "resize_nearest": "media resize stage of the feature API",
-    "kmeans_fit": "trains the IVF centroids that assign_clusters and "
-    "ivf_topk consume",
-    "lang_id": "language-ID operator (ratio form; the lang_id driver "
-    "query counts hits)",
-    "format_triples": "reference-parity debug printer (utils.py:602-620)",
     "hashing_feature_vectors": "the deterministic lexical embedder a "
     "refine_pairs_semantic caller plugs in (the linker's own refine "
     "computes the same vectors per pair, similarity.hashing_cosine)",

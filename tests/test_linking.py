@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ontologybasedkgcreation_spark.operators import linking
 
-from conftest import assigned_frame
+from conftest import REFERENCE_DIR, assigned_frame
 
 
 def _court_nodes(graph):
@@ -58,14 +58,17 @@ def _court_nodes(graph):
 
 
 @pytest.mark.skipif(
-    not os.path.exists(linking._abbrev_path()),
+    not os.path.exists(os.path.join(REFERENCE_DIR, "Abbrevations")),
     reason="needs the reference repository's abbreviation file ('DHC' -> "
     "'Delhi High Court'); the built-in table has no such entry and the file "
     "is not in this checkout",
 )
-def test_abbrevations_file_alias_links(spark):
+def test_abbrevations_file_alias_links(spark, monkeypatch):
     """S5: an alias only present in the reference's abbreviation file ('DHC' ->
-    'Delhi High Court') merges when the default dictionary is loaded."""
+    'Delhi High Court') merges when ONTOKG_ABBREV_PATH names that file."""
+    monkeypatch.setenv(
+        "ONTOKG_ABBREV_PATH", os.path.join(REFERENCE_DIR, "Abbrevations")
+    )
     case = {"hasCaseID": "Criminal Appeal No. 1 Of 2015", "hasCaseName": "A Versus B"}
     rows = [
         ("u1", "CourtCase", case, "hasRulingOf", "Court", {"courtName": "DHC"}),

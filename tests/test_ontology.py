@@ -6,11 +6,12 @@ import os
 import pytest
 
 from ontologybasedkgcreation_spark.ontology import load_ontology
-from ontologybasedkgcreation_spark.operators.linking import DEFAULT_ABBREV_PATH
 
-# the reference repository's full NyOn file (next to its abbreviation
-# table); the packaged default ontology is a subset of it
-FULL_OWL = os.path.join(os.path.dirname(DEFAULT_ABBREV_PATH), "legalOntology.owl")
+from conftest import REFERENCE_DIR
+
+# the reference repository's full NyOn file; the packaged default ontology
+# is a subset of it
+FULL_OWL = os.path.join(REFERENCE_DIR, "legalOntology.owl")
 
 
 @pytest.mark.skipif(

@@ -1,8 +1,11 @@
-"""Parity operators: the S5 abbreviation-file parser, M5 format_triples,
-and the extraction grammar's dispatch parity."""
+"""Parity operators: the S5 abbreviation-file parser and the extraction
+grammar's dispatch parity."""
+
+import os
 
 from ontologybasedkgcreation_spark.operators.linking import load_abbreviations
-from ontologybasedkgcreation_spark.operators.materialize import format_triples
+
+from conftest import REFERENCE_DIR
 
 
 def test_load_abbreviations(tmp_path):
@@ -39,24 +42,27 @@ def test_reference_file_parse_count():
     """505 of the reference file's 616 non-empty rows parse (the remainder
     are duplicate keys within the file plus one prose glossary row), and the
     previously-dropped space-separated aliases are now present."""
-    import os
-
-    if not os.path.exists("/root/reference/Abbrevations"):
+    path = os.path.join(REFERENCE_DIR, "Abbrevations")
+    if not os.path.exists(path):
         import pytest
 
         pytest.skip("reference file absent")
-    t = load_abbreviations("/root/reference/Abbrevations")
+    t = load_abbreviations(path)
     assert len(t) == 505
     assert t["LS"] == "Lok Sabha" and t["MCI"] == "Medical Council of India"
 
 
 def test_abbrev_path_resolved_at_call_time(tmp_path, monkeypatch):
     """ONTOKG_ABBREV_PATH repointed after import must take effect (and the
-    per-path cache must not leak between paths)."""
+    per-path cache must not leak between paths).  Unset, the dictionary is
+    exactly the built-in table, whatever files the host holds."""
+    from ontologybasedkgcreation_spark import fixtures
     from ontologybasedkgcreation_spark.operators.linking import (
         default_abbreviations,
     )
 
+    monkeypatch.delenv("ONTOKG_ABBREV_PATH", raising=False)
+    assert default_abbreviations() == fixtures.ABBREVIATIONS
     p = tmp_path / "tiny.txt"
     p.write_text("XYZQ - Xylophone Quartet\n")
     monkeypatch.setenv("ONTOKG_ABBREV_PATH", str(p))
@@ -64,21 +70,7 @@ def test_abbrev_path_resolved_at_call_time(tmp_path, monkeypatch):
     assert t["XYZQ"] == "Xylophone Quartet"
     monkeypatch.delenv("ONTOKG_ABBREV_PATH")
     assert "XYZQ" not in default_abbreviations()
-
-
-def test_format_triples():
-    s = format_triples(
-        [
-            {
-                "subj_label": "CourtCase",
-                "subj_props": {"hasCaseID": "X", "empty": ""},
-                "pred": "hasJudge",
-                "obj_label": "Judge",
-                "obj_props": {"COLastName": "Roy"},
-            }
-        ]
-    )
-    assert "Triple 1:" in s and "hasCaseID: X" in s and "empty" not in s
+    assert default_abbreviations() == fixtures.ABBREVIATIONS
 
 
 def test_writ_and_slp_header_shapes():

@@ -34,3 +34,48 @@ def test_local_threads_reads_max_failures_forms():
     assert local_threads("local") == 0
     assert local_threads("local-cluster[2,1,1024]") == 0
     assert local_threads("spark://host:7077") == 0
+
+
+def test_spark_submit_job_keeps_master_and_session_conf(tmp_path):
+    """main_kg.py under spark-submit: the session keeps the launcher's
+    --master and still carries get_spark's conf (UTC session time zone,
+    512-row Arrow batches)."""
+    import json
+    import subprocess
+    import sys
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import json, sys\n"
+        "import main_kg\n"
+        "from pyspark.sql import SparkSession\n"
+        "main_kg.main(sys.argv[1:])\n"
+        "s = SparkSession.getActiveSession()\n"
+        "print('CONF ' + json.dumps([s.sparkContext.master,\n"
+        "    s.conf.get('spark.sql.session.timeZone'),\n"
+        "    s.conf.get('spark.sql.execution.arrow.maxRecordsPerBatch')]))\n"
+    )
+    env = dict(
+        os.environ,
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+        PYTHONPATH=os.pathsep.join(
+            p for p in (root, os.environ.get("PYTHONPATH")) if p
+        ),
+    )
+    run = subprocess.run(
+        [
+            os.path.join(_find_spark_home(), "bin", "spark-submit"),
+            "--master", "local[2]",
+            str(probe), "--n-pages", "2", "--out", str(tmp_path / "graph"),
+        ],
+        env=env, cwd=root, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    lines = run.stdout.splitlines()
+    summary = json.loads(lines[-2])
+    assert summary["pages"] == 2 and summary["nodes"] > 0
+    assert lines[-1] == "CONF " + json.dumps(["local[2]", "UTC", "512"])
