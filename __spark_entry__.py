@@ -1660,7 +1660,7 @@ def q_media_decode_video(spark, sf_dir):
 
     from ontologybasedkgcreation_spark.operators.avi import (
         avi_metadata,
-        decode_avi_mjpeg,
+        decode_avi,
         encode_avi_mjpeg,
     )
 
@@ -1678,7 +1678,7 @@ def q_media_decode_video(spark, sf_dir):
                 meta = avi_metadata(payload)
                 step = max(int(round(200 * meta["fps"] / 1000.0)), 1)
                 idx = list(range(0, meta["n_frames"], step))
-                dec = decode_avi_mjpeg(payload, indices=idx)["frames"]
+                dec = decode_avi(payload, indices=idx)["frames"]
                 sums.append(int(sum(int(fr.sum()) for fr in dec)))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "pixel_sum": sums})
 

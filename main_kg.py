@@ -1,6 +1,6 @@
 """spark-submit entrypoint for the KG-construction pipeline.
 
-    spark-submit --py-files job.zip main_kg.py \
+    spark-submit --driver-memory 6g --py-files job.zip main_kg.py \
         [--pages <parquet path>] [--n-pages N] [--out /path/to/graph]
 
 Without --pages, generates the deterministic synthetic judgment pages at
@@ -8,7 +8,10 @@ Without --pages, generates the deterministic synthetic judgment pages at
 Iceberg table.  Writes nodes/edges/paragraph tables + _lineage under --out
 and prints a one-line JSON summary: pages, nodes and edges (counted by the
 table writes), elapsed_sec and out.  The session is ``session.get_spark``'s,
-on the master spark-submit was given.
+on the master spark-submit was given.  spark-submit starts the driver JVM
+before the session exists, so the heap is its ``--driver-memory`` (1g when
+omitted); pass 40 % of the host's RAM, the heap ``get_spark`` fits and
+warns about when the JVM has less.
 """
 
 from __future__ import annotations

@@ -1,14 +1,13 @@
-"""Clean-room MJPEG-in-AVI container codec (public Microsoft RIFF/AVI
-spec) — closes the last decode_stub family with a REAL video decoder.
+"""Clean-room AVI container codec (public Microsoft RIFF/AVI spec) for the
+two codec-free video families: Motion-JPEG and uncompressed BI_RGB DIB.
 
-The reference treats media as opaque blobs (it has no video path at all);
-the engine's multimodal surface stubs formats that need external codecs.
-Motion-JPEG inside an AVI container needs none: AVI is a length-prefixed
-RIFF chunk tree parseable with ``struct``, and each ``00dc`` frame chunk
-is a complete baseline JPEG — which :mod:`.jpeg` already encodes and
-decodes from the T.81 spec.  Codec-compressed video (H.264/VP9/AV1)
-remains the honest ``decode_stub`` integration point: those entropy
-coders are not implementable here and a real deployment plugs pyav in.
+The engine's KG stages treat media as opaque ``binary`` payloads (the
+reference has no video path at all).  AVI is a length-prefixed RIFF chunk
+tree parseable with ``struct``; each ``00dc`` MJPEG frame chunk is a
+complete baseline JPEG, which :mod:`.jpeg` encodes and decodes from the
+T.81 spec, and each ``00db`` chunk is a raw bottom-up BGR bitmap.
+Codec-compressed video (H.264/VP9/AV1) is not implementable here: its
+entropy coders need a codec library, so :func:`decode_avi` rejects it.
 
 Layout written (and accepted) — the minimal standard-conform shape:
 
@@ -23,15 +22,9 @@ Layout written (and accepted) — the minimal standard-conform shape:
       'idx1' (16-byte entries, AVIIF_KEYFRAME)
 
 Scale shape: container parsing is header-walking over offsets — frame
-PAYLOAD extraction never decodes pixels, so the frame-sampling operator
-(:func:`multimodal.frame_sample_features`) decodes ONLY the sampled
-frames.  At 100 TB that is the difference between decoding every frame
-of every video and decoding one frame per sampling interval.
-
-Reference parity: the reference has no media pipeline (README scope —
-``kg_creator/src`` handles PDF text only); this module belongs to the
-engine's beyond-reference training-data surface next to PNG/BMP/WAV
-(`multimodal.py`) and JPEG (`jpeg.py`).
+PAYLOAD extraction never decodes pixels, so ``decode_avi(indices=...)``
+decodes ONLY the sampled frames (the ``media_decode_video`` driver query
+samples frames 0 and 2 of 3).
 """
 
 from __future__ import annotations
@@ -289,9 +282,9 @@ def decode_avi(payload: bytes, indices: Optional[List[int]] = None) -> dict:
     """AVI -> {'frames': [uint8 arrays], ...metadata} dispatched on the
     strf compression: 'MJPG' frames decode through the T.81 baseline
     decoder, BI_RGB (raw 24-bit DIB) frames through pure offset/byte
-    arithmetic.  Codec-compressed video (H.264/VP9/AV1 fourccs) raises —
-    that family is the documented ``decode_stub`` integration point.
-    ``indices`` decodes only those frames (sampling path)."""
+    arithmetic.  Any other codec (H.264/VP9/AV1 fourccs) raises
+    ``ValueError``.  ``indices`` decodes only those frames (sampling
+    path)."""
     meta = avi_metadata(payload)
     raw_payloads = avi_frame_payloads(payload, indices)
     if meta["compression"] == "MJPG":
@@ -308,20 +301,8 @@ def decode_avi(payload: bytes, indices: Optional[List[int]] = None) -> dict:
         ]
     else:
         raise ValueError(
-            f"unsupported AVI codec {meta['compression']!r} — "
-            "H.264/VP9/AV1-class entropy decoding is the decode_stub "
-            "integration point (see multimodal.decode_stub)"
+            f"unsupported AVI codec {meta['compression']!r}: only MJPG "
+            "and BI_RGB decode without a codec library"
         )
     return {"frames": frames, **meta}
 
-
-def decode_avi_mjpeg(
-    payload: bytes, indices: Optional[List[int]] = None
-) -> dict:
-    """MJPEG AVI -> {'frames': [uint8 (H, W[, C]) arrays], 'fps',
-    'n_frames', 'duration_ms', 'width', 'height'}.  ``indices`` decodes
-    only those frames (sampling path).  Kept as the MJPEG-pinned entry;
-    :func:`decode_avi` dispatches on the container's strf codec."""
-    meta = avi_metadata(payload)
-    frames = [decode_jpeg(p) for p in avi_frame_payloads(payload, indices)]
-    return {"frames": frames, **meta}

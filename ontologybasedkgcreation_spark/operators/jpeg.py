@@ -1,19 +1,18 @@
 """Baseline sequential JPEG codec, standard library + numpy only.
 
-Round-4 verdict item 7: the one image family still behind ``decode_stub``
-that IS implementable from the public spec without codec packages.  This
-module is a clean-room implementation of ITU-T T.81 baseline sequential
-DCT (SOF0): Huffman entropy coding with the Annex K.3 typical tables,
-Annex K.1/K.2 quantization tables, 8x8 forward/inverse DCT as an
-orthonormal matrix product, JFIF YCbCr<->RGB color transform, 4:4:4
-encoding, and decoding of 4:4:4 / 4:2:2 / 4:2:0 chroma subsampling plus
-restart markers.  Progressive (SOF2), arithmetic coding, and 12-bit
+Baseline JPEG is implementable from the public spec without codec
+packages.  This module is a clean-room implementation of ITU-T T.81
+baseline sequential DCT (SOF0): Huffman entropy coding with the Annex K.3
+typical tables, Annex K.1/K.2 quantization tables, 8x8 forward/inverse
+DCT as an orthonormal matrix product, JFIF YCbCr<->RGB color transform,
+4:4:4 encoding, and decoding of 4:4:4 / 4:2:2 / 4:2:0 chroma subsampling
+plus restart markers.  Progressive (SOF2), arithmetic coding, and 12-bit
 precision raise ``NotImplementedError`` — they are outside baseline.
 
-Like the PNG/BMP/WAV codecs in ``multimodal.py``, the encoder exists to
-generate deterministic test fixtures for the decoder (no codec package in
-this container can produce a JPEG); the decode path is what runs inside
-``extract_features(decoder='real')``.
+Like the PNG codec in ``multimodal.py``, the encoder exists to generate
+deterministic fixtures for the decoder (no installed codec package can
+produce a JPEG); the ``media_decode_jpeg`` driver query round-trips a JPEG
+per document, and ``avi.decode_avi`` decodes MJPEG frames with it.
 
 Scale note: decode runs per payload inside an Arrow batch stage — the
 entropy decode is an inherently sequential bitstream walk (the spec's data

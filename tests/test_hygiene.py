@@ -23,9 +23,6 @@ ALLOWED = {
     "pinned bit-exact against",
     "subclass_closure": "the Python closure spec subclass_closure_frame "
     "is pinned against",
-    # inputs for the decoder tests
-    "encode_bmp": "builds BMP inputs for the decoder tests",
-    "encode_wav": "builds WAV inputs for the decoder tests",
     # library entry points: the public API a user calls, with no caller in
     # this repository's own jobs
     "CheckpointedPipeline": "the resumable mode BASELINE's north rule "
@@ -35,11 +32,22 @@ ALLOWED = {
     "start_graph_maintenance": "streaming entry point (per-micro-batch "
     "graph merge)",
     "triple_precision_recall": "the fixture P/R gate's comparator",
-    "extract_features": "media feature extraction entry point",
-    "frame_sample_features": "video frame-sampling entry point",
     "hashing_feature_vectors": "the deterministic lexical embedder a "
     "refine_pairs_semantic caller plugs in (the linker's own refine "
     "computes the same vectors per pair, similarity.hashing_cosine)",
+}
+
+
+# environment variables the package reads that no file here sets: the
+# deployment settings an operator exports
+ENV_ALLOWED = {
+    "SPARK_GRAFT_MASTER": "a master address for a job spark-submit did "
+    "not start",
+    "SPARK_GRAFT_CPUS": "the local[N] thread count; the tier-1 verify "
+    "command sets it",
+    "ONTOKG_ABBREV_PATH": "deployment path of an abbreviation file that "
+    "widens the built-in table",
+    "ONTOKG_PSL_PATH": "deployment path of a full public suffix list",
 }
 
 
@@ -66,19 +74,24 @@ def _defined():
     return names
 
 
+def _callers():
+    return [
+        path
+        for path in _py_files(
+            f"{PKG}/**/*.py",
+            "__spark_entry__.py",
+            "main_kg.py",
+            "bench*.py",
+            "scripts/**/*.py",
+            "perfbench/**/*.py",
+        )
+        if not os.path.relpath(path, ROOT).startswith("perfbench/tests/")
+    ]
+
+
 def _referenced_outside_tests():
-    callers = _py_files(
-        f"{PKG}/**/*.py",
-        "__spark_entry__.py",
-        "main_kg.py",
-        "bench*.py",
-        "scripts/**/*.py",
-        "perfbench/**/*.py",
-    )
     seen = set()
-    for path in callers:
-        if os.path.relpath(path, ROOT).startswith("perfbench/tests/"):
-            continue
+    for path in _callers():
         for node in ast.walk(_parse(path)):
             if isinstance(node, ast.Name):
                 seen.add(node.id)
@@ -108,3 +121,60 @@ def test_allowlist_names_exist_and_are_needed():
     assert set(ALLOWED) <= set(_defined()), set(ALLOWED) - set(_defined())
     needless = set(ALLOWED) & _referenced_outside_tests()
     assert not needless, needless
+
+
+def _is_environ(node):
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "environ"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    )
+
+
+def _env_read_keys(tree):
+    """The string-literal key nodes of ``os.environ.get("NAME")`` and
+    ``os.environ["NAME"]`` reads."""
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "get"
+            and _is_environ(node.func.value)
+            and node.args
+        ):
+            key = node.args[0]
+        elif (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.ctx, ast.Load)
+            and _is_environ(node.value)
+        ):
+            key = node.slice
+        else:
+            continue
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            yield key
+
+
+def test_env_vars_have_a_setter():
+    """Every environment variable the package reads is named by a non-test
+    caller other than at a read (perfbench's pinned environment, say), or
+    is a deployment setting in ENV_ALLOWED.  A knob nothing sets is a
+    constant: make it one."""
+    read = set()
+    for path in _py_files(f"{PKG}/**/*.py"):
+        read |= {key.value for key in _env_read_keys(_parse(path))}
+    named = set()
+    for path in _callers():
+        tree = _parse(path)
+        at_read = {id(key) for key in _env_read_keys(tree)}
+        named |= {
+            node.value
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in at_read
+        }
+    unset = read - named - set(ENV_ALLOWED)
+    assert not unset, f"read by the package but set by nothing: {unset}"
+    assert set(ENV_ALLOWED) <= read, set(ENV_ALLOWED) - read

@@ -1,9 +1,9 @@
 """Baseline JPEG codec (operators/jpeg.py) — round-4 verdict item 7.
 
 Clean-room ITU-T T.81 baseline sequential DCT with the Annex K tables;
-the encoder is the deterministic fixture generator (no codec package in
-the container can produce a JPEG), the decoder is the product path wired
-into multimodal.extract_features(decoder='real').
+the encoder is the deterministic fixture generator (no installed codec
+package can produce a JPEG), the decoder is what the media_decode_jpeg
+driver query and avi.decode_avi's MJPEG frames run.
 """
 
 from __future__ import annotations
@@ -106,23 +106,3 @@ def test_progressive_and_garbage_rejected():
     with pytest.raises(ValueError):
         decode_jpeg(b"\x00\x01not a jpeg")
 
-
-def test_decode_real_routes_jpeg(spark):
-    """extract_features(decoder='real') decodes JPEG payloads end-to-end
-    through the Arrow stage: a half-black/half-white image lands its
-    luminance mass in the outer histogram bins."""
-    from ontologybasedkgcreation_spark.operators import multimodal
-
-    img = np.zeros((16, 16, 3), dtype=np.uint8)
-    img[:, 8:] = 255
-    payload = encode_jpeg(img, quality=95)
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload), ("image/jpeg", 16, 16, None))],
-        multimodal.MEDIA_SCHEMA_DDL,
-    )
-    row = multimodal.extract_features(df, decoder="real").collect()[0]
-    feats = np.array(row["features"])
-    assert row["n_bytes"] == len(payload)
-    assert abs(feats[0] - 0.5) < 0.01  # mean R ~127.5/255
-    hist = feats[8:16]
-    assert hist[0] + hist[7] > 0.99  # all luminance in the extreme bins

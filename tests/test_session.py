@@ -6,6 +6,7 @@ from ontologybasedkgcreation_spark.session import (
     MAX_DRIVER_MEM_GB,
     driver_memory_for,
     local_threads,
+    memory_bytes,
 )
 
 GIB_KB = 1 << 20
@@ -39,7 +40,10 @@ def test_local_threads_reads_max_failures_forms():
 def test_spark_submit_job_keeps_master_and_session_conf(tmp_path):
     """main_kg.py under spark-submit: the session keeps the launcher's
     --master and still carries get_spark's conf (UTC session time zone,
-    512-row Arrow batches)."""
+    512-row Arrow batches).  The launcher started the driver JVM, so
+    ``spark.driver.memory`` never claims more heap than the JVM has, and a
+    heap below the host-fitted one gets one warning naming
+    ``spark-submit --driver-memory``."""
     import json
     import subprocess
     import sys
@@ -57,6 +61,11 @@ def test_spark_submit_job_keeps_master_and_session_conf(tmp_path):
         "print('CONF ' + json.dumps([s.sparkContext.master,\n"
         "    s.conf.get('spark.sql.session.timeZone'),\n"
         "    s.conf.get('spark.sql.execution.arrow.maxRecordsPerBatch')]))\n"
+        "from ontologybasedkgcreation_spark.session import host_driver_memory\n"
+        "print('HEAP ' + json.dumps([s.sparkContext.getConf().get(\n"
+        "    'spark.driver.memory'),\n"
+        "    s.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory(),\n"
+        "    host_driver_memory()]))\n"
     )
     env = dict(
         os.environ,
@@ -76,6 +85,17 @@ def test_spark_submit_job_keeps_master_and_session_conf(tmp_path):
     )
     assert run.returncode == 0, run.stderr[-2000:]
     lines = run.stdout.splitlines()
-    summary = json.loads(lines[-2])
+    summary = json.loads(lines[-3])
     assert summary["pages"] == 2 and summary["nodes"] > 0
-    assert lines[-1] == "CONF " + json.dumps(["local[2]", "UTC", "512"])
+    assert lines[-2] == "CONF " + json.dumps(["local[2]", "UTC", "512"])
+    assert lines[-1].startswith("HEAP "), lines[-1]
+    conf, max_heap, fitted = json.loads(lines[-1][len("HEAP "):])
+    # Runtime.maxMemory may leave out a survivor space: 10 % slack
+    assert conf is None or 0.9 * memory_bytes(conf) <= max_heap, (
+        conf,
+        max_heap,
+    )
+    hint = f"spark-submit --driver-memory {fitted}"
+    expected = 1 if max_heap < 0.9 * memory_bytes(fitted) else 0
+    # spark-submit merges the Python driver's stderr into its stdout
+    assert run.stdout.count(hint) == expected, (max_heap, fitted)

@@ -1,4 +1,4 @@
-"""Dedup / similarity / text-analysis / multimodal operators on the driver's
+"""Dedup / similarity / text-analysis / media-codec operators on the driver's
 synthetic tables (TESTDATA.md)."""
 
 import pytest
@@ -157,32 +157,8 @@ def test_quality_and_token_stats_shapes(docs):
 
 
 # ---------------------------------------------------------------------------
-# multimodal plumbing
+# media codecs
 # ---------------------------------------------------------------------------
-
-
-def _media_df(spark):
-    rows = [
-        (1, "image", b"\x89PNG...fakebytes", ("image/png", 64, 64, None)),
-        (2, "audio", b"RIFF....fake", ("audio/wav", None, None, 4000)),
-        (3, "video", b"\x00\x00ftyp", ("video/mp4", 640, 480, 3500)),
-        (4, "image", b"", ("image/png", 0, 0, None)),
-    ]
-    return spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA_DDL)
-
-
-def test_fake_decoder_batch_shape(spark):
-    f = multimodal.extract_features(_media_df(spark), decoder="fake")
-    rows = f.collect()
-    assert all(len(r["features"]) == 16 for r in rows)
-    empty = [r for r in rows if r["media_id"] == 4][0]
-    assert sum(empty["features"]) == 0.0
-
-
-def test_stub_decoder_raises(spark):
-    f = multimodal.extract_features(_media_df(spark), decoder="stub")
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        f.collect()
 
 
 def test_png_decode_roundtrip_all_filters():
@@ -242,55 +218,6 @@ def test_png_decode_roundtrip_all_filters():
             + chunk(b"IEND", b"")
         )
         assert np.array_equal(multimodal.decode_png(payload), img), ftype
-
-
-def test_wav_decode_roundtrip():
-    import numpy as np
-
-    t = np.arange(800)
-    samples = (10_000 * np.sin(2 * np.pi * 440 * t / 8000)).astype("<i2")
-    wav = multimodal.decode_wav(multimodal.encode_wav(samples, rate=8000))
-    assert wav["rate"] == 8000 and wav["channels"] == 1
-    assert wav["duration_ms"] == 100
-    assert np.array_equal(wav["samples"][:, 0], samples)
-
-
-def test_real_decoder_end_to_end(spark):
-    """decoder='real' actually decodes PNG and WAV payloads in the Spark
-    stage: image features reflect pixel statistics (an all-white image
-    means 1.0), audio features reflect the waveform (nonzero RMS), and an
-    mp4 payload still raises at the integration point."""
-    import numpy as np
-
-    white = np.full((8, 8, 3), 255, dtype=np.uint8)
-    t = np.arange(1600)
-    tone = (12_000 * np.sin(2 * np.pi * 220 * t / 8000)).astype("<i2")
-    rows = [
-        (1, "image", bytearray(multimodal.encode_png(white)),
-         ("image/png", 8, 8, None)),
-        (2, "audio", bytearray(multimodal.encode_wav(tone, rate=8000)),
-         ("audio/wav", None, None, 200)),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA_DDL)
-    got = {
-        r["media_id"]: r["features"]
-        for r in multimodal.extract_features(df, decoder="real").collect()
-    }
-    img_f = got[1]
-    assert abs(img_f[0] - 1.0) < 1e-6  # mean channel = 1.0 (white)
-    assert abs(img_f[4]) < 1e-6        # std = 0
-    assert abs(img_f[15] - 1.0) < 1e-6  # all luminance in the top bin
-    wav_f = got[2]
-    assert wav_f[0] > 0.2              # real RMS of the tone
-    assert 0.0 < wav_f[1] < 0.2        # zero-crossing rate ~ 2*220/8000
-    assert abs(wav_f[2] - 0.2) < 1e-6  # duration 200 ms
-
-    mp4 = spark.createDataFrame(
-        [(3, "video", b"\x00\x00ftypisom", ("video/mp4", 64, 48, 1000))],
-        multimodal.MEDIA_SCHEMA_DDL,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        multimodal.extract_features(mp4, decoder="real").collect()
 
 
 def test_kmeans_fit_and_assign(spark):
@@ -381,23 +308,6 @@ def test_srp_signature_arrow_matches_jvm_spec(spark):
     }
 
 
-def test_bmp_decode_roundtrip():
-    """24-bit BMP decode is pixel-exact, including the 4-byte row padding
-    (width 3 -> stride 12) and the BGR/bottom-up conventions."""
-    import numpy as np
-
-    for w, h in ((3, 2), (4, 4), (5, 3)):
-        rng = np.random.RandomState(w * 10 + h)
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        assert np.array_equal(
-            multimodal.decode_bmp(multimodal.encode_bmp(img)), img
-        )
-    # decode_real routes BMP payloads through the image feature path
-    white = np.full((6, 5, 3), 255, dtype=np.uint8)
-    f = multimodal.decode_real(multimodal.encode_bmp(white), "image")
-    assert abs(f[0] - 1.0) < 1e-6 and abs(f[15] - 1.0) < 1e-6
-
-
 def test_avi_mjpeg_roundtrip_and_metadata():
     """Round-5: REAL video — MJPEG-in-AVI container (avi.py, public RIFF
     spec) over the T.81 JPEG codec.  Flat gray frames at q95 are pixel-
@@ -414,16 +324,16 @@ def test_avi_mjpeg_roundtrip_and_metadata():
     assert (meta["width"], meta["height"]) == (16, 16)
     assert meta["n_frames"] == 3 and meta["fps"] == 10.0
     assert meta["duration_ms"] == 300 and meta["handler"] == "MJPG"
-    dec = avi.decode_avi_mjpeg(payload)
+    dec = avi.decode_avi(payload)
     assert len(dec["frames"]) == 3
     for got, want in zip(dec["frames"], frames):
         assert np.array_equal(got.squeeze(), want)
     # sampling path: only the requested frames are decoded
-    sub = avi.decode_avi_mjpeg(payload, indices=[0, 2])["frames"]
+    sub = avi.decode_avi(payload, indices=[0, 2])["frames"]
     assert [int(f.mean()) for f in sub] == [7, 247]
     # RGB through chroma subsampling survives the container roundtrip
     rgb = [np.full((16, 16, 3), v, dtype=np.uint8) for v in (5, 200)]
-    d2 = avi.decode_avi_mjpeg(
+    d2 = avi.decode_avi(
         avi.encode_avi_mjpeg(rgb, fps=5, quality=90, subsampling="420")
     )
     assert [f.shape for f in d2["frames"]] == [(16, 16, 3)] * 2
@@ -440,7 +350,7 @@ def test_avi_raw_dib_roundtrip():
     RIFF container.  No quantizer anywhere, so ARBITRARY content (not
     just flat gray) round-trips pixel-exactly, including odd widths that
     force the 4-byte row-stride pad; decode_avi dispatches on the strf
-    compression and raises on codec video (the decode_stub boundary)."""
+    compression and raises on codec video."""
     import numpy as np
 
     from ontologybasedkgcreation_spark.operators import avi
@@ -470,37 +380,10 @@ def test_avi_raw_dib_roundtrip():
         [np.full((16, 16), 99, np.uint8)], fps=10, quality=95
     )
     assert int(avi.decode_avi(pm)["frames"][0].mean()) == 99
-    # unknown codec fourcc -> the documented decode_stub boundary
+    # codec video (no codec library here) is rejected by name
     bad = pm.replace(b"MJPG", b"H264")
-    with pytest.raises(ValueError, match="decode_stub"):
+    with pytest.raises(ValueError, match="unsupported AVI codec 'H264'"):
         avi.decode_avi(bad)
-
-
-def test_video_decode_and_frame_sampling_in_spark(spark):
-    """decoder='real' decodes an MJPEG AVI (first-frame features), and
-    frame_sample_features emits one decoded-feature row per every_ms with
-    only the sampled frames paying decode cost."""
-    import numpy as np
-
-    from ontologybasedkgcreation_spark.operators import avi
-
-    frames = [np.full((16, 16), v, dtype=np.uint8) for v in (10, 60, 110, 160)]
-    payload = bytearray(avi.encode_avi_mjpeg(frames, fps=10, quality=95))
-    df = spark.createDataFrame(
-        [(9, "video", payload, ("video/x-msvideo", 16, 16, 400))],
-        multimodal.MEDIA_SCHEMA_DDL,
-    )
-    feats = {
-        r["media_id"]: r["features"]
-        for r in multimodal.extract_features(df, decoder="real").collect()
-    }
-    assert abs(feats[9][0] - 10 / 255.0) < 1e-6  # first-frame mean
-    # every 200 ms at 10 fps -> frames 0 and 2 (ts 0 and 200)
-    rows = multimodal.frame_sample_features(df, every_ms=200).collect()
-    got = {r["frame_ts_ms"]: r["features"][0] for r in rows}
-    assert set(got) == {0, 200}
-    assert abs(got[0] - 10 / 255.0) < 1e-6
-    assert abs(got[200] - 110 / 255.0) < 1e-6
 
 
 def test_redact_pii(spark):
