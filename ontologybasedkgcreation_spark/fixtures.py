@@ -537,7 +537,11 @@ def expected_triples(s: dict) -> List[dict]:
     ]
 
 
-def generate_pages(n_pages: int, non_en_every: int = 10) -> Tuple[List[dict], List[dict]]:
+# every NON_EN_EVERY-th fixture page is Hindi unless a caller says otherwise
+NON_EN_EVERY = 10
+
+
+def generate_pages(n_pages: int, non_en_every: int) -> Tuple[List[dict], List[dict]]:
     """Build ``pages`` rows + expected canonical triples.
 
     Every ``non_en_every``-th page is a non-English page the pipeline must
@@ -579,18 +583,16 @@ EXPECTED_SCHEMA_DDL = (
 )
 
 
-def pages_df(spark, n_pages: int, non_en_every: int = 10, partitions: int | None = None):
+def pages_df(spark, n_pages: int, non_en_every: int = NON_EN_EVERY):
     """Spark DataFrames (pages, expected) for tests and bench."""
     pages, expected = generate_pages(n_pages, non_en_every)
-    pdf = spark.createDataFrame(pages, schema=PAGES_SCHEMA_DDL)
-    edf = spark.createDataFrame(expected, schema=EXPECTED_SCHEMA_DDL)
-    if partitions:
-        pdf = pdf.repartition(partitions, "url")
-    return pdf, edf
+    return (
+        spark.createDataFrame(pages, schema=PAGES_SCHEMA_DDL),
+        spark.createDataFrame(expected, schema=EXPECTED_SCHEMA_DDL),
+    )
 
 
-def pages_df_distributed(spark, n_pages: int, non_en_every: int = 10,
-                         partitions: int | None = None,
+def pages_df_distributed(spark, n_pages: int, partitions: int | None = None,
                          target_chars: int = 4200):
     """Executor-side page generation — the driver never materializes the
     corpus, so bench inputs scale to millions of pages (each page is a pure
@@ -603,7 +605,7 @@ def pages_df_distributed(spark, n_pages: int, non_en_every: int = 10,
             rows = []
             for i in pdf["id"]:
                 i = int(i)
-                if non_en_every and i % non_en_every == non_en_every - 1:
+                if i % NON_EN_EVERY == NON_EN_EVERY - 1:
                     rows.append(
                         _page_row(
                             f"https://judgments.example.org/hi/{i}.html",

@@ -39,6 +39,9 @@ from typing import Dict, FrozenSet, List, Set, Tuple
 
 _SUBSET_FILE = "nyon_subset.ttl"
 DEFAULT_OWL_PATH = os.path.join(os.path.dirname(__file__), _SUBSET_FILE)
+# BFS rounds subclass_closure_frame runs before it stops: the longest
+# subclass chain it can close
+CLOSURE_MAX_DEPTH = 16
 
 # ---------------------------------------------------------------------------
 # Turtle micro-parser (only what the NyOn file needs: prefixed names, IRIs,
@@ -344,7 +347,7 @@ class Ontology:
 
     # ---- Spark integration -------------------------------------------------
 
-    def subclass_closure_frame(self, spark, max_depth: int = 16):
+    def subclass_closure_frame(self, spark):
         """(descendant, ancestor, depth) computed ENGINE-SIDE: iterative
         BFS joins over the direct-edge DataFrame (depth = shortest path;
         pairs reached earlier are anti-joined away, so multi-path DAG
@@ -365,7 +368,7 @@ class Ontology:
             F.lit(1).alias("depth"),
         ).localCheckpoint()
         frontier = closure
-        for d in range(2, max_depth + 1):
+        for d in range(2, CLOSURE_MAX_DEPTH + 1):
             nxt = (
                 frontier.join(
                     edges, frontier["ancestor"] == edges["child"]

@@ -49,18 +49,18 @@ def _split_keep_separator(text: str, sep: str) -> List[str]:
     return [p for p in out if p]
 
 
-def _merge_pieces(pieces: List[str], chunk_size: int, overlap: int) -> List[str]:
+def _merge_pieces(pieces: List[str]) -> List[str]:
     """Greedy merge with sliding overlap (the splitter's merge phase)."""
     chunks: List[str] = []
     current: List[str] = []
     total = 0
     for piece in pieces:
         plen = len(piece)
-        if current and total + plen > chunk_size:
+        if current and total + plen > CHUNK_SIZE:
             chunks.append("".join(current))
             # slide: drop from the front until within overlap budget
             while current and (
-                total > overlap or (total + plen > chunk_size and total > 0)
+                total > CHUNK_OVERLAP or (total + plen > CHUNK_SIZE and total > 0)
             ):
                 total -= len(current[0])
                 current.pop(0)
@@ -71,11 +71,9 @@ def _merge_pieces(pieces: List[str], chunk_size: int, overlap: int) -> List[str]
     return chunks
 
 
-def split_text(
-    text: str, chunk_size: int = CHUNK_SIZE, overlap: int = CHUNK_OVERLAP
-) -> List[str]:
+def split_text(text: str) -> List[str]:
     """Recursive character split; returns stripped chunks (may be fewer chars
-    than size; never more)."""
+    than CHUNK_SIZE; never more)."""
 
     def _recurse(t: str, seps: List[str]) -> List[str]:
         sep = seps[-1]
@@ -88,13 +86,13 @@ def split_text(
         pieces = _split_keep_separator(t, sep)
         good: List[str] = []
         for p in pieces:
-            if len(p) <= chunk_size:
+            if len(p) <= CHUNK_SIZE:
                 good.append(p)
             elif rest:
                 good.extend(_recurse(p, rest))
             else:
                 good.append(p)
-        return _merge_pieces(good, chunk_size, overlap)
+        return _merge_pieces(good)
 
     if not text:
         return []

@@ -562,12 +562,11 @@ def duplicate_spans(
     id_col: str,
     text_col: str,
     n: int = 50,
-    min_total: int = 2,
     gram_hash: str = "rolling",
 ) -> DataFrame:
     """Exact-substring duplicate spans — Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better"): any word n-gram that
-    occurs ``min_total``+ times ANYWHERE in the corpus marks its
+    occurs twice or more ANYWHERE in the corpus marks its
     occurrences as duplicated text; maximal runs of consecutive
     duplicated n-gram starts are merged into token spans
     (doc, span_start, span_end, n_dup_tokens), 0-based inclusive token
@@ -615,7 +614,7 @@ def duplicate_spans(
     hot = (
         grams.groupBy("h")
         .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= min_total)
+        .filter(F.col("c") >= 2)
         .select("h")
     )
     marked = grams.join(hot, "h", "left_semi")

@@ -309,14 +309,9 @@ def cooccurrence_counts_fast(
     )
 
 
-def token_cooccurrence(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = EMBED_WINDOW,
-    min_count: int = EMBED_MIN_COUNT,
-    max_vocab: int = EMBED_MAX_VOCAB,
-) -> tuple[List[tuple], Dict[str, int]]:
-    """Distributed co-occurrence counting.
+def token_cooccurrence(docs: DataFrame) -> tuple[List[tuple], Dict[str, int]]:
+    """Distributed co-occurrence counting over the ``text`` column, with
+    the EMBED_* model constants read at call time.
 
     Returns (rows, vocab_counts): rows = [(w, c, n), ...] with w < c (the
     symmetric half; the factorization mirrors it), vocab_counts = token ->
@@ -329,9 +324,11 @@ def token_cooccurrence(
     :func:`cooccurrence_frame`, which stay as the ``cooccur`` oracle."""
     vocab_counts = {
         r["token"]: int(r["n"])
-        for r in vocab_counts_fast(docs, text_col, min_count, max_vocab).collect()
+        for r in vocab_counts_fast(
+            docs, "text", EMBED_MIN_COUNT, EMBED_MAX_VOCAB
+        ).collect()
     }
-    cooc = cooccurrence_counts_fast(docs, sorted(vocab_counts), text_col, window)
+    cooc = cooccurrence_counts_fast(docs, sorted(vocab_counts), "text", EMBED_WINDOW)
     rows = [(r["w"], r["c"], int(r["n"])) for r in cooc.collect()]
     return rows, vocab_counts
 
@@ -405,15 +402,15 @@ def train_corpus_embedder(docs: DataFrame):
 def dict_embedder(
     vectors: Dict[str, np.ndarray],
     dim: Optional[int] = None,
-    stopwords: tuple = EMBED_STOPWORDS,
 ):
     """token->vector table (any provenance: corpus-trained above, or a
     vendored external model's rows) -> the refine_pairs_semantic embedder
-    hook.  Mean-pool + L2-normalize per identity string."""
+    hook.  Mean-pool + L2-normalize per identity string, skipping
+    EMBED_STOPWORDS."""
     if dim is None:
         dim = len(next(iter(vectors.values()))) if vectors else EMBED_DIM
     table = {t: np.asarray(v, dtype=np.float64) for t, v in vectors.items()}
-    stop = set(stopwords)
+    stop = set(EMBED_STOPWORDS)
 
     def embed(df: DataFrame) -> DataFrame:
         import pandas as pd

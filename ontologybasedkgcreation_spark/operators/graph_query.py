@@ -41,8 +41,7 @@ def _node_side(
     binding: str,
     label: Optional[str],
     props: Optional[Dict[str, str]],
-    keep_props: bool,
-    label_scope: str = "any",
+    label_scope: str,
 ) -> DataFrame:
     n = nodes
     if label is not None:
@@ -64,13 +63,7 @@ def _node_side(
     if props:
         for k, v in props.items():
             n = n.filter(F.element_at(F.col("props"), F.lit(k)) == v)
-    cols = [F.col("node_key").alias(f"{binding}_key")]
-    if keep_props:
-        cols += [
-            F.col("head_label").alias(f"{binding}_label"),
-            F.col("props").alias(f"{binding}_props"),
-        ]
-    return n.select(*cols)
+    return n.select(F.col("node_key").alias(f"{binding}_key"))
 
 
 def _parse_rel_spec(rel: Optional[str]) -> Tuple[Optional[str], int, int]:
@@ -143,7 +136,6 @@ def match_chain(
     edges: DataFrame,
     chain: Sequence[Tuple[Optional[str], Optional[str], Optional[str]]],
     where: Optional[Dict[int, Dict[str, str]]] = None,
-    keep_props: bool = False,
     label_scope: str = "any",
 ) -> DataFrame:
     """``MATCH (a0:L0)-[:r0]->(a1:L1)-[:r1]->(a2:L2)…`` as one join plan.
@@ -153,8 +145,8 @@ def match_chain(
     i+1's src — pass consistent labels or None for "any").  ``where``:
     property-equality filters per binding index (``{0: {"hasCaseID":
     "…"}}`` — the Cypher ``{prop: value}`` map).  Returns one row per
-    binding of the pattern with columns ``n{i}_key`` (+ ``n{i}_label`` /
-    ``n{i}_props`` when ``keep_props``).
+    binding of the pattern with columns ``n{i}_key`` (join the node table
+    on them for labels and properties).
 
     A hop's relationship may be a VARIABLE-LENGTH spec — ``'cited*1..3'``
     / ``'*2..4'`` / ``'rel*2'`` — the Cypher ``-[:rel*min..max]->``
@@ -173,7 +165,7 @@ def match_chain(
     label restriction becomes a partition prune — the 100x read path)."""
     where = where or {}
     out = _node_side(
-        nodes, "n0", chain[0][0], where.get(0), keep_props, label_scope
+        nodes, "n0", chain[0][0], where.get(0), label_scope
     )
     for i, (_, rel, dst_label) in enumerate(chain):
         rel_name, min_h, max_h = _parse_rel_spec(rel)
@@ -199,8 +191,7 @@ def match_chain(
                 f"n{i}_key",
             )
         dst = _node_side(
-            nodes, f"n{i + 1}", dst_label, where.get(i + 1), keep_props,
-            label_scope,
+            nodes, f"n{i + 1}", dst_label, where.get(i + 1), label_scope
         )
         out = out.join(dst, f"n{i + 1}_key")
     return out
@@ -251,10 +242,13 @@ def k_hop(
     return seen
 
 
+# PageRank's damping factor
+DAMPING = 0.85
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
-    damping: float = 0.85,
     vertices: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over the edge table -> (node_key, rank).
@@ -267,8 +261,8 @@ def pagerank(
 
         r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/outdeg(u) + dangling/N)
 
-    so ``sum(rank) == 1`` at every iteration (sink nodes teleport their
-    mass uniformly rather than leaking it).
+    with ``d = DAMPING``, so ``sum(rank) == 1`` at every iteration (sink
+    nodes teleport their mass uniformly rather than leaking it).
 
     Scale shape: each iteration is two key-shuffles (rank⋈edges on the
     source key, then a map-side-combinable sum by destination) plus a
@@ -327,8 +321,8 @@ def pagerank(
             .select(
                 "node_key",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
+                    F.lit((1.0 - DAMPING) / n)
+                    + F.lit(DAMPING)
                     * (
                         F.coalesce(F.col("contrib"), F.lit(0.0))
                         + F.col("dangling") / F.lit(float(n))
@@ -363,11 +357,7 @@ def label_connections(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_count(
-    edges: DataFrame,
-    src_col: str = "src_key",
-    dst_col: str = "dst_key",
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle counts over the UNDIRECTED simple graph of the
     edge table -> (node_key, n_triangles), one row for every vertex that
     appears as an endpoint (0 when it closes no triangle).
@@ -388,7 +378,7 @@ def triangle_count(
     (degree groupBy, wedge self-join on the apex, closing-edge hash
     join), all equi-joins Catalyst/AQE can re-plan; no Python, no
     driver-side state."""
-    deg, per = _vertex_triangles(edges, src_col, dst_col)
+    deg, per = _vertex_triangles(edges)
     return (
         deg.select(F.col("k").alias("node_key"))
         .join(per, "node_key", "left")
@@ -401,16 +391,14 @@ def triangle_count(
     )
 
 
-def _vertex_triangles(
-    edges: DataFrame, src_col: str, dst_col: str
-) -> Tuple[DataFrame, DataFrame]:
+def _vertex_triangles(edges: DataFrame) -> Tuple[DataFrame, DataFrame]:
     """(degree frame ``(k, d)``, per-vertex triangle frame ``(node_key,
     n_triangles)``) — the shared pipeline behind ``triangle_count`` and
     ``clustering_coefficient``."""
     e0 = (
         edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
+            F.least(F.col("src_key"), F.col("dst_key")).alias("u"),
+            F.greatest(F.col("src_key"), F.col("dst_key")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -452,11 +440,7 @@ def _vertex_triangles(
     return deg, per
 
 
-def clustering_coefficient(
-    edges: DataFrame,
-    src_col: str = "src_key",
-    dst_col: str = "dst_key",
-) -> DataFrame:
+def clustering_coefficient(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per vertex ->
     ``(node_key, degree, n_triangles, clustering)`` — Watts-Strogatz
     C(v) = 2·T(v) / (d(v)·(d(v)−1)) over the undirected simple graph,
@@ -466,7 +450,7 @@ def clustering_coefficient(
     Same scale shape as ``triangle_count`` (the degree-ordered pipeline
     is shared — one extra projection, no new shuffle); ``clustering``
     rounds to 9 decimals (the bm25_adopt hash-stability convention)."""
-    deg, per = _vertex_triangles(edges, src_col, dst_col)
+    deg, per = _vertex_triangles(edges)
     d = F.col("d").cast("double")
     return (
         deg.join(
@@ -495,12 +479,7 @@ def clustering_coefficient(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iterations: int = 3,
-    src_col: str = "src_key",
-    dst_col: str = "dst_key",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation ->
     ``(node_key, community)`` — the deterministic analog of Neo4j GDS
     ``labelPropagation`` (beside ``pagerank``/``triangle_count``/wcc in
@@ -523,13 +502,11 @@ def label_propagation(
     ``localCheckpoint`` (the CC/pagerank one-action-per-round
     discipline).  No Python, no driver-side state."""
     sym = (
-        edges.select(
-            F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-        )
+        edges.select(F.col("src_key").alias("u"), F.col("dst_key").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .unionByName(
             edges.select(
-                F.col(dst_col).alias("u"), F.col(src_col).alias("v")
+                F.col("dst_key").alias("u"), F.col("src_key").alias("v")
             ).filter(F.col("u") != F.col("v"))
         )
         .distinct()

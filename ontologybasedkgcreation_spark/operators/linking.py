@@ -88,6 +88,9 @@ SEMANTIC_BAND_BITS = 4
 BM25_K1 = 1.5
 BM25_B = 0.75
 BM25_ADOPT_THRESHOLD = 1.0
+# Connected components: pointer-doubling rounds before it gives up (a
+# component diameter above 2^CC_MAX_ITER raises).
+CC_MAX_ITER = 16
 
 # The linking dictionary is the built-in table (fixtures.ABBREVIATIONS) on
 # every host; ONTOKG_ABBREV_PATH names a file (the reference's 616-row
@@ -366,7 +369,7 @@ def cc_messages(sym: DataFrame, comp: DataFrame) -> DataFrame:
     ).unionByName(comp.select("pre_key", "comp", F.col("comp").alias("old")))
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(a, b) accepted pairs -> (pre_key, comp) with comp = min pre_key of
     the component, over the universe of pair endpoints, as a local
     checkpoint.  Driver-side loop over DataFrames; data never leaves the
@@ -396,7 +399,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
     n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     sym, comp = cc_edges(pairs)
     try:
-        for _ in range(max_iter):
+        for _ in range(CC_MAX_ITER):
             obs = Observation()
             labels = (
                 cc_messages(sym, comp)
@@ -421,8 +424,8 @@ def connected_components(pairs: DataFrame, max_iter: int = 16) -> DataFrame:
     finally:
         sym.unpersist()
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} doubling "
-        f"rounds (component diameter > 2^{max_iter}) — raise max_iter"
+        f"connected_components did not converge in {CC_MAX_ITER} doubling "
+        f"rounds (component diameter > 2^{CC_MAX_ITER}) — raise CC_MAX_ITER"
     )
 
 

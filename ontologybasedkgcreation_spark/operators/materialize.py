@@ -271,6 +271,21 @@ def escape_partition_value(v) -> str:
     return "".join(out)
 
 
+def read_stored_table(spark, path: str) -> Optional[DataFrame]:
+    """The parquet table at ``path``, or None when it holds no data yet
+    (the path is missing, or no data files are under it).  Any other read
+    error, such as corrupt footers, raises: a caller that took an
+    unreadable table for an empty one would overwrite or replay it."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def pruned_stored_rows(spark, path: str, buckets: list) -> DataFrame:
     """Stored rows of the affected buckets only — the literal ``isin`` on
     the partition column prunes the scan statically (PartitionFilters)."""
@@ -486,9 +501,7 @@ class GraphWriter:
             df.writeTo(tbl).append()
             return tbl
         path = os.path.join(self.base_path, name)
-        try:
-            existing = spark.read.parquet(path)
-        except Exception:
+        if read_stored_table(spark, path) is None:
             return self.write(name, df, key)
         self._assert_meta(path)
         # eager: the batch feeds three consumers (affected-bucket collect,

@@ -440,11 +440,11 @@ def parse_psl(text: str) -> PslRules:
 _CACHE: Dict[str, PslRules] = {}
 
 
-def load_psl(path: Optional[str] = None) -> PslRules:
-    """Resolve the rule set: explicit ``path`` > ``ONTOKG_PSL_PATH`` env
-    (checked at call time, the abbreviation-dictionary discipline) >
+def load_psl() -> PslRules:
+    """Resolve the rule set: the file ``ONTOKG_PSL_PATH`` names (checked
+    at call time, the abbreviation-dictionary discipline), else the
     vendored builtin subset.  Parsed rules are cached per path."""
-    resolved = path or os.environ.get("ONTOKG_PSL_PATH") or ""
+    resolved = os.environ.get("ONTOKG_PSL_PATH") or ""
     key = resolved or "<builtin>"
     if key not in _CACHE:
         if resolved:
@@ -455,13 +455,13 @@ def load_psl(path: Optional[str] = None) -> PslRules:
     return _CACHE[key]
 
 
-def suffix_len_py(host: str, rules: Optional[PslRules] = None) -> int:
+def suffix_len_py(host: str) -> int:
     """Driver-side mirror of :func:`suffix_len_expr` — the identical PSL
     algorithm over one host string (exceptions prevail, longest match,
     implicit ``*`` default).  Used to normalize configuration inputs
     (e.g. blocklist entries) with the same semantics the Column compiles
     to."""
-    rules = rules or load_psl()
+    rules = load_psl()
     labels = host.lower().split(".")
     n = len(labels)
 
@@ -479,12 +479,11 @@ def suffix_len_py(host: str, rules: Optional[PslRules] = None) -> int:
     return 1
 
 
-def registrable_domain_py(host: str, rules: Optional[PslRules] = None) -> str:
+def registrable_domain_py(host: str) -> str:
     """Driver-side mirror of :func:`registrable_domain_expr`: public suffix
     + one label; a host that IS a public suffix passes through unchanged."""
-    rules = rules or load_psl()
     labels = host.lower().split(".")
-    sl = suffix_len_py(host, rules)
+    sl = suffix_len_py(host)
     if len(labels) > sl:
         return ".".join(labels[-(sl + 1):])
     return host.lower()
@@ -500,7 +499,7 @@ def _last_k(labels: Column, n: Column, k: int) -> Column:
     return F.when(n >= k, joined)
 
 
-def suffix_len_expr(host: Column, rules: Optional[PslRules] = None) -> Column:
+def suffix_len_expr(host: Column) -> Column:
     """Public-suffix label count for ``host`` as a pure Column.
 
     PSL algorithm: exception rules prevail (suffix = rule minus its
@@ -509,7 +508,7 @@ def suffix_len_expr(host: Column, rules: Optional[PslRules] = None) -> Column:
     of InSet lookups over the last-k-label strings — branch conditions
     on NULL last-k (short hosts) are NULL => not taken, and CaseWhen
     only evaluates the matched branch, so ANSI mode is safe."""
-    rules = rules or load_psl()
+    rules = load_psl()
     labels = F.split(host, r"\.")
     n = F.size(labels)
     lastk = {
@@ -542,18 +541,16 @@ def suffix_len_expr(host: Column, rules: Optional[PslRules] = None) -> Column:
     return expr.otherwise(default) if expr is not None else default
 
 
-def registrable_domain_expr(
-    host: Column, rules: Optional[PslRules] = None
-) -> Column:
+def registrable_domain_expr(host: Column) -> Column:
     """Registrable domain (public suffix + one label) for ``host``.
 
     A host that IS a public suffix (or empty) passes through unchanged —
     the never-NULL contract ``canonicalize_urls`` had with its old
     last-two-labels heuristic."""
-    rules = rules or load_psl()
+    rules = load_psl()
     labels = F.split(host, r"\.")
     n = F.size(labels)
-    sl = suffix_len_expr(host, rules)
+    sl = suffix_len_expr(host)
     expr = None
     for d in range(rules.max_suffix, 0, -1):
         branch = (

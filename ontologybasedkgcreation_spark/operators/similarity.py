@@ -50,34 +50,29 @@ def _pair_cosine(a, b):
     return F.when(denom != 0, _dot(a, b) / denom)
 
 
-def with_cosine(
-    df: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding"
-) -> DataFrame:
-    """+ ``cosine`` column vs a literal query vector (JVM-side, codegen)."""
+def with_cosine(df: DataFrame, query_vec: Sequence[float]) -> DataFrame:
+    """+ ``cosine`` of the ``embedding`` column vs a literal query vector
+    (JVM-side, codegen)."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return df.withColumn(
-        "cosine",
-        _dot(F.col(vec_col).cast("array<double>"), q)
-        / (_norm(F.col(vec_col).cast("array<double>")) * _norm(q)),
-    )
+    v = F.col("embedding").cast("array<double>")
+    return df.withColumn("cosine", _dot(v, q) / (_norm(v) * _norm(q)))
 
 
 def cosine_topk(
     df: DataFrame,
     query_vec: Sequence[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exclude_id: Optional[int] = None,
 ) -> DataFrame:
-    """Exact brute-force top-k by cosine (rank, id, cosine)."""
-    scored = with_cosine(df, query_vec, vec_col)
+    """Exact brute-force top-k by cosine over ``(vec_id, embedding)`` rows
+    -> (vec_id, cosine)."""
+    scored = with_cosine(df, query_vec)
     if exclude_id is not None:
-        scored = scored.filter(F.col(id_col) != exclude_id)
+        scored = scored.filter(F.col("vec_id") != exclude_id)
     return (
-        scored.orderBy(F.desc("cosine"), F.col(id_col))
+        scored.orderBy(F.desc("cosine"), F.col("vec_id"))
         .limit(k)
-        .select(id_col, "cosine")
+        .select("vec_id", "cosine")
     )
 
 
@@ -86,35 +81,29 @@ def ivf_topk(
     query_vec: Sequence[float],
     query_label: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    n_probe: int = 1,
     exclude_id: Optional[int] = None,
 ) -> DataFrame:
-    """IVF: restrict search to the query's cluster (plus optional neighbor
-    probes).  The ``label_col`` filter is a partition-pruning predicate when
-    the table is partitioned by cluster id — the 100 TB scale path."""
-    probes = [query_label + i for i in range(n_probe)]
-    pruned = df.filter(F.col(label_col).isin(probes))
-    return cosine_topk(pruned, query_vec, k, id_col, vec_col, exclude_id)
+    """IVF over ``(vec_id, embedding, label)``: restrict search to the
+    query's cluster.  The ``label`` filter is a partition-pruning predicate
+    when the table is partitioned by cluster id — the 100 TB scale path."""
+    pruned = df.filter(F.col("label") == query_label)
+    return cosine_topk(pruned, query_vec, k, exclude_id=exclude_id)
 
 
 def assign_clusters(
     df: DataFrame,
     centroids: Sequence[Sequence[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
-    """+ ``label_col``: argmax-cosine centroid assignment, fully JVM-side.
+    """+ ``label_col``: argmax-cosine centroid assignment of the
+    ``embedding`` column, fully JVM-side.
 
     The k centroids become literal arrays, so assignment is k codegen'd dot
     products per row — no shuffle, no Python.  Ties break to the lowest
     centroid id (deterministic).  This is the missing producer for
     :func:`ivf_topk`'s cluster labels: at 100 TB the assignment runs as one
     narrow map and the output is written partitioned by ``label_col``."""
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     nv = _norm(v)
     # the cosine expression mirrors with_cosine() exactly (same fold order),
     # which is verified bit-exact against DuckDB's list_cosine_similarity
@@ -174,14 +163,16 @@ def _hashing_tf(texts: pd.Series, dim: int):
     return M.astype(np.float32)
 
 
-def hashing_feature_vectors(
-    df: DataFrame, id_col: str, text_col: str, dim: int = 256
-) -> DataFrame:
-    """(id, features array<float>): hashing-TF over word + char-3gram tokens,
-    L2-normalized — the deterministic stand-in for an external embedding
-    model (the reference embeds node renderings with a 768-dim model,
-    utils.py:786-873; the column contract is identical).  Arrow-batched,
-    no per-row Python outside the tokenizer."""
+# hashing_feature_vectors' vector width
+HASHING_DIM = 256
+
+
+def hashing_feature_vectors(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, features array<float>): HASHING_DIM-wide hashing-TF over word +
+    char-3gram tokens, L2-normalized — the deterministic stand-in for an
+    external embedding model (the reference embeds node renderings with a
+    768-dim model, utils.py:786-873; the column contract is identical).
+    Arrow-batched, no per-row Python outside the tokenizer."""
     def _feat(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -189,7 +180,7 @@ def hashing_feature_vectors(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
-                    "features": _hashing_tf(pdf[text_col], dim).tolist(),
+                    "features": _hashing_tf(pdf[text_col], HASHING_DIM).tolist(),
                 }
             )
 
@@ -220,11 +211,9 @@ def hashing_cosine(a, b, dim: int = 256):
 def cosine_neardup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
 ) -> DataFrame:
-    """Embedding near-duplicate pairs within blocks: (a, b, cosine).
+    """Embedding near-duplicate pairs within ``label`` blocks of
+    ``(vec_id, embedding, label)`` rows: (a, b, cosine).
 
     NOTE — recall oracle, not the scale shape: pairing is all-pairs within
     each block, O(ΣB²) over block sizes; a skewed cluster makes one block
@@ -233,14 +222,14 @@ def cosine_neardup_pairs(
     verify); this exact variant stays as the recall reference the LSH
     variant is pinned against."""
     v = df.select(
-        F.col(id_col).alias("a"),
-        F.col(block_col).alias("blk"),
-        F.col(vec_col).cast("array<double>").alias("va"),
+        F.col("vec_id").alias("a"),
+        F.col("label").alias("blk"),
+        F.col("embedding").cast("array<double>").alias("va"),
     )
     w = df.select(
-        F.col(id_col).alias("b"),
-        F.col(block_col).alias("blk"),
-        F.col(vec_col).cast("array<double>").alias("vb"),
+        F.col("vec_id").alias("b"),
+        F.col("label").alias("blk"),
+        F.col("embedding").cast("array<double>").alias("vb"),
     )
     return (
         v.join(w, "blk")

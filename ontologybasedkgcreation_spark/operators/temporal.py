@@ -17,10 +17,14 @@ explosion, no driver-side sort.  Pure ``pyspark.sql.functions``.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+# the prefix both joins put on the columns they take from the right side
+RIGHT_PREFIX = "right_"
 
 
 def asof_join(
@@ -28,22 +32,15 @@ def asof_join(
     right: DataFrame,
     on: Sequence[str],
     left_ts: str = "ts",
-    right_ts: Optional[str] = None,
-    direction: str = "backward",
-    tolerance_us: Optional[int] = None,
-    right_prefix: str = "right_",
 ) -> DataFrame:
     """As-of join -> every ``left`` row plus the matched ``right``
-    row's columns as ``{right_prefix}<col>`` (NULL when no match).
+    row's columns as ``right_<col>`` (NULL when no match).
 
-    ``direction='backward'`` matches the LATEST right row with
-    ``right.ts <= left.ts`` (exact-timestamp matches included);
-    ``'forward'`` the EARLIEST with ``right.ts >= left.ts``.
-    ``tolerance_us`` (microseconds) nulls out matches further away
-    than the bound — the pandas ``merge_asof(tolerance=...)``
-    semantics.  Right rows that tie on (key, ts) resolve to the
-    payload-struct maximum, so the result is deterministic whatever
-    the partitioning.
+    Backward matching: the LATEST right row with ``right.ts <= left.ts``
+    (exact-timestamp matches included); both sides carry the timestamp
+    in the ``left_ts`` column.  Right rows that tie on (key, ts) resolve
+    to the payload-struct maximum, so the result is deterministic
+    whatever the partitioning.
 
     Scale shape: one union + one per-key window (a single key
     exchange).  The running ``last(ignorenulls)`` is O(rows); no
@@ -51,71 +48,43 @@ def asof_join(
     Python.  Timestamp order within a key is the window sort — at
     10^12 rows the exchange is the same one ANY per-key temporal
     operator pays."""
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward/forward: {direction!r}")
-    right_ts = right_ts or left_ts
     on = list(on)
-    # the right timestamp is emitted once, as {prefix}{right_ts} from the
+    # the right timestamp is emitted once, as right_<left_ts> from the
     # struct's _rts slot — keep it out of the payload list
-    rpay = [c for c in right.columns if c not in on and c != right_ts]
+    rpay = [c for c in right.columns if c not in on and c != left_ts]
+    rrow = F.struct(F.col(left_ts).alias("_rts"), *[F.col(c) for c in rpay])
+    lrow = F.struct(*[F.col(c) for c in left.columns])
     l_tagged = left.select(
         *on,
         F.col(left_ts).alias("_ts"),
         F.lit(1).alias("_side"),
-        F.struct(*[F.col(c) for c in left.columns]).alias("_lrow"),
+        lrow.alias("_lrow"),
         F.lit(None).cast(
-            right.select(
-                F.struct(
-                    F.col(right_ts).alias("_rts"),
-                    *[F.col(c) for c in rpay],
-                ).alias("s")
-            ).schema["s"].dataType.simpleString()
+            right.select(rrow.alias("s")).schema["s"].dataType.simpleString()
         ).alias("_rrow"),
     )
     r_tagged = right.select(
         *on,
-        F.col(right_ts).alias("_ts"),
+        F.col(left_ts).alias("_ts"),
         F.lit(0).alias("_side"),
-        F.lit(None)
-        .cast(
-            left.select(
-                F.struct(*[F.col(c) for c in left.columns]).alias("s")
-            ).schema["s"].dataType.simpleString()
-        )
-        .alias("_lrow"),
-        F.struct(
-            F.col(right_ts).alias("_rts"), *[F.col(c) for c in rpay]
-        ).alias("_rrow"),
-    )
-    ts_order = F.col("_ts").asc() if direction == "backward" else (
-        F.col("_ts").desc()
+        F.lit(None).cast(
+            left.select(lrow.alias("s")).schema["s"].dataType.simpleString()
+        ).alias("_lrow"),
+        rrow.alias("_rrow"),
     )
     w = (
         Window.partitionBy(*on)
-        .orderBy(ts_order, F.col("_side").asc(), F.col("_rrow").asc())
+        .orderBy(F.col("_ts").asc(), F.col("_side").asc(), F.col("_rrow").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    matched = F.last("_rrow", ignorenulls=True).over(w)
     out = (
         l_tagged.unionByName(r_tagged)
-        .withColumn("_m", matched)
+        .withColumn("_m", F.last("_rrow", ignorenulls=True).over(w))
         .filter(F.col("_side") == 1)
     )
-    if tolerance_us is not None:
-        # cast NTZ-friendly: a difference of two same-session casts is
-        # timezone-invariant
-        gap = F.abs(
-            F.unix_micros(F.col("_ts").cast("timestamp"))
-            - F.unix_micros(F.col("_m._rts").cast("timestamp"))
-        )
-        out = out.withColumn(
-            "_m", F.when(gap <= F.lit(int(tolerance_us)), F.col("_m"))
-        )
     cols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
-    cols += [
-        F.col("_m._rts").alias(f"{right_prefix}{right_ts}")
-    ]
-    cols += [F.col(f"_m.{c}").alias(f"{right_prefix}{c}") for c in rpay]
+    cols += [F.col("_m._rts").alias(f"{RIGHT_PREFIX}{left_ts}")]
+    cols += [F.col(f"_m.{c}").alias(f"{RIGHT_PREFIX}{c}") for c in rpay]
     return out.select(*cols)
 
 
@@ -169,7 +138,6 @@ def interval_join(
     r_start: str = "start",
     r_end: str = "end",
     bucket_width: int = 3600,
-    right_prefix: str = "right_",
 ) -> DataFrame:
     """Interval overlap join -> one row per (left, right) pair of
     CLOSED intervals that overlap (``l_start <= r_end AND r_start <=
@@ -221,7 +189,7 @@ def interval_join(
     )
     lcols = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
     rcols = [
-        F.col(f"_rrow.{c}").alias(f"{right_prefix}{c}")
+        F.col(f"_rrow.{c}").alias(f"{RIGHT_PREFIX}{c}")
         for c in right.columns
         if c not in on
     ]

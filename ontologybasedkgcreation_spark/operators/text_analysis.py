@@ -141,13 +141,13 @@ def strip_boilerplate(
     )
 
 
-def repetition_signals(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    top_ngram: int = 2,
-    dup_ngram: int = 5,
-) -> DataFrame:
+# the word n-gram sizes of repetition_signals' top- and duplicate-gram
+# branches (Gopher's 2-gram coverage and its 5-gram duplication floor)
+TOP_NGRAM = 2
+DUP_NGRAM = 5
+
+
+def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, table A1) — the
     document-level repetition family that catches boilerplate-ish and
     degenerate pages before training:
@@ -156,9 +156,9 @@ def repetition_signals(
       an earlier line (occurrences beyond the first / total lines);
     - ``dup_line_char_frac``: same, weighted by line characters;
     - ``top_ngram_char_frac``: characters covered by the single most
-      frequent word ``top_ngram``-gram / total token characters (ties
+      frequent word ``TOP_NGRAM``-gram / total token characters (ties
       broken to the lexicographically greatest gram — deterministic);
-    - ``dup_ngram_frac``: fraction of word ``dup_ngram``-gram occurrences
+    - ``dup_ngram_frac``: fraction of word ``DUP_NGRAM``-gram occurrences
       that are duplicates.
 
     All four are exact deterministic variants of the published signals
@@ -208,7 +208,7 @@ def repetition_signals(
         )
 
     top = (
-        base.select(F.col(id_col), F.explode(_grams(top_ngram)).alias("_g"))
+        base.select(F.col(id_col), F.explode(_grams(TOP_NGRAM)).alias("_g"))
         .groupBy(id_col, "_g")
         .agg(F.count("*").alias("_c"))
         .groupBy(id_col)
@@ -217,14 +217,14 @@ def repetition_signals(
             F.col(id_col),
             (
                 F.col("_m._c")
-                * (F.length("_m._g") - F.lit(top_ngram - 1))
+                * (F.length("_m._g") - F.lit(TOP_NGRAM - 1))
             ).alias("_topchars"),
         )
     )
 
     # --- duplicate n-gram branch ---------------------------------------
     dup = (
-        base.select(F.col(id_col), F.explode(_grams(dup_ngram)).alias("_g"))
+        base.select(F.col(id_col), F.explode(_grams(DUP_NGRAM)).alias("_g"))
         .groupBy(id_col, "_g")
         .agg(F.count("*").alias("_c"))
         .groupBy(id_col)
@@ -390,13 +390,16 @@ def canonicalize_urls(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     )
 
 
+# the URL schemes filter_urls lets through
+ALLOW_SCHEMES = ("http", "https")
+
+
 def filter_urls(
     df: DataFrame,
     id_col: str,
     url_col: str,
     block_domains: Sequence[str] = (),
     block_path_res: Sequence[str] = (),
-    allow_schemes: Sequence[str] = ("http", "https"),
 ) -> DataFrame:
     """URL-level filtering — the blocklist step every Common-Crawl pipeline
     runs before fetch-dedup (UT1/adult blocklists, link farms, non-HTTP
@@ -404,7 +407,7 @@ def filter_urls(
     ``block_domains`` (so ``evil.example`` blocks every subdomain host but
     never a lookalike suffix match — the reason substring blocklists
     misfire), when any ``block_path_res`` regex matches its path+query, or
-    when its scheme is not in ``allow_schemes``.
+    when its scheme is not in ``ALLOW_SCHEMES``.
 
     Returns (id, canon-parsed host/domain/path, blocked 0/1, block_reason)
     — callers filter ``blocked = 0``; keeping the column (instead of
@@ -440,7 +443,7 @@ def filter_urls(
     host = F.regexp_replace(host, r"^www\.", "")
     pathq = F.regexp_extract(u, r"^[^:]+://[^/?#]+([^#]*)", 1)
     domain = registrable_domain_expr(host)
-    bad_scheme = ~scheme.isin(*[s.lower() for s in allow_schemes])
+    bad_scheme = ~scheme.isin(*ALLOW_SCHEMES)
     reg_entries, subtree_entries = [], []
     for e in block_domains:
         el = e.lower().strip(".")
@@ -491,18 +494,16 @@ def stratified_sample(
     id_col: str,
     strata_col: str,
     rates: Dict[str, float],
-    default_rate: float = 0.0,
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic stratified sampling — the data-mixing step of a
     pretraining pipeline (keep 100 % of a curated source, 25 % of raw
     web, 0 % of a blocked source).  Each row keeps iff a 60-bit
-    md5-derived hash of ``(id, salt)`` falls under its stratum's
+    md5-derived hash of ``id || ':'`` falls under its stratum's
     threshold ``int(rate * 2^60)`` — so membership is a pure function of
     the id: reruns, resumes and engines agree row for row, and raising a
     stratum's rate strictly GROWS its sample (nested samples, the
-    standard hash-sampling property).  ``salt`` decorrelates independent
-    samples drawn from the same table.
+    standard hash-sampling property).  A stratum missing from ``rates``
+    keeps nothing.
 
     Returns the input columns + ``sample_hash`` (audit) + ``sample_keep``
     (0/1; callers filter).  ``rates`` is a plain dict compiled into a
@@ -512,16 +513,13 @@ def stratified_sample(
     float compare at 2^60 scale where doubles lose exactness).
 
     Scale shape: one projection, zero shuffles, zero Python."""
-    hash60 = _hash60(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(salt))
-    )
+    hash60 = _hash60(F.concat(F.col(id_col).cast("string"), F.lit(":")))
     thr = None
     for k in sorted(rates):
         cond = F.col(strata_col) == F.lit(k)
         t = F.lit(int(rates[k] * (1 << 60)))
         thr = F.when(cond, t) if thr is None else thr.when(cond, t)
-    default_thr = F.lit(int(default_rate * (1 << 60)))
-    thr = default_thr if thr is None else thr.otherwise(default_thr)
+    thr = F.lit(0) if thr is None else thr.otherwise(F.lit(0))
     return df.select(
         *df.columns,
         hash60.alias("sample_hash"),
@@ -745,7 +743,6 @@ def weighted_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic weighted sampling WITHOUT replacement ->
     ``(id, weight, es_key, rank)``, the top-k rows by the
@@ -756,13 +753,13 @@ def weighted_sample(
     ``score_with_classifier``.
 
         u_i  = (h_i + 1) / 2^60          (h_i = the engine's 60-bit md5
-                                          hash of (id, salt) — the
+                                          hash of id || ':' — the
                                           stratified_sample convention)
         key_i = ln(u_i) / w_i            (monotone in u_i^(1/w_i))
 
     take the k LARGEST keys.  Determinism: membership is a pure function
-    of (id, salt, weight) — reruns, resumes and engines agree row for
-    row; ``salt`` decorrelates independent draws.  Keys round to 9
+    of (id, weight) — reruns, resumes and engines agree row for
+    row.  Keys round to 9
     decimals BEFORE ranking with ties broken by id ascending (the
     engine-stability convention).  Rows with NULL or non-positive weight
     are excluded (they have no sampling mass).
@@ -772,9 +769,7 @@ def weighted_sample(
     full sort); zero joins, zero Python."""
     from pyspark.sql import Window
 
-    hash60 = _hash60(
-        F.concat(F.col(id_col).cast("string"), F.lit(":"), F.lit(salt))
-    )
+    hash60 = _hash60(F.concat(F.col(id_col).cast("string"), F.lit(":")))
     u = (hash60.cast("double") + 1.0) / F.lit(float(1 << 60))
     es = F.round(F.log(u) / F.col(weight_col).cast("double"), 9)
     keyed = (

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import pipeline
 from ..ontology import Ontology, load_ontology
+from ..operators.materialize import read_stored_table
 from ..sources.pages import extract_pages
 
 ASSIGNED_STAGE = "assigned_triples"
@@ -69,9 +70,8 @@ class CheckpointedPipeline:
         return os.path.join(self.base_path, "_lineage")
 
     def done_buckets(self, stage: str) -> List[int]:
-        try:
-            df = self.spark.read.parquet(self.lineage_path)
-        except Exception:
+        df = read_stored_table(self.spark, self.lineage_path)
+        if df is None:
             return []
         # lineage is only valid for the bucketing it was written under —
         # a different n_buckets re-hashes urls, so stale rows must not

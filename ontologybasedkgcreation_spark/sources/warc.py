@@ -13,7 +13,7 @@ implements both directions from the public spec, stdlib-only:
   value-hash-gate discipline as the PNG/JPEG/AVI codecs);
 - ``parse_warc(data)`` -> list of (headers dict, payload bytes), multi-
   member gzip detected by magic and inflated member-by-member;
-- ``decode_warc(df, id_col, bytes_col)`` -> one row per RECORD with the
+- ``decode_warc(df)`` -> one row per RECORD of an ``(id, warc)`` blob with the
   standard fields typed out — the Spark ingestion stage.
 
 Scale shape: one Arrow-batched ``mapInPandas`` stage (a WARC file's
@@ -151,10 +151,9 @@ def _hget(headers: Dict[str, str], name: str) -> str:
     return None
 
 
-def decode_warc(
-    df: DataFrame, id_col: str = "id", bytes_col: str = "warc"
-) -> DataFrame:
-    """Explode WARC file blobs into typed records ->
+def decode_warc(df: DataFrame) -> DataFrame:
+    """Explode the ``warc`` file blobs of ``(id, warc)`` rows into typed
+    records ->
     ``(id, rec_idx, warc_type, target_uri, warc_date, record_id,
     content_length, payload)``.
 
@@ -169,7 +168,7 @@ def decode_warc(
             ids, idxs, types, uris, dates, rids, lens, bodies = (
                 [], [], [], [], [], [], [], []
             )
-            for rid_, blob in zip(pdf[id_col], pdf[bytes_col]):
+            for rid_, blob in zip(pdf["id"], pdf["warc"]):
                 if blob is None or len(blob) == 0:
                     continue
                 for i, (hdrs, payload) in enumerate(
@@ -196,9 +195,7 @@ def decode_warc(
                 }
             )
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _parse, schema=WARC_SCHEMA
-    )
+    return df.select("id", "warc").mapInPandas(_parse, schema=WARC_SCHEMA)
 
 
 def parse_http_payload(data: bytes) -> Tuple[int, Dict[str, str], bytes]:
@@ -242,10 +239,9 @@ def _charset_of(content_type: str) -> str:
     return "utf-8"
 
 
-def decode_http_responses(
-    df: DataFrame, id_col: str = "id", payload_col: str = "payload"
-) -> DataFrame:
-    """WARC response payloads -> typed HTTP rows:
+def decode_http_responses(df: DataFrame) -> DataFrame:
+    """The WARC response ``payload`` column of ``(id, payload)`` rows ->
+    typed HTTP rows:
     ``(id, status, content_type, charset, body_text, body_len)``.
 
     ``body_text`` decodes with the declared charset (default utf-8) and
@@ -258,7 +254,7 @@ def decode_http_responses(
     def _dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, sts, ctypes, chsets, texts, lens = [], [], [], [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[payload_col]):
+            for rid, payload in zip(pdf["id"], pdf["payload"]):
                 if payload is None:
                     continue
                 status, headers, body = parse_http_payload(payload)
@@ -286,7 +282,7 @@ def decode_http_responses(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("id", "payload").mapInPandas(
         _dec,
         schema="id long, status long, content_type string, "
         "charset string, body_text string, body_len long",

@@ -20,12 +20,10 @@ column.
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..ontology import Ontology, load_ontology
+from ..ontology import load_ontology
 
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -68,7 +66,6 @@ def start_graph_maintenance(
     pages_stream: DataFrame,
     writer,
     checkpoint_path: str,
-    onto: Optional[Ontology] = None,
     available_now: bool = False,
 ):
     """Continuous KG maintenance: each micro-batch runs the full batch
@@ -83,16 +80,16 @@ def start_graph_maintenance(
     mention enriching an old node's property bag — is reconciled by the
     periodic cross-batch reduce over the stored graph tables
     (:func:`reconcile_graph`); these per-batch tables serve until it
-    runs."""
+    runs.  Pages are validated against the default ontology."""
     from .. import pipeline as pl
 
-    onto_resolved = onto or load_ontology()
+    onto = load_ontology()
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         out = pl.run_pipeline(
             batch_df.sparkSession,
             batch_df,
-            onto=onto_resolved,
+            onto=onto,
             with_paragraphs=False,
         )
         writer.merge("nodes", out["nodes"], key="node_key")

@@ -16,11 +16,8 @@ Spark-first design:
   the groupBy exchange across executors — at 100 TB the state is
   #distinct-contents x ~50 bytes, spread over the cluster, NOT a
   driver-side set.
-- Late/stale state is bounded: with ``ttl`` set, keys idle longer than the
-  TTL past the event-time watermark are dropped (``EventTimeTimeout``) —
-  the standard state-size bound for unbounded streams.  Content seen again
-  after its key expired re-emits: a TTL'd dedup trades exactness for
-  bounded state, which is the documented production contract.
+- State is kept forever (exact dedup, no timeout): state grows with the
+  distinct-content count, which bounded replays and backfills can afford.
 - Output is append-mode (emitted rows are final): each first-seen page row
   is emitted exactly once, checkpointed with the state store, so replays
   and restarts do not re-emit.
@@ -28,7 +25,7 @@ Spark-first design:
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator, Optional, Tuple
+from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 
@@ -58,38 +55,13 @@ DEDUP_OUTPUT_SCHEMA = StructType(
     ]
 )
 
+# event-time watermark of the JVM dedup stream
+WATERMARK_DELAY = "30 minutes"
+
 # per-key state: (total copies seen, first-seen event time as epoch micros)
 DEDUP_STATE_SCHEMA = StructType(
     [StructField("n_seen", LongType()), StructField("first_ts_us", LongType())]
 )
-
-_US = 1_000_000
-
-# Spark-style interval units -> microseconds (the aliases Spark's own
-# CalendarInterval parser accepts for sub-week units)
-_TTL_UNITS = {
-    **{u: 1_000 for u in ("ms", "millisecond", "milliseconds")},
-    **{u: _US for u in ("s", "sec", "secs", "second", "seconds")},
-    **{u: 60 * _US for u in ("m", "min", "mins", "minute", "minutes")},
-    **{u: 3600 * _US for u in ("h", "hr", "hrs", "hour", "hours")},
-    **{u: 86_400 * _US for u in ("d", "day", "days")},
-}
-
-
-def _parse_ttl_us(ttl: str) -> int:
-    """'2 hours' / '1 day' / '90 min' / '500ms' -> microseconds.  Raises a
-    ValueError naming the accepted formats instead of a bare KeyError."""
-    import re
-
-    m = re.fullmatch(r"\s*(\d+)\s*([A-Za-z]+)\s*", ttl)
-    unit_us = _TTL_UNITS.get(m.group(2).lower()) if m else None
-    if unit_us is None:
-        raise ValueError(
-            f"invalid ttl {ttl!r}: expected '<n> <unit>' with unit one of "
-            f"{sorted(_TTL_UNITS)} (e.g. '2 hours', '1 day', '90 min', "
-            f"'500 ms')"
-        )
-    return int(m.group(1)) * unit_us
 
 
 def _dedup_fn(
@@ -97,10 +69,6 @@ def _dedup_fn(
     pdf_iter: Iterable[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # idle past watermark+TTL: drop the key's state, emit nothing
-        state.remove()
-        return
     batches = [pdf for pdf in pdf_iter]
     n_batch = int(sum(len(p) for p in batches))
     if n_batch == 0:
@@ -119,47 +87,24 @@ def _dedup_fn(
     if state.exists:
         n_seen, kept_ts_us = state.get
         state.update((int(n_seen) + n_batch, int(kept_ts_us)))
-        emit = None  # content already passed through in an earlier batch
-    else:
-        state.update((n_batch, first_ts_us))
-        emit = pd.DataFrame(
-            {
-                "content_key": [key[0]],
-                "url": [first["url"]],
-                "warc_ts": [first_ts],
-                "text": [first["text"]],
-                "lang": [first["lang"]],
-                "n_in_batch": [n_batch],
-            }
-        )
-    # EventTimeTimeout mode: re-arm the key's TTL relative to the watermark
-    # (the TTL itself rode in on a per-row column so the closure stays
-    # picklable and configuration-free; 0 = NoTimeout mode, never touch the
-    # timeout API)
-    ttl_us = int(pdf["_ttl_us"].iloc[0])
-    if ttl_us > 0:
-        state.setTimeoutTimestamp(
-            max(state.getCurrentWatermarkMs(), first_ts_us // 1_000)
-            + ttl_us // 1_000
-        )
-    if emit is not None:
-        yield emit
+        return  # content already passed through in an earlier batch
+    state.update((n_batch, first_ts_us))
+    yield pd.DataFrame(
+        {
+            "content_key": [key[0]],
+            "url": [first["url"]],
+            "warc_ts": [first_ts],
+            "text": [first["text"]],
+            "lang": [first["lang"]],
+            "n_in_batch": [n_batch],
+        }
+    )
 
 
-def streaming_dedup_exact(
-    pages_stream: DataFrame,
-    ttl: Optional[str] = None,
-    watermark_delay: str = "30 minutes",
-) -> DataFrame:
+def streaming_dedup_exact(pages_stream: DataFrame) -> DataFrame:
     """Online exact-dedup over a page stream: emit each distinct text ONCE
     (first occurrence wins; ties broken by (warc_ts, url)), across
-    micro-batches, exactly once across restarts.
-
-    ``ttl`` (e.g. ``"2 hours"``): per-key state lifetime past the event-time
-    watermark; ``None`` keeps state forever (exact dedup, unbounded state —
-    fine for bounded replays, not for an always-on stream).
-    """
-    ttl_us = _parse_ttl_us(ttl) if ttl is not None else 0
+    micro-batches, exactly once across restarts.  State is kept forever."""
     keyed = pages_stream.select(
         F.sha2(F.encode(F.coalesce(F.col("text"), F.lit("")), "utf-8"), 256).alias(
             "content_key"
@@ -168,15 +113,7 @@ def streaming_dedup_exact(
         "warc_ts",
         "text",
         "lang",
-        F.lit(ttl_us).alias("_ttl_us"),
     )
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if ttl is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    if ttl is not None:
-        keyed = keyed.withWatermark("warc_ts", watermark_delay)
     # operator output mode "append": every emitted row is FINAL (a content
     # key's first occurrence is emitted once and never revised), which is
     # what lets the query run with an append-mode file sink
@@ -185,15 +122,11 @@ def streaming_dedup_exact(
         outputStructType=DEDUP_OUTPUT_SCHEMA,
         stateStructType=DEDUP_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-def streaming_dedup_exact_jvm(
-    pages_stream: DataFrame,
-    watermark_delay: str = "30 minutes",
-    within_watermark: bool = False,
-) -> DataFrame:
+def streaming_dedup_exact_jvm(pages_stream: DataFrame) -> DataFrame:
     """Online exact-dedup, JVM-STATEFUL fast path: the built-in streaming
     ``dropDuplicates`` over the same content-hash key — no Python worker
     anywhere, so the per-distinct-key cost is a state-store lookup instead
@@ -207,10 +140,7 @@ def streaming_dedup_exact_jvm(
       (nondeterministic), not the earliest (warc_ts, url) representative;
       every pure function of the content (text, content_key) is still
       deterministic.
-    - No per-key copy counter (``n_in_batch``) and no custom TTL logic;
-      ``within_watermark=True`` maps to ``dropDuplicatesWithinWatermark``
-      — the built-in state bound (re-emits contents recurring later than
-      the watermark delay, the same trade the pandas op's ``ttl`` makes).
+    - No per-key copy counter (``n_in_batch``).
 
     Use :func:`streaming_dedup_exact` when the representative row or the
     copy count matters; use this when only the distinct content set does.
@@ -223,7 +153,5 @@ def streaming_dedup_exact_jvm(
         "warc_ts",
         "text",
         "lang",
-    ).withWatermark("warc_ts", watermark_delay)
-    if within_watermark:
-        return keyed.dropDuplicatesWithinWatermark(["content_key"])
+    ).withWatermark("warc_ts", WATERMARK_DELAY)
     return keyed.dropDuplicates(["content_key"])

@@ -11,8 +11,9 @@ levels and reports pages/sec at both plus scaling efficiency
   honest in-sandbox analog of 1 vs 4 executors: per-executor heaps, Arrow
   Python workers, and shuffle traffic between processes.
 
-Each level runs in its own subprocess so the JVM/session is cold-started
-identically.  Results are appended to BENCH/BASELINE.md.
+Each level runs in a fresh interpreter (a ``spawn`` process) so the
+JVM/session is cold-started identically.  Results are appended to
+BENCH/scaling_runs.md.
 
 Usage: python3 scripts/scaling_bench.py [n_pages] [N] [page_chars] [--cluster]
   (cluster mode: N = cores PER EXECUTOR; legs are 1 vs 4 executors)
@@ -21,122 +22,109 @@ Usage: python3 scripts/scaling_bench.py [n_pages] [N] [page_chars] [--cluster]
 from __future__ import annotations
 
 import json
+import multiprocessing
 import os
-import subprocess
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from ontologybasedkgcreation_spark.session import get_spark
-from ontologybasedkgcreation_spark import fixtures, pipeline
 
-master = sys.argv[1]; n_pages = int(sys.argv[2])
-semantic = sys.argv[4] if len(sys.argv) > 4 else "auto"
-# 'off': a trainer floor above the corpus size
-min_pages = n_pages + 1 if semantic == "off" else 1_000
-# partitioning is FIXED across legs: the only variable is task slots
-# (the in-sandbox analog of executor count); per-stage scheduling cost
-# then stays constant and the measurement isolates compute scaling
-extra = {{}}
-if master.startswith("local-cluster"):
-    # executor JVMs need the repo importable inside their Arrow Python
-    # workers; per-executor heap is FIXED across legs (scaling out means
-    # more executors of the same size) and must hold this leg's share of
-    # the cached input + Arrow batches.  In thread mode none of this
-    # applies — the driver IS the executor and keeps get_spark's 32g.
-    extra["spark.executorEnv.PYTHONPATH"] = {repo!r}
-    extra["spark.executor.memory"] = "24g"
-    extra["spark.driver.memory"] = "8g"
-    # Multi-process masters, identically on BOTH legs (see
-    # BENCH/BASELINE.md "multi-JVM" section):
-    # - locality wait off: on a loopback "cluster" any-locality
-    #   scheduling is free; the default 3s wait serializes small stages.
-    # - AQE off: AQE materializes every shuffle stage as its own job
-    #   (85 jobs vs 8 on this pipeline) and in separate-JVM mode that
-    #   job latency dominates at sandbox data sizes — measured 2.3x at
-    #   30k pages.  At real-cluster data volumes per stage the tradeoff
-    #   reverses, which is why the engine default keeps AQE on.
-    extra["spark.locality.wait"] = "0s"
-    extra["spark.sql.adaptive.enabled"] = "false"
-spark = get_spark('scaling', master=master, shuffle_partitions=16,
-                  extra_conf=extra)
-spark.sparkContext.setLogLevel('ERROR')
-target_chars = int(sys.argv[3]) if len(sys.argv) > 3 else 20000
-pages = fixtures.pages_df_distributed(spark, n_pages, partitions=32,
-                                      target_chars=target_chars)
-pages = pages.cache(); n = pages.count()
-t0 = time.time()
-out = pipeline.run_pipeline(spark, pages, with_paragraphs=True,
-                            semantic_min_pages=min_pages)
-# run_pipeline returns lazily EXCEPT the eager semantic auto-train
-# (corpus count + sample checkpoint + co-occurrence collect + eigh);
-# build_sec isolates that eager prefix from the job time
-t1 = time.time()
-edges = out['edges'].count(); nodes = out['nodes'].count()
-dt = time.time() - t0
-print(json.dumps({{"master": master, "pages": n, "sec": round(dt, 2),
-                   "pages_per_sec": round(n / dt, 2),
-                   "semantic": semantic,
-                   "build_sec": round(t1 - t0, 2),
-                   "nodes": nodes, "edges": edges}}), flush=True)
-spark.stop()  # local-cluster: avoid noisy executor-relaunch shutdown
-"""
+def _in_fresh_interpreter(fn, *args, timeout: int):
+    """``fn(*args)`` in a newly spawned interpreter (its own JVM), returning
+    its result."""
+    with multiprocessing.get_context("spawn").Pool(1) as pool:
+        return pool.apply_async(fn, args).get(timeout)
+
+
+def _leg(master: str, n_pages: int, target_chars: int, semantic: str) -> dict:
+    from ontologybasedkgcreation_spark import fixtures, pipeline
+    from ontologybasedkgcreation_spark.session import get_spark
+
+    # 'off': a trainer floor above the corpus size
+    min_pages = n_pages + 1 if semantic == "off" else 1_000
+    # partitioning is FIXED across legs: the only variable is task slots
+    # (the in-sandbox analog of executor count); per-stage scheduling cost
+    # then stays constant and the measurement isolates compute scaling
+    extra = {}
+    if master.startswith("local-cluster"):
+        # executor JVMs need the repo importable inside their Arrow Python
+        # workers; per-executor heap is FIXED across legs (scaling out means
+        # more executors of the same size) and must hold this leg's share of
+        # the cached input + Arrow batches.  In thread mode none of this
+        # applies — the driver IS the executor.
+        extra["spark.executorEnv.PYTHONPATH"] = REPO
+        extra["spark.executor.memory"] = "24g"
+        extra["spark.driver.memory"] = "8g"
+        # Multi-process masters, identically on BOTH legs (see
+        # BENCH/BASELINE.md "multi-JVM" section):
+        # - locality wait off: on a loopback "cluster" any-locality
+        #   scheduling is free; the default 3s wait serializes small stages.
+        # - AQE off: AQE materializes every shuffle stage as its own job
+        #   (85 jobs vs 8 on this pipeline) and in separate-JVM mode that
+        #   job latency dominates at sandbox data sizes — measured 2.3x at
+        #   30k pages.  At real-cluster data volumes per stage the tradeoff
+        #   reverses, which is why the engine default keeps AQE on.
+        extra["spark.locality.wait"] = "0s"
+        extra["spark.sql.adaptive.enabled"] = "false"
+    spark = get_spark("scaling", master=master, shuffle_partitions=16,
+                      extra_conf=extra)
+    spark.sparkContext.setLogLevel("ERROR")
+    pages = fixtures.pages_df_distributed(spark, n_pages, partitions=32,
+                                          target_chars=target_chars)
+    pages = pages.cache()
+    n = pages.count()
+    t0 = time.time()
+    out = pipeline.run_pipeline(spark, pages, with_paragraphs=True,
+                                semantic_min_pages=min_pages)
+    # run_pipeline returns lazily EXCEPT the eager semantic auto-train
+    # (corpus count + sample checkpoint + co-occurrence collect + eigh);
+    # build_sec isolates that eager prefix from the job time
+    t1 = time.time()
+    edges = out["edges"].count()
+    nodes = out["nodes"].count()
+    dt = time.time() - t0
+    spark.stop()  # local-cluster: avoid noisy executor-relaunch shutdown
+    return {"master": master, "pages": n, "sec": round(dt, 2),
+            "pages_per_sec": round(n / dt, 2), "semantic": semantic,
+            "build_sec": round(t1 - t0, 2), "nodes": nodes, "edges": edges}
 
 
 def run_level(master: str, n_pages: int, target_chars: int = 20000,
               semantic: str = "auto") -> dict:
-    script = CHILD.format(repo=REPO)
-    out = subprocess.run(
-        [sys.executable, "-c", script, master, str(n_pages),
-         str(target_chars), semantic],
-        capture_output=True, text=True, timeout=3600,
+    return _in_fresh_interpreter(
+        _leg, master, n_pages, target_chars, semantic, timeout=3600
     )
-    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        sys.stderr.write(out.stderr[-4000:])
-        raise RuntimeError(f"child produced no result for {master}")
-    return json.loads(lines[-1])
 
 
-_CAL_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, {repo!r})
-from ontologybasedkgcreation_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark('scaling-cal', master='local[16]', shuffle_partitions=16)
-spark.sparkContext.setLogLevel('ERROR')
-runs = []
-for _ in range(3):
-    t0 = time.time()
-    (spark.range(0, 48_000_000, 1, 16)
-        .select(F.xxhash64('id').alias('h'),
-                (F.col('id') * 2654435761 % 1000003).alias('m'))
-        .agg(F.sum(F.col('h') % 1024).alias('s'),
-             F.approx_count_distinct('m').alias('d')).collect())
-    runs.append(round(time.time() - t0, 3))
-print(json.dumps({{"cal_sec": min(runs), "cal_runs": runs}}), flush=True)
-spark.stop()
-"""
+def _calibration_probe() -> dict:
+    from pyspark.sql import functions as F
+
+    from ontologybasedkgcreation_spark.session import get_spark
+
+    spark = get_spark("scaling-cal", master="local[16]", shuffle_partitions=16)
+    spark.sparkContext.setLogLevel("ERROR")
+    runs = []
+    for _ in range(3):
+        t0 = time.time()
+        (spark.range(0, 48_000_000, 1, 16)
+            .select(F.xxhash64("id").alias("h"),
+                    (F.col("id") * 2654435761 % 1000003).alias("m"))
+            .agg(F.sum(F.col("h") % 1024).alias("s"),
+                 F.approx_count_distinct("m").alias("d")).collect())
+        runs.append(round(time.time() - t0, 3))
+    spark.stop()
+    return {"cal_sec": min(runs), "cal_runs": runs}
 
 
 def host_calibration() -> dict:
     """The same fixed JVM probe bench.py records (local[16], 48M-row
-    codegen agg, min-of-3) run in its own subprocess — directly comparable
+    codegen agg, min-of-3) run in a fresh interpreter — directly comparable
     to BENCH_r*.json host_calibration_sec, so a scaling row carries the
     host-speed evidence the round-4 verdict asked to gate on (good-host
     band ~<= 0.85)."""
-    out = subprocess.run(
-        [sys.executable, "-c", _CAL_CHILD.format(repo=REPO)],
-        capture_output=True, text=True, timeout=600,
-    )
-    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-    if not lines:
-        sys.stderr.write(out.stderr[-2000:])
-        raise RuntimeError("calibration child produced no result")
-    return json.loads(lines[-1])
+    return _in_fresh_interpreter(_calibration_probe, timeout=600)
 
 
 def main() -> int:

@@ -104,16 +104,18 @@ def test_cc_converges_on_long_chain(spark):
     assert len(comp) == n + 1
 
 
-def test_cc_raises_at_iteration_cap(spark):
+def test_cc_raises_at_iteration_cap(spark, monkeypatch):
+    from ontologybasedkgcreation_spark.operators import linking
     from ontologybasedkgcreation_spark.operators.linking import (
         connected_components,
     )
 
+    monkeypatch.setattr(linking, "CC_MAX_ITER", 1)
     pairs = spark.createDataFrame(
         [(f"k{i:03d}", f"k{i + 1:03d}") for i in range(12)], "a string, b string"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iter=1)
+        connected_components(pairs)
 
 
 def test_degenerate_pages_flow_through(spark):

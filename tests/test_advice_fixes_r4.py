@@ -10,8 +10,6 @@
   corrupt tables so a later bucket-count mismatch is caught.
 - cosine_neardup_pairs_lsh with dim=None must return an empty pair frame on
   an empty input, not crash on first()==None.
-- streaming_dedup_exact's ttl parser must accept Spark-style unit aliases
-  and raise a helpful ValueError otherwise.
 """
 
 from __future__ import annotations
@@ -240,7 +238,7 @@ def test_merge_tolerates_corrupt_sidecar(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# empty-frame SRP-LSH + ttl parser
+# empty-frame SRP-LSH
 # ---------------------------------------------------------------------------
 
 
@@ -276,22 +274,3 @@ def test_refine_semantic_empty_block(spark):
         linkable, lambda df: hashing_feature_vectors(df, "pre_key", "norm_identity")
     )
     assert out.count() == 0
-
-
-def test_ttl_parser_accepts_spark_style_units():
-    from ontologybasedkgcreation_spark.streaming.stateful import _parse_ttl_us
-
-    assert _parse_ttl_us("2 hours") == 2 * 3600 * 1_000_000
-    assert _parse_ttl_us("1 day") == 86_400 * 1_000_000
-    assert _parse_ttl_us("90 min") == 90 * 60 * 1_000_000
-    assert _parse_ttl_us("500 ms") == 500_000
-    assert _parse_ttl_us("500ms") == 500_000  # no-space form
-    assert _parse_ttl_us(" 15  s ") == 15 * 1_000_000
-
-
-def test_ttl_parser_rejects_garbage_with_message():
-    from ontologybasedkgcreation_spark.streaming.stateful import _parse_ttl_us
-
-    for bad in ("fortnight", "2 fortnights", "", "h 2", "-5 minutes"):
-        with pytest.raises(ValueError, match="invalid ttl"):
-            _parse_ttl_us(bad)

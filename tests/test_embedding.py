@@ -49,15 +49,16 @@ def _corpus_df(spark):
 
 @pytest.fixture(scope="module")
 def trained(spark):
+    from ontologybasedkgcreation_spark.operators import embedding
     from ontologybasedkgcreation_spark.operators.embedding import (
         ppmi_vectors,
         token_cooccurrence,
     )
 
     docs = _corpus_df(spark)
-    rows, vocab = token_cooccurrence(
-        docs, "text", window=4, min_count=2, max_vocab=500
-    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(embedding, "EMBED_MAX_VOCAB", 500)
+        rows, vocab = token_cooccurrence(docs)
     vectors = ppmi_vectors(rows, vocab, dim=32)
     return docs, rows, vocab, vectors
 
@@ -97,7 +98,7 @@ def test_cooccurrence_join_is_equi_keyed_on_doc_and_pos(spark):
         assert "<=" not in line and ">" not in line.split("Inner")[1], line
 
 
-def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
+def test_fast_cooccurrence_bit_identical_to_spec_join(spark, monkeypatch):
     """Round-5 parity pin (the repo's simhash pattern): the numpy
     partial-count fast path (``cooccurrence_counts_fast`` — per-partition
     vocab x vocab ``np.add.at`` matrices, vocab-pair-sized shuffle) must be
@@ -117,6 +118,7 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
     - non-ASCII upper case (É, final sigma, dotted İ), lowercased by the
       JVM on both legs.
     """
+    from ontologybasedkgcreation_spark.operators import embedding
     from ontologybasedkgcreation_spark.operators.embedding import (
         cooccurrence_frame,
         token_cooccurrence,
@@ -151,9 +153,9 @@ def test_fast_cooccurrence_bit_identical_to_spec_join(spark):
             docs, "text", window=3, min_count=2, max_vocab=100
         ).collect()
     ]
-    fast_rows, fast_vocab = token_cooccurrence(
-        docs, "text", window=3, min_count=2, max_vocab=100
-    )
+    monkeypatch.setattr(embedding, "EMBED_WINDOW", 3)
+    monkeypatch.setattr(embedding, "EMBED_MAX_VOCAB", 100)
+    fast_rows, fast_vocab = token_cooccurrence(docs)
     assert fast_vocab == slow_vocab
     assert sorted(fast_rows) == sorted(slow_rows)
     # the d^2 duplicate weighting actually bit on this corpus: the dup

@@ -15,6 +15,21 @@ from ontologybasedkgcreation_spark.operators.graph_query import (
 )
 
 
+def _bound(nodes, bindings, n):
+    """``match_chain`` rows with each binding's head label and props
+    joined back from the node table (as ``n{i}_label`` / ``n{i}_props``)."""
+    for i in range(n):
+        bindings = bindings.join(
+            nodes.select(
+                F.col("node_key").alias(f"n{i}_key"),
+                F.col("head_label").alias(f"n{i}_label"),
+                F.col("props").alias(f"n{i}_props"),
+            ),
+            f"n{i}_key",
+        )
+    return bindings
+
+
 @pytest.fixture(scope="module")
 def graph(spark):
     pages, _ = fixtures.pages_df(spark, 8, non_en_every=0)
@@ -27,11 +42,14 @@ def test_match_two_hop_chain(spark, graph):
     every binding's endpoints really carry those labels, and every case
     with a judge appears."""
     nodes, edges = graph
-    got = match_chain(
+    got = _bound(
         nodes,
-        edges,
-        [("CourtCase", "hasJudge", "Judge"), ("Judge", "worksIn", "Court")],
-        keep_props=True,
+        match_chain(
+            nodes,
+            edges,
+            [("CourtCase", "hasJudge", "Judge"), ("Judge", "worksIn", "Court")],
+        ),
+        3,
     ).collect()
     assert len(got) > 0
     for r in got:
@@ -154,12 +172,15 @@ def test_match_property_filter(spark, graph):
         .select(F.element_at("props", F.lit("hasCaseID")).alias("cid"))
         .first()["cid"]
     )
-    got = match_chain(
+    got = _bound(
         nodes,
-        edges,
-        [("CourtCase", "hasParty", None)],
-        where={0: {"hasCaseID": some_case}},
-        keep_props=True,
+        match_chain(
+            nodes,
+            edges,
+            [("CourtCase", "hasParty", None)],
+            where={0: {"hasCaseID": some_case}},
+        ),
+        2,
     ).collect()
     assert len(got) > 0
     assert all(r["n0_props"]["hasCaseID"] == some_case for r in got)

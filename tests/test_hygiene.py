@@ -1,7 +1,9 @@
 """Code hygiene: every function, method and class the package defines has a
 caller outside ``tests/``.  A helper only tests reach is either dead or a
 test-only twin of production code; delete it with its tests, or name it
-in ALLOWED with the reason it stays.
+in ALLOWED with the reason it stays.  Likewise every defaulted parameter
+is passed by some non-test caller (else it is a constant), and every
+environment variable the package reads is set by one.
 
 Non-test callers: the package itself, ``__spark_entry__.py``,
 ``main_kg.py``, ``bench*.py``, ``scripts/`` and ``perfbench/``.  A
@@ -35,6 +37,42 @@ ALLOWED = {
     "hashing_feature_vectors": "the deterministic lexical embedder a "
     "refine_pairs_semantic caller plugs in (the linker's own refine "
     "computes the same vectors per pair, similarity.hashing_cosine)",
+}
+
+
+# defaulted parameters (``function.parameter``) that no non-test caller
+# passes, each with the reason it stays a parameter rather than a constant
+DEFAULTS_ALLOWED = {
+    # deployment settings
+    "load_ontology.path": "the full NyOn file's path (the default is the "
+    "packaged subset)",
+    "start_graph_maintenance.available_now": "the trigger: a bounded "
+    "replay (availableNow) or an always-on stream",
+    "start_triples_sink.available_now": "the trigger: a bounded replay "
+    "(availableNow) or an always-on stream",
+    # reference paths that tests compare the fast path against
+    "extract_pages.prefer_existing_text": "False re-derives text from html, "
+    "the byte-identical html->text gate",
+    "duplicate_spans.gram_hash": "'md5' is the full-gram reference the "
+    "rolling hash is pinned bit-identical against",
+    "srp_band_cols.bits": "the JVM SRP spec's signature width, set to the "
+    "fast stage's",
+    "srp_band_cols.band_bits": "the JVM SRP spec's band width, set to the "
+    "fast stage's",
+    "srp_band_cols.dim": "the JVM SRP spec's vector width, set to the "
+    "fast stage's",
+    # fault injection
+    "run_assigned_stage.fail_after_buckets": "the crash hook the resume "
+    "tests kill a run with",
+    # test inputs that drive decoder branches
+    "encode_jpeg.restart_interval": "writes RSTn markers, the decoder's "
+    "restart branch",
+    "encode_avi_mjpeg.subsampling": "writes 4:2:2/4:2:0 frames, the "
+    "decoder's chroma upsampling branches",
+    # serving contract
+    "match_chain.label_scope": "'head' reads the head_label-partitioned "
+    "node layout main_kg.py writes as a partition prune",
+    "pages_df.non_en_every": "the fixture's Hindi share (0 = all English)",
 }
 
 
@@ -121,6 +159,70 @@ def test_allowlist_names_exist_and_are_needed():
     assert set(ALLOWED) <= set(_defined()), set(ALLOWED) - set(_defined())
     needless = set(ALLOWED) & _referenced_outside_tests()
     assert not needless, needless
+
+
+def _defaulted_params():
+    """(function, parameter, position) for every defaulted parameter of a
+    package function or method, constructors excluded.  The position
+    counts the arguments a call passes (after ``self``/``cls``); it is
+    None for a keyword-only parameter."""
+    for path in _py_files(f"{PKG}/**/*.py"):
+        for node in ast.walk(_parse(path)):
+            if (
+                not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                or node.name == "__init__"
+            ):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            bound = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            for i in range(len(pos) - len(a.defaults), len(pos)):
+                yield node.name, pos[i].arg, i - bound
+            for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                if default is not None:
+                    yield node.name, arg.arg, None
+
+
+def _calls_outside_tests():
+    """Callee name -> (most positional arguments one call passes, the
+    keywords calls pass, whether a call spreads ``*args``/``**kwargs``)."""
+    calls = collections.defaultdict(lambda: (0, frozenset(), False))
+    for path in _callers():
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            npos, kws, spread = calls[name]
+            calls[name] = (
+                max(npos, len(node.args)),
+                kws | {k.arg for k in node.keywords if k.arg},
+                spread
+                or any(isinstance(x, ast.Starred) for x in node.args)
+                or any(k.arg is None for k in node.keywords),
+            )
+    return calls
+
+
+def test_defaults_are_set_outside_tests():
+    """Every defaulted parameter of a package function or method is passed
+    by a non-test caller (by position, by keyword or through a spread), or
+    is in DEFAULTS_ALLOWED.  A value only tests vary is a test-only fork:
+    make it a module constant and let tests monkeypatch it."""
+    calls = _calls_outside_tests()
+    unset = set()
+    for fn, param, pos in _defaulted_params():
+        npos, kws, spread = calls.get(fn, (0, frozenset(), False))
+        if not (spread or param in kws or (pos is not None and npos > pos)):
+            unset.add(f"{fn}.{param}")
+    assert not unset - set(DEFAULTS_ALLOWED), (
+        "defaulted but never passed outside tests/: "
+        f"{sorted(unset - set(DEFAULTS_ALLOWED))}"
+    )
+    stale = set(DEFAULTS_ALLOWED) - unset
+    assert not stale, f"DEFAULTS_ALLOWED entries now passed or gone: {stale}"
 
 
 def _is_environ(node):

@@ -63,3 +63,23 @@ def test_lineage_metrics_present(spark, pages, tmp_path):
     lin = spark.read.parquet(cp.lineage_path)
     assert lin.filter(F.col("stage") == ASSIGNED_STAGE).count() > 0
     assert set(lin.columns) == {"stage", "bucket", "rows", "finished_at", "n_buckets"}
+
+
+def test_unreadable_lineage_raises(spark, tmp_path):
+    """done_buckets reads a missing lineage as 'nothing done' but raises on
+    one it cannot read, instead of silently replaying every bucket."""
+    import glob
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    cp = CheckpointedPipeline(spark, str(tmp_path), n_buckets=4)
+    assert cp.done_buckets(ASSIGNED_STAGE) == []
+    cp._mark_done(ASSIGNED_STAGE, {0: 5, 1: 3})
+    assert sorted(cp.done_buckets(ASSIGNED_STAGE)) == [0, 1]
+    for f in glob.glob(os.path.join(cp.lineage_path, "*.parquet")):
+        with open(f, "r+b") as fh:
+            fh.seek(os.path.getsize(f) - 12)
+            fh.write(b"\0" * 12)
+    with pytest.raises(Py4JJavaError):
+        cp.done_buckets(ASSIGNED_STAGE)

@@ -22,9 +22,9 @@ def _pages(spark, rows):
     )
 
 
-def _run(spark, src, out, ckpt, ttl=None):
+def _run(spark, src, out, ckpt):
     stream = ingest.read_page_stream(spark, src, max_files_per_trigger=4)
-    deduped = stateful.streaming_dedup_exact(stream, ttl=ttl)
+    deduped = stateful.streaming_dedup_exact(stream)
     q = (
         deduped.writeStream.format("parquet")
         .option("path", out)
@@ -84,72 +84,6 @@ def test_dedup_within_and_across_batches(spark, tmp_path):
     assert spark.read.parquet(out).count() == 3
 
 
-def test_dedup_ttl_mode_runs_with_watermark(spark, tmp_path):
-    """TTL mode wires EventTimeTimeout + watermark; the first batch must
-    still dedup (timeout expiry needs watermark movement across batches,
-    which the bounded availableNow replay only exercises for liveness)."""
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _pages(
-        spark,
-        [
-            ("u1", 1, "alpha text", "en"),
-            ("u2", 500, "alpha text", "en"),
-            ("u3", 500, "beta text", "en"),
-        ],
-    ).write.parquet(src)
-    _run(spark, src, out, ckpt, ttl="1 hour")
-    got = _emitted(spark, out)
-    assert {(u, t) for (u, t, _) in got} == {
-        ("u1", "alpha text"),
-        ("u3", "beta text"),
-    }
-
-
-def test_dedup_ttl_expiry_drops_state_and_reemits(spark, tmp_path):
-    """The bounded-state contract of TTL'd streaming dedup, pinned end to
-    end: once the event-time watermark passes a key's (first_ts + ttl), the
-    key's state is DROPPED (the ``state.hasTimedOut -> state.remove`` branch
-    fires), and the same content arriving afterwards RE-EMITS as a fresh
-    first occurrence — while keys still inside their TTL keep absorbing
-    duplicates.  ttl='1 hour', watermark delay 30 min (the operator
-    default); the watermark available to batch N is computed from data up
-    to batch N-1, hence the spacing below.
-
-    batch 1 (t=0):    'alpha'       -> emit; timeout armed for t+60min
-    batch 2 (t=200):  'filler one'  -> emit; watermark after batch = 170min
-    batch 3 (t=400):  'filler two'  -> emit; runs WITH watermark 170 > 60
-                                       => alpha's state is removed
-    batch 4 (t=410):  'alpha' again -> RE-EMITS (state was dropped)
-                      'filler two'  -> absorbed (armed to 460 > wm 370)
-    """
-    src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    batches = [
-        [("a1", 0, "alpha text", "en")],
-        [("f1", 200, "filler one", "en")],
-        [("f2", 400, "filler two", "en")],
-        [("a2", 410, "alpha text", "en"), ("f3", 415, "filler two", "en")],
-    ]
-    mode = "overwrite"
-    for rows in batches:
-        _pages(spark, rows).write.mode(mode).parquet(src)
-        mode = "append"
-        _run(spark, src, out, ckpt, ttl="1 hour")
-
-    got = _emitted(spark, out)
-    alpha_urls = {u for (u, t, _) in got if t == "alpha text"}
-    # expired key re-emitted: both occurrences of alpha passed the gate
-    assert alpha_urls == {"a1", "a2"}
-    # un-expired key still dedups: 'filler two' emitted exactly once
-    assert {u for (u, t, _) in got if t == "filler two"} == {"f2"}
-    assert {u for (u, t, _) in got if t == "filler one"} == {"f1"}
-    assert len(got) == 4
-
-
 def test_dedup_null_text_is_a_key(spark, tmp_path):
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -167,7 +101,7 @@ def test_dedup_jvm_fast_path(spark, tmp_path):
     """streaming_dedup_exact_jvm (built-in dropDuplicates state, no
     Python): one row per distinct content within and across batches with
     checkpointed exactly-once, matching the pandas-state op on every
-    content-pure column; within_watermark mode runs.  WHICH duplicate row
+    content-pure column.  WHICH duplicate row
     survives is engine order — only content-pure projections are
     asserted."""
     src = str(tmp_path / "in")
@@ -210,17 +144,3 @@ def test_dedup_jvm_fast_path(spark, tmp_path):
     # exactly-once on replay
     run()
     assert spark.read.parquet(out).count() == 3
-    # the bounded-state variant also runs end-to-end
-    out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ckpt2")
-    stream = ingest.read_page_stream(spark, src, max_files_per_trigger=10)
-    q = (
-        stateful.streaming_dedup_exact_jvm(stream, within_watermark=True)
-        .writeStream.format("parquet")
-        .option("path", out2)
-        .option("checkpointLocation", ckpt2)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    assert spark.read.parquet(out2).count() >= 3

@@ -703,8 +703,8 @@ def test_filter_urls(spark):
 
 def test_stratified_sample(spark):
     """Hash sampling properties: nested samples (raising a rate only
-    grows the kept set), exact 0/1 rates, salt decorrelation, and the
-    empirical rate landing near the nominal one."""
+    grows the kept set), exact 0/1 rates, the empirical rate landing
+    near the nominal one, and an unlisted stratum keeping nothing."""
     from ontologybasedkgcreation_spark.operators.text_analysis import (
         stratified_sample,
     )
@@ -713,10 +713,8 @@ def test_stratified_sample(spark):
         [(i, "s") for i in range(400)], "doc_id long, source string"
     ).cache()
 
-    def kept(rate, salt=""):
-        out = stratified_sample(
-            df, "doc_id", "source", {"s": rate}, salt=salt
-        )
+    def kept(rate):
+        out = stratified_sample(df, "doc_id", "source", {"s": rate})
         return {r["doc_id"] for r in out.filter("sample_keep = 1").collect()}
 
     k25, k50, k75 = kept(0.25), kept(0.5), kept(0.75)
@@ -724,9 +722,7 @@ def test_stratified_sample(spark):
     assert kept(0.0) == set()
     assert kept(1.0) == set(range(400))
     assert 0.4 <= len(k50) / 400 <= 0.6
-    # a different salt draws a different (deterministic) sample
-    assert kept(0.5, salt="x") != k50
-    # unknown stratum falls to default_rate=0
+    # unknown stratum keeps nothing
     df2 = spark.createDataFrame([(1, "other")], "doc_id long, source string")
     out2 = stratified_sample(df2, "doc_id", "source", {"s": 1.0}).collect()
     assert out2[0]["sample_keep"] == 0
@@ -745,9 +741,7 @@ def test_duplicate_spans(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_dup_tokens"])
-        for r in dedup.duplicate_spans(
-            df, "doc_id", "text", n=4, min_total=2
-        ).collect()
+        for r in dedup.duplicate_spans(df, "doc_id", "text", n=4).collect()
     )
     # doc1: grams 'a b c d'@0 and 'b c d e'@1 repeat in doc2 -> one island
     # covering tokens 0..4; doc2 same gram pair at starts 2,3 -> 2..6;
@@ -783,7 +777,7 @@ def test_duplicate_spans_rolling_matches_md5(spark):
         return sorted(
             (r["doc_id"], r["span_start"], r["span_end"], r["n_dup_tokens"])
             for r in dedup.duplicate_spans(
-                df, "doc_id", "text", n=5, min_total=2, gram_hash=hash_kind
+                df, "doc_id", "text", n=5, gram_hash=hash_kind
             ).collect()
         )
 
@@ -1177,7 +1171,7 @@ def test_crawl_chain_composes_end_to_end(spark):
     )
     pages = spark.createDataFrame([(1, warc_bytes)], "id long, warc binary")
     records = decode_warc(pages).filter(F.col("warc_type") == "response")
-    responses = decode_http_responses(records, "id", "payload")
+    responses = decode_http_responses(records)
     links = extract_links(responses, "id", "body_text")
     canon = canonicalize_urls(links, "id", "link")
     got = {r["canon_url"]: r for r in canon.collect()}
@@ -1238,10 +1232,9 @@ def test_detect_credit_cards(spark):
 
 
 def test_asof_join_semantics(spark):
-    """Backward/forward/tolerance as-of semantics on a hand case:
-    exact-timestamp matches included, pre-first-right lefts NULL,
-    keys with no right side NULL, tolerance nulls distant matches,
-    bad direction raises."""
+    """Backward as-of semantics on a hand case: exact-timestamp matches
+    included, pre-first-right lefts NULL, keys with no right side
+    NULL."""
     import datetime as dt
 
     from ontologybasedkgcreation_spark.operators.temporal import asof_join
@@ -1255,27 +1248,14 @@ def test_asof_join_semantics(spark):
         [("u", T(8), 100.0), ("u", T(10), 200.0), ("u", T(15), 300.0)],
         "k string, ts timestamp, px double",
     )
-
-    def run(**kw):
-        return {
-            r["lid"]: (r["right_ts"], r["right_px"])
-            for r in asof_join(left, right, ["k"], **kw).collect()
-        }
-
-    back = run()
+    back = {
+        r["lid"]: (r["right_ts"], r["right_px"])
+        for r in asof_join(left, right, ["k"]).collect()
+    }
     assert back[1] == (T(10), 200.0)   # exact match included
     assert back[2] == (T(15), 300.0)   # latest <= 20
     assert back[3] == (None, None)     # nothing at or before 5
     assert back[4] == (None, None)     # key with no right rows
-    fwd = run(direction="forward")
-    assert fwd[1] == (T(10), 200.0)    # exact match included
-    assert fwd[2] == (None, None)      # nothing at or after 20
-    assert fwd[3] == (T(8), 100.0)     # earliest >= 5
-    tol = run(tolerance_us=3_000_000)
-    assert tol[1] == (T(10), 200.0)    # gap 0 within 3s
-    assert tol[2] == (None, None)      # gap 5s > 3s nulls out
-    with pytest.raises(ValueError, match="direction"):
-        asof_join(left, right, ["k"], direction="nearest")
 
 
 def test_sessionize(spark):

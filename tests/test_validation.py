@@ -7,11 +7,12 @@ import os
 
 import pytest
 
+from conftest import REFERENCE_DIR
 from ontologybasedkgcreation_spark.ontology import load_ontology
 from ontologybasedkgcreation_spark.operators.extract import VALUE
 from ontologybasedkgcreation_spark.operators import validate
 
-GOLDEN = "/root/reference/kg_creator/src/sample_response.json"
+GOLDEN = os.path.join(REFERENCE_DIR, "kg_creator", "src", "sample_response.json")
 
 RAW_SCHEMA = (
     "url string, span_start long, node1_type string, "

@@ -164,3 +164,38 @@ def test_write_full_replace_survives_dynamic_session_conf(spark, tmp_path):
             spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
         else:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def _corrupt_footers(path):
+    """Overwrite the footer of every parquet file under ``path``; returns
+    each file's bytes after the damage."""
+    import glob
+    import os
+
+    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    assert files
+    for f in files:
+        with open(f, "r+b") as fh:
+            fh.seek(os.path.getsize(f) - 12)
+            fh.write(b"\0" * 12)
+    return {f: open(f, "rb").read() for f in files}
+
+
+def test_merge_into_unreadable_table_raises_and_keeps_files(spark, tmp_path):
+    """A stored table whose files cannot be read is not an empty table:
+    merge raises instead of falling back to write()'s full replace, and
+    every stored file stays byte-identical."""
+    import glob
+    import os
+
+    import pytest
+    from py4j.protocol import Py4JJavaError
+
+    w = GraphWriter(str(tmp_path), buckets=8)
+    b1 = [(f"u{i}", f"s{i}", "rel", f"d{i}") for i in range(40)]
+    p = w.write("edges", _edges(spark, b1), key="url")
+    before = _corrupt_footers(p)
+    with pytest.raises(Py4JJavaError):
+        w.merge("edges", _edges(spark, [("zz", "s", "rel", "d")]), key="url")
+    after = glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
+    assert {f: open(f, "rb").read() for f in after} == before
