@@ -16,9 +16,10 @@ unfinished partitions (per-partition lineage rows recorded alongside).
 from __future__ import annotations
 
 import os
-from typing import Dict, Optional
+import time
+from typing import Iterable, Optional, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -316,7 +317,12 @@ class GraphWriter:
     The bucket count is persisted beside the table (``_buckets.json``,
     underscore-prefixed so Spark readers ignore it) and asserted on every
     merge — merging with a different ``buckets`` than the stored table
-    would silently leave duplicate keys in unaffected buckets.
+    would silently leave duplicate keys in unaffected buckets.  The resume
+    checkpoint (plans/resume.py) is a table of this layout too: it asserts
+    the sidecar on reopen (``assert_buckets``) and stores through ``merge``.
+
+    ``append_lineage`` writes the one ``_lineage`` table beside the tables: ``persist_graph``'s table counts and the checkpoint's
+    per-bucket rows share it.
 
     EXPERIMENTAL — the ``fmt='iceberg'`` branch: no Iceberg runtime
     jar/catalog exists in this environment, so that branch has never
@@ -396,9 +402,14 @@ class GraphWriter:
                 fh,
             )
 
-    def _assert_meta(self, path: str) -> None:
+    def assert_buckets(self, name: str) -> None:
+        """Raise ValueError when table ``name`` is stored under another
+        bucket count or partition layout; a table not stored yet passes."""
         import json
 
+        path = os.path.join(self.base_path, name)
+        if not os.path.isdir(path):
+            return
         backfill = False
         try:
             with open(self._meta_file(path), encoding="utf-8") as fh:
@@ -418,7 +429,7 @@ class GraphWriter:
             stored = self.buckets
         if stored != self.buckets:
             raise ValueError(
-                f"GraphWriter(buckets={self.buckets}) cannot merge into "
+                f"GraphWriter(buckets={self.buckets}) cannot write into "
                 f"{path} written with buckets={stored} — keys would land in "
                 f"different buckets and leave stale duplicates"
             )
@@ -446,12 +457,26 @@ class GraphWriter:
             f"(SELECT {key} FROM {batch_view})"
         )
 
-    def _bucketed(self, df: DataFrame, key: str) -> DataFrame:
-        # int (not long): a read-back partition column infers as int, and
-        # merge() unions stored rows with fresh ones
-        return df.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col(key)), F.lit(self.buckets)).cast("int"),
+    def bucket_col(self, key: str) -> Column:
+        """The bucket of ``key``: the one bucket hash of every stored table.
+        int (not long): a read-back partition column infers as int, and
+        merge() unions stored rows with fresh ones."""
+        return F.pmod(F.xxhash64(F.col(key)), F.lit(self.buckets)).cast("int")
+
+    @staticmethod
+    def _write_partitioned(
+        df: DataFrame, path: str, part_cols: list, overwrite_mode: str
+    ) -> None:
+        """The one partitioned-parquet write.  The overwrite mode is pinned
+        per write, never via session conf: ``static`` replaces the whole
+        table (stale buckets absent from ``df`` are deleted), ``dynamic``
+        replaces only the partitions ``df`` holds."""
+        (
+            df.repartition("bucket")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", overwrite_mode)
+            .partitionBy(*part_cols)
+            .parquet(path)
         )
 
     def _partition_cols(self, df: DataFrame) -> list:
@@ -472,17 +497,11 @@ class GraphWriter:
         if self.fmt == "iceberg":
             df.writeTo(f"{self.base_path}.{name}").createOrReplace()
             return f"{self.base_path}.{name}"
-        (
-            self._bucketed(df, key)
-            .repartition("bucket")
-            .write.mode("overwrite")
-            # static: write() is a FULL table replace — stale buckets absent
-            # from df must be deleted.  Pinned per-write so the semantics
-            # cannot be flipped by a session-level dynamic-overwrite setting
-            # (a caller that ran a resume/merge earlier in the same session).
-            .option("partitionOverwriteMode", "static")
-            .partitionBy(*self._partition_cols(df))
-            .parquet(path)
+        self._write_partitioned(
+            df.withColumn("bucket", self.bucket_col(key)),
+            path,
+            self._partition_cols(df),
+            "static",
         )
         self._write_meta(path)
         return path
@@ -503,10 +522,10 @@ class GraphWriter:
         path = os.path.join(self.base_path, name)
         if read_stored_table(spark, path) is None:
             return self.write(name, df, key)
-        self._assert_meta(path)
+        self.assert_buckets(name)
         # eager: the batch feeds three consumers (affected-bucket collect,
         # collision keys, the union) — materialize once
-        new = self._bucketed(df, key).localCheckpoint()
+        new = df.withColumn("bucket", self.bucket_col(key)).localCheckpoint()
         buckets = [r["bucket"] for r in new.select("bucket").distinct().collect()]
         # static partition pruning: a literal isin on the partition column —
         # the scan's PartitionFilters name ONLY affected buckets (pinned by
@@ -549,15 +568,8 @@ class GraphWriter:
                     before - after, key=lambda t: (t[0] is None, t)
                 )
             ]
-        (
-            merged
-            .repartition("bucket")
-            .write.mode("overwrite")
-            # dynamic: untouched buckets' files stay in place
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+        # dynamic: untouched buckets' files stay in place
+        self._write_partitioned(merged, path, part_cols, "dynamic")
         if stale_dirs:
             import shutil
 
@@ -565,8 +577,19 @@ class GraphWriter:
                 shutil.rmtree(d, ignore_errors=True)
         return path
 
-    def append_lineage(self, spark, stage: str, metrics: Dict[str, int]) -> None:
-        rows = [(stage, k, int(v)) for k, v in metrics.items()]
-        spark.createDataFrame(rows, "stage string, metric string, value long").write.mode(
-            "append"
-        ).parquet(os.path.join(self.base_path, "_lineage"))
+    @property
+    def lineage_path(self) -> str:
+        return os.path.join(self.base_path, "_lineage")
+
+    def append_lineage(
+        self, spark, stage: str, rows: Iterable[Tuple[Optional[int], str, int]]
+    ) -> None:
+        """Append ``(bucket, metric, value)`` rows of ``stage`` to the one
+        ``_lineage`` table: whole-table counts carry a null bucket,
+        per-bucket rows (the resume checkpoint's) the bucket they count."""
+        now = time.time()
+        spark.createDataFrame(
+            [(stage, b, m, int(v), now) for b, m, v in rows],
+            "stage string, bucket int, metric string, value long, "
+            "finished_at double",
+        ).write.mode("append").parquet(self.lineage_path)

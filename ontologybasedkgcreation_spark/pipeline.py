@@ -16,8 +16,8 @@ node hashes, df-capped for head entities.
 
 Two stages, each defined once and shared by every execution mode:
 :func:`assigned_triples` (per page, narrow — batch, checkpointed buckets and
-streams) and :func:`graph_tables` (the global reduce — batch and
-checkpointed resume).
+stream micro-batches) and :func:`graph_tables` (the global reduce — batch,
+checkpointed resume and stream micro-batches).
 """
 
 from __future__ import annotations
@@ -39,15 +39,16 @@ def assigned_triples(
 ) -> Dict[str, DataFrame]:
     """The per-page stage: pages -> {raw_triples, validated, isa, rejected,
     assigned}, all lazy.  Every narrow operator, so the same frames serve a
-    batch run, a checkpointed bucket subset and a ``readStream``.
+    batch run, a checkpointed bucket subset and a stream's micro-batch
+    (``run_pipeline`` inside ``ingest.start_graph_maintenance``).
 
     The anchor gate filters the RAW stored text BEFORE the decode
     projection: one decode per row (a filter over the projected text
     column would make Catalyst evaluate the decode UDF twice — guide §4.4,
     plan-pinned).  Pages arriving text-less pass the gate and are dropped
     by extract_from_text's own anchors.  ``cache=False``: is_a and rejects
-    are audit outputs that may recompute (and a stream cannot cache); the
-    caller decides where ``assigned`` is materialized."""
+    are audit outputs that may recompute; the caller decides where
+    ``assigned`` is materialized."""
     raw = extract_triples(
         extract_pages(pages, text_gate=anchor_gate_condition), pre_gated=True
     )
@@ -192,7 +193,9 @@ def persist_graph(
         writer.write("paragraph_nodes", out["paragraph_nodes"], key="node_key")
         all_aux = out["paragraph_edges"].unionByName(out["part_of_edges"])
         writer.write("paragraph_edges", all_aux, key="url")
-    writer.append_lineage(spark, "persist_graph", metrics)
+    writer.append_lineage(
+        spark, "persist_graph", [(None, k, v) for k, v in metrics.items()]
+    )
     return metrics
 
 

@@ -8,12 +8,15 @@ kg_creator/src/tasks.py:86-123):
 
 - The *expensive, embarrassingly-parallel* stage — text extraction, triple
   extraction, validation, property assignment (~all the CPU at 10^12
-  pages), i.e. ``pipeline.assigned_triples`` — is checkpointed: pages are
-  bucketed by ``pmod(xxhash64(url), n_buckets)`` and the per-url stage
-  output is written bucket-by-bucket with dynamic partition overwrite
-  (idempotent per bucket).  A ``_lineage`` table records (stage, bucket,
-  rows, wall-clock) after each bucket lands; on restart, finished buckets
-  are anti-joined away and only the remainder replays.
+  pages), i.e. ``pipeline.assigned_triples`` — is checkpointed in a
+  ``GraphWriter`` table: pages are bucketed by the writer's url bucket
+  hash and the per-url stage output of the pending buckets is stored with
+  ``GraphWriter.merge`` (dynamic partition overwrite, idempotent per
+  bucket).  The writer's ``_lineage`` table records one (stage, bucket,
+  rows, wall-clock) row per bucket after its rows land; on restart,
+  finished buckets are skipped and only the remainder replays.  The
+  writer's bucket-count sidecar pins the bucketing: reopening with another
+  ``n_buckets`` raises ValueError instead of mixing two hashes.
 
 - The *global reduce* — ``pipeline.graph_tables``: linking, connected
   components, consolidation, node/edge tables and the paragraph subgraph —
@@ -31,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +41,7 @@ from pyspark.sql import functions as F
 
 from .. import pipeline
 from ..ontology import Ontology, load_ontology
-from ..operators.materialize import read_stored_table
+from ..operators.materialize import GraphWriter, read_stored_table
 from ..sources.pages import extract_pages
 
 ASSIGNED_STAGE = "assigned_triples"
@@ -54,65 +56,40 @@ class CheckpointedPipeline:
         n_buckets: int = 64,
     ):
         self.spark = spark
-        self.base_path = base_path
         self.onto = onto or load_ontology()
         self.n_buckets = n_buckets
-        # NOTE: dynamic partition overwrite is requested per-write
-        # (.option("partitionOverwriteMode", "dynamic") on each bucket-scoped
-        # write below) — never via session conf, which would silently turn
-        # every OTHER partitioned overwrite in the session (e.g.
-        # GraphWriter.write's full replace) into a partial one.
-
-    # -- lineage ------------------------------------------------------------
-
-    @property
-    def lineage_path(self) -> str:
-        return os.path.join(self.base_path, "_lineage")
+        # the checkpoint table is a GraphWriter table: its bucket hash,
+        # partitioned write, bucket-count sidecar and _lineage
+        self.writer = GraphWriter(base_path, buckets=n_buckets)
 
     def done_buckets(self, stage: str) -> List[int]:
-        df = read_stored_table(self.spark, self.lineage_path)
+        """Buckets whose ``stage`` rows landed.  Raises ValueError when the
+        checkpoint was written under another bucket count: its lineage
+        names buckets of another hash."""
+        self.writer.assert_buckets(stage)
+        df = read_stored_table(self.spark, self.writer.lineage_path)
         if df is None:
             return []
-        # lineage is only valid for the bucketing it was written under —
-        # a different n_buckets re-hashes urls, so stale rows must not
-        # mark anything done (probe-found hazard)
         return [
             r["bucket"]
-            for r in df.filter(
-                (F.col("stage") == stage)
-                & (F.col("n_buckets") == self.n_buckets)
-            )
+            for r in df.filter(F.col("stage") == stage)
             .select("bucket")
             .distinct()
             .collect()
         ]
 
-    def _mark_done(self, stage: str, rows_per_bucket: Dict[int, int]) -> None:
-        now = time.time()
-        recs = [
-            (stage, int(b), int(n), float(now), int(self.n_buckets))
-            for b, n in rows_per_bucket.items()
-        ]
-        self.spark.createDataFrame(
-            recs,
-            "stage string, bucket int, rows long, finished_at double, "
-            "n_buckets int",
-        ).write.mode("append").parquet(self.lineage_path)
-
     # -- stage 1: per-url checkpointed triples -------------------------------
-
-    def _bucket(self):
-        return F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_buckets)).cast("int")
 
     def bucket_triples(self, pages: DataFrame, buckets: List[int]) -> DataFrame:
         """The assigned triples of ``buckets``' pages, + ``bucket`` — the
         per-page stage over a bucket subset.  The bucket is a function of
         the url, so the triples recompute it instead of joining back to
         the pages."""
-        subset = pages.filter(self._bucket().isin([int(b) for b in buckets]))
+        bucket = self.writer.bucket_col("url")
+        subset = pages.filter(bucket.isin([int(b) for b in buckets]))
         return pipeline.assigned_triples(self.spark, subset, self.onto)[
             "assigned"
-        ].withColumn("bucket", self._bucket())
+        ].withColumn("bucket", bucket)
 
     def run_assigned_stage(
         self, pages: DataFrame, fail_after_buckets: Optional[int] = None
@@ -122,7 +99,6 @@ class CheckpointedPipeline:
         ``fail_after_buckets`` limits how many pending buckets are processed
         this call — the crash-injection hook for resume tests.
         """
-        out_path = os.path.join(self.base_path, ASSIGNED_STAGE)
         done = set(self.done_buckets(ASSIGNED_STAGE))
         # buckets are range(n_buckets) BY CONSTRUCTION (pmod hash) — never
         # scan the input just to enumerate them (at 10^12 pages that scan
@@ -131,11 +107,12 @@ class CheckpointedPipeline:
         pending = sorted(b for b in range(self.n_buckets) if b not in done)
         if fail_after_buckets is not None:
             pending = pending[:fail_after_buckets]
+        out_path = os.path.join(self.writer.base_path, ASSIGNED_STAGE)
         if not pending:
             return out_path
 
         assigned = self.bucket_triples(pages, pending)
-        # per-bucket row counts ride the write action itself (one conditional
+        # per-bucket row counts ride the stage's one action (one conditional
         # count per pending bucket) — no second pass re-reading the output
         from pyspark.sql import Observation
 
@@ -149,19 +126,15 @@ class CheckpointedPipeline:
                 for b in pending
             ],
         )
-        (
-            assigned.repartition("bucket")
-            .write.mode("overwrite")
-            # per-write dynamic overwrite: replay replaces ONLY the buckets
-            # present in this subset, independent of session conf
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(out_path)
-        )
-        # lineage recorded only after the write committed
+        # merge replaces ONLY the pending buckets' urls (a replayed bucket
+        # is idempotent); lineage is recorded only after the write committed
+        self.writer.merge(ASSIGNED_STAGE, assigned, key="url")
         got = obs.get
-        counts = {b: int(got[f"b{b}"] or 0) for b in pending}
-        self._mark_done(ASSIGNED_STAGE, counts)
+        self.writer.append_lineage(
+            self.spark,
+            ASSIGNED_STAGE,
+            [(b, "rows", got[f"b{b}"] or 0) for b in pending],
+        )
         return out_path
 
     # -- whole run ------------------------------------------------------------

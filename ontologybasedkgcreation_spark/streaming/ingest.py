@@ -3,15 +3,11 @@
 The reference has no stream processing (Celery is a job queue, not a data
 stream — SURVEY.md §2.8); batch + checkpointed resume is the primary mode.
 This adapter exists for deployments where Common-Crawl-style snapshots land
-continuously: the batch per-page stage (``pipeline.assigned_triples``: text
-extraction, triple extraction, validation, property assignment) runs
-unchanged over a ``readStream`` → ``writeStream`` pipeline, because it is all
-stateless map-side operators.  The stateful global stages
-(linking/CC/consolidation) stay batch: either each micro-batch appends
-assigned triples to a checkpoint table (``start_triples_sink``), or each
-micro-batch builds and merges its own graph (``start_graph_maintenance``)
-and the periodic cross-batch reduce, :func:`reconcile_graph`, re-links the
-stored graph.
+continuously: each micro-batch runs the batch pipeline and merges its graph
+into the ``GraphWriter`` tables (:func:`start_graph_maintenance`), and the
+periodic cross-batch reduce, :func:`reconcile_graph`, re-links the stored
+graph.  The stored tables are the one bucketed layout the batch writer and
+the resume checkpoint use; the stream adds no layout of its own.
 
 Also included: watermarked sliding-window page-rate metrics — the standard
 late-data pattern (event-time window + watermark) over the ``warc_ts``
@@ -39,27 +35,6 @@ def read_page_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-
-
-def start_triples_sink(
-    assigned_stream: DataFrame,
-    out_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-):
-    """Append assigned triples — ``pipeline.assigned_triples(spark,
-    read_page_stream(...), onto)["assigned"]`` — to the checkpoint table;
-    exactly-once via the streaming checkpoint (resume story shared with
-    plans/resume.py)."""
-    w = (
-        assigned_stream.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
 
 
 def start_graph_maintenance(

@@ -2,7 +2,7 @@
 
 - pagerank with an explicit ``vertices`` frame that omits edge endpoints
   must not leak rank mass: endpoints are unioned in, sum(rank) == 1.
-- GraphWriter._assert_meta on a pre-sidecar directory must back-fill
+- GraphWriter.assert_buckets on a pre-sidecar directory must back-fill
   node_partition_col as None (the only layout legacy writers produced)
   and RAISE for a partition-col writer instead of blessing a mixed
   head_label=/bucket= layout.

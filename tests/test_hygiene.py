@@ -29,8 +29,6 @@ ALLOWED = {
     # this repository's own jobs
     "CheckpointedPipeline": "the resumable mode BASELINE's north rule "
     "requires",
-    "start_triples_sink": "streaming entry point (readStream -> triples "
-    "checkpoint table)",
     "start_graph_maintenance": "streaming entry point (per-micro-batch "
     "graph merge)",
     "triple_precision_recall": "the fixture P/R gate's comparator",
@@ -48,8 +46,6 @@ DEFAULTS_ALLOWED = {
     "packaged subset)",
     "start_graph_maintenance.available_now": "the trigger: a bounded "
     "replay (availableNow) or an always-on stream",
-    "start_triples_sink.available_now": "the trigger: a bounded replay "
-    "(availableNow) or an always-on stream",
     # reference paths that tests compare the fast path against
     "extract_pages.prefer_existing_text": "False re-derives text from html, "
     "the byte-identical html->text gate",

