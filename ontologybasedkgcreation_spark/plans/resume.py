@@ -32,7 +32,6 @@ edge and paragraph tables as the single-shot ``pipeline.run_pipeline``.
 
 from __future__ import annotations
 
-import json
 import os
 from typing import Dict, List, Optional
 
@@ -145,9 +144,3 @@ class CheckpointedPipeline:
         path = self.run_assigned_stage(pages)
         assigned = self.spark.read.parquet(path).drop("bucket")
         return pipeline.graph_tables(self.spark, assigned, extract_pages(pages))
-
-    def status(self) -> str:
-        done = self.done_buckets(ASSIGNED_STAGE)
-        return json.dumps(
-            {"stage": ASSIGNED_STAGE, "done_buckets": sorted(done)}
-        )

@@ -7,14 +7,22 @@ environment variable the package reads is set by one.
 
 Non-test callers: the package itself, ``__spark_entry__.py``,
 ``main_kg.py``, ``bench*.py``, ``scripts/`` and ``perfbench/``.  A
-reference is any name, attribute or import of the identifier (outside
-its own ``def``), so the scan is conservative: a method that shares its
-name with another callable counts as referenced."""
+reference to a function or class is any name, attribute or import of the
+identifier (outside its own ``def``); a method (a ``def`` in a class body,
+keyed ``Class.method``) is reached only through an attribute access
+(``x.method``), so a local variable of the same name does not count.  The
+scan stays conservative: a method that shares its name with another
+attribute counts as referenced.
+
+Two determinism rules from the project notes are checked here too: the
+partition overwrite mode is set per write, and the package draws no
+unseeded randomness."""
 
 import ast
 import collections
 import glob
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "ontologybasedkgcreation_spark"
@@ -23,12 +31,14 @@ ALLOWED = {
     # specs that tests compare the engine against
     "srp_band_cols": "the JVM SRP spec the fast mapInPandas stage is "
     "pinned bit-exact against",
-    "subclass_closure": "the Python closure spec subclass_closure_frame "
-    "is pinned against",
+    "Ontology.subclass_closure": "the Python closure spec "
+    "subclass_closure_frame is pinned against",
     # library entry points: the public API a user calls, with no caller in
     # this repository's own jobs
     "CheckpointedPipeline": "the resumable mode BASELINE's north rule "
     "requires",
+    "CheckpointedPipeline.run": "the resumable mode's whole-run entry "
+    "point",
     "start_graph_maintenance": "streaming entry point (per-micro-batch "
     "graph merge)",
     "triple_precision_recall": "the fixture P/R gate's comparator",
@@ -98,13 +108,24 @@ def _parse(path):
 
 
 def _defined():
+    """Key -> files defining it, for every package function, method and
+    class; a method is keyed ``Class.method``."""
     names = collections.defaultdict(list)
     for path in _py_files(f"{PKG}/**/*.py"):
-        for node in ast.walk(_parse(path)):
+        tree = _parse(path)
+        owner = {
+            id(item): node.name
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ClassDef)
+            for item in node.body
+        }
+        for node in ast.walk(tree):
             if isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ) and not node.name.startswith("__"):
-                names[node.name].append(os.path.relpath(path, ROOT))
+                cls = owner.get(id(node))
+                key = f"{cls}.{node.name}" if cls else node.name
+                names[key].append(os.path.relpath(path, ROOT))
     return names
 
 
@@ -124,24 +145,32 @@ def _callers():
 
 
 def _referenced_outside_tests():
-    seen = set()
+    """The ``_defined`` keys some non-test caller reaches: a method by an
+    attribute access, a function or class by any name, attribute or
+    import."""
+    names, attrs = set(), set()
     for path in _callers():
         for node in ast.walk(_parse(path)):
             if isinstance(node, ast.Name):
-                seen.add(node.id)
+                names.add(node.id)
             elif isinstance(node, ast.Attribute):
-                seen.add(node.attr)
+                attrs.add(node.attr)
             elif isinstance(node, ast.alias):
-                seen.add(node.name.rsplit(".", 1)[-1])
-    return seen
+                names.add(node.name.rsplit(".", 1)[-1])
+    return {
+        key
+        for key in _defined()
+        if key.rsplit(".", 1)[-1] in attrs
+        or ("." not in key and key in names)
+    }
 
 
 def test_no_function_is_reached_only_from_tests():
     used = _referenced_outside_tests()
     orphans = {
-        name: where
-        for name, where in _defined().items()
-        if name not in used and name not in ALLOWED
+        key: where
+        for key, where in _defined().items()
+        if key not in used and key not in ALLOWED
     }
     assert not orphans, (
         "defined in the package but referenced only from tests/ (or not "
@@ -276,3 +305,93 @@ def test_env_vars_have_a_setter():
     unset = read - named - set(ENV_ALLOWED)
     assert not unset, f"read by the package but set by nothing: {unset}"
     assert set(ENV_ALLOWED) <= read, set(ENV_ALLOWED) - read
+
+
+def test_overwrite_mode_is_set_per_write():
+    """``partitionOverwriteMode`` is set only as a per-write
+    ``.option(...)``, never session-wide (``spark.conf.set`` or a builder
+    ``.config``): a session-wide mode would change how every other
+    partitioned write replaces its table."""
+    sites = {}
+    for path in _callers():
+        tree = _parse(path)
+        per_write = {
+            id(node.args[0])
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "option"
+            and node.args
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "partitionOverwriteMode" in node.value
+            ):
+                where = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+                sites[where] = id(node) in per_write
+    assert sites, "no write sets partitionOverwriteMode"
+    session_wide = sorted(where for where, ok in sites.items() if not ok)
+    assert not session_wide, session_wide
+
+
+# calls whose result differs between runs of the same input
+UNSEEDED_CALLS = {
+    "uuid1", "uuid4", "uuid", "rand", "randn", "shuffle",
+    "monotonically_increasing_id",
+}
+_UNSEEDED_SQL = re.compile(
+    r"\b(?:" + "|".join(UNSEEDED_CALLS) + r")\s*\(", re.I
+)
+
+
+def test_no_unseeded_randomness():
+    """Re-runs give byte-identical graphs, so the package draws no
+    randomness that its input does not fix: no ``uuid``, ``rand``,
+    ``randn``, ``shuffle`` or ``monotonically_increasing_id``, as a call
+    or inside a SQL string, and ``random`` only as a seeded
+    ``random.Random(seed)``."""
+    bad = []
+    for path in _py_files(f"{PKG}/**/*.py"):
+        tree = _parse(path)
+        docstrings = {
+            id(node.value)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Expr) and isinstance(node.value, ast.Constant)
+        }
+        seeded = {
+            id(node.func)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "Random"
+            and len(node.args) == 1
+            and not node.keywords
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                hit = (getattr(f, "id", None) or getattr(f, "attr", None)) in (
+                    UNSEEDED_CALLS
+                )
+            elif isinstance(node, ast.Import):
+                hit = any(a.name == "uuid" for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                hit = node.module in ("uuid", "random")
+            elif isinstance(node, ast.Attribute):
+                # any random.<name> but a seeded random.Random, and numpy's
+                # global generator
+                base = getattr(node.value, "id", None)
+                hit = (base == "random" and id(node) not in seeded) or (
+                    base in ("np", "numpy") and node.attr == "random"
+                )
+            elif isinstance(node, ast.Constant):
+                hit = (
+                    isinstance(node.value, str)
+                    and id(node) not in docstrings
+                    and _UNSEEDED_SQL.search(node.value) is not None
+                )
+            else:
+                continue
+            if hit:
+                bad.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not bad, bad

@@ -77,19 +77,27 @@ def test_non_english_passthrough(run):
 
 
 def test_rerun_idempotence(spark, run):
+    """A re-run gives the same node and edge keys, also at another shuffle
+    partition count (the graph does not depend on the host's
+    parallelism)."""
     pages, _, out = run
-    out2 = pipeline.run_pipeline(spark, pages, with_paragraphs=False)
-    k1 = {r["node_key"] for r in out["nodes"].select("node_key").collect()}
-    k2 = {r["node_key"] for r in out2["nodes"].select("node_key").collect()}
+
+    def keys(o):
+        nodes = {r["node_key"] for r in o["nodes"].select("node_key").collect()}
+        edges = {
+            (r["src_key"], r["relationship"], r["dst_key"])
+            for r in o["edges"].collect()
+        }
+        return nodes, edges
+
+    k1, e1 = keys(out)
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        k2, e2 = keys(pipeline.run_pipeline(spark, pages, with_paragraphs=False))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", conf)
     assert k1 == k2
-    e1 = {
-        (r["src_key"], r["relationship"], r["dst_key"])
-        for r in out["edges"].collect()
-    }
-    e2 = {
-        (r["src_key"], r["relationship"], r["dst_key"])
-        for r in out2["edges"].collect()
-    }
     assert e1 == e2
 
 
