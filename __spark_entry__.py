@@ -274,14 +274,13 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_dedup_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard — the RECALL/ORACLE REFERENCE ONLY.  Do NOT copy
-    this for production: max_df=100_000 makes the shared-shingle pair join
+    this for production: its df cap (dedup.NGRAM_MAX_DF = 100_000) makes
+    the shared-shingle pair join
     effectively uncapped (quadratic on hot shingles at scale).  The shape a
     user should copy is q_dedup_jaccard_lsh (bounded LSH candidates -> exact
     verify), which returns the identical pair set here at 2.5x less cost."""
     d = _doc(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(
-        d, "doc_id", "text", n=3, threshold=0.8, max_df=100_000
-    ).select(
+    return dedup.ngram_jaccard_pairs(d, "doc_id", "text").select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         "jaccard",
@@ -292,9 +291,7 @@ def q_dedup_jaccard_lsh(spark, sf_dir):
     """The scale-safe Jaccard shape: LSH candidates -> exact verify (the
     exact pair join of q_dedup_jaccard only ever runs over candidates)."""
     d = _doc(spark, sf_dir, "documents")
-    return dedup.lsh_jaccard_pairs(
-        d, "doc_id", "text", n=3, bands=4, rows_per_band=4, threshold=0.8
-    ).select(
+    return dedup.lsh_jaccard_pairs(d, "doc_id", "text").select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         "jaccard",
@@ -303,9 +300,9 @@ def q_dedup_jaccard_lsh(spark, sf_dir):
 
 def q_minhash_lsh(spark, sf_dir):
     d = _doc(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", n=3, bands=4, rows_per_band=4
-    ).select(F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b"))
+    return dedup.minhash_lsh_pairs(d, "doc_id", "text").select(
+        F.col("a").cast("long").alias("a"), F.col("b").cast("long").alias("b")
+    )
 
 
 def q_dedup_resolve(spark, sf_dir):
@@ -316,7 +313,7 @@ def q_dedup_resolve(spark, sf_dir):
     window (left-anti pass-through), so at 100 TB the stateful work is
     bounded by the duplicate population, not the corpus."""
     d = _doc(spark, sf_dir, "documents")
-    pairs = dedup.minhash_lsh_pairs(d, "doc_id", "text", n=3, bands=4, rows_per_band=4)
+    pairs = dedup.minhash_lsh_pairs(d, "doc_id", "text")
     return dedup.resolve_duplicates(d, "doc_id", "text", pairs).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("keep_id").cast("long").alias("keep_id"),
@@ -327,7 +324,7 @@ def q_dedup_resolve(spark, sf_dir):
 def q_simhash(spark, sf_dir):
     d = _doc(spark, sf_dir, "documents")
     sig = dedup.simhash(d, "doc_id", "text")
-    return dedup.simhash_pairs(sig, max_hamming=3).select(
+    return dedup.simhash_pairs(sig).select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         F.col("hamming").cast("long").alias("hamming"),
@@ -347,7 +344,7 @@ def _query_vec(spark, sf_dir):
 def q_embedding_topk(spark, sf_dir):
     emb = _doc(spark, sf_dir, "embeddings")
     vec, _ = _query_vec(spark, sf_dir)
-    return similarity.cosine_topk(emb, vec, k=10, exclude_id=0).select(
+    return similarity.cosine_topk(emb, vec, exclude_id=0).select(
         F.col("vec_id").cast("long").alias("vec_id"), "cosine"
     )
 
@@ -355,7 +352,7 @@ def q_embedding_topk(spark, sf_dir):
 def q_embedding_ivf(spark, sf_dir):
     emb = _doc(spark, sf_dir, "embeddings")
     vec, label = _query_vec(spark, sf_dir)
-    return similarity.ivf_topk(emb, vec, label, k=10, exclude_id=0).select(
+    return similarity.ivf_topk(emb, vec, label, exclude_id=0).select(
         F.col("vec_id").cast("long").alias("vec_id"), "cosine"
     )
 
@@ -364,9 +361,10 @@ def q_embedding_neardup(spark, sf_dir):
     """Embedding-space near-duplicate pairs within label blocks (the R2
     refine-pass primitive at corpus scale).  The synthetic embeddings are
     near-orthogonal (max within-label cosine ~0.47), so the threshold is
-    calibrated to 0.35 to yield a non-trivial pair set for the oracle."""
+    calibrated to 0.35 (similarity.NEARDUP_THRESHOLD) to yield a
+    non-trivial pair set for the oracle."""
     emb = _doc(spark, sf_dir, "embeddings")
-    return similarity.cosine_neardup_pairs(emb, threshold=0.35).select(
+    return similarity.cosine_neardup_pairs(emb).select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         "cosine",
@@ -425,9 +423,9 @@ def q_ivf_assign(spark, sf_dir):
         .select("embedding")
         .collect()
     ]
-    return similarity.assign_clusters(emb, cents, label_col="assigned").select(
+    return similarity.assign_clusters(emb, cents).select(
         F.col("vec_id").cast("long").alias("vec_id"),
-        F.col("assigned").cast("long").alias("assigned"),
+        F.col("label").cast("long").alias("assigned"),
     )
 
 
@@ -450,7 +448,7 @@ def q_bm25_adopt(spark, sf_dir):
     tok = tok.join(
         tok_df.filter(F.col("df") <= 1000), ["labels_str", "token"]
     )
-    return linking.bm25_adopt_pairs(tok, quantize=9).select(
+    return linking.bm25_adopt_pairs(tok).select(
         F.col("a").cast("long").alias("a"),
         F.col("b").cast("long").alias("b"),
         "score",
@@ -639,9 +637,9 @@ def q_cooccur(spark, sf_dir):
     )
 
     d = _doc(spark, sf_dir, "documents")
-    return cooccurrence_frame(
-        d, "text", window=4, min_count=5, max_vocab=200, id_col="doc_id"
-    ).select("w", "c", F.col("n").cast("long").alias("n"))
+    return cooccurrence_frame(d).select(
+        "w", "c", F.col("n").cast("long").alias("n")
+    )
 
 
 def q_pii_redact(spark, sf_dir):
@@ -690,7 +688,7 @@ def q_boilerplate_strip(spark, sf_dir):
     )
     return strip_boilerplate(
         d.select("doc_id", "source", multi.alias("text")),
-        "doc_id", "text", "source", min_docs=3,
+        "doc_id", "text", "source",
     )
 
 
@@ -708,7 +706,7 @@ def q_decontaminate(spark, sf_dir):
     return contamination_pairs(
         d.filter(F.col("doc_id") % 50 != 0),
         d.filter(F.col("doc_id") % 50 == 0),
-        "doc_id", "text", n=3,
+        "doc_id", "text",
     ).select(
         F.col("doc").alias("doc_id"),
         F.col("eval_doc").alias("eval_id"),
@@ -728,7 +726,7 @@ def q_pack_shards(spark, sf_dir):
 
     d = _doc(spark, sf_dir, "documents")
     counts = token_stats(d, "doc_id", "text").select("doc_id", "n_ws_tokens")
-    return pack_shards(counts, "doc_id", "n_ws_tokens", 2048, n_buckets=4)
+    return pack_shards(counts, "doc_id", "n_ws_tokens", 2048)
 
 
 def q_gopher_repetition(spark, sf_dir):
@@ -774,7 +772,7 @@ def q_unigram_logprob(spark, sf_dir):
 
     d = _doc(spark, sf_dir, "documents")
     return unigram_logprob(
-        d.filter(F.col("doc_id") % 2 == 0), d, "doc_id", "text", min_count=2
+        d.filter(F.col("doc_id") % 2 == 0), d, "doc_id", "text"
     )
 
 
@@ -848,13 +846,7 @@ def q_url_filter(spark, sf_dir):
             F.concat(F.lit("/Path/"), did.cast("string"))
         ),
     )
-    return filter_urls(
-        d.select("doc_id", url.alias("url")),
-        "doc_id",
-        "url",
-        block_domains=["example.co.uk"],
-        block_path_res=[r"^/ads/"],
-    )
+    return filter_urls(d.select("doc_id", url.alias("url")), "doc_id", "url")
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -890,7 +882,7 @@ def q_asof_join(spark, sf_dir):
     views = ev.filter(F.col("event_type") == "view").select(
         "user_id", "ts", F.col("event_id").alias("view_id"), "value"
     )
-    j = asof_join(clicks, views, ["user_id"], left_ts="ts")
+    j = asof_join(clicks, views, ["user_id"])
     return j.select(
         "event_id",
         "user_id",
@@ -933,9 +925,7 @@ def q_interval_join(spark, sf_dir):
             "e"
         ),
     )
-    return interval_join(
-        lft, rgt, ["k"], "s", "e", "s", "e", bucket_width=40
-    ).select(
+    return interval_join(lft, rgt, ["k"]).select(
         "lid", "k", "s", "e", "right_rid", "right_s", "right_e"
     )
 
@@ -948,9 +938,9 @@ def q_sessionize(spark, sf_dir):
     from ontologybasedkgcreation_spark.operators.temporal import sessionize
 
     ev = _doc(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    return sessionize(
-        ev, ["user_id"], ts_col="ts", gap_us=3_600_000_000
-    ).select("event_id", "user_id", "ts", "session_index", "session_id")
+    return sessionize(ev, ["user_id"]).select(
+        "event_id", "user_id", "ts", "session_index", "session_id"
+    )
 
 
 def q_normalize_text(spark, sf_dir):
@@ -1046,7 +1036,7 @@ def q_tfidf_terms(spark, sf_dir):
     )
 
     d = _doc(spark, sf_dir, "documents")
-    return tfidf_top_terms(d, "doc_id", "text", k=5)
+    return tfidf_top_terms(d, "doc_id", "text")
 
 
 def q_quality_classifier(spark, sf_dir):
@@ -1068,12 +1058,8 @@ def q_quality_classifier(spark, sf_dir):
         d.filter(F.col("lang") != "en"),
         "doc_id",
         "text",
-        num_buckets=256,
-        iterations=3,
-        lr=1.0,
-        l2=0.1,
     )
-    return score_with_classifier(d, w, "doc_id", "text", num_buckets=256)
+    return score_with_classifier(d, w, "doc_id", "text")
 
 
 def q_importance_weights(spark, sf_dir):
@@ -1090,8 +1076,7 @@ def q_importance_weights(spark, sf_dir):
 
     d = _doc(spark, sf_dir, "documents")
     return importance_weights(
-        d, d.filter(F.col("lang") == "en"), "doc_id", "text",
-        num_buckets=1024,
+        d, d.filter(F.col("lang") == "en"), "doc_id", "text"
     )
 
 
@@ -1118,9 +1103,7 @@ def q_duplicate_spans(spark, sf_dir):
             F.lit("")
         ),
     )
-    return duplicate_spans(
-        d.select("doc_id", t.alias("text")), "doc_id", "text", n=10
-    )
+    return duplicate_spans(d.select("doc_id", t.alias("text")), "doc_id", "text")
 
 
 def q_media_bytes(spark, sf_dir):
@@ -1213,7 +1196,7 @@ def q_graph_khop(spark, sf_dir):
         (F.col("head_label") == "Region")
         & (F.element_at("props", F.lit("name")) == "ASIA")
     ).select("node_key")
-    return k_hop(edges, start, k=2, direction="in").select(
+    return k_hop(edges, start).select(
         "node_key", F.col("hops").cast("long").alias("hops")
     )
 
@@ -1240,9 +1223,7 @@ def q_graph_pagerank(spark, sf_dir):
 
     nodes, edges = _tpch_graph(spark, sf_dir)
     return pagerank(
-        edges.select("src_key", "dst_key"),
-        iterations=3,
-        vertices=nodes.select("node_key"),
+        edges.select("src_key", "dst_key"), nodes.select("node_key")
     ).select("node_key", F.round("rank", 9).alias("rank"))
 
 
@@ -1347,7 +1328,7 @@ def q_graph_communities(spark, sf_dir):
         key(F.col("doc_id")).alias("src_key"),
         key(F.col("doc_id") + 5).alias("dst_key"),
     )
-    return label_propagation(clique.unionByName(bridge), iterations=3)
+    return label_propagation(clique.unionByName(bridge))
 
 
 def q_graph_clustering(spark, sf_dir):
@@ -1432,7 +1413,7 @@ def q_robots_check(spark, sf_dir):
         .otherwise(F.lit(_ROBOTS_ODD))
         .alias("robots"),
     )
-    rules = compile_robots(robots, "host", "robots", agent="ontokg")
+    rules = compile_robots(robots, "host", "robots")
     return robots_check(urls, F.broadcast(rules), "doc_id", "host", "path")
 
 
@@ -1637,7 +1618,7 @@ def q_media_decode_jpeg(spark, sf_dir):
                 img = np.empty((16, 16), dtype=np.uint8)
                 img[:8, :8], img[:8, 8:] = v[0], v[1]
                 img[8:, :8], img[8:, 8:] = v[2], v[3]
-                dec = decode_jpeg(encode_jpeg(img, quality=95))
+                dec = decode_jpeg(encode_jpeg(img))
                 sums.append(int(dec.sum()))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "pixel_sum": sums})
 
@@ -1674,7 +1655,7 @@ def q_media_decode_video(spark, sf_dir):
                     np.full((16, 16), (int(did) * 11 + 53 * f) % 256, np.uint8)
                     for f in range(3)
                 ]
-                payload = encode_avi_mjpeg(frames, fps=10, quality=95)
+                payload = encode_avi_mjpeg(frames)
                 meta = avi_metadata(payload)
                 step = max(int(round(200 * meta["fps"] / 1000.0)), 1)
                 idx = list(range(0, meta["n_frames"], step))
@@ -1717,7 +1698,7 @@ def q_media_decode_video_raw(spark, sf_dir):
                     .astype(np.uint8)
                     for f in range(2)
                 ]
-                payload = encode_avi_raw(frames, fps=4)
+                payload = encode_avi_raw(frames)
                 dec = decode_avi(payload)
                 assert dec["compression"] == "BI_RGB"
                 sums.append(int(sum(int(fr.sum()) for fr in dec["frames"])))
@@ -1755,10 +1736,8 @@ def q_stream_window(spark, sf_dir):
     try:
         src = f"{base}/src"
         pages.coalesce(1).write.parquet(src)
-        stream = ingest.read_page_stream(spark, src, max_files_per_trigger=1_000_000)
-        metrics = ingest.page_rate_metrics(
-            stream, window="10 minutes", slide="10 minutes", watermark="1 hour"
-        )
+        stream = ingest.read_page_stream(spark, src)
+        metrics = ingest.page_rate_metrics(stream)
         q = (
             metrics.writeStream.format("memory")
             .queryName("q_stream_window_sink")
@@ -1897,9 +1876,7 @@ def q_stream_dedup(spark, sf_dir):
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
     try:
-        stream = ingest.read_page_stream(
-            spark, src, max_files_per_trigger=1_000_000
-        )
+        stream = ingest.read_page_stream(spark, src)
         q = (
             stateful.streaming_dedup_exact(stream)
             .writeStream.format("parquet")
@@ -1954,9 +1931,7 @@ def q_stream_dedup_jvm(spark, sf_dir):
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        stream = ingest.read_page_stream(
-            spark, src, max_files_per_trigger=1_000_000
-        )
+        stream = ingest.read_page_stream(spark, src)
         q = (
             stateful.streaming_dedup_exact_jvm(stream)
             .writeStream.format("parquet")

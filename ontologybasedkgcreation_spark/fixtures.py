@@ -592,7 +592,7 @@ def pages_df(spark, n_pages: int, non_en_every: int = NON_EN_EVERY):
     )
 
 
-def pages_df_distributed(spark, n_pages: int, partitions: int | None = None,
+def pages_df_distributed(spark, n_pages: int, partitions: int,
                          target_chars: int = 4200):
     """Executor-side page generation — the driver never materializes the
     corpus, so bench inputs scale to millions of pages (each page is a pure
@@ -619,7 +619,6 @@ def pages_df_distributed(spark, n_pages: int, partitions: int | None = None,
                     )
             yield pd.DataFrame(rows)
 
-    rng = spark.range(n_pages)
-    if partitions:
-        rng = rng.repartition(partitions)
-    return rng.mapInPandas(_gen, schema=PAGES_SCHEMA_DDL)
+    return spark.range(n_pages).repartition(partitions).mapInPandas(
+        _gen, schema=PAGES_SCHEMA_DDL
+    )

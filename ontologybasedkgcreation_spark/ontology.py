@@ -393,7 +393,7 @@ class Ontology:
         return closure
 
 
-def parse_owl(path: str = DEFAULT_OWL_PATH) -> Ontology:
+def parse_owl(path: str) -> Ontology:
     """Parse a NyOn Turtle file into an :class:`Ontology`."""
     if path == DEFAULT_OWL_PATH:
         # read as package data: open() cannot reach into the --py-files

@@ -36,6 +36,10 @@ import numpy as np
 
 from .jpeg import decode_jpeg, encode_jpeg
 
+# the frame rates the two encoders stamp into the AVI header
+MJPEG_FPS = 10
+RAW_FPS = 4
+
 _AVIF_HASINDEX = 0x00000010
 _AVIIF_KEYFRAME = 0x00000010
 
@@ -84,32 +88,29 @@ def _dib_to_frame(payload: bytes, w: int, h: int) -> np.ndarray:
 
 
 def encode_avi_mjpeg(
-    frames: List[np.ndarray],
-    fps: int = 10,
-    quality: int = 95,
-    subsampling: str = "444",
+    frames: List[np.ndarray], subsampling: str = "444"
 ) -> bytes:
-    """uint8 frames (all the same (H, W[, C]) shape) -> MJPEG AVI bytes.
+    """uint8 frames (all the same (H, W[, C]) shape) -> MJPEG AVI bytes at
+    MJPEG_FPS.
 
     Each frame is JPEG-encoded via :func:`.jpeg.encode_jpeg` (so the
     flat-gray q95 exactness proof carries over frame-by-frame) and laid
     into ``00dc`` chunks with a standard ``idx1`` index."""
     return _encode_avi(
         frames,
-        fps,
+        MJPEG_FPS,
         codec="MJPG",
-        encode_frame=lambda f: encode_jpeg(
-            f, quality=quality, subsampling=subsampling
-        ),
+        encode_frame=lambda f: encode_jpeg(f, subsampling=subsampling),
     )
 
 
-def encode_avi_raw(frames: List[np.ndarray], fps: int = 10) -> bytes:
-    """uint8 frames -> UNCOMPRESSED (BI_RGB 24-bit DIB) AVI bytes — the
+def encode_avi_raw(frames: List[np.ndarray]) -> bytes:
+    """uint8 frames -> UNCOMPRESSED (BI_RGB 24-bit DIB) AVI bytes at
+    RAW_FPS — the
     raw-video container path: no entropy coder anywhere, so decode is
     pure offset arithmetic + a byte shuffle.  Round-trips pixel-exactly
     for any RGB content (gray input comes back as r=g=b)."""
-    return _encode_avi(frames, fps, codec="DIB ", encode_frame=_frame_to_dib)
+    return _encode_avi(frames, RAW_FPS, codec="DIB ", encode_frame=_frame_to_dib)
 
 
 def _encode_avi(
@@ -117,8 +118,6 @@ def _encode_avi(
 ) -> bytes:
     if not frames:
         raise ValueError("encode_avi needs at least one frame")
-    if fps <= 0:
-        raise ValueError("fps must be positive")
     h, w = frames[0].shape[:2]
     payloads = []
     for f in frames:
@@ -256,7 +255,7 @@ def avi_metadata(payload: bytes) -> dict:
 
 
 def avi_frame_payloads(
-    payload: bytes, indices: Optional[List[int]] = None
+    payload: bytes, indices: Optional[List[int]]
 ) -> List[bytes]:
     """The raw JPEG bytes of each video frame chunk (``00dc``/``00db``),
     in stream order — NO pixel decoding.  ``indices`` restricts the

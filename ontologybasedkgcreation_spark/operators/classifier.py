@@ -11,12 +11,12 @@ gradient descent —
 
 - features are the engine's hashed unigram+bigram buckets
   (``text_analysis._hashed_grams`` — 60-bit md5, the stratified_sample
-  convention), so the model is ``num_buckets`` rows no matter the corpus
+  convention), so the model is NUM_BUCKETS rows no matter the corpus
   vocabulary (the hashing trick, as in DSIR's ``importance_weights``);
 - iterations are FIXED, never convergence-polled (the budgeted form at
   scale), each one: a broadcast join of the model into the feature
   table, a per-doc margin sum, a map-side-combinable per-bucket gradient
-  sum, one eager ``localCheckpoint`` on the num_buckets-row model (the
+  sum, one eager ``localCheckpoint`` on the NUM_BUCKETS-row model (the
   CC/pagerank one-action-per-round discipline);
 - the training-set size rides as a LAZY 1-row aggregate broadcast
   cross-join — no driver-side ``count()``;
@@ -33,28 +33,27 @@ from pyspark.sql import functions as F
 
 from .text_analysis import _hashed_grams
 
+# The model: NUM_BUCKETS hashed-feature weights (training and scoring must
+# share it), fit by ITERATIONS full-batch gradient steps of rate LR with
+# L2 penalty L2.
+NUM_BUCKETS = 256
+ITERATIONS = 3
+LR = 1.0
+L2 = 0.1
 
-def _features(
-    df: DataFrame, id_col: str, text_col: str, num_buckets: int
-) -> DataFrame:
+
+def _features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, bk, cnt) hashed-feature counts — raw term counts, the
     fastText bag-of-ngrams form."""
     return (
-        _hashed_grams(df, id_col, text_col, num_buckets)
+        _hashed_grams(df, id_col, text_col, NUM_BUCKETS)
         .groupBy(id_col, "bk")
         .agg(F.count("*").cast("double").alias("cnt"))
     )
 
 
 def train_quality_classifier(
-    pos: DataFrame,
-    neg: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_buckets: int = 1024,
-    iterations: int = 3,
-    lr: float = 1.0,
-    l2: float = 0.0,
+    pos: DataFrame, neg: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Fit the logistic model -> ``(bk, w)``, one row per feature bucket
     that occurs in the training set (absent buckets are implicitly 0 and
@@ -63,9 +62,9 @@ def train_quality_classifier(
     ``pos``/``neg`` are the two labeled frames (y=1 / y=0) and their id
     sets must be DISJOINT (an id on both sides would fan out the label
     join); weights start at 0 (margin 0 -> p=0.5 everywhere), each fixed
-    iteration applies one full-batch gradient step with optional L2.  At 100 TB the feature
-    table is checkpointed once and every round touches it with ONE
-    broadcast hash join (model side is ``num_buckets`` rows) — no
+    iteration applies one full-batch gradient step with L2.  At 100 TB the
+    feature table is checkpointed once and every round touches it with ONE
+    broadcast hash join (model side is NUM_BUCKETS rows) — no
     all-pairs, no driver-side vectors."""
     train = pos.select(
         F.col(id_col), F.col(text_col), F.lit(1.0).alias("y")
@@ -73,7 +72,7 @@ def train_quality_classifier(
         neg.select(F.col(id_col), F.col(text_col), F.lit(0.0).alias("y"))
     )
     feats = (
-        _features(train, id_col, text_col, num_buckets)
+        _features(train, id_col, text_col)
         .join(train.select(id_col, "y"), id_col)
         .localCheckpoint()  # reused every round — bound lineage once
     )
@@ -84,7 +83,7 @@ def train_quality_classifier(
         feats.select("bk").distinct().withColumn("w", F.lit(0.0))
         .localCheckpoint()
     )
-    for _ in range(iterations):
+    for _ in range(ITERATIONS):
         margins = (
             feats.join(F.broadcast(weights), "bk")
             .groupBy(id_col, "y")
@@ -110,10 +109,10 @@ def train_quality_classifier(
                 "bk",
                 (
                     F.col("w")
-                    - F.lit(lr)
+                    - F.lit(LR)
                     * (
                         F.coalesce("grad", F.lit(0.0))
-                        + F.lit(l2) * F.col("w")
+                        + F.lit(L2) * F.col("w")
                     )
                 ).alias("w"),
             )
@@ -123,11 +122,7 @@ def train_quality_classifier(
 
 
 def score_with_classifier(
-    df: DataFrame,
-    weights: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_buckets: int = 1024,
+    df: DataFrame, weights: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Score every document -> ``(id, score)`` with score = σ(xᵀw),
     rounded to 7 decimals (order-dependent float sums across engines);
@@ -135,7 +130,7 @@ def score_with_classifier(
     output-contract discipline).  One broadcast join + one map-side-
     combinable groupBy — the corpus shuffles only by its own id."""
     per = (
-        _features(df, id_col, text_col, num_buckets)
+        _features(df, id_col, text_col)
         .join(F.broadcast(weights), "bk", "left")
         .groupBy(id_col)
         .agg(

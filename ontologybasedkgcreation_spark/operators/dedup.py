@@ -6,7 +6,7 @@ skew-handled), engineered for the 100 TB case:
 - exact:          sha256(text) groupBy — one shuffle, map-side combinable.
 - n-gram Jaccard: shingle inverted index -> shared-shingle pair join ->
                   Jaccard filter.  The index is df-capped (drop shingles with
-                  document frequency above ``max_df``) which both bounds the
+                  document frequency above ``NGRAM_MAX_DF``) which both bounds the
                   quadratic blow-up of hot shingles AND is the standard
                   prefix-filtering-style correctness/scale tradeoff.
 - MinHash + LSH:  k per-shingle hashes -> per-doc minima -> banded bucket
@@ -32,6 +32,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# One near-dup policy, read at call time (tests set them on the module):
+# word n-gram shingle size, MinHash LSH bands x rows per band (16 hashes),
+# the Jaccard a verified pair must reach, and the n-gram index's df cap.
+SHINGLE_N = 3
+LSH_BANDS = 4
+LSH_ROWS = 4
+JACCARD_THRESHOLD = 0.8
+NGRAM_MAX_DF = 100_000
+# SimHash near-dup Hamming radius (4x16-bit bands recall it exactly)
+MAX_HAMMING = 3
+# token length of the shortest duplicated span duplicate_spans reports
+SPAN_N = 10
+
 
 # ---------------------------------------------------------------------------
 # exact
@@ -54,8 +67,9 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per document (pure built-ins).
+def shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Distinct word ``SHINGLE_N``-gram shingles per document (pure
+    built-ins).
 
     Tokenization is whitespace-RUN splitting with empty tokens dropped —
     identical on newlines/tabs/double spaces to the DuckDB oracle's
@@ -66,6 +80,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
     which compiled to a full exchange + hash aggregate over the exploded
     shingle stream in every consumer of this frame (r7: one shuffle
     removed from each of the five dedup query paths; set-identical)."""
+    n = SHINGLE_N
     toks = F.filter(
         F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
     )
@@ -97,15 +112,9 @@ def _spread(sh: DataFrame) -> DataFrame:
     return sh.repartition(n, F.col("doc"))
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.8,
-    max_df: int = 10_000,
-) -> DataFrame:
-    """(a, b, jaccard) pairs with Jaccard(shingle sets) >= threshold."""
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(a, b, jaccard) pairs with Jaccard(shingle sets) >=
+    ``JACCARD_THRESHOLD``, over the shingles of df <= ``NGRAM_MAX_DF``."""
     # the repartition spreads the shingle table before it is cached and
     # re-consumed: a small single-file corpus scans as ONE partition, and
     # without an exchange every downstream pass (pair join probes, md5
@@ -113,10 +122,10 @@ def ngram_jaccard_pairs(
     # (r7: measured 12 s single-task md5 stages).  The round-start
     # .distinct() paid the same exchange implicitly; per-doc distinctness
     # itself is the row-local array_distinct in shingles().
-    sh = _spread(shingles(df, id_col, text_col, n)).cache()
+    sh = _spread(shingles(df, id_col, text_col)).cache()
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     idx = sh.join(
-        F.broadcast(freq.filter(F.col("df") <= max_df).select("shingle")),
+        F.broadcast(freq.filter(F.col("df") <= NGRAM_MAX_DF).select("shingle")),
         "shingle",
         "left_semi",
     )
@@ -128,14 +137,12 @@ def ngram_jaccard_pairs(
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
     )
-    return _jaccard_at_least(shared, sh, threshold)
+    return _jaccard_at_least(shared, sh)
 
 
-def _jaccard_at_least(
-    shared: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
+def _jaccard_at_least(shared: DataFrame, sh: DataFrame) -> DataFrame:
     """(a, b, shared) shared-shingle counts over the (doc, shingle) table
-    ``sh`` -> (a, b, jaccard) pairs with jaccard >= threshold."""
+    ``sh`` -> (a, b, jaccard) pairs with jaccard >= JACCARD_THRESHOLD."""
     sizes = sh.groupBy("doc").agg(F.count("*").alias("nsh"))
     return (
         shared.join(sizes.select(F.col("doc").alias("a"), F.col("nsh").alias("na")), "a")
@@ -144,22 +151,20 @@ def _jaccard_at_least(
             "jaccard",
             F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a", "b", "jaccard")
     )
 
 
-def jaccard_verify(
-    candidates: DataFrame, sh: DataFrame, threshold: float = 0.8
-) -> DataFrame:
+def jaccard_verify(candidates: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact Jaccard over CANDIDATE pairs only — the scale-safe composition
     (LSH candidates -> verify).  The shared-shingle count is computed by
     probing b's shingle set with a's (one asymmetric join), so the work is
     Σ|sh(a)| over candidates, never the quadratic hot-shingle pair join of
-    :func:`ngram_jaccard_pairs` with a high ``max_df``.
+    :func:`ngram_jaccard_pairs` with a high df cap.
 
     candidates: (a, b); sh: (doc, shingle) distinct.  Returns (a, b, jaccard)
-    with jaccard >= threshold."""
+    with jaccard >= JACCARD_THRESHOLD."""
     a_sh = candidates.join(
         sh.select(F.col("doc").alias("a"), "shingle"), "a"
     )
@@ -170,26 +175,17 @@ def jaccard_verify(
         .groupBy("a", "b")
         .agg(F.count("*").alias("shared"))
     )
-    return _jaccard_at_least(shared, sh, threshold)
+    return _jaccard_at_least(shared, sh)
 
 
-def lsh_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    threshold: float = 0.8,
-) -> DataFrame:
+def lsh_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The 100 TB-shape near-dup operator: MinHash-LSH candidate generation
     followed by exact-Jaccard verification.  Bounded everywhere — banded
     bucket join for candidates, per-candidate probe join for the verify."""
-    sh = _spread(shingles(df, id_col, text_col, n)).localCheckpoint(
+    sh = _spread(shingles(df, id_col, text_col)).localCheckpoint(
         eager=False
     )
-    cand = minhash_lsh_pairs_from_shingles(sh, bands, rows_per_band)
-    return jaccard_verify(cand, sh, threshold)
+    return jaccard_verify(minhash_lsh_pairs_from_shingles(sh), sh)
 
 
 # ---------------------------------------------------------------------------
@@ -197,40 +193,32 @@ def lsh_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(
-    sh: DataFrame, n_hashes: int = 16
-) -> DataFrame:
-    """(doc, seed, minhash): per-doc minimum of md5(shingle || '#' || seed).
+def minhash_signatures(sh: DataFrame) -> DataFrame:
+    """(doc, seed, minhash): per-doc minimum of md5(shingle || '#' || seed)
+    for LSH_BANDS x LSH_ROWS seeds.
     String-ordered md5 minima are a valid permutation-min proxy and are
     byte-identical across engines (the oracle recomputes them in SQL)."""
     seeded = sh.withColumn(
-        "seed", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1)))
+        "seed",
+        F.explode(F.sequence(F.lit(0), F.lit(LSH_BANDS * LSH_ROWS - 1))),
     ).withColumn(
         "h", F.md5(F.concat_ws("#", F.col("shingle"), F.col("seed")))
     )
     return seeded.groupBy("doc", "seed").agg(F.min("h").alias("minhash"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    bands: int = 4,
-    rows_per_band: int = 4,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any full LSH band."""
-    sh = _spread(shingles(df, id_col, text_col, n))
-    return minhash_lsh_pairs_from_shingles(sh, bands, rows_per_band)
+    return minhash_lsh_pairs_from_shingles(
+        _spread(shingles(df, id_col, text_col))
+    )
 
 
-def minhash_lsh_pairs_from_shingles(
-    sh: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
+def minhash_lsh_pairs_from_shingles(sh: DataFrame) -> DataFrame:
     """LSH band join over a prebuilt (doc, shingle) table."""
-    sig = minhash_signatures(sh, bands * rows_per_band)
     banded = (
-        sig.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
+        minhash_signatures(sh)
+        .withColumn("band", (F.col("seed") / LSH_ROWS).cast("int"))
         .groupBy("doc", "band")
         .agg(
             F.concat_ws(
@@ -341,9 +329,10 @@ def hash_tokens_u64(tokens) -> "np.ndarray":
     return out
 
 
-def simhash_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_pairs(sig: DataFrame) -> DataFrame:
     """Near-dup pairs by banded SimHash: 4x16-bit bands guarantee recall for
-    Hamming distance <= 3; exact popcount verify after the band join.
+    Hamming distance <= MAX_HAMMING (3); exact popcount verify after the
+    band join.
 
     The band table is lazily checkpointed before the a/b self-join — the
     broadcast build side would otherwise re-run the Arrow signature
@@ -372,7 +361,7 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     )
     return cand.withColumn(
         "hamming", F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    ).filter(F.col("hamming") <= max_hamming).select("a", "b", "hamming")
+    ).filter(F.col("hamming") <= MAX_HAMMING).select("a", "b", "hamming")
 
 
 # ---------------------------------------------------------------------------
@@ -436,22 +425,21 @@ def contamination_pairs(
     eval_df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 13,
 ) -> DataFrame:
     """Eval-set decontamination (the GPT-3/Llama rule: a training document
     that shares any word n-gram with a benchmark document is contaminated
     and must be dropped or scrubbed): (doc, eval_doc, n_shared) with
-    n_shared = DISTINCT shared n-grams.  Production uses n=13; tests use
-    smaller n for hit density.
+    n_shared = DISTINCT shared ``SHINGLE_N``-grams (GPT-3 used 13; the
+    shingle size here is the near-dup operators' one).
 
     Scale shape: the eval side is benchmark-sized (thousands of docs /
     millions of grams — broadcastable), the training side streams through
     one explode + one broadcast-hash join + one map-side-combinable
     count: no shuffle of the 100 TB side at all.  Drop or scrub with an
     anti-join on the returned doc column."""
-    train_sh = shingles(train, id_col, text_col, n)
+    train_sh = shingles(train, id_col, text_col)
     eval_sh = (
-        shingles(eval_df, id_col, text_col, n)
+        shingles(eval_df, id_col, text_col)
         .withColumnRenamed("doc", "eval_doc")
     )
     return (
@@ -561,13 +549,12 @@ def duplicate_spans(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 50,
     gram_hash: str = "rolling",
 ) -> DataFrame:
     """Exact-substring duplicate spans — Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better"): any word n-gram that
     occurs twice or more ANYWHERE in the corpus marks its
-    occurrences as duplicated text; maximal runs of consecutive
+    occurrences as duplicated text (n = ``SPAN_N``); maximal runs of consecutive
     duplicated n-gram starts are merged into token spans
     (doc, span_start, span_end, n_dup_tokens), 0-based inclusive token
     indices.  The paper dedups at 50-token granularity over a suffix
@@ -587,6 +574,7 @@ def duplicate_spans(
     reference path (span outputs pinned identical in tests)."""
     from pyspark.sql import Window
 
+    n = SPAN_N
     if gram_hash == "rolling":
         grams = _rolling_gram_rows(df, id_col, text_col, n)
     elif gram_hash == "md5":

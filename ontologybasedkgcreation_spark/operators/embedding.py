@@ -30,7 +30,7 @@ Scale shape (100 TB):
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Optional
+from typing import Dict, Iterable, List
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -47,21 +47,21 @@ EMBED_DIM = 64
 EMBED_WINDOW = 4
 EMBED_MIN_COUNT = 2
 EMBED_MAX_VOCAB = 2_000
+# The spec ops (vocab_frame, cooccurrence_frame: the ``cooccur`` oracle
+# query) cut their vocabulary at COOCCUR_MIN_COUNT occurrences and the top
+# COOCCUR_MAX_VOCAB tokens, and pair within EMBED_WINDOW positions.
+COOCCUR_MIN_COUNT = 5
+COOCCUR_MAX_VOCAB = 200
 
 
-def vocab_frame(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = EMBED_MIN_COUNT,
-    max_vocab: int = EMBED_MAX_VOCAB,
-) -> DataFrame:
-    """(token, n): the capped vocabulary — min corpus frequency, stopwords
-    out, deterministically capped to the top ``max_vocab`` by (n desc,
-    token)."""
+def vocab_frame(docs: DataFrame) -> DataFrame:
+    """(token, n): the capped vocabulary of the ``text`` column — at least
+    COOCCUR_MIN_COUNT occurrences, stopwords out, deterministically capped
+    to the top COOCCUR_MAX_VOCAB by (n desc, token)."""
     toks = docs.select(
         F.explode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
+                F.split(F.lower(F.col("text")), r"\s+"),
                 lambda t: t != F.lit(""),
             )
         ).alias("token")
@@ -70,46 +70,31 @@ def vocab_frame(
         toks.groupBy("token")
         .agg(F.count("*").alias("n"))
         .filter(
-            (F.col("n") >= min_count)
+            (F.col("n") >= COOCCUR_MIN_COUNT)
             & ~F.col("token").isin(*EMBED_STOPWORDS)
         )
         .orderBy(F.desc("n"), "token")
-        .limit(max_vocab)
+        .limit(COOCCUR_MAX_VOCAB)
     )
 
 
-def cooccurrence_frame(
-    docs: DataFrame,
-    text_col: str = "text",
-    window: int = EMBED_WINDOW,
-    min_count: int = EMBED_MIN_COUNT,
-    max_vocab: int = EMBED_MAX_VOCAB,
-    id_col: Optional[str] = None,
-) -> DataFrame:
-    """(w, c, n) with w <= c: windowed co-occurrence counts over the capped
-    vocabulary — the distributed half of embedder training, also exposed as
-    the oracle-checked ``cooccur`` driver query (one posexplode, one
-    broadcast vocab semi-join, one windowed self-join per document, one
-    groupBy).
-
-    ``id_col``: unique document key if the corpus has one.  Default (None)
-    keys by content hash — NOT monotonically_increasing_id: mid() is
-    evaluated per OUTPUT row, so placed beside a posexplode it would give
-    every token its own "document" and the windowed self-join would find
-    zero pairs.  Caveat of the hash default: byte-identical duplicate
-    documents collapse onto one key, and the self-join then pairs their
-    token streams with each other (d copies contribute d² directed matches
-    instead of d) — pass ``id_col`` when exact counts over a
-    duplicate-bearing corpus matter."""
-    vocab_df = vocab_frame(docs, text_col, min_count, max_vocab)
-    doc_key = (
-        F.col(id_col) if id_col is not None else F.xxhash64(F.col(text_col))
-    )
+def cooccurrence_frame(docs: DataFrame) -> DataFrame:
+    """(w, c, n) with w <= c: co-occurrence counts within EMBED_WINDOW
+    positions over the :func:`vocab_frame` vocabulary of a (doc_id, text)
+    corpus — the spec of the trainer's counting
+    (:func:`cooccurrence_counts_fast`), exposed as the oracle-checked
+    ``cooccur`` driver query (one posexplode, one broadcast vocab
+    semi-join, one windowed self-join per document, one groupBy).  The
+    document key is ``doc_id`` (rows sharing one are one document to the
+    join: each row's tokens pair with every such row's), never
+    monotonically_increasing_id (evaluated per OUTPUT row beside a
+    posexplode, it would give every token its own "document")."""
+    vocab_df = vocab_frame(docs)
     toks = docs.select(
-        doc_key.alias("doc"),
+        F.col("doc_id").alias("doc"),
         F.posexplode(
             F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
+                F.split(F.lower(F.col("text")), r"\s+"),
                 lambda t: t != F.lit(""),
             )
         ).alias("pos", "token"),
@@ -128,7 +113,7 @@ def cooccurrence_frame(
         "doc",
         F.col("token").alias("w"),
         F.explode(
-            F.sequence(F.col("pos") + 1, F.col("pos") + window)
+            F.sequence(F.col("pos") + 1, F.col("pos") + EMBED_WINDOW)
         ).alias("pos"),
     )
     b = kept.select("doc", "pos", F.col("token").alias("c"))
@@ -148,15 +133,11 @@ def cooccurrence_frame(
     )
 
 
-def vocab_counts_fast(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = EMBED_MIN_COUNT,
-    max_vocab: int = EMBED_MAX_VOCAB,
-) -> DataFrame:
-    """(token, n) capped vocabulary — the batch-vectorized twin of
-    :func:`vocab_frame`, exact-count-identical (pinned by the trainer
-    parity test).  The spec op explodes every token into its own row and
+def vocab_counts_fast(docs: DataFrame) -> DataFrame:
+    """(token, n) capped vocabulary of the ``text`` column — the
+    batch-vectorized twin of :func:`vocab_frame` at EMBED_MIN_COUNT /
+    EMBED_MAX_VOCAB, exact-count-identical (pinned by the trainer parity
+    test).  The spec op explodes every token into its own row and
     hash-aggregates 10^6-10^8 rows; here each partition tokenizes its
     documents once (the explicit ASCII whitespace class — Java ``\\s``
     parity, see :func:`cooccurrence_counts_fast`) and folds the token
@@ -164,8 +145,8 @@ def vocab_counts_fast(
     object-array ``np.unique`` sort measured slower than the JVM agg it
     was meant to replace), so the shuffle carries per-partition distinct
     tokens instead of the token stream.  The filter/cap/order discipline
-    (n >= min_count, stopwords out, top ``max_vocab`` by (n desc, token))
-    is identical DataFrame code over the summed partials."""
+    (n >= min count, stopwords out, top max vocab by (n desc, token)) is
+    identical DataFrame code over the summed partials."""
     import re
 
     import pandas as pd
@@ -177,7 +158,7 @@ def vocab_counts_fast(
 
         acc: Counter = Counter()
         for pdf in batches:
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 acc.update(ws_re.split(text or ""))
         acc.pop("", None)
         if acc:
@@ -191,33 +172,28 @@ def vocab_counts_fast(
     # lowercase in the JVM, exactly as the spec op does: Python's
     # str.lower and the JVM's lower need not agree outside ASCII
     partials = docs.select(
-        F.lower(F.col(text_col)).alias(text_col)
+        F.lower(F.col("text")).alias("text")
     ).mapInPandas(_vcount, schema="token string, n long")
     return (
         partials.groupBy("token")
         .agg(F.sum("n").alias("n"))
         .filter(
-            (F.col("n") >= min_count)
+            (F.col("n") >= EMBED_MIN_COUNT)
             & ~F.col("token").isin(*EMBED_STOPWORDS)
         )
         .orderBy(F.desc("n"), "token")
-        .limit(max_vocab)
+        .limit(EMBED_MAX_VOCAB)
     )
 
 
-def cooccurrence_counts_fast(
-    docs: DataFrame,
-    vocab_tokens: List[str],
-    text_col: str = "text",
-    window: int = EMBED_WINDOW,
-) -> DataFrame:
-    """(w, c, n) with w <= c — the BATCH-VECTORIZED twin of
-    :func:`cooccurrence_frame` for a pre-collected vocabulary, bit-identical
-    by construction and pinned by the parity test (the repo's simhash
-    pattern: the DataFrame spec op stays as the ``cooccur`` oracle, the
-    numpy partial-count stage is the hot path).
+def cooccurrence_counts_fast(docs: DataFrame, vocab_tokens: List[str]) -> DataFrame:
+    """(w, c, n) with w <= c over the ``text`` column — the
+    BATCH-VECTORIZED twin of :func:`cooccurrence_frame` for a pre-collected
+    vocabulary, bit-identical by construction and pinned by the parity test
+    (the repo's simhash pattern: the DataFrame spec op stays as the
+    ``cooccur`` oracle, the numpy partial-count stage is the hot path).
 
-    Why: the spec op explodes every kept token into ``window`` probe rows
+    Why: the spec op explodes every kept token into EMBED_WINDOW probe rows
     and shuffles them through a (doc, pos) equi-join — correct and
     O(tokens x window), but at trainer shape (20k docs x ~3.3k tokens)
     that is ~260 M shuffled rows and was measured at 98 s of the 113 s
@@ -226,12 +202,10 @@ def cooccurrence_counts_fast(
     so the matrix is <= 2000^2 x 8 B = 32 MB) and emits only its nonzero
     partials; the shuffle is vocab-pair-sized, not corpus-sized.
 
-    Duplicate-document parity: the spec keys documents by
-    ``xxhash64(text)``, so d byte-identical copies collapse onto one join
-    key and contribute d^2 directed matches (documented caveat on
-    :func:`cooccurrence_frame`).  The fast path reproduces that exactly by
-    pre-grouping on the text and weighting each distinct document's count
-    matrix by d^2 — which also means duplicate text is tokenized once.
+    Duplicate documents: the fast path keys a document by its text, so d
+    byte-identical copies are ONE document — pre-grouped, tokenized once
+    and weighted d^2, the count the spec's join gives d rows sharing one
+    ``doc_id`` (each copy's tokens pair with every copy's).
 
     Tokenizer parity: the spec splits on Java regex ``\\s+`` (ASCII
     whitespace — Java's ``\\s`` has no UNICODE_CHARACTER_CLASS here);
@@ -242,6 +216,7 @@ def cooccurrence_counts_fast(
 
     import pandas as pd
 
+    window = EMBED_WINDOW  # bound here: the stage runs in executor processes
     tok2id = {t: i for i, t in enumerate(vocab_tokens)}
     n_vocab = len(vocab_tokens)
     ws_re = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -252,7 +227,7 @@ def cooccurrence_counts_fast(
         [(i, t) for i, t in enumerate(vocab_tokens)], "tid int, token string"
     )
 
-    grouped = docs.groupBy(F.col(text_col).alias("text")).agg(
+    grouped = docs.groupBy("text").agg(
         F.count("*").alias("d")
     )
 
@@ -286,8 +261,8 @@ def cooccurrence_counts_fast(
             {"wi": wi, "ci": ci, "n": counts[wi, ci]}
         )
 
-    # group on the raw text (the spec's document key), then lowercase in
-    # the JVM like the spec's tokenizer
+    # group on the raw text (the document key), then lowercase in the JVM
+    # like the spec's tokenizer
     partials = grouped.select(F.lower("text").alias("text"), "d").mapInPandas(
         _count, schema="wi int, ci int, n long"
     )
@@ -321,29 +296,27 @@ def token_cooccurrence(docs: DataFrame) -> tuple[List[tuple], Dict[str, int]]:
     The vocabulary comes from :func:`vocab_counts_fast` and the counts from
     :func:`cooccurrence_counts_fast` (numpy partial matrices); both are
     parity-pinned bit-identical to the spec ops :func:`vocab_frame` and
-    :func:`cooccurrence_frame`, which stay as the ``cooccur`` oracle."""
+    :func:`cooccurrence_frame` (at the same cuts), which stay as the
+    ``cooccur`` oracle."""
     vocab_counts = {
         r["token"]: int(r["n"])
-        for r in vocab_counts_fast(
-            docs, "text", EMBED_MIN_COUNT, EMBED_MAX_VOCAB
-        ).collect()
+        for r in vocab_counts_fast(docs).collect()
     }
-    cooc = cooccurrence_counts_fast(docs, sorted(vocab_counts), "text", EMBED_WINDOW)
+    cooc = cooccurrence_counts_fast(docs, sorted(vocab_counts))
     rows = [(r["w"], r["c"], int(r["n"])) for r in cooc.collect()]
     return rows, vocab_counts
 
 
 def ppmi_vectors(
-    rows: Iterable[tuple],
-    vocab_counts: Dict[str, int],
-    dim: int = EMBED_DIM,
+    rows: Iterable[tuple], vocab_counts: Dict[str, int]
 ) -> Dict[str, np.ndarray]:
     """(w, c, n) half-matrix + marginals -> token -> L2-normalized vector.
 
     PPMI = max(0, log(p(w,c) / (p(w) p(c)))); the symmetric PPMI matrix is
     factorized with ``eigh`` (deterministic) and each token keeps the
-    top-``dim`` eigenpairs scaled by sqrt(eigenvalue) — the symmetric SVD
+    top-EMBED_DIM eigenpairs scaled by sqrt(eigenvalue) — the symmetric SVD
     embedding of Levy & Goldberg (2014)."""
+    dim = EMBED_DIM
     vocab = sorted(vocab_counts)
     index = {t: i for i, t in enumerate(vocab)}
     v = len(vocab)
@@ -395,20 +368,16 @@ def train_corpus_embedder(docs: DataFrame):
     token vectors (stopwords and out-of-vocabulary tokens skipped) and
     L2-normalizes, so downstream SRP-LSH cosine works unchanged."""
     rows, vocab_counts = token_cooccurrence(docs)
-    vectors = ppmi_vectors(rows, vocab_counts, dim=EMBED_DIM)
-    return dict_embedder(vectors, dim=EMBED_DIM)
+    return dict_embedder(ppmi_vectors(rows, vocab_counts))
 
 
-def dict_embedder(
-    vectors: Dict[str, np.ndarray],
-    dim: Optional[int] = None,
-):
+def dict_embedder(vectors: Dict[str, np.ndarray]):
     """token->vector table (any provenance: corpus-trained above, or a
     vendored external model's rows) -> the refine_pairs_semantic embedder
     hook.  Mean-pool + L2-normalize per identity string, skipping
-    EMBED_STOPWORDS."""
-    if dim is None:
-        dim = len(next(iter(vectors.values()))) if vectors else EMBED_DIM
+    EMBED_STOPWORDS; the vectors' width (EMBED_DIM for an empty table) is
+    the embedding's."""
+    dim = len(next(iter(vectors.values()))) if vectors else EMBED_DIM
     table = {t: np.asarray(v, dtype=np.float64) for t, v in vectors.items()}
     stop = set(EMBED_STOPWORDS)
 

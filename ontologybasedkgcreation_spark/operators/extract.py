@@ -54,9 +54,11 @@ def _s(v: str) -> Dict[str, str]:
 
 # Header context: the court line and the case blocks
 _COURT_RE = re.compile(r"^IN THE ([A-Z][A-Z .]+)$", re.M)
-# the words that end a case block's first party line (matched in any case);
-# anchor_gate_condition keeps every page that holds one, which covers every
-# rule that needs the primary case
+# the words that end a case block's first party line (matched in any ASCII
+# case); anchor_gate_condition keeps every page that holds one, which covers
+# every rule that needs the primary case.  The match is ASCII-only because
+# the gate lower-cases in the JVM, where "İ" becomes two code points: a
+# Unicode case-insensitive marker would match pages the gate drops.
 CASE_MARKERS = ("appellant", "petitioner")
 # tolerant of the ellipsis form ("…" vs "..."), mixed-case markers
 # (lowercase "versus"), plural appeal numbers ("NOS.1116-1118 OF 2010"),
@@ -69,7 +71,7 @@ _CASE_BLOCK_RE = re.compile(
     r"|(?:WRIT PETITION \((?:CIVIL|CRIMINAL)\) NOS?\.\s?\d+(?:-\d+)? OF \d{4})"
     r"|(?:SPECIAL LEAVE PETITION \((?:CIVIL|CRIMINAL)\) NOS?\.\s?\d+(?:-\d+)? OF \d{4})"
     r"|(?:DIARY NO\.\s?\d+ OF \d{4}))\n"
-    r"(?P<ap>.+?) (?:…|\.{3})\s?(?P<marker>" + "|".join(CASE_MARKERS) + r")(?:\(S\))?\n"
+    r"(?P<ap>.+?) (?:…|\.{3})\s?(?P<marker>(?a:" + "|".join(CASE_MARKERS) + r"))(?:\(S\))?\n"
     r"VERSUS\n"
     r"(?P<resp>.+?) (?:…|\.{3})\s?RESPONDENT(?:\(S\))?$",
     re.M | re.I,
@@ -412,7 +414,7 @@ def extract_from_text(text: str) -> List[Triple]:
 def anchor_gate_condition():
     """JVM-side predicate pushdown for the Python extraction stage, read
     from the rule table: a page can produce a triple only if its text
-    holds a case-block marker (in any case) or the literal of a rule that
+    holds a case-block marker (in any ASCII case) or the literal of a rule that
     does not need the primary case.  Every dispatched match sits at its
     rule's literal, and a rule that needs the case emits nothing without a
     case block, so the OR is conservative by construction.  Pages failing

@@ -197,34 +197,25 @@ def match_chain(
     return out
 
 
-def k_hop(
-    edges: DataFrame,
-    start_keys: DataFrame,
-    k: int = 2,
-    direction: str = "out",
-) -> DataFrame:
-    """Nodes reachable within k hops of ``start_keys`` (a one-column frame
-    ``node_key``): (node_key, hops) with hops = shortest observed distance
-    in [0, k].  Frontier expansion — k bounded joins with a min-aggregate
-    per round, never an unbounded traversal; ``direction`` 'out' / 'in' /
-    'both' (both = the undirected neighborhood)."""
-    fwd = edges.select(
-        F.col("src_key").alias("u"), F.col("dst_key").alias("v")
-    )
-    rev = edges.select(
+# hops k_hop walks
+K_HOPS = 2
+
+
+def k_hop(edges: DataFrame, start_keys: DataFrame) -> DataFrame:
+    """Nodes within K_HOPS hops of ``start_keys`` (a one-column frame
+    ``node_key``) along INCOMING edges — the nodes with a path of at most
+    K_HOPS edges into a start node: (node_key, hops) with hops = shortest
+    observed distance in [0, K_HOPS].  Frontier expansion — K_HOPS bounded
+    joins with a min-aggregate per round, never an unbounded traversal."""
+    adj = edges.select(
         F.col("dst_key").alias("u"), F.col("src_key").alias("v")
-    )
-    adj = {
-        "out": fwd,
-        "in": rev,
-        "both": fwd.unionByName(rev),
-    }[direction].distinct()
+    ).distinct()
     seen = start_keys.select(
         F.col(start_keys.columns[0]).alias("node_key"),
         F.lit(0).alias("hops"),
     )
     frontier = seen
-    for step in range(1, k + 1):
+    for step in range(1, K_HOPS + 1):
         nxt = (
             frontier.join(adj, frontier["node_key"] == adj["u"])
             .select(F.col("v").alias("node_key"), F.lit(step).alias("hops"))
@@ -242,16 +233,14 @@ def k_hop(
     return seen
 
 
-# PageRank's damping factor
+# PageRank's damping factor and its fixed iteration count
 DAMPING = 0.85
+PAGERANK_ITERATIONS = 3
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    vertices: Optional[DataFrame] = None,
-) -> DataFrame:
-    """Fixed-iteration PageRank over the edge table -> (node_key, rank).
+def pagerank(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """Fixed-iteration PageRank over the edge table and a one-column
+    vertex frame -> (node_key, rank).
 
     The reference serves its KG from Neo4j, where centrality ranking is
     the standard Graph-Data-Science call beside the Cypher surface this
@@ -270,10 +259,9 @@ def pagerank(
     scalar N, and the dangling mass rides as a LAZY 1-row aggregate
     broadcast-cross-joined into the plan, so each round is exactly ONE
     action (the eager ``localCheckpoint`` that also bounds lineage, the
-    CC discipline).  Iterations are fixed, never convergence-polled: at
-    10^12 edges a fixed small k (3-10) is the budgeted form; pass the
-    vertex frame explicitly when it is already materialized to skip the
-    union-distinct derivation."""
+    CC discipline).  PAGERANK_ITERATIONS are fixed, never
+    convergence-polled: at 10^12 edges a fixed small k (3-10) is the
+    budgeted form."""
     fwd = edges.select(
         F.col("src_key").alias("u"), F.col("dst_key").alias("v")
     )
@@ -282,25 +270,22 @@ def pagerank(
         .unionByName(fwd.select(F.col("v").alias("node_key")))
         .distinct()
     )
-    if vertices is not None:
-        # An explicit vertex frame that omits edge endpoints would silently
-        # leak rank mass (contributions joined to missing nodes drop;
-        # out-edges from missing sources contribute nothing), breaking the
-        # sum(rank)==1 invariant — so the endpoint set is always unioned in.
-        verts = (
-            vertices.select(F.col(vertices.columns[0]).alias("node_key"))
-            .unionByName(endpoints)
-            .distinct()
-        )
-    else:
-        verts = endpoints
-    verts = verts.localCheckpoint()
+    # A vertex frame that omits edge endpoints would silently leak rank
+    # mass (contributions joined to missing nodes drop; out-edges from
+    # missing sources contribute nothing), breaking the sum(rank)==1
+    # invariant — so the endpoint set is always unioned in.
+    verts = (
+        vertices.select(F.col(vertices.columns[0]).alias("node_key"))
+        .unionByName(endpoints)
+        .distinct()
+        .localCheckpoint()
+    )
     n = verts.count()
     if n == 0:
         return verts.withColumn("rank", F.lit(0.0))
     outdeg = fwd.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iterations):
+    for _ in range(PAGERANK_ITERATIONS):
         rated = ranks.join(
             outdeg, ranks["node_key"] == outdeg["u"], "left"
         ).select("node_key", "rank", "deg")
@@ -479,7 +464,11 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
+# label_propagation's fixed round count
+LP_ITERATIONS = 3
+
+
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation ->
     ``(node_key, community)`` — the deterministic analog of Neo4j GDS
     ``labelPropagation`` (beside ``pagerank``/``triangle_count``/wcc in
@@ -491,7 +480,7 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
     keeps isolated and balanced vertices well-defined), ties broken by
     the smallest label — so updates are a pure function of the previous
     round and the result is engine- and schedule-independent, unlike the
-    asynchronous variant.  Iterations are FIXED, never
+    asynchronous variant.  LP_ITERATIONS rounds are FIXED, never
     convergence-polled (the budgeted form at scale; communities
     stabilize in a few rounds on clustered graphs).
 
@@ -517,7 +506,7 @@ def label_propagation(edges: DataFrame, iterations: int = 3) -> DataFrame:
         .distinct()
         .withColumn("community", F.col("node_key"))
     )
-    for _ in range(iterations):
+    for _ in range(LP_ITERATIONS):
         neigh = sym.join(
             labels.select(
                 F.col("node_key").alias("v"), F.col("community")

@@ -335,14 +335,18 @@ def _encode_blocks(
     return pred
 
 
+# the encoder's IJG quality: at 95 the luma DC step divides flat blocks
+# exactly, so flat images round-trip losslessly (the oracles hash that)
+JPEG_QUALITY = 95
+
+
 def encode_jpeg(
     img: np.ndarray,
-    quality: int = 90,
     subsampling: str = "444",
     restart_interval: int = 0,
 ) -> bytes:
     """(H, W, 3) RGB or (H, W) / (H, W, 1) grayscale uint8 -> baseline
-    sequential JFIF bytes.  ``subsampling``: '444' (no chroma
+    sequential JFIF bytes at JPEG_QUALITY.  ``subsampling``: '444' (no chroma
     subsampling), '422' (horizontal-only 2x1 box-averaged chroma) or
     '420' (2x2 — the dominant web shape); both subsampled modes exercise
     the decoder's upsampling path.  ``restart_interval``: emit a
@@ -363,8 +367,8 @@ def encode_jpeg(
     mcu_w, mcu_h = 8 * lh, 8 * lv
     ph, pw = -(-h // mcu_h) * mcu_h, -(-w // mcu_w) * mcu_w
 
-    qt_l = _quality_scale(_QT_LUMA_ZZ, quality)
-    qt_c = _quality_scale(_QT_CHROMA_ZZ, quality)
+    qt_l = _quality_scale(_QT_LUMA_ZZ, JPEG_QUALITY)
+    qt_c = _quality_scale(_QT_CHROMA_ZZ, JPEG_QUALITY)
 
     def pad(plane: np.ndarray) -> np.ndarray:
         return np.pad(plane, ((0, ph - h), (0, pw - w)), mode="edge")

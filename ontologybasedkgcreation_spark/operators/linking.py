@@ -67,12 +67,11 @@ STOP_TOKENS = ("of", "the", "")
 # the refine index.
 MAX_TOKEN_DF = 1_000
 # Lexical refine: probe each node's REFINE_PROBES rarest grams among those
-# with df <= PROBE_DF_CAP; accept at hashing-TF (REFINE_DIM) cosine >=
-# REFINE_THRESHOLD.
+# with df <= PROBE_DF_CAP; accept at hashing-TF (similarity.HASHING_DIM)
+# cosine >= REFINE_THRESHOLD.
 REFINE_THRESHOLD = 0.75
 REFINE_PROBES = 3
 PROBE_DF_CAP = 64
-REFINE_DIM = 256
 # Semantic refine: the reference's 0.6 gate, over an embedder trained on a
 # hash-sample of at most SEMANTIC_MAX_DOCS corpus documents; candidates
 # come from an SRP-LSH band join of SEMANTIC_LSH_BITS signature bits in
@@ -84,10 +83,12 @@ SEMANTIC_MAX_DOCS = 20_000
 SEMANTIC_LSH_BITS = 64
 SEMANTIC_BAND_BITS = 4
 # BM25 adopt (the reference's rule, utils.py:352-365): Okapi k1 and b, and
-# adopt the top-1 hit when its score exceeds BM25_ADOPT_THRESHOLD.
+# adopt the top-1 hit when its score, rounded to BM25_SCORE_DECIMALS,
+# exceeds BM25_ADOPT_THRESHOLD.
 BM25_K1 = 1.5
 BM25_B = 0.75
 BM25_ADOPT_THRESHOLD = 1.0
+BM25_SCORE_DECIMALS = 9
 # Connected components: pointer-doubling rounds before it gives up (a
 # component diameter above 2^CC_MAX_ITER raises).
 CC_MAX_ITER = 16
@@ -140,14 +141,12 @@ def _abbrev_regex(lower_table: Dict[str, str]) -> str:
     )
 
 
-def normalize_identity(
-    s: pd.Series, table: Optional[Dict[str, str]] = None
-) -> pd.Series:
+def normalize_identity(s: pd.Series, table: Dict[str, str]) -> pd.Series:
     """Vectorized: lowercase, expand abbreviations, strip commas, collapse
     whitespace.  One alternation regex covers the whole dictionary in a
     single pass, so a 508-entry file-widened table costs the same as the
     5-entry built-in."""
-    lower = _lower_table(table if table is not None else default_abbreviations())
+    lower = _lower_table(table)
     out = s.fillna("").str.lower().str.replace(",", " ", regex=False)
     if lower:
         out = out.str.replace(
@@ -156,18 +155,13 @@ def normalize_identity(
     return out.str.replace(r"\s+", " ", regex=True).str.strip()
 
 
-def normalize_identity_expr(col, abbrevs: Dict[str, str] | None = None):
+def normalize_identity_expr(col, table: Dict[str, str]):
     """JVM-side (whole-stage-codegen) equivalent of :func:`normalize_identity`
-    — a chain of ``regexp_replace`` per abbreviation entry.  Right for SMALL
-    dictionaries only (the expression tree grows per entry); use
-    :func:`normalize_identity_col` to auto-dispatch.  The default table is
-    the SAME as its siblings' (:func:`default_abbreviations`) — pass the
-    small test dictionary explicitly when you want the 5-entry built-in."""
+    over a lower-cased ``table`` — a chain of ``regexp_replace`` per
+    abbreviation entry.  Right for SMALL dictionaries only (the expression
+    tree grows per entry); :func:`normalize_identity_col` dispatches."""
     c = F.col(col) if isinstance(col, str) else col
     out = F.regexp_replace(F.lower(c), ",", " ")
-    table = (
-        abbrevs if abbrevs is not None else _lower_table(default_abbreviations())
-    )
     for k in sorted(table, key=len, reverse=True):
         out = F.regexp_replace(
             out, f"(?<![a-z0-9]){re.escape(k)}(?![a-z0-9])", table[k]
@@ -175,14 +169,13 @@ def normalize_identity_expr(col, abbrevs: Dict[str, str] | None = None):
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def normalize_identity_col(col, table: Optional[Dict[str, str]] = None):
+def normalize_identity_col(col, table: Dict[str, str]):
     """Best-plan dispatch for identity normalization: a JVM
     ``regexp_replace`` chain (whole-stage codegen, never leaves the JVM)
     while the dictionary is small, a single-pass Arrow-vectorized pandas UDF
     (one compiled alternation regex) once it is large — a 508-entry chain of
     JVM regexps is 508 passes over every identity string, the Arrow UDF is
     one."""
-    table = table if table is not None else default_abbreviations()
     if len(table) <= 50:
         return normalize_identity_expr(col, _lower_table(table))
     from pyspark.sql.functions import pandas_udf
@@ -429,9 +422,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
-def bm25_adopt_pairs(
-    tok: DataFrame, quantize: Optional[int] = None
-) -> DataFrame:
+def bm25_adopt_pairs(tok: DataFrame) -> DataFrame:
     """R5 parity: the reference's BM25 linking stage as a DataFrame plan.
 
     ``merge_node`` builds a BM25 corpus of existing constrained-key strings
@@ -458,10 +449,10 @@ def bm25_adopt_pairs(
     :data:`BM25_ADOPT_THRESHOLD`:
     (a, b) ordered keys, symmetric-closed for CC consumption.  The adopt
     score is direction-dependent, so a pair reachable from both sides keeps
-    its MAX score (deterministic).  ``quantize``: round scores to this many
-    decimals BEFORE ranking/thresholding — float sums are order-dependent
-    across engines, so the oracle-checked query pins 9 decimals (a ULP-level
-    difference must not flip a top-1 rank between engines)."""
+    its MAX score (deterministic).  Scores round to
+    :data:`BM25_SCORE_DECIMALS` BEFORE ranking/thresholding — float sums
+    are order-dependent across engines, and a ULP-level difference must
+    not flip a top-1 rank between engines (the oracle rounds the same)."""
     # per-block corpus stats: N, avgdl; per-doc length |d|
     sizes = tok.groupBy("labels_str", "pre_key").agg(
         F.count("*").alias("dl")
@@ -484,7 +475,7 @@ def bm25_adopt_pairs(
     # candidates: the containment probe, kept directed (the score is the
     # query's)
     cand = (
-        rarest_token_pairs(tok, "q", "d")
+        rarest_token_pairs(tok)
         .select("labels_str", "q", "d")
         .distinct()
     )
@@ -513,10 +504,8 @@ def bm25_adopt_pairs(
             ),
         )
         .groupBy("labels_str", "q", "d")
-        .agg(F.sum("term").alias("score"))
+        .agg(F.round(F.sum("term"), BM25_SCORE_DECIMALS).alias("score"))
     )
-    if quantize is not None:
-        scored = scored.withColumn("score", F.round(F.col("score"), quantize))
     # top-1 by (score DESC, d ASC) == struct MIN over (-score, d): score
     # negation is exact for doubles, so ordering and ties reproduce the
     # window exactly (the bm25_adopt oracle pins both)
@@ -572,14 +561,12 @@ def numeral_tokens(tokens):
     return F.sort_array(F.filter(tokens, lambda t: t.rlike("[0-9]")))
 
 
-def fuzzy_nodes(
-    linkable: DataFrame, exclude_person_props: bool = False
-) -> DataFrame:
+def fuzzy_nodes(linkable: DataFrame) -> DataFrame:
     """(labels_str, pre_key, norm_identity, num_toks) of the
-    :func:`fuzzy_eligible` nodes; ``num_toks`` (:func:`numeral_tokens`)
-    feeds :func:`numeral_guard`."""
+    :func:`fuzzy_eligible` nodes, person-prop nodes excluded; ``num_toks``
+    (:func:`numeral_tokens`) feeds :func:`numeral_guard`."""
     return linkable.filter(
-        fuzzy_eligible("props", exclude_person_props)
+        fuzzy_eligible("props", exclude_person_props=True)
     ).select(
         "labels_str",
         "pre_key",
@@ -607,11 +594,7 @@ def numeral_guard(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 def refine_pairs_semantic(
-    linkable: DataFrame,
-    embedder,
-    threshold: float = 0.75,
-    exclude_person_props: bool = False,
-    attest: Optional[DataFrame] = None,
+    linkable: DataFrame, embedder, attest: DataFrame
 ) -> DataFrame:
     """The reference-SHAPED refine pass with a pluggable embedding model
     (``refine_nodes.py:27-96``: real-model ANN kNN + gate): embed each
@@ -619,9 +602,9 @@ def refine_pairs_semantic(
     join (the engine's ANN primitive, :data:`SEMANTIC_LSH_BITS` bits in
     bands of :data:`SEMANTIC_BAND_BITS` — blocked by label set, exactly the
     reference's labels-equal merge guard, utils.py:681-688), accept at
-    exact cosine >= ``threshold``, behind the same gate stand-ins as
-    the lexical refine of :func:`lexical_pairs` (:func:`fuzzy_nodes`,
-    :func:`numeral_guard`).
+    exact cosine >= :data:`SEMANTIC_THRESHOLD`, behind the gates of the
+    lexical refine of :func:`lexical_pairs` (no CourtCase,
+    :func:`numeral_guard`) and two more.
 
     ``embedder``: ``df(pre_key, norm_identity) -> df(pre_key, embedding
     array<float/double>)`` — :func:`embedding.train_corpus_embedder`
@@ -632,11 +615,11 @@ def refine_pairs_semantic(
     closes the semantic-alias gap ("Apex Court" == "Supreme Court of
     India") — exercised end-to-end by test_embedding.
 
-    The linker's semantic refine (:func:`link_nodes`) adds two deterministic
-    stand-ins for the reference's LLM + human merge gate, justified by
-    measurement (BENCH/BASELINE.md semantic-refine section):
+    The two more are deterministic stand-ins for the reference's LLM +
+    human merge gate, justified by measurement (BENCH/BASELINE.md
+    semantic-refine section):
 
-    - ``exclude_person_props`` (:func:`fuzzy_eligible`): distinct
+    - person-prop exclusion (:func:`fuzzy_nodes`): distinct
       judges/witnesses embed at cosine 1.000 on templated corpora
       (role-twin conflation);
     - ``attest``: a (url, pre_key) mention table; a pair is accepted only
@@ -649,12 +632,12 @@ def refine_pairs_semantic(
       window join, never corpus-quadratic."""
     from .similarity import cosine_neardup_pairs_lsh
 
-    base = fuzzy_nodes(linkable, exclude_person_props)
+    base = fuzzy_nodes(linkable)
     emb = embedder(base.select("pre_key", "norm_identity"))
     joined = base.select("labels_str", "pre_key").join(emb, "pre_key")
     pairs = cosine_neardup_pairs_lsh(
         joined,
-        threshold=threshold,
+        threshold=SEMANTIC_THRESHOLD,
         id_col="pre_key",
         vec_col=emb.columns[-1],
         block_col="labels_str",
@@ -662,30 +645,28 @@ def refine_pairs_semantic(
         band_bits=SEMANTIC_BAND_BITS,
     )
     accepted = numeral_guard(pairs, base).select("a", "b")
-    if attest is not None:
-        # co-mention attestation: restrict the mention table to candidate
-        # endpoints first (few — LSH-banded + cosine-accepted), then build
-        # per-url co-mention pairs; volume is Σ_url (candidate mentions)²,
-        # tiny, never the corpus-wide mention square
-        cand_keys = (
-            accepted.select(F.col("a").alias("pre_key"))
-            .unionByName(accepted.select(F.col("b").alias("pre_key")))
-            .distinct()
-        )
-        m = (
-            attest.select("url", "pre_key")
-            .join(cand_keys, "pre_key", "left_semi")
-            .distinct()
-        )
-        co = (
-            m.select("url", F.col("pre_key").alias("a"))
-            .join(m.select("url", F.col("pre_key").alias("b")), "url")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        accepted = accepted.join(co, ["a", "b"], "left_semi")
-    return accepted
+    # co-mention attestation: restrict the mention table to candidate
+    # endpoints first (few — LSH-banded + cosine-accepted), then build
+    # per-url co-mention pairs; volume is Σ_url (candidate mentions)²,
+    # tiny, never the corpus-wide mention square
+    cand_keys = (
+        accepted.select(F.col("a").alias("pre_key"))
+        .unionByName(accepted.select(F.col("b").alias("pre_key")))
+        .distinct()
+    )
+    m = (
+        attest.select("url", "pre_key")
+        .join(cand_keys, "pre_key", "left_semi")
+        .distinct()
+    )
+    co = (
+        m.select("url", F.col("pre_key").alias("a"))
+        .join(m.select("url", F.col("pre_key").alias("b")), "url")
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+    return accepted.join(co, ["a", "b"], "left_semi")
 
 
 def probe_order(df, term, labels_str):
@@ -696,13 +677,11 @@ def probe_order(df, term, labels_str):
     return F.struct(df.alias("df"), term.alias("term"), labels_str.alias("labels_str"))
 
 
-def rarest_token_pairs(
-    tok: DataFrame, src: str = "p", dst: str = "q"
-) -> DataFrame:
-    """Directed (labels_str, src, dst) pairs of the rarest-token probe over
+def rarest_token_pairs(tok: DataFrame) -> DataFrame:
+    """Directed (labels_str, q, d) pairs of the rarest-token probe over
     a df-capped token index (labels_str, pre_key, token, df): each node
-    ``src`` probes the index with its single rarest surviving token
-    (:func:`probe_order`) and meets every other node ``dst`` of its label
+    ``q`` probes the index with its single rarest surviving token
+    (:func:`probe_order`) and meets every other node ``d`` of its label
     block holding it.  Tokens are per-node distinct (array_except is a set
     op), so no ties beyond the token ordering.  :func:`bm25_adopt_pairs`'
     candidates; the linker's containment probe is the same selection,
@@ -713,13 +692,13 @@ def rarest_token_pairs(
         .select(
             F.col("m.labels_str").alias("labels_str"),
             F.col("m.term").alias("token"),
-            F.col("pre_key").alias(src),
+            F.col("pre_key").alias("q"),
         )
     )
     return probe.join(
-        tok.select("labels_str", "token", F.col("pre_key").alias(dst)),
+        tok.select("labels_str", "token", F.col("pre_key").alias("d")),
         ["labels_str", "token"],
-    ).filter(F.col(src) != F.col(dst))
+    ).filter(F.col("q") != F.col("d"))
 
 
 def tokenized_node_frame(
@@ -727,13 +706,15 @@ def tokenized_node_frame(
 ) -> DataFrame:
     """+ norm_identity, tokens over a node frame carrying (labels_str,
     head_label, pre_key, props, identity, labels), eagerly checkpointed —
-    the input shape of :func:`link_nodes`."""
+    the input shape of :func:`link_nodes`.  ``abbrevs`` replaces the
+    linking dictionary (:func:`default_abbreviations`)."""
+    table = abbrevs if abbrevs is not None else default_abbreviations()
     return (
         with_identity
         # identity normalization: JVM regexp chain for small dictionaries,
         # single-pass Arrow UDF for a large file-widened one (see
         # normalize_identity_col)
-        .withColumn("norm_identity", normalize_identity_col("identity", abbrevs))
+        .withColumn("norm_identity", normalize_identity_col("identity", table))
         .withColumn(
             "tokens",
             F.array_except(
@@ -954,7 +935,7 @@ def lexical_pairs(linkable: DataFrame) -> DataFrame:
         .filter(
             token
             | (
-                hashing_cosine(F.col("norm_identity_a"), F.col("norm_identity_b"), REFINE_DIM)
+                hashing_cosine(F.col("norm_identity_a"), F.col("norm_identity_b"))
                 >= REFINE_THRESHOLD
             )
         )
@@ -1094,13 +1075,7 @@ def link_nodes(
     # aliases with shared contexts also pair
     if semantic_embedder is not None:
         pairs = pairs.unionByName(
-            refine_pairs_semantic(
-                linkable,
-                semantic_embedder,
-                threshold=SEMANTIC_THRESHOLD,
-                exclude_person_props=True,
-                attest=semantic_attest,
-            )
+            refine_pairs_semantic(linkable, semantic_embedder, semantic_attest)
         )
 
     # CC runs only over nodes that appear in an accepted pair (a tiny

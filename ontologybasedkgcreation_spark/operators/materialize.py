@@ -37,11 +37,8 @@ def paragraph_nodes(chained_chunks: DataFrame) -> DataFrame:
     ).dropDuplicates(["node_key"])
 
 
-def paragraph_edges(
-    chained_chunks: DataFrame,
-    case_nodes: Optional[DataFrame] = None,
-) -> DataFrame:
-    """next/previous chain edges + optional CourtCase-hasParagraph edges.
+def paragraph_edges(chained_chunks: DataFrame, case_nodes: DataFrame) -> DataFrame:
+    """next/previous chain edges + CourtCase-hasParagraph edges.
 
     ``case_nodes``: (url, node_key) of each document's primary CourtCase.
     """
@@ -59,20 +56,14 @@ def paragraph_edges(
         "url",
         F.col("char_start").alias("span_start"),
     )
-    out = nxt.unionByName(prv)
-    if case_nodes is not None:
-        has_para = (
-            chained_chunks.join(case_nodes, "url")
-            .select(
-                F.col("node_key").alias("src_key"),
-                F.lit("hasParagraph").alias("relationship"),
-                F.col("chunk_id").alias("dst_key"),
-                "url",
-                F.col("char_start").alias("span_start"),
-            )
-        )
-        out = out.unionByName(has_para)
-    return out.withColumn("triple_id", F.sha2(F.concat_ws("|", "src_key", "relationship", "dst_key"), 256))
+    has_para = chained_chunks.join(case_nodes, "url").select(
+        F.col("node_key").alias("src_key"),
+        F.lit("hasParagraph").alias("relationship"),
+        F.col("chunk_id").alias("dst_key"),
+        "url",
+        F.col("char_start").alias("span_start"),
+    )
+    return nxt.unionByName(prv).unionByName(has_para).withColumn("triple_id", F.sha2(F.concat_ws("|", "src_key", "relationship", "dst_key"), 256))
 
 
 def elect_primary_case(assigned: DataFrame, **payload) -> DataFrame:
@@ -506,7 +497,7 @@ class GraphWriter:
         self._write_meta(path)
         return path
 
-    def merge(self, name: str, df: DataFrame, key: str = "url") -> str:
+    def merge(self, name: str, df: DataFrame, key: str) -> str:
         """Upsert ``df`` into table ``name`` on ``key`` (new rows win; a key
         present in the batch replaces ALL of that key's stored rows, which is
         Neo4j-MERGE-like for url-keyed edge groups).  Re-merging the same

@@ -26,6 +26,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# rows a top-k search returns
+TOP_K = 10
+# cosine_neardup_pairs' gate: the synthetic embeddings are near-orthogonal
+# (max within-label cosine ~0.47), so 0.35 yields a non-trivial pair set
+NEARDUP_THRESHOLD = 0.35
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -59,19 +65,16 @@ def with_cosine(df: DataFrame, query_vec: Sequence[float]) -> DataFrame:
 
 
 def cosine_topk(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    exclude_id: Optional[int] = None,
+    df: DataFrame, query_vec: Sequence[float], exclude_id: int
 ) -> DataFrame:
-    """Exact brute-force top-k by cosine over ``(vec_id, embedding)`` rows
-    -> (vec_id, cosine)."""
-    scored = with_cosine(df, query_vec)
-    if exclude_id is not None:
-        scored = scored.filter(F.col("vec_id") != exclude_id)
+    """Exact brute-force top-``TOP_K`` by cosine over ``(vec_id,
+    embedding)`` rows but the query's own ``exclude_id`` -> (vec_id,
+    cosine)."""
     return (
-        scored.orderBy(F.desc("cosine"), F.col("vec_id"))
-        .limit(k)
+        with_cosine(df, query_vec)
+        .filter(F.col("vec_id") != exclude_id)
+        .orderBy(F.desc("cosine"), F.col("vec_id"))
+        .limit(TOP_K)
         .select("vec_id", "cosine")
     )
 
@@ -80,29 +83,26 @@ def ivf_topk(
     df: DataFrame,
     query_vec: Sequence[float],
     query_label: int,
-    k: int = 10,
-    exclude_id: Optional[int] = None,
+    exclude_id: int,
 ) -> DataFrame:
     """IVF over ``(vec_id, embedding, label)``: restrict search to the
     query's cluster.  The ``label`` filter is a partition-pruning predicate
     when the table is partitioned by cluster id — the 100 TB scale path."""
     pruned = df.filter(F.col("label") == query_label)
-    return cosine_topk(pruned, query_vec, k, exclude_id=exclude_id)
+    return cosine_topk(pruned, query_vec, exclude_id)
 
 
 def assign_clusters(
-    df: DataFrame,
-    centroids: Sequence[Sequence[float]],
-    label_col: str = "label",
+    df: DataFrame, centroids: Sequence[Sequence[float]]
 ) -> DataFrame:
-    """+ ``label_col``: argmax-cosine centroid assignment of the
-    ``embedding`` column, fully JVM-side.
+    """+ ``label``: argmax-cosine centroid assignment of the ``embedding``
+    column, fully JVM-side.
 
     The k centroids become literal arrays, so assignment is k codegen'd dot
     products per row — no shuffle, no Python.  Ties break to the lowest
     centroid id (deterministic).  This is the missing producer for
     :func:`ivf_topk`'s cluster labels: at 100 TB the assignment runs as one
-    narrow map and the output is written partitioned by ``label_col``."""
+    narrow map and the output is written partitioned by ``label``."""
     v = F.col("embedding").cast("array<double>")
     nv = _norm(v)
     # the cosine expression mirrors with_cosine() exactly (same fold order),
@@ -118,7 +118,7 @@ def assign_clusters(
         for i, c in enumerate(centroids)
     ]
     best = F.greatest(*scored) if len(scored) > 1 else scored[0]
-    return df.withColumn(label_col, (-best.getField("neg_id")).cast("int"))
+    return df.withColumn("label", (-best.getField("neg_id")).cast("int"))
 
 
 def _hashing_tf(texts: pd.Series, dim: int):
@@ -189,7 +189,7 @@ def hashing_feature_vectors(df: DataFrame, id_col: str, text_col: str) -> DataFr
     )
 
 
-def hashing_cosine(a, b, dim: int = 256):
+def hashing_cosine(a, b):
     """Column: cosine of the :func:`hashing_feature_vectors` vectors of the
     string columns ``a`` and ``b``, row by row in one Arrow pass.
     Bit-identical to ``_dot`` over the two feature columns cast to double:
@@ -200,20 +200,18 @@ def hashing_cosine(a, b, dim: int = 256):
 
     @pandas_udf("double")
     def _cosine(x: pd.Series, y: pd.Series) -> pd.Series:
-        prod = _hashing_tf(x, dim).astype(np.float64) * _hashing_tf(
-            y, dim
+        prod = _hashing_tf(x, HASHING_DIM).astype(np.float64) * _hashing_tf(
+            y, HASHING_DIM
         ).astype(np.float64)
         return pd.Series(np.cumsum(prod, axis=1)[:, -1])
 
     return _cosine(a, b)
 
 
-def cosine_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-) -> DataFrame:
+def cosine_neardup_pairs(df: DataFrame) -> DataFrame:
     """Embedding near-duplicate pairs within ``label`` blocks of
-    ``(vec_id, embedding, label)`` rows: (a, b, cosine).
+    ``(vec_id, embedding, label)`` rows: (a, b, cosine) with cosine >=
+    ``NEARDUP_THRESHOLD``.
 
     NOTE — recall oracle, not the scale shape: pairing is all-pairs within
     each block, O(ΣB²) over block sizes; a skewed cluster makes one block
@@ -237,7 +235,7 @@ def cosine_neardup_pairs(
         .withColumn(
             "cosine", _pair_cosine(F.col("va"), F.col("vb"))
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= NEARDUP_THRESHOLD)
         .select("a", "b", "cosine")
     )
 
@@ -290,9 +288,9 @@ def srp_signature(
     id_col: str,
     vec_col: str,
     block_col: str,
-    bits: int = 64,
-    band_bits: int = 8,
-    dim: int = 64,
+    bits: int,
+    band_bits: int,
+    dim: int,
 ) -> DataFrame:
     """(id, blk, band0..bandN) via ONE Arrow-batched numpy stage.
 
@@ -347,7 +345,7 @@ def srp_signature(
 
 def cosine_neardup_pairs_lsh(
     df: DataFrame,
-    threshold: float = 0.9,
+    threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str = "label",
@@ -364,7 +362,7 @@ def cosine_neardup_pairs_lsh(
     8 bands x 8 bits, a true pair at cosine 0.9987 misses all bands with
     probability ~1e-8 while ~96% of orthogonal pairs are never paired; the
     pytest pins pair-set EQUALITY with :func:`cosine_neardup_pairs` at the
-    same threshold on planted near-duplicates.  Replaces the reference's
+    same threshold on planted near-duplicates (0.9).  Replaces the reference's
     Qdrant kNN candidate step (refine_nodes.py:45-57) at corpus scale.
 
     The signature is ONE Arrow-batched numpy stage (:func:`srp_signature`,

@@ -6,7 +6,7 @@ query scores documents against ``EN_STOPWORDS``)."""
 
 from __future__ import annotations
 
-from typing import Dict, Sequence
+from typing import Dict
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -78,16 +78,16 @@ def redact_pii(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+# a line repeated in this many distinct documents of a group is boilerplate
+BOILERPLATE_MIN_DOCS = 3
+
+
 def strip_boilerplate(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    group_col: str,
-    min_docs: int = 3,
+    df: DataFrame, id_col: str, text_col: str, group_col: str
 ) -> DataFrame:
     """Line-level boilerplate removal (the CCNet/RefinedWeb web-pipeline
-    step): a non-empty line whose normalized hash appears in >= min_docs
-    DISTINCT documents of the same group (site/domain/source) is
+    step): a non-empty line whose normalized hash appears in >=
+    BOILERPLATE_MIN_DOCS DISTINCT documents of the same group (site/domain/source) is
     boilerplate — navigation, cookie banners, copyright footers — and is
     stripped; content lines are unique-ish and survive.  Returns
     (id, clean_text, n_boilerplate_lines) with line order preserved.
@@ -108,7 +108,7 @@ def strip_boilerplate(
         lines.filter(F.trim(F.col("_line")) != "")
         .groupBy("_grp", "_h")
         .agg(F.countDistinct(id_col).alias("_ndocs"))
-        .filter(F.col("_ndocs") >= min_docs)
+        .filter(F.col("_ndocs") >= BOILERPLATE_MIN_DOCS)
         .select("_grp", "_h", F.lit(1).alias("_b"))
     )
     marked = lines.join(boiler, ["_grp", "_h"], "left")
@@ -267,12 +267,12 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+# unigram_logprob's count floor: rarer train tokens score as unseen
+UNIGRAM_MIN_COUNT = 2
+
+
 def unigram_logprob(
-    train: DataFrame,
-    score: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_count: int = 2,
+    train: DataFrame, score: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Corpus-trained unigram LM quality score — the deterministic analog
     of CCNet's KenLM perplexity filter (Wenzek et al. 2020): documents
@@ -280,7 +280,7 @@ def unigram_logprob(
     high average negative log-probability and get bucketed/dropped.
 
     Model: ``p(t) = c_t / N`` over ``train``'s whitespace tokens with a
-    ``min_count`` floor; rarer/unseen tokens score as count 1 (the
+    ``UNIGRAM_MIN_COUNT`` floor; rarer/unseen tokens score as count 1 (the
     classic +1-style floor).  Returns per ``score`` document
     ``(id, n_tokens, n_oov, avg_neg_logprob)`` — lower is more
     corpus-typical; ``avg_neg_logprob`` is rounded to 7 decimals (float
@@ -297,7 +297,7 @@ def unigram_logprob(
     cnt = (
         tt.groupBy("t")
         .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= min_count)
+        .filter(F.col("c") >= UNIGRAM_MIN_COUNT)
     )
     tot = tt.agg(F.count("*").alias("n"))
     st = score.select(F.col(id_col), F.explode(_tokens(text_col)).alias("t"))
@@ -391,29 +391,26 @@ def canonicalize_urls(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
 
 
 # the URL schemes filter_urls lets through
+# filter_urls' blocklist: schemes kept, blocked domains, blocked path regexes
 ALLOW_SCHEMES = ("http", "https")
+BLOCK_DOMAINS = ("example.co.uk",)
+BLOCK_PATH_RES = (r"^/ads/",)
 
 
-def filter_urls(
-    df: DataFrame,
-    id_col: str,
-    url_col: str,
-    block_domains: Sequence[str] = (),
-    block_path_res: Sequence[str] = (),
-) -> DataFrame:
+def filter_urls(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     """URL-level filtering — the blocklist step every Common-Crawl pipeline
     runs before fetch-dedup (UT1/adult blocklists, link farms, non-HTTP
     schemes).  A URL is blocked when its PSL registrable domain is in
-    ``block_domains`` (so ``evil.example`` blocks every subdomain host but
+    ``BLOCK_DOMAINS`` (so ``evil.example`` blocks every subdomain host but
     never a lookalike suffix match — the reason substring blocklists
-    misfire), when any ``block_path_res`` regex matches its path+query, or
+    misfire), when any ``BLOCK_PATH_RES`` regex matches its path+query, or
     when its scheme is not in ``ALLOW_SCHEMES``.
 
     Returns (id, canon-parsed host/domain/path, blocked 0/1, block_reason)
     — callers filter ``blocked = 0``; keeping the column (instead of
     dropping rows) preserves the audit trail the curation report needs.
 
-    ``block_domains`` entries are normalized at call time with the SAME
+    ``BLOCK_DOMAINS`` entries are normalized at call time with the SAME
     PSL algorithm the column compiles to: a registrable-level entry
     (``evil.example``) matches on the ``domain`` column (all subdomains,
     no lookalikes); an entry DEEPER than its registrable domain
@@ -445,7 +442,7 @@ def filter_urls(
     domain = registrable_domain_expr(host)
     bad_scheme = ~scheme.isin(*ALLOW_SCHEMES)
     reg_entries, subtree_entries = [], []
-    for e in block_domains:
+    for e in BLOCK_DOMAINS:
         el = e.lower().strip(".")
         if not el:
             continue
@@ -463,7 +460,7 @@ def filter_urls(
     for el in subtree_entries:
         bad_domain = bad_domain | (host == el) | host.endswith("." + el)
     bad_path = F.lit(False)
-    for rx in block_path_res:
+    for rx in BLOCK_PATH_RES:
         bad_path = bad_path | pathq.rlike(rx)
     reason = (
         F.when(bad_scheme, F.lit("scheme"))
@@ -527,12 +524,12 @@ def stratified_sample(
     )
 
 
+# pack_shards' hash buckets (one ordered token stream each)
+PACK_BUCKETS = 4
+
+
 def pack_shards(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    budget: int,
-    n_buckets: int = 1,
+    df: DataFrame, id_col: str, token_col: str, budget: int
 ) -> DataFrame:
     """Sequence-packing shard assignment: documents are laid into a
     deterministic concatenated token stream (ordered by id within a hash
@@ -542,14 +539,14 @@ def pack_shards(
     "concatenate then split every N tokens" pretraining layout, expressed
     as an assignment table a writer can ``partitionBy(bucket, shard)``.
 
-    Scale shape: the running sum is a window WITHIN a bucket, so pick
-    ``n_buckets`` ≈ cluster cores and each bucket's ordered scan is
+    Scale shape: the running sum is a window WITHIN one of PACK_BUCKETS
+    buckets (≈ cluster cores), so each bucket's ordered scan is
     executor-sized — one hash exchange, no global sort, no driver state.
     The bucket hash is md5-based (engine-portable, stable across runs);
-    n_buckets=1 reproduces the strict single-stream layout."""
+    one bucket would be the strict single-stream layout."""
     from pyspark.sql import Window
 
-    bucket = _hash60(F.col(id_col).cast("string")) % n_buckets
+    bucket = _hash60(F.col(id_col).cast("string")) % PACK_BUCKETS
     w = (
         Window.partitionBy("bucket")
         .orderBy(id_col)
@@ -595,12 +592,12 @@ def _hashed_grams(df: DataFrame, id_col: str, text_col: str,
     return g.select(id_col, bucket.alias("bk"))
 
 
+# importance_weights' hashed-feature buckets
+IMPORTANCE_BUCKETS = 1024
+
+
 def importance_weights(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_buckets: int = 8192,
+    raw: DataFrame, target: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """DSIR-style hashed n-gram importance weights (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): score
@@ -610,7 +607,7 @@ def importance_weights(
 
         log w(x) = sum_{g in grams(x)} [ log p_tgt(b(g)) - log p_raw(b(g)) ]
 
-    with Laplace +1 smoothing over ``num_buckets``.  Selecting the top
+    with Laplace +1 smoothing over ``IMPORTANCE_BUCKETS``.  Selecting the top
     weights (or hash-sampling proportionally — ``stratified_sample``
     composes downstream) reweights raw web text toward the target domain;
     this is the standard importance-resampling curation step of a
@@ -621,21 +618,21 @@ def importance_weights(
     unigram_logprob output-contract discipline).  ``log_weight`` rounds
     to 7 decimals (order-dependent float sums across engines).
 
-    Scale shape: the two distribution tables are ``num_buckets`` rows
+    Scale shape: the two distribution tables are IMPORTANCE_BUCKETS rows
     (map-side combinable groupBys, broadcast into the scoring join), the
     corpus totals ride as LAZY 1-row broadcast cross-joins (no driver
     action), and scoring is one (id, bucket) pre-aggregation + one
     broadcast join + one map-side-combinable groupBy on the id — the raw
-    corpus is never shuffled except by its own id.  num_buckets bounds
+    corpus is never shuffled except by its own id.  The bucket count bounds
     model size independently of corpus vocabulary, which is the point of
     the hashing trick at 100 TB."""
-    rg = _hashed_grams(raw, id_col, text_col, num_buckets)
-    tg = _hashed_grams(target, id_col, text_col, num_buckets)
+    rg = _hashed_grams(raw, id_col, text_col, IMPORTANCE_BUCKETS)
+    tg = _hashed_grams(target, id_col, text_col, IMPORTANCE_BUCKETS)
     raw_cnt = rg.groupBy("bk").agg(F.count("*").alias("rc"))
     tgt_cnt = tg.groupBy("bk").agg(F.count("*").alias("tc"))
     raw_tot = rg.agg(F.count("*").alias("rn"))
     tgt_tot = tg.agg(F.count("*").alias("tn"))
-    b = F.lit(float(num_buckets))
+    b = F.lit(float(IMPORTANCE_BUCKETS))
     term = F.log(
         (F.coalesce(F.col("tc"), F.lit(0)) + 1).cast("double")
         / (F.col("tn").cast("double") + b)
@@ -668,13 +665,12 @@ def importance_weights(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-) -> DataFrame:
-    """Top-k TF-IDF terms per document ->
+# terms tfidf_top_terms keeps per document
+TFIDF_TOP_K = 5
+
+
+def tfidf_top_terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Top-TFIDF_TOP_K TF-IDF terms per document ->
     ``(id, term, tf, doc_freq, score, rank)`` — the classic keyword /
     salient-term extraction step (corpus profiling, retrieval indexing,
     topic labeling over web text).
@@ -734,7 +730,7 @@ def tfidf_top_terms(
     return (
         scored.withColumn(
             "rank", F.row_number().over(w).cast("long")
-        ).filter(F.col("rank") <= k)
+        ).filter(F.col("rank") <= TFIDF_TOP_K)
     )
 
 

@@ -48,14 +48,13 @@ def extract_links(
     return links.filter(F.col("link").rlike("^https?://")).distinct()
 
 
-def compile_robots(
-    df: DataFrame,
-    host_col: str,
-    content_col: str,
-    agent: str = "ontokg",
-) -> DataFrame:
-    """Parse robots.txt files (RFC 9309) -> one row per applicable rule:
-    ``(host, allow, pattern, pattern_len, like_pattern)``.
+# the product token this crawler's robots.txt groups are matched by
+ROBOTS_AGENT = "ontokg"
+
+
+def compile_robots(df: DataFrame, host_col: str, content_col: str) -> DataFrame:
+    """Parse robots.txt files (RFC 9309) -> one row per rule that applies
+    to ROBOTS_AGENT: ``(host, allow, pattern, pattern_len, like_pattern)``.
 
     Group semantics per the RFC: lines are grouped under their
     ``User-agent`` stanzas; the MOST SPECIFIC matching agent's group(s)
@@ -71,7 +70,7 @@ def compile_robots(
     and per-host — the Python cost is per FILE, never per URL)."""
     import pandas as pd
 
-    agent_low = agent.lower()
+    agent_low = ROBOTS_AGENT.lower()
 
     def _rules(content: str):
         groups = []  # (agent_tokens, rules)

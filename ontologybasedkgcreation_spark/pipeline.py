@@ -114,7 +114,8 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     onto: Optional[Ontology] = None,
-    with_paragraphs: bool = True,
+    *,
+    with_paragraphs: bool,
     writer: Optional[materialize.GraphWriter] = None,
     semantic_min_pages: int = 1_000,
 ) -> Dict[str, DataFrame]:

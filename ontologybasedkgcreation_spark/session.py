@@ -96,7 +96,7 @@ def _warn_if_heap_below(spark: SparkSession, fitted: str) -> None:
 
 
 def get_spark(
-    app_name: str = "ontokg-spark",
+    app_name: str,
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,

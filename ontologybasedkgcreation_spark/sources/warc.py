@@ -47,7 +47,7 @@ WARC_SCHEMA = (
 
 def encode_warc(
     records: List[Tuple[Dict[str, str], bytes]],
-    gzip_each: bool = False,
+    gzip_each: bool,
 ) -> bytes:
     """Serialize (headers, payload) records to WARC/1.0 bytes.
 

@@ -24,15 +24,20 @@ from ..ontology import load_ontology
 PAGES_SCHEMA_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+# parquet drops one page-stream trigger reads at most
+MAX_FILES_PER_TRIGGER = 1_000_000
+# page_rate_metrics: event-time window length, slide and watermark delay
+RATE_WINDOW = "10 minutes"
+RATE_SLIDE = "10 minutes"
+RATE_WATERMARK = "1 hour"
 
 
-def read_page_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int = 8
-) -> DataFrame:
-    """File-source stream of page snapshot parquet drops."""
+def read_page_stream(spark: SparkSession, input_path: str) -> DataFrame:
+    """File-source stream of page snapshot parquet drops, at most
+    MAX_FILES_PER_TRIGGER per trigger."""
     return (
         spark.readStream.schema(PAGES_SCHEMA_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_path)
     )
 
@@ -151,17 +156,12 @@ def reconcile_graph(spark: SparkSession, writer) -> dict:
     return {"nodes": linked["nodes"], "edges": rewired, "mapping": mapping}
 
 
-def page_rate_metrics(
-    pages_stream: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def page_rate_metrics(pages_stream: DataFrame) -> DataFrame:
     """Watermarked sliding-window ingest metrics by language (late rows beyond
-    the watermark are dropped from the aggregation state)."""
+    the RATE_WATERMARK are dropped from the aggregation state)."""
     return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window, slide), "lang")
+        pages_stream.withWatermark("warc_ts", RATE_WATERMARK)
+        .groupBy(F.window("warc_ts", RATE_WINDOW, RATE_SLIDE), "lang")
         .agg(
             F.count("*").alias("n_pages"),
             F.sum(F.octet_length("text")).alias("n_bytes"),

@@ -74,7 +74,6 @@ def test_shingles_multiwhitespace_matches_oracle(spark, tmp_path):
             spark.read.parquet(os.path.join(sf, "documents.parquet")),
             "doc_id",
             "text",
-            n=3,
         ).collect()
     }
     con = duckdb.connect()

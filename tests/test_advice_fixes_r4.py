@@ -250,7 +250,7 @@ def test_lsh_neardup_empty_frame(spark):
     empty = spark.createDataFrame(
         [], "vec_id string, embedding array<double>, label string"
     )
-    out = cosine_neardup_pairs_lsh(empty, dim=None)
+    out = cosine_neardup_pairs_lsh(empty, threshold=0.9)
     assert out.columns == ["a", "b", "cosine"]
     assert out.count() == 0
 
@@ -266,11 +266,15 @@ def test_refine_semantic_empty_block(spark):
     )
 
     linkable = spark.createDataFrame(
-        [("CourtCase", "CourtCase", "k1", "case 1", ["case", "1"])],
+        [("CourtCase", "CourtCase", "k1", {"hasCaseID": "case 1"}, "case 1",
+          ["case", "1"])],
         "labels_str string, head_label string, pre_key string, "
-        "norm_identity string, tokens array<string>",
+        "props map<string,string>, norm_identity string, tokens array<string>",
     )
+    attest = spark.createDataFrame([("u1", "k1")], "url string, pre_key string")
     out = refine_pairs_semantic(
-        linkable, lambda df: hashing_feature_vectors(df, "pre_key", "norm_identity")
+        linkable,
+        lambda df: hashing_feature_vectors(df, "pre_key", "norm_identity"),
+        attest,
     )
     assert out.count() == 0

@@ -40,7 +40,7 @@ def test_pagerank_explicit_vertices_missing_endpoints(spark):
     )
     # 'c' and 'd' are deliberately missing; 'x' is an extra isolated node
     verts = spark.createDataFrame([("a",), ("b",), ("x",)], "node_key string")
-    ranks = pagerank(edges, iterations=3, vertices=verts)
+    ranks = pagerank(edges, verts)
     got = {r["node_key"]: r["rank"] for r in ranks.collect()}
     assert set(got) == {"a", "b", "c", "d", "x"}
     assert abs(sum(got.values()) - 1.0) < 1e-9
@@ -126,7 +126,7 @@ def test_strip_boilerplate_null_text_passthrough(spark):
     got = {
         r["doc_id"]: r
         for r in text_analysis.strip_boilerplate(
-            df, "doc_id", "text", "source", min_docs=3
+            df, "doc_id", "text", "source"
         ).collect()
     }
     assert set(got) == {1, 2, 3, 4}

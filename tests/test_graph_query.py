@@ -189,36 +189,34 @@ def test_match_property_filter(spark, graph):
 
 
 def test_k_hop_neighborhood(spark, graph):
-    """Undirected 2-hop neighborhood of one CourtCase: hop 1 is exactly its
-    direct edges' endpoints; hops are shortest distances (never > k, start
-    at 0)."""
+    """2-hop in-neighborhood of one Court: hop 1 is exactly the sources of
+    its incoming edges; hops are shortest distances (never > K_HOPS, start
+    at 0), and a hand-built chain reaches hop 2."""
     nodes, edges = graph
     start = (
-        nodes.filter(F.col("head_label") == "CourtCase")
-        .filter(F.element_at("props", F.lit("hasCaseName")).isNotNull())
-        .select("node_key")
-        .limit(1)
+        nodes.filter(F.col("head_label") == "Court").select("node_key").limit(1)
     )
     start_key = start.first()["node_key"]
-    got = {r["node_key"]: r["hops"] for r in
-           k_hop(edges, start, k=2, direction="both").collect()}
+    got = {r["node_key"]: r["hops"] for r in k_hop(edges, start).collect()}
     assert got[start_key] == 0
     direct = {
-        r["k"]
-        for r in edges.filter(
-            (F.col("src_key") == start_key) | (F.col("dst_key") == start_key)
-        )
-        .select(
-            F.when(F.col("src_key") == start_key, F.col("dst_key"))
-            .otherwise(F.col("src_key"))
-            .alias("k")
-        )
-        .collect()
-        if r["k"] != start_key
+        r["src_key"]
+        for r in edges.filter(F.col("dst_key") == start_key).collect()
+        if r["src_key"] != start_key
     }
-    assert {k for k, h in got.items() if h == 1} == direct
+    assert direct and {k for k, h in got.items() if h == 1} == direct
     assert all(0 <= h <= 2 for h in got.values())
-    assert any(h == 2 for h in got.values())
+    chain = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "b"), ("a", "c"), ("c", "e")],
+        "src_key string, dst_key string",
+    )
+    got2 = {
+        r["node_key"]: r["hops"]
+        for r in k_hop(
+            chain, spark.createDataFrame([("c",)], "node_key string")
+        ).collect()
+    }
+    assert got2 == {"c": 0, "b": 1, "a": 1, "d": 2}
 
 
 def test_label_connections_schema_summary(spark, graph):
@@ -236,7 +234,7 @@ def test_label_connections_schema_summary(spark, graph):
     }
 
 
-def test_pagerank_matches_reference_iteration(spark):
+def test_pagerank_matches_reference_iteration(spark, monkeypatch):
     """pagerank == an independent pure-Python power iteration on a small
     graph with a sink (dangling mass must be redistributed, so ranks sum
     to 1 every round), and more-cited nodes outrank less-cited ones."""
@@ -261,10 +259,14 @@ def test_pagerank_matches_reference_iteration(spark):
             }
         return r
 
+    from ontologybasedkgcreation_spark.operators import graph_query
+
+    endpoints_only = spark.createDataFrame([], "node_key string")
     for iters in (1, 3):
+        monkeypatch.setattr(graph_query, "PAGERANK_ITERATIONS", iters)
         got = {
             row["node_key"]: row["rank"]
-            for row in pagerank(edges, iterations=iters).collect()
+            for row in pagerank(edges, endpoints_only).collect()
         }
         want = ref(iters)
         assert set(got) == set(want)
@@ -272,16 +274,16 @@ def test_pagerank_matches_reference_iteration(spark):
             assert got[v] == pytest.approx(want[v], abs=1e-12)
         assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
     # the sink collects every path: it must rank highest
-    final = {r["node_key"]: r["rank"] for r in pagerank(edges).collect()}
+    final = {
+        r["node_key"]: r["rank"] for r in pagerank(edges, endpoints_only).collect()
+    }
     assert max(final, key=final.get) == "c"
     # explicit vertex frame: isolated nodes get teleport-only mass
     verts = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("d",), ("lonely",)], "node_key string"
     )
-    with_iso = {
-        r["node_key"]: r["rank"]
-        for r in pagerank(edges, iterations=2, vertices=verts).collect()
-    }
+    monkeypatch.setattr(graph_query, "PAGERANK_ITERATIONS", 2)
+    with_iso = {r["node_key"]: r["rank"] for r in pagerank(edges, verts).collect()}
     assert "lonely" in with_iso and with_iso["lonely"] > 0
     assert sum(with_iso.values()) == pytest.approx(1.0, abs=1e-9)
 
@@ -296,7 +298,7 @@ def test_pagerank_over_engine_graph(spark, graph):
         (r["src_key"], r["dst_key"])
         for r in edges.select("src_key", "dst_key").collect()
     ]
-    pr = pagerank(edges.select("src_key", "dst_key"), iterations=3)
+    pr = pagerank(edges.select("src_key", "dst_key"), edges.select("src_key"))
     got = {r["node_key"]: r["rank"] for r in pr.collect()}
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
     assert all(v > 0 for v in got.values())
@@ -400,7 +402,7 @@ def test_label_propagation_two_communities(spark):
     )
     got = {
         r["node_key"]: r["community"]
-        for r in label_propagation(edges, iterations=3).collect()
+        for r in label_propagation(edges).collect()
     }
     assert got == {
         "a": "a", "b": "a", "c": "a",

@@ -2,8 +2,10 @@
 caller outside ``tests/``.  A helper only tests reach is either dead or a
 test-only twin of production code; delete it with its tests, or name it
 in ALLOWED with the reason it stays.  Likewise every defaulted parameter
-is passed by some non-test caller (else it is a constant), and every
-environment variable the package reads is set by one.
+is passed by some non-test call (else it is a constant) and left out by
+another (else it is a constant or required), and every environment
+variable the package reads is set by one.  Every package call perfbench
+makes binds to today's signature.
 
 Non-test callers: the package itself, ``__spark_entry__.py``,
 ``main_kg.py``, ``bench*.py``, ``scripts/`` and ``perfbench/``.  A
@@ -14,13 +16,16 @@ keyed ``Class.method``) is reached only through an attribute access
 scan stays conservative: a method that shares its name with another
 attribute counts as referenced.
 
-Two determinism rules from the project notes are checked here too: the
-partition overwrite mode is set per write, and the package draws no
-unseeded randomness."""
+Rules from the project notes are checked here too: the partition
+overwrite mode is set per write, the package draws no unseeded
+randomness, counts ride writes rather than a count() beside them, and
+the names the notes list as gone stay gone."""
 
 import ast
 import collections
 import glob
+import importlib
+import inspect
 import os
 import re
 
@@ -79,6 +84,16 @@ DEFAULTS_ALLOWED = {
     "match_chain.label_scope": "'head' reads the head_label-partitioned "
     "node layout main_kg.py writes as a partition prune",
     "pages_df.non_en_every": "the fixture's Hindi share (0 = all English)",
+}
+
+
+# defaulted parameters (``function.parameter``) that every non-test call
+# passes, each with the reason the default stays
+DEFAULTS_UNUSED_ALLOWED = {
+    "extract_triples.pre_gated": "perfbench passes it by keyword; the "
+    "benchmark's calls change only with the benchmark",
+    "validate_triples.cache": "perfbench passes it by keyword; the "
+    "benchmark's calls change only with the benchmark",
 }
 
 
@@ -209,9 +224,9 @@ def _defaulted_params():
 
 
 def _calls_outside_tests():
-    """Callee name -> (most positional arguments one call passes, the
-    keywords calls pass, whether a call spreads ``*args``/``**kwargs``)."""
-    calls = collections.defaultdict(lambda: (0, frozenset(), False))
+    """Callee name -> one (positional argument count, keywords, whether it
+    spreads ``*args``/``**kwargs``) triple per non-test call."""
+    calls = collections.defaultdict(list)
     for path in _callers():
         for node in ast.walk(_parse(path)):
             if not isinstance(node, ast.Call):
@@ -220,15 +235,19 @@ def _calls_outside_tests():
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             if name is None:
                 continue
-            npos, kws, spread = calls[name]
-            calls[name] = (
-                max(npos, len(node.args)),
-                kws | {k.arg for k in node.keywords if k.arg},
-                spread
-                or any(isinstance(x, ast.Starred) for x in node.args)
+            calls[name].append((
+                len(node.args),
+                frozenset(k.arg for k in node.keywords if k.arg),
+                any(isinstance(x, ast.Starred) for x in node.args)
                 or any(k.arg is None for k in node.keywords),
-            )
+            ))
     return calls
+
+
+def _passes(call, param, pos):
+    """Whether a call passes the parameter: by position or keyword."""
+    npos, kws, _ = call
+    return param in kws or (pos is not None and npos > pos)
 
 
 def test_defaults_are_set_outside_tests():
@@ -237,17 +256,173 @@ def test_defaults_are_set_outside_tests():
     is in DEFAULTS_ALLOWED.  A value only tests vary is a test-only fork:
     make it a module constant and let tests monkeypatch it."""
     calls = _calls_outside_tests()
-    unset = set()
-    for fn, param, pos in _defaulted_params():
-        npos, kws, spread = calls.get(fn, (0, frozenset(), False))
-        if not (spread or param in kws or (pos is not None and npos > pos)):
-            unset.add(f"{fn}.{param}")
+    unset = {
+        f"{fn}.{param}"
+        for fn, param, pos in _defaulted_params()
+        if not any(c[2] or _passes(c, param, pos) for c in calls[fn])
+    }
     assert not unset - set(DEFAULTS_ALLOWED), (
         "defaulted but never passed outside tests/: "
         f"{sorted(unset - set(DEFAULTS_ALLOWED))}"
     )
     stale = set(DEFAULTS_ALLOWED) - unset
     assert not stale, f"DEFAULTS_ALLOWED entries now passed or gone: {stale}"
+
+
+def test_defaults_are_used_outside_tests():
+    """Every defaulted parameter of a package function or method is left
+    out by some non-test call (or a call spreads its arguments), or is in
+    DEFAULTS_UNUSED_ALLOWED.  A default every production caller overrides
+    is reached only by tests: with one production value the parameter is
+    a constant, with several it is required.  A function no non-test call
+    reaches is left to ALLOWED and DEFAULTS_ALLOWED."""
+    calls = _calls_outside_tests()
+    unused = {
+        f"{fn}.{param}"
+        for fn, param, pos in _defaulted_params()
+        if calls.get(fn)
+        and not any(c[2] or not _passes(c, param, pos) for c in calls[fn])
+    }
+    assert not unused - set(DEFAULTS_UNUSED_ALLOWED), (
+        "defaulted but passed by every call outside tests/: "
+        f"{sorted(unused - set(DEFAULTS_UNUSED_ALLOWED))}"
+    )
+    stale = set(DEFAULTS_UNUSED_ALLOWED) - unused
+    assert not stale, (
+        f"DEFAULTS_UNUSED_ALLOWED entries now left out or gone: {stale}"
+    )
+
+
+def _dotted(node):
+    """``a.b.c`` for a Name/Attribute chain, else None."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return ".".join([node.id, *reversed(parts)])
+
+
+def _resolve(dotted):
+    """The object a dotted package path names: the longest importable
+    module prefix, then attributes."""
+    parts = dotted.split(".")
+    for i in range(len(parts), 0, -1):
+        try:
+            obj = importlib.import_module(".".join(parts[:i]))
+        except ImportError:
+            continue
+        for attr in parts[i:]:
+            obj = getattr(obj, attr)
+        return obj
+    raise ImportError(dotted)
+
+
+def _perfbench_calls():
+    """(where, package path, call) for every call in ``perfbench/*.py``
+    (its tests excluded) whose callee the file's imports name in the
+    package: ``pipeline.run_pipeline(...)``, ``GraphWriter.write(...)``,
+    ``get_spark(...)``.  Calls on instances are not resolvable and are
+    skipped."""
+    for path in _py_files("perfbench/*.py"):
+        tree = _parse(path)
+        bound = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and not node.level and (
+                (node.module or "").split(".")[0] == PKG
+            ):
+                for a in node.names:
+                    bound[a.asname or a.name] = f"{node.module}.{a.name}"
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.split(".")[0] == PKG:
+                        local = a.asname or PKG
+                        bound[local] = a.name if a.asname else PKG
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            dotted = _dotted(node.func)
+            head, _, rest = (dotted or "").partition(".")
+            if head in bound:
+                where = f"{os.path.relpath(path, ROOT)}:{node.lineno}"
+                yield where, ".".join(filter(None, (bound[head], rest))), node
+
+
+def test_perfbench_calls_bind():
+    """Every package function or class perfbench calls accepts the call's
+    positional count and keywords: the benchmark changes only with the
+    benchmark, so a signature change that breaks it must fail here first.
+    A call that spreads ``*args``/``**kwargs`` is bound partially."""
+    bad, bound = [], set()
+    for where, target, call in _perfbench_calls():
+        fn = _resolve(target)
+        if not callable(fn):
+            continue
+        spread = any(isinstance(a, ast.Starred) for a in call.args) or any(
+            k.arg is None for k in call.keywords
+        )
+        args = [None] * len(call.args)
+        kwargs = {k.arg: None for k in call.keywords if k.arg}
+        sig = inspect.signature(fn)
+        try:
+            (sig.bind_partial if spread else sig.bind)(*args, **kwargs)
+        except TypeError as e:
+            bad.append(f"{where} {target}: {e}")
+        bound.add(target.rsplit(".", 1)[-1])
+    assert not bad, bad
+    # the scan reaches the calls the benchmark's layers make
+    assert {"run_pipeline", "extract_triples", "validate_triples"} <= bound
+
+
+# names the package deleted and must not define or reference again
+GONE = (
+    "validate_triples_stream",
+    "streaming_assigned_triples",
+    "title_expr",
+    "assign_props_expr",
+    "assign_and_titlecase_expr",
+    "parse_triples_json",
+    "node_feature_vectors",
+    "english_pages",
+    "_ontology_frames",
+    "resolution_rows",
+    "_RESOLUTION_CACHE",
+    "to_dataframes",
+    "allowed_relationships",
+    "direct_parents",
+    "direct_children",
+    "class_comments",
+    "_children",
+    "hash_token",
+    "start_triples_sink",
+    "REFINE_DIM",
+)
+
+
+def test_gone_names_stay_gone():
+    """No package file defines or references a name in GONE (the "Gone (do
+    not re-add)" lists of the project notes): a def, a class, an
+    assignment, an attribute or a bare name all count."""
+    hits = []
+    for path in _py_files(f"{PKG}/**/*.py"):
+        for node in ast.walk(_parse(path)):
+            name = (
+                getattr(node, "name", None)
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                else getattr(node, "id", None)
+                if isinstance(node, ast.Name)
+                else getattr(node, "attr", None)
+                if isinstance(node, ast.Attribute)
+                else getattr(node, "name", None)
+                if isinstance(node, ast.alias)
+                else None
+            )
+            if name in GONE:
+                hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {name}")
+    assert not hits, hits
 
 
 def _is_environ(node):
@@ -333,6 +508,45 @@ def test_overwrite_mode_is_set_per_write():
     assert sites, "no write sets partitionOverwriteMode"
     session_wide = sorted(where for where, ok in sites.items() if not ok)
     assert not session_wide, session_wide
+
+
+# calls that write a frame they are given (the DataFrame writer, the
+# GraphWriter's table writes)
+WRITE_CALLS = {"write", "merge", "_write_partitioned", "writeTo", "saveAsTable"}
+
+
+def test_counts_ride_the_write():
+    """Row counts of a written frame ride its write (``df.observe``), so
+    no package function both calls ``x.count()`` and writes ``x`` — by
+    ``x.write``/``x.writeTo`` or by passing it to a write call.  A
+    count() beside the write runs the frame's whole plan a second time."""
+    bad = []
+    for path in _py_files(f"{PKG}/**/*.py"):
+        for fn in ast.walk(_parse(path)):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            counted, written = set(), set()
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Attribute) and isinstance(
+                    node.value, ast.Name
+                ):
+                    if node.attr in ("write", "writeTo"):
+                        written.add(node.value.id)
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                if (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "count"
+                    and not node.args
+                    and isinstance(f.value, ast.Name)
+                ):
+                    counted.add(f.value.id)
+                if getattr(f, "attr", getattr(f, "id", None)) in WRITE_CALLS:
+                    written |= {a.id for a in node.args if isinstance(a, ast.Name)}
+            for name in sorted(counted & written):
+                bad.append(f"{os.path.relpath(path, ROOT)}:{fn.name} {name}")
+    assert not bad, bad
 
 
 # calls whose result differs between runs of the same input

@@ -5,11 +5,16 @@ import os
 import pandas as pd
 import pytest
 
-from ontologybasedkgcreation_spark.operators.linking import normalize_identity
+from ontologybasedkgcreation_spark.operators.linking import (
+    default_abbreviations,
+    normalize_identity,
+)
 
 
 def _norm(*vals):
-    return list(normalize_identity(pd.Series(list(vals))))
+    return list(
+        normalize_identity(pd.Series(list(vals)), default_abbreviations())
+    )
 
 
 def test_abbrev_expansion():
@@ -184,11 +189,17 @@ def _tokenized_courts(spark, names):
     return linking.tokenized_node_frame(df, abbrevs={})
 
 
-def test_semantic_refine_with_hashing_embedder_matches_lexical(spark):
+def _co_mentioned(nodes):
+    """An attestation table in which one document mentions every node, so
+    only the cosine gate decides."""
+    return nodes.select(F.lit("u").alias("url"), "pre_key")
+
+
+def test_semantic_refine_with_hashing_embedder_matches_lexical(spark, monkeypatch):
     """refine_pairs_semantic with the in-repo hashing embedder finds the
-    same typo alias the lexical path finds, and respects the sibling
-    separation — the pluggable contract degrades gracefully to the
-    deterministic stand-in."""
+    same typo alias the lexical path finds at the lexical gate (0.75), and
+    respects the sibling separation — the pluggable contract degrades
+    gracefully to the deterministic stand-in."""
     from ontologybasedkgcreation_spark.operators.similarity import (
         hashing_feature_vectors,
     )
@@ -206,9 +217,12 @@ def test_semantic_refine_with_hashing_embedder_matches_lexical(spark):
     def embedder(df):
         return hashing_feature_vectors(df, "pre_key", "norm_identity")
 
+    monkeypatch.setattr(linking, "SEMANTIC_THRESHOLD", linking.REFINE_THRESHOLD)
     pairs = {
         tuple(sorted((r["a"], r["b"])))
-        for r in linking.refine_pairs_semantic(nodes, embedder).collect()
+        for r in linking.refine_pairs_semantic(
+            nodes, embedder, _co_mentioned(nodes)
+        ).collect()
     }
     assert ("k0", "k1") in pairs
     assert ("k2", "k3") not in pairs
@@ -245,7 +259,9 @@ def test_semantic_refine_merges_model_known_alias(spark):
 
     pairs = {
         tuple(sorted((r["a"], r["b"])))
-        for r in linking.refine_pairs_semantic(nodes, embedder).collect()
+        for r in linking.refine_pairs_semantic(
+            nodes, embedder, _co_mentioned(nodes)
+        ).collect()
     }
     assert pairs == {tuple(sorted(("k0", "k1")))}
 
@@ -272,7 +288,10 @@ def test_pair_sources_never_cross_label_blocks(spark):
     )
 
     assert linking.lexical_pairs(nodes).count() == 0  # containment + refine
-    assert linking.refine_pairs_semantic(nodes, embedder).count() == 0
+    assert (
+        linking.refine_pairs_semantic(nodes, embedder, _co_mentioned(nodes)).count()
+        == 0
+    )
     assert linking.link_nodes(nodes)["nodes"].count() == 2
 
 

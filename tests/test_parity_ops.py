@@ -169,6 +169,34 @@ def test_anchor_gate_is_conservative(spark):
     assert kept == pages.count()
 
 
+def test_anchor_gate_agrees_on_non_ascii_marker(spark):
+    """The grammar and the gated extraction agree on a case block whose
+    marker carries a dotted capital I ("PETİTİONER"): the JVM lower-cases
+    İ to two code points, so the gate drops that page, and the grammar's
+    marker match is ASCII-only, so it yields nothing either.  ASCII
+    markers in any case still extract through both."""
+    from ontologybasedkgcreation_spark.operators import extract as ex
+
+    def page(marker):
+        return (
+            "IN THE SUPREME COURT OF INDIA\n"
+            "WRIT PETITION (CIVIL) NO. 12 OF 2019\n"
+            f"RAM KUMAR …{marker}\nVERSUS\nSTATE OF GOA …RESPONDENT\n"
+        )
+
+    markers = ["PETITIONER", "Petitioner", "PETİTİONER"]
+    df = spark.createDataFrame(
+        [(m, page(m), "en") for m in markers], "url string, text string, lang string"
+    )
+    gated = {m: 0 for m in markers}
+    for r in ex.extract_triples(df).collect():
+        gated[r["url"]] += 1
+    grammar = {m: len(ex.extract_from_text(page(m))) for m in markers}
+    assert gated == grammar
+    assert grammar["PETITIONER"] == grammar["Petitioner"] > 0
+    assert grammar["PETİTİONER"] == 0
+
+
 # ---------------------------------------------------------------------------
 # r7 optimization parity pins
 # ---------------------------------------------------------------------------

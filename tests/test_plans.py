@@ -398,6 +398,19 @@ def test_linking_pair_plan_has_no_sort_windows(spark):
         assert "Window" not in _plan(frame, "simple"), name
 
 
+def test_shingles_dedupe_within_rows(spark):
+    """shingles() dedupes each document's shingles inside its row
+    (array_distinct), never with a corpus-wide .distinct(): the plan has
+    no exchange and no aggregate."""
+    from ontologybasedkgcreation_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(1, "a b c a b c"), (2, "a b c")], "doc_id long, text string"
+    )
+    plan = _plan(dedup.shingles(df, "doc_id", "text"), "simple")
+    assert "Exchange" not in plan and "Aggregate" not in plan, plan
+
+
 def _planned_exchanges(df):
     """The exchanges the planner added to ``df``'s physical plan to meet a
     distribution requirement (origin ENSURE_REQUIREMENTS), not counting

@@ -38,7 +38,7 @@ def test_crash_and_resume_identical(spark, pages, tmp_path):
     resumed = cp.run(pages)  # resume: only the remainder replays
     assert done_after_crash < set(cp.done_buckets(ASSIGNED_STAGE))
 
-    single = pipeline.run_pipeline(spark, pages)
+    single = pipeline.run_pipeline(spark, pages, with_paragraphs=True)
     for name, cols in [
         ("nodes", ["node_key"]),
         ("edges", EDGE_COLS + ["triple_id"]),

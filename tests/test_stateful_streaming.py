@@ -23,7 +23,7 @@ def _pages(spark, rows):
 
 
 def _run(spark, src, out, ckpt):
-    stream = ingest.read_page_stream(spark, src, max_files_per_trigger=4)
+    stream = ingest.read_page_stream(spark, src)
     deduped = stateful.streaming_dedup_exact(stream)
     q = (
         deduped.writeStream.format("parquet")
@@ -117,7 +117,7 @@ def test_dedup_jvm_fast_path(spark, tmp_path):
     ).write.parquet(src)
 
     def run():
-        stream = ingest.read_page_stream(spark, src, max_files_per_trigger=4)
+        stream = ingest.read_page_stream(spark, src)
         q = (
             stateful.streaming_dedup_exact_jvm(stream)
             .writeStream.format("parquet")

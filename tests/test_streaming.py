@@ -20,15 +20,16 @@ def staged(spark, tmp_path_factory):
     return base, src, pages
 
 
-def test_stream_matches_batch(spark, staged, tmp_path):
+def test_stream_matches_batch(spark, staged, tmp_path, monkeypatch):
     """Graph maintenance over a page stream stores the batch graph: its
     stored edges carry run_pipeline's triple_ids on the same pages."""
     from ontologybasedkgcreation_spark.operators.materialize import GraphWriter
 
     _, src, pages = staged
     writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
+    monkeypatch.setattr(ingest, "MAX_FILES_PER_TRIGGER", 2)
     q = ingest.start_graph_maintenance(
-        ingest.read_page_stream(spark, src, max_files_per_trigger=2),
+        ingest.read_page_stream(spark, src),
         writer,
         str(tmp_path / "ckpt"),
         available_now=True,
@@ -45,9 +46,7 @@ def test_stream_matches_batch(spark, staged, tmp_path):
 def test_page_rate_metrics_windows(spark, staged):
     base, src, pages = staged
     stream = ingest.read_page_stream(spark, src)
-    metrics = ingest.page_rate_metrics(
-        stream, window="10 minutes", slide="10 minutes", watermark="1 hour"
-    )
+    metrics = ingest.page_rate_metrics(stream)
     q = (
         metrics.writeStream.format("memory")
         .queryName("page_rates")
@@ -64,7 +63,7 @@ def test_page_rate_metrics_windows(spark, staged):
     assert "en" in langs and "hi" in langs
 
 
-def test_streaming_graph_maintenance_two_batches(spark, tmp_path):
+def test_streaming_graph_maintenance_two_batches(spark, tmp_path, monkeypatch):
     """foreachBatch + GraphWriter.merge: two page drops arrive as separate
     micro-batches; the graph tables hold BOTH batches' urls, and replaying
     the stream over the same checkpoint adds nothing."""
@@ -81,7 +80,8 @@ def test_streaming_graph_maintenance_two_batches(spark, tmp_path):
     ).parquet(src)
 
     writer = GraphWriter(str(tmp_path / "graph"), buckets=8)
-    stream = ingest.read_page_stream(spark, src, max_files_per_trigger=1)
+    monkeypatch.setattr(ingest, "MAX_FILES_PER_TRIGGER", 1)
+    stream = ingest.read_page_stream(spark, src)
     q = ingest.start_graph_maintenance(
         stream, writer, str(tmp_path / "ckpt"), available_now=True
     )
@@ -97,7 +97,7 @@ def test_streaming_graph_maintenance_two_batches(spark, tmp_path):
 
     # replay: same checkpoint, no new files -> byte-idempotent tables
     q2 = ingest.start_graph_maintenance(
-        ingest.read_page_stream(spark, src, max_files_per_trigger=1),
+        ingest.read_page_stream(spark, src),
         writer,
         str(tmp_path / "ckpt"),
         available_now=True,
@@ -181,7 +181,7 @@ def test_reconcile_merges_cross_batch_alias(spark, tmp_path, monkeypatch):
     )
 
 
-def test_stream_sessions_match_batch_sessionize(spark):
+def test_stream_sessions_match_batch_sessionize(spark, monkeypatch):
     """Native streaming session_window and the batch sessionize operator
     derive the SAME sessions on the same events (start = first event,
     end = last event + gap, same membership) — the two gap semantics
@@ -191,6 +191,7 @@ def test_stream_sessions_match_batch_sessionize(spark):
 
     from pyspark.sql import functions as F
 
+    from ontologybasedkgcreation_spark.operators import temporal
     from ontologybasedkgcreation_spark.operators.temporal import sessionize
 
     ev = spark.range(0, 300).select(
@@ -202,8 +203,9 @@ def test_stream_sessions_match_batch_sessionize(spark):
             )
         ).alias("ts"),
     )
+    monkeypatch.setattr(temporal, "SESSION_GAP_US", 30 * 60 * 1_000_000)
     batch = (
-        sessionize(ev, ["user_id"], ts_col="ts", gap_us=30 * 60 * 1_000_000)
+        sessionize(ev, ["user_id"])
         .groupBy("user_id", "session_index")
         .agg(
             F.min("ts").alias("session_start"),

@@ -32,7 +32,7 @@ def test_exact_dedup_partitions_docs(docs):
 
 
 def test_jaccard_pairs_symmetric_bounds(docs):
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8)
+    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text")
     rows = pairs.collect()
     for r in rows:
         assert r["a"] < r["b"]
@@ -57,16 +57,18 @@ def test_minhash_lsh_recalls_exact_dups(spark, docs):
         assert (ids[0], ids[1]) in lsh
 
 
-def test_simhash_zero_distance_for_identical(docs):
+def test_simhash_zero_distance_for_identical(docs, monkeypatch):
+    monkeypatch.setattr(dedup, "MAX_HAMMING", 0)
     sig = dedup.simhash(docs, "doc_id", "text")
-    pairs = dedup.simhash_pairs(sig, max_hamming=0).collect()
+    pairs = dedup.simhash_pairs(sig).collect()
     for r in pairs:
         assert r["hamming"] == 0
 
 
-def test_cosine_topk_excludes_and_orders(emb):
+def test_cosine_topk_excludes_and_orders(emb, monkeypatch):
     q = emb.filter("vec_id = 0").first()["embedding"]
-    top = similarity.cosine_topk(emb, list(q), k=5, exclude_id=0).collect()
+    monkeypatch.setattr(similarity, "TOP_K", 5)
+    top = similarity.cosine_topk(emb, list(q), exclude_id=0).collect()
     assert len(top) == 5
     assert all(r["vec_id"] != 0 for r in top)
     cos = [r["cosine"] for r in top]
@@ -76,7 +78,7 @@ def test_cosine_topk_excludes_and_orders(emb):
 def test_ivf_subset_of_bruteforce_domain(emb):
     row = emb.filter("vec_id = 0").first()
     top = similarity.ivf_topk(
-        emb, list(row["embedding"]), int(row["label"]), k=5, exclude_id=0
+        emb, list(row["embedding"]), int(row["label"]), exclude_id=0
     ).collect()
     labels = {
         r["label"]
@@ -87,13 +89,14 @@ def test_ivf_subset_of_bruteforce_domain(emb):
     assert labels == {int(row["label"])}
 
 
-def test_cosine_neardup_pairs_threshold(emb):
-    pairs = similarity.cosine_neardup_pairs(emb.limit(100), threshold=0.5)
+def test_cosine_neardup_pairs_threshold(emb, monkeypatch):
+    monkeypatch.setattr(similarity, "NEARDUP_THRESHOLD", 0.5)
+    pairs = similarity.cosine_neardup_pairs(emb.limit(100))
     for r in pairs.collect():
         assert r["cosine"] >= 0.5 and r["a"] < r["b"]
 
 
-def test_neardup_lsh_equals_exact_on_planted(spark):
+def test_neardup_lsh_equals_exact_on_planted(spark, monkeypatch):
     """The scale-shape SRP-LSH near-dup must return the IDENTICAL pair set
     as the exact all-pairs operator at the same threshold on planted
     near-duplicates (perturbed copies, cosine ~0.9987) — LSH recall is
@@ -102,11 +105,10 @@ def test_neardup_lsh_equals_exact_on_planted(spark):
     import __spark_entry__ as entry
 
     planted = entry._planted_neardups(spark, SF)
+    monkeypatch.setattr(similarity, "NEARDUP_THRESHOLD", 0.9)
     exact = {
         (r["a"], r["b"])
-        for r in similarity.cosine_neardup_pairs(
-            planted, threshold=0.9
-        ).collect()
+        for r in similarity.cosine_neardup_pairs(planted).collect()
     }
     lsh = {
         (r["a"], r["b"])
@@ -118,7 +120,7 @@ def test_neardup_lsh_equals_exact_on_planted(spark):
     assert lsh == exact
 
 
-def test_cosine_pairs_skip_zero_vectors(spark):
+def test_cosine_pairs_skip_zero_vectors(spark, monkeypatch):
     """A zero-norm vector gets a NULL cosine (no DIVIDE_BY_ZERO), so the
     threshold drops its pairs.  One-bit bands make the all-ones signature
     of the zero vector share a band with the others, so the LSH verify
@@ -128,7 +130,8 @@ def test_cosine_pairs_skip_zero_vectors(spark):
         "vec_id string, embedding array<double>, label string",
     )
     lsh = similarity.cosine_neardup_pairs_lsh(df, threshold=0.9, band_bits=1)
-    exact = similarity.cosine_neardup_pairs(df, threshold=0.9)
+    monkeypatch.setattr(similarity, "NEARDUP_THRESHOLD", 0.9)
+    exact = similarity.cosine_neardup_pairs(df)
     for pairs in (lsh, exact):
         assert [(r["a"], r["b"]) for r in pairs.collect()] == [("p", "q")]
 
@@ -255,8 +258,8 @@ def test_kmeans_fit_and_assign(spark):
     # the assigned label feeds ivf_topk directly
     q = list(labeled.filter(F.col("vec_id") == 1).first()["embedding"])
     qlab = labeled.filter(F.col("vec_id") == 1).first()["label"]
-    top = similarity.ivf_topk(labeled, q, qlab, k=5, exclude_id=1).collect()
-    assert 0 < len(top) <= 5
+    top = similarity.ivf_topk(labeled, q, qlab, exclude_id=1).collect()
+    assert 0 < len(top) <= similarity.TOP_K
 
 
 def test_resolve_duplicates_groups_and_policy(spark):
@@ -301,7 +304,7 @@ def test_srp_signature_arrow_matches_jvm_spec(spark):
         F.col("vec_id").alias("id"),
         *similarity.srp_band_cols("embedding", 64, 8, 64),
     )
-    arrow = similarity.srp_signature(emb, "vec_id", "embedding", "label")
+    arrow = similarity.srp_signature(emb, "vec_id", "embedding", "label", 64, 8, 64)
     cols = ["id"] + [f"band{b}" for b in range(8)]
     assert {tuple(r) for r in spec.select(cols).collect()} == {
         tuple(r) for r in arrow.select(cols).collect()
@@ -319,10 +322,10 @@ def test_avi_mjpeg_roundtrip_and_metadata():
     from ontologybasedkgcreation_spark.operators import avi
 
     frames = [np.full((16, 16), v, dtype=np.uint8) for v in (7, 131, 247)]
-    payload = avi.encode_avi_mjpeg(frames, fps=10, quality=95)
+    payload = avi.encode_avi_mjpeg(frames)
     meta = avi.avi_metadata(payload)
     assert (meta["width"], meta["height"]) == (16, 16)
-    assert meta["n_frames"] == 3 and meta["fps"] == 10.0
+    assert meta["n_frames"] == 3 and meta["fps"] == avi.MJPEG_FPS == 10
     assert meta["duration_ms"] == 300 and meta["handler"] == "MJPG"
     dec = avi.decode_avi(payload)
     assert len(dec["frames"]) == 3
@@ -334,11 +337,11 @@ def test_avi_mjpeg_roundtrip_and_metadata():
     # RGB through chroma subsampling survives the container roundtrip
     rgb = [np.full((16, 16, 3), v, dtype=np.uint8) for v in (5, 200)]
     d2 = avi.decode_avi(
-        avi.encode_avi_mjpeg(rgb, fps=5, quality=90, subsampling="420")
+        avi.encode_avi_mjpeg(rgb, subsampling="420")
     )
     assert [f.shape for f in d2["frames"]] == [(16, 16, 3)] * 2
     # truncated payload (web-crawl reality): surviving frames still parse
-    assert len(avi.avi_frame_payloads(payload[: len(payload) // 2])) == 2
+    assert len(avi.avi_frame_payloads(payload[: len(payload) // 2], None)) == 2
     with pytest.raises(ValueError, match="AVI"):
         avi.avi_metadata(b"RIFF\x04\x00\x00\x00WAVE")
     with pytest.raises(ValueError, match="frame"):
@@ -359,10 +362,10 @@ def test_avi_raw_dib_roundtrip():
     frames = [
         rng.integers(0, 256, (11, 13, 3), dtype=np.uint8) for _ in range(3)
     ]
-    payload = avi.encode_avi_raw(frames, fps=6)
+    payload = avi.encode_avi_raw(frames)
     meta = avi.avi_metadata(payload)
     assert meta["compression"] == "BI_RGB" and meta["bit_count"] == 24
-    assert meta["handler"] == "DIB " and meta["fps"] == 6.0
+    assert meta["handler"] == "DIB " and meta["fps"] == avi.RAW_FPS
     dec = avi.decode_avi(payload)
     for got, want in zip(dec["frames"], frames):
         assert np.array_equal(got, want)
@@ -371,14 +374,12 @@ def test_avi_raw_dib_roundtrip():
     assert len(sub) == 1 and np.array_equal(sub[0], frames[2])
     # gray input comes back r=g=b
     g = [np.arange(64, dtype=np.uint8).reshape(8, 8)]
-    dg = avi.decode_avi(avi.encode_avi_raw(g, fps=1))["frames"][0]
+    dg = avi.decode_avi(avi.encode_avi_raw(g))["frames"][0]
     assert np.array_equal(dg[:, :, 0], g[0]) and np.array_equal(
         dg[:, :, 1], dg[:, :, 2]
     )
     # MJPEG still dispatches through decode_avi
-    pm = avi.encode_avi_mjpeg(
-        [np.full((16, 16), 99, np.uint8)], fps=10, quality=95
-    )
+    pm = avi.encode_avi_mjpeg([np.full((16, 16), 99, np.uint8)])
     assert int(avi.decode_avi(pm)["frames"][0].mean()) == 99
     # codec video (no codec library here) is rejected by name
     bad = pm.replace(b"MJPG", b"H264")
@@ -432,7 +433,7 @@ def test_strip_boilerplate(spark):
     got = {
         r["doc_id"]: r
         for r in text_analysis.strip_boilerplate(
-            df, "doc_id", "text", "source", min_docs=3
+            df, "doc_id", "text", "source"
         ).collect()
     }
     assert got[1]["clean_text"] == "unique one"
@@ -449,7 +450,7 @@ def test_strip_boilerplate(spark):
     assert got[7]["n_boilerplate_lines"] == 0
 
 
-def test_contamination_pairs(spark):
+def test_contamination_pairs(spark, monkeypatch):
     """Planted 13-gram overlap is flagged with the exact distinct-gram
     count, clean docs are absent, and the eval side is broadcast (the
     training side must never shuffle)."""
@@ -467,25 +468,25 @@ def test_contamination_pairs(spark):
         "doc_id long, text string",
     )
     ev = spark.createDataFrame([(100, bench)], "doc_id long, text string")
-    out = contamination_pairs(train, ev, "doc_id", "text", n=13)
+    monkeypatch.setattr(dedup, "SHINGLE_N", 13)
+    out = contamination_pairs(train, ev, "doc_id", "text")
     got = {(r["doc"], r["eval_doc"]): r["n_shared"] for r in out.collect()}
     assert set(got) == {(1, 100), (3, 100)}
     assert got[(3, 100)] == 1  # 13 tokens -> exactly one 13-gram
     assert "BroadcastHashJoin" in out._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pack_shards(spark):
+def test_pack_shards(spark, monkeypatch):
     """Single-stream layout: start offsets are the exclusive running sum
     in id order, a doc straddling the budget boundary belongs to the
     shard where its FIRST token lands, and bucketed mode partitions the
     stream deterministically by the md5 hash."""
     rows = [(i, 40) for i in range(1, 11)]  # 10 docs x 40 tokens
     df = spark.createDataFrame(rows, "doc_id long, n long")
+    monkeypatch.setattr(text_analysis, "PACK_BUCKETS", 1)
     out = {
         r["doc_id"]: r
-        for r in text_analysis.pack_shards(
-            df, "doc_id", "n", budget=100, n_buckets=1
-        ).collect()
+        for r in text_analysis.pack_shards(df, "doc_id", "n", budget=100).collect()
     }
     assert [out[i]["start_offset"] for i in range(1, 11)] == [
         40 * (i - 1) for i in range(1, 11)
@@ -494,7 +495,8 @@ def test_pack_shards(spark):
     assert out[3]["shard"] == 0 and out[4]["shard"] == 1
     assert all(r["bucket"] == 0 for r in out.values())
     # bucketed: same doc always lands in the same bucket; offsets restart
-    b = text_analysis.pack_shards(df, "doc_id", "n", 100, n_buckets=3)
+    monkeypatch.setattr(text_analysis, "PACK_BUCKETS", 3)
+    b = text_analysis.pack_shards(df, "doc_id", "n", 100)
     rows_b = b.collect()
     assert {r["bucket"] for r in rows_b} <= {0, 1, 2} and len(
         {r["bucket"] for r in rows_b}
@@ -584,9 +586,7 @@ def test_unigram_logprob(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in unigram_logprob(
-            train, score, "doc_id", "text", min_count=2
-        ).collect()
+        for r in unigram_logprob(train, score, "doc_id", "text").collect()
     }
     # N=6; counts kept: a=3, b=2 (c=1 < min_count -> OOV floor)
     r5 = out[5]
@@ -654,7 +654,7 @@ def test_canonicalize_urls(spark):
     assert out[11]["canon_url"] == "http://refer.net/p?a=1"
 
 
-def test_filter_urls(spark):
+def test_filter_urls(spark, monkeypatch):
     """URL blocklist semantics: domain blocking keys on the PSL
     registrable domain (subdomains blocked, suffix lookalikes NOT),
     path regexes and scheme allowlist work, reason precedence is
@@ -675,18 +675,12 @@ def test_filter_urls(spark):
         (9, "http://user:pw@evil.co.uk/p"),        # userinfo stripped
     ]
     df = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {
-        r["doc_id"]: r
-        for r in filter_urls(
-            df,
-            "doc_id",
-            "url",
-            # bad.blogspot.com is DEEPER than its registrable domain
-            # (blogspot.com under the vendored PSL): host-subtree entry
-            block_domains=["evil.co.uk", "bad.blogspot.com"],
-            block_path_res=[r"^/ads/"],
-        ).collect()
-    }
+    # bad.blogspot.com is DEEPER than its registrable domain (blogspot.com
+    # under the vendored PSL): host-subtree entry
+    monkeypatch.setattr(
+        text_analysis, "BLOCK_DOMAINS", ("evil.co.uk", "bad.blogspot.com")
+    )
+    out = {r["doc_id"]: r for r in filter_urls(df, "doc_id", "url").collect()}
     assert out[1]["blocked"] == 1 and out[1]["block_reason"] == "domain"
     assert out[1]["domain"] == "evil.co.uk"
     assert out[2]["blocked"] == 0 and out[2]["domain"] == "notevil.co.uk"
@@ -728,7 +722,7 @@ def test_stratified_sample(spark):
     assert out2[0]["sample_keep"] == 0
 
 
-def test_duplicate_spans(spark):
+def test_duplicate_spans(spark, monkeypatch):
     """Lee et al. exact-substring spans at n=4: cross-document repeats,
     a within-document period-6 repeat splitting into two islands, and a
     doc shorter than the window yielding nothing."""
@@ -739,9 +733,10 @@ def test_duplicate_spans(spark):
         (4, "m n o"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "SPAN_N", 4)
     out = sorted(
         (r["doc_id"], r["span_start"], r["span_end"], r["n_dup_tokens"])
-        for r in dedup.duplicate_spans(df, "doc_id", "text", n=4).collect()
+        for r in dedup.duplicate_spans(df, "doc_id", "text").collect()
     )
     # doc1: grams 'a b c d'@0 and 'b c d e'@1 repeat in doc2 -> one island
     # covering tokens 0..4; doc2 same gram pair at starts 2,3 -> 2..6;
@@ -754,7 +749,7 @@ def test_duplicate_spans(spark):
     ]
 
 
-def test_duplicate_spans_rolling_matches_md5(spark):
+def test_duplicate_spans_rolling_matches_md5(spark, monkeypatch):
     """The Rabin-Karp rolling-hash default must produce span output
     BIT-IDENTICAL to the md5 full-gram reference path (the
     cooccurrence_counts_fast pinning discipline) — mixed casing, extra
@@ -772,12 +767,13 @@ def test_duplicate_spans_rolling_matches_md5(spark):
         (7, "alpha beta gamma delta epsilon zeta " * 2),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(dedup, "SPAN_N", 5)
 
     def spans(hash_kind):
         return sorted(
             (r["doc_id"], r["span_start"], r["span_end"], r["n_dup_tokens"])
             for r in dedup.duplicate_spans(
-                df, "doc_id", "text", n=5, gram_hash=hash_kind
+                df, "doc_id", "text", gram_hash=hash_kind
             ).collect()
         )
 
@@ -788,7 +784,7 @@ def test_duplicate_spans_rolling_matches_md5(spark):
         dedup.duplicate_spans(df, "doc_id", "text", gram_hash="bogus")
 
 
-def test_importance_weights(spark):
+def test_importance_weights(spark, monkeypatch):
     """DSIR hashed-ngram importance weights: the expected buckets and
     Laplace log-ratios are replayed in pure Python (same md5 60-bit
     convention), and gram-less docs pass through as (0, 0.0)."""
@@ -804,11 +800,10 @@ def test_importance_weights(spark):
         [(0, "a a"), (1, "b"), (2, "   ")], "doc_id long, text string"
     )
     target = raw.filter("doc_id = 0")
+    monkeypatch.setattr(text_analysis, "IMPORTANCE_BUCKETS", B)
     out = {
         r["doc_id"]: r
-        for r in importance_weights(
-            raw, target, "doc_id", "text", num_buckets=B
-        ).collect()
+        for r in importance_weights(raw, target, "doc_id", "text").collect()
     }
 
     def bk(g):
@@ -841,7 +836,7 @@ def test_importance_weights(spark):
     assert out[2]["n_grams"] == 0 and out[2]["log_weight"] == 0.0
 
 
-def test_quality_classifier_learns_separation(spark):
+def test_quality_classifier_learns_separation(spark, monkeypatch):
     """3 GD iterations separate planted positive/negative vocabularies;
     scores are proper probabilities, gram-less docs pass through at
     exactly sigma(0)=0.5."""
@@ -858,9 +853,11 @@ def test_quality_classifier_learns_separation(spark):
         [(100 + i, "bad awful poor broken") for i in range(8)],
         "doc_id long, text string",
     )
-    w = train_quality_classifier(
-        pos, neg, "doc_id", "text", num_buckets=64, iterations=3, lr=1.0
-    )
+    from ontologybasedkgcreation_spark.operators import classifier
+
+    monkeypatch.setattr(classifier, "NUM_BUCKETS", 64)
+    monkeypatch.setattr(classifier, "L2", 0.0)
+    w = train_quality_classifier(pos, neg, "doc_id", "text")
     assert w.columns == ["bk", "w"]
     held = spark.createDataFrame(
         [(0, "good great"), (1, "bad awful"), (2, "   ")],
@@ -868,16 +865,14 @@ def test_quality_classifier_learns_separation(spark):
     )
     got = {
         r["doc_id"]: r["score"]
-        for r in score_with_classifier(
-            held, w, "doc_id", "text", num_buckets=64
-        ).collect()
+        for r in score_with_classifier(held, w, "doc_id", "text").collect()
     }
     assert got[0] > 0.5 > got[1]
     assert got[2] == 0.5
     assert all(0.0 <= s <= 1.0 for s in got.values())
 
 
-def test_tfidf_top_terms(spark):
+def test_tfidf_top_terms(spark, monkeypatch):
     """Hand-computed smoothed TF-IDF with a pinned tie-break: equal
     scores order by term ascending; token-less docs emit no rows."""
     import math
@@ -895,7 +890,8 @@ def test_tfidf_top_terms(spark):
         ],
         "doc_id long, text string",
     )
-    rows = tfidf_top_terms(df, "doc_id", "text", k=2).collect()
+    monkeypatch.setattr(text_analysis, "TFIDF_TOP_K", 2)
+    rows = tfidf_top_terms(df, "doc_id", "text").collect()
     got = {(r["doc_id"], r["rank"]): r for r in rows}
     # N=4 (the empty doc still counts toward N); df: apple 1, banana 2,
     # cherry 2, durian 1
@@ -990,7 +986,7 @@ def test_warc_roundtrip_and_strictness(spark):
     # files still parses as 4 records
     data2 = encode_warc(recs, gzip_each=True)
     assert len(parse_warc(data2 + data2)) == 4
-    plain = encode_warc(recs)
+    plain = encode_warc(recs, gzip_each=False)
     with pytest.raises(ValueError, match="truncated"):
         parse_warc(plain[:-10])
     with pytest.raises(ValueError, match="separator"):
@@ -998,7 +994,7 @@ def test_warc_roundtrip_and_strictness(spark):
     with pytest.raises(ValueError, match="version"):
         parse_warc(b"HTTP/1.1 200\r\n\r\n")
     df = spark.createDataFrame(
-        [(1, encode_warc(recs)), (2, None), (3, b"")],
+        [(1, encode_warc(recs, gzip_each=False)), (2, None), (3, b"")],
         "id long, warc binary",
     )
     rows = decode_warc(df).collect()
@@ -1060,7 +1056,7 @@ def test_robots_compile_and_check(spark):
     robots = spark.createDataFrame(
         [("h.com", content)], "host string, robots string"
     )
-    rules = compile_robots(robots, "host", "robots", agent="ontokg")
+    rules = compile_robots(robots, "host", "robots")
     rl = {r["pattern"]: r for r in rules.collect()}
     # the star group is shadowed; the empty Disallow is a no-op
     assert set(rl) == {"/private/", "/private/ok*", "/tmp/*.bak$", "/a_b"}
@@ -1258,7 +1254,7 @@ def test_asof_join_semantics(spark):
     assert back[4] == (None, None)     # key with no right rows
 
 
-def test_sessionize(spark):
+def test_sessionize(spark, monkeypatch):
     """Hand-traced sessions: a 10-minute gap splits, boundary-equal gap
     does not (strictly-greater semantics), per-key independence, single
     events are their own session."""
@@ -1276,11 +1272,12 @@ def test_sessionize(spark):
         ],
         "eid long, k string, ts timestamp",
     )
+    from ontologybasedkgcreation_spark.operators import temporal
+
+    monkeypatch.setattr(temporal, "SESSION_GAP_US", 10 * 60 * 1_000_000)
     got = {
         r["eid"]: (r["session_index"], r["session_id"])
-        for r in sessionize(
-            df, ["k"], ts_col="ts", gap_us=10 * 60 * 1_000_000
-        ).collect()
+        for r in sessionize(df, ["k"]).collect()
     }
     assert got == {
         1: (0, "u:0"), 2: (0, "u:0"), 3: (0, "u:0"),
@@ -1288,7 +1285,7 @@ def test_sessionize(spark):
     }
 
 
-def test_interval_join(spark):
+def test_interval_join(spark, monkeypatch):
     """Bucketed interval join: exactly-once emission for pairs sharing
     MANY buckets, closed-interval boundary touch counts, disjoint and
     cross-key pairs don't, inverted (empty) intervals drop."""
@@ -1316,11 +1313,12 @@ def test_interval_join(spark):
         ],
         "rid long, k string, s long, e long",
     )
+    from ontologybasedkgcreation_spark.operators import temporal
+
+    monkeypatch.setattr(temporal, "INTERVAL_BUCKET_WIDTH", 10)
     got = sorted(
         (r["lid"], r["right_rid"])
-        for r in interval_join(
-            lft, rgt, ["k"], "s", "e", "s", "e", bucket_width=10
-        ).collect()
+        for r in interval_join(lft, rgt, ["k"]).collect()
     )
     assert got == [(1, 10), (1, 11), (2, 12), (4, 14)]
 
